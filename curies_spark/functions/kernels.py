@@ -18,7 +18,10 @@ Physical design (see SURVEY.md §3.2-3.3):
   match ≡ codepoint startswith for UTF-8), never per-row Python.
   Measured ~2× the reference's in-process per-core trie throughput at
   8 cores on a 200-record EPM (tools/bench_large_epm.py) and
-  ~1.8M ops/s/core in-kernel.
+  ~1.8M ops/s/core in-kernel. On that path ``compress``,
+  ``standardize_uri`` and ``compress_or_standardize`` are each ONE
+  arrow_udf that returns the finished string: no struct crosses back
+  to the JVM and no map literal is probed after the UDF.
 
 Strictness mapping (reference api.py:1732-1778 etc.):
 - default    → miss = NULL
@@ -35,7 +38,6 @@ from __future__ import annotations
 
 from typing import Iterable
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
@@ -189,12 +191,7 @@ def expand_col(
 
         @F.arrow_udf(StringType())
         def _expand(arr):
-            import pyarrow.compute as pc
-
-            uri_prefixes, identifiers = _bucketed_prefix_match(
-                arr, _expand_arrow_buckets(get())
-            )
-            return pc.binary_join_element_wise(uri_prefixes, identifiers, "")
+            return _joined_match(arr, _expand_arrow_buckets(get()), "")
 
         expanded = _expand(c)
     return F.coalesce(expanded, c) if passthrough else expanded
@@ -326,60 +323,102 @@ def _build_arrow_buckets(mapping: "dict[str, str]"):
     ]
 
 
-def _arrow_buckets(conv: Converter):
-    """Compression tables (uri_prefix → canonical prefix), cached on the
-    converter — built once per executor."""
-    cached = getattr(conv, "_arrow_buckets", None)
+def _cached_tables(conv: Converter, attr: str, build):
+    """Lookup tables cached on the converter under ``attr`` — built once
+    per executor, on the first batch that needs them (the broadcast
+    value is one object per Python worker)."""
+    cached = getattr(conv, attr, None)
     if cached is None:
-        cached = _build_arrow_buckets(conv.reverse_prefix_map)
-        conv._arrow_buckets = cached
+        cached = build(conv)
+        setattr(conv, attr, cached)
     return cached
+
+
+def _arrow_buckets(conv: Converter):
+    """Compression tables (uri_prefix → canonical prefix)."""
+    return _cached_tables(
+        conv, "_arrow_buckets", lambda cv: _build_arrow_buckets(cv.reverse_prefix_map)
+    )
+
+
+def _standardize_uri_arrow_buckets(conv: Converter):
+    """URI-standardization tables: every URI prefix, synonyms included →
+    its record's canonical URI prefix. Same keys as the compression
+    tables, so the longest match is the same; only the value differs,
+    and the kernel's output is the finished string."""
+    return _cached_tables(
+        conv,
+        "_standardize_uri_arrow_buckets",
+        lambda cv: _build_arrow_buckets(
+            {
+                uri_prefix: record.uri_prefix
+                for record in cv.records
+                for uri_prefix in record._all_uri_prefixes
+            }
+        ),
+    )
+
+
+def _curie_keyed(mapping: "dict[str, object]") -> "dict[str, object]":
+    """``prefix:``-keyed copy of a prefix-keyed mapping. A prefix that
+    itself contains the delimiter can never be the head of a CURIE split
+    on its first delimiter, so it gets no key; every remaining key ends
+    in the only delimiter it holds, no key is a byte-prefix of another,
+    and at most one bucket can hit — bucket probing is then exactly
+    split-on-first-colon + exact map lookup."""
+    return {f"{k}:": v for k, v in mapping.items() if ":" not in k}
 
 
 def _expand_arrow_buckets(conv: Converter):
     """Expansion tables (``prefix:`` → canonical uri_prefix, synonyms
-    included). Prefixes contain no delimiter, so no key is a byte-prefix
-    of another — at most one bucket can hit, making bucket probing
-    equivalent to split-on-first-colon + exact map lookup."""
-    cached = getattr(conv, "_expand_arrow_buckets", None)
-    if cached is None:
-        cached = _build_arrow_buckets(
-            {f"{prefix}:": uri_prefix for prefix, uri_prefix in conv.prefix_map.items()}
-        )
-        conv._expand_arrow_buckets = cached
-    return cached
+    included)."""
+    return _cached_tables(
+        conv,
+        "_expand_arrow_buckets",
+        lambda cv: _build_arrow_buckets(_curie_keyed(cv.prefix_map)),
+    )
+
+
+def _parse_curie_arrow_buckets(conv: Converter):
+    """CURIE-standardization tables (``prefix:`` → canonical prefix,
+    synonyms included)."""
+    return _cached_tables(
+        conv,
+        "_parse_curie_arrow_buckets",
+        lambda cv: _build_arrow_buckets(_curie_keyed(cv.synonym_to_prefix)),
+    )
 
 
 def _expand_all_arrow_tables(conv: Converter):
-    """expand_all lookup tables, cached on the converter: length-bucketed
-    ``prefix: → record index`` probes plus the record-major flattened
-    URI-prefix array (canonical first, then synonyms in record order —
-    reference api.py:2182-2219) with per-record offsets/counts for the
-    vectorized list fan-out."""
-    cached = getattr(conv, "_expand_all_arrow_tables_cache", None)
-    if cached is None:
-        import numpy as np
-        import pyarrow as pa
+    """expand_all lookup tables: length-bucketed ``prefix: → record
+    index`` probes plus the record-major flattened URI-prefix array
+    (canonical first, then synonyms in record order — reference
+    api.py:2182-2219) with per-record offsets/counts for the vectorized
+    list fan-out."""
+    return _cached_tables(conv, "_expand_all_arrow_tables_cache", _build_expand_all_tables)
 
-        mapping: dict[str, int] = {}
-        flat: list[str] = []
-        rec_offsets: list[int] = []
-        rec_counts: list[int] = []
-        for i, record in enumerate(conv.records):
-            uri_prefixes = [record.uri_prefix, *record.uri_prefix_synonyms]
-            rec_offsets.append(len(flat))
-            rec_counts.append(len(uri_prefixes))
-            flat.extend(uri_prefixes)
-            for prefix in record._all_prefixes:
-                mapping[f"{prefix}:"] = i
-        cached = (
-            _build_arrow_buckets(mapping),
-            pa.array(flat, pa.string()),
-            np.asarray(rec_offsets, dtype=np.int64),
-            np.asarray(rec_counts, dtype=np.int64),
-        )
-        conv._expand_all_arrow_tables_cache = cached
-    return cached
+
+def _build_expand_all_tables(conv: Converter):
+    import numpy as np
+    import pyarrow as pa
+
+    mapping: dict[str, int] = {}
+    flat: list[str] = []
+    rec_offsets: list[int] = []
+    rec_counts: list[int] = []
+    for i, record in enumerate(conv.records):
+        uri_prefixes = [record.uri_prefix, *record.uri_prefix_synonyms]
+        rec_offsets.append(len(flat))
+        rec_counts.append(len(uri_prefixes))
+        flat.extend(uri_prefixes)
+        for prefix in record._all_prefixes:
+            mapping[prefix] = i
+    return (
+        _build_arrow_buckets(_curie_keyed(mapping)),
+        pa.array(flat, pa.string()),
+        np.asarray(rec_offsets, dtype=np.int64),
+        np.asarray(rec_counts, dtype=np.int64),
+    )
 
 
 def _bucketed_prefix_match(arr, buckets):
@@ -421,10 +460,14 @@ def _bucketed_prefix_match(arr, buckets):
     return matched_values, remainders_bin.cast(pa.string())
 
 
-def _vectorized_longest_match(arr, conv: Converter):
-    """(canonical prefix, identifier) for URI compression — longest
-    URI-prefix match over the converter's reverse prefix map."""
-    return _bucketed_prefix_match(arr, _arrow_buckets(conv))
+def _joined_match(arr, buckets, sep: str):
+    """One bucketed probe rendered as the finished string — matched value
+    + ``sep`` + remainder, joined inside Arrow; a miss (NULL on either
+    side) stays NULL."""
+    import pyarrow.compute as pc
+
+    values, remainders = _bucketed_prefix_match(arr, buckets)
+    return pc.binary_join_element_wise(values, remainders, sep)
 
 
 def parse_uri_col(uri: "Column | str", converter) -> Column:
@@ -449,7 +492,7 @@ def parse_uri_col(uri: "Column | str", converter) -> Column:
     def _parse(arr):
         import pyarrow as pa
 
-        prefixes, identifiers = _vectorized_longest_match(arr, get())
+        prefixes, identifiers = _bucketed_prefix_match(arr, _arrow_buckets(get()))
         return pa.StructArray.from_arrays(
             [prefixes, identifiers], names=["prefix", "identifier"]
         )
@@ -486,13 +529,54 @@ def compress_udf(converter):
 
     @F.arrow_udf(StringType())
     def _compress(arr):
-        import pyarrow.compute as pc
-
-        prefixes, identifiers = _vectorized_longest_match(arr, get())
-        # element-wise join stays in Arrow; any-null → null (= miss)
-        return pc.binary_join_element_wise(prefixes, identifiers, ":")
+        return _joined_match(arr, _arrow_buckets(get()), ":")
 
     return _compress
+
+
+def standardize_uri_udf(converter):
+    """The large-map URI-standardization kernel as a standalone
+    arrow_udf: one longest-match probe from every URI prefix (synonyms
+    included) straight to its canonical URI prefix, joined with the
+    identifier in the batch, so the finished URI is what crosses back
+    to the JVM. Shared by :func:`standardize_uri_col` and SQL-function
+    registration."""
+    get = _converter_value_getter(converter)
+
+    @F.arrow_udf(StringType())
+    def _standardize_uri(arr):
+        return _joined_match(arr, _standardize_uri_arrow_buckets(get()), "")
+
+    return _standardize_uri
+
+
+def compress_or_standardize_udf(converter):
+    """The large-map ``compress_or_standardize`` kernel as a standalone
+    arrow_udf: the compression probe, then CURIE standardization over
+    the ``prefix:`` synonym tables on the compression misses only,
+    coalesced in the batch (compression wins, reference api.py:1700-1708).
+    Shared by :func:`compress_or_standardize_col` and SQL-function
+    registration."""
+    get = _converter_value_getter(converter)
+
+    @F.arrow_udf(StringType())
+    def _compress_or_standardize(arr):
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        conv = get()
+        if isinstance(arr, pa.ChunkedArray):
+            arr = arr.combine_chunks()
+        out = _joined_match(arr, _arrow_buckets(conv), ":")
+        misses = pc.and_not(pc.is_null(out), pc.is_null(arr))
+        if pc.any(misses).as_py():
+            standardized = _joined_match(
+                arr.filter(misses), _parse_curie_arrow_buckets(conv), ":"
+            )
+            out = pc.replace_with_mask(out, misses, standardized)
+        return out
+
+    return _compress_or_standardize
 
 
 # ---------------------------------------------------------------------------
@@ -567,14 +651,9 @@ def parse_curie_col(curie: "Column | str", converter) -> Column:
     def _parse_curie(arr):
         import pyarrow as pa
 
-        conv_v = get()
-        buckets = getattr(conv_v, "_parse_curie_arrow_buckets", None)
-        if buckets is None:
-            buckets = _build_arrow_buckets(
-                {f"{syn}:": canonical for syn, canonical in conv_v.synonym_to_prefix.items()}
-            )
-            conv_v._parse_curie_arrow_buckets = buckets
-        prefixes, identifiers = _bucketed_prefix_match(arr, buckets)
+        prefixes, identifiers = _bucketed_prefix_match(
+            arr, _parse_curie_arrow_buckets(get())
+        )
         return pa.StructArray.from_arrays(
             [prefixes, identifiers], names=["prefix", "identifier"]
         )
@@ -602,14 +681,23 @@ def standardize_uri_col(
     uri: "Column | str", converter, *, passthrough: bool = False
 ) -> Column:
     """Idempotent URI standardization: longest-prefix parse then re-expand
-    through the canonical URI prefix (reference api.py:2363-2413)."""
+    through the canonical URI prefix (reference api.py:2363-2413).
+
+    Small converters parse with the codegen'd chain and re-expand through
+    a MapType literal; large ones run :func:`standardize_uri_udf`, one
+    Arrow pass that returns the finished URI."""
     c = _col(uri)
     conv = _broadcast(converter)
-    parsed = parse_uri_col(c, converter)
-    canonical = F.element_at(_prefix_to_uri_map_expr(conv), parsed.getField("prefix"))
-    standardized = F.when(
-        parsed.isNotNull(), F.concat(canonical, parsed.getField("identifier"))
-    )
+    if len(conv.reverse_prefix_map) > NATIVE_COMPRESS_THRESHOLD:
+        standardized = standardize_uri_udf(converter)(c)
+    else:
+        parsed = parse_uri_col(c, converter)
+        canonical = F.element_at(
+            _prefix_to_uri_map_expr(conv), parsed.getField("prefix")
+        )
+        standardized = F.when(
+            parsed.isNotNull(), F.concat(canonical, parsed.getField("identifier"))
+        )
     return F.coalesce(standardized, c) if passthrough else standardized
 
 
@@ -633,9 +721,15 @@ def compress_or_standardize_col(
 ) -> Column:
     """URI → CURIE, else CURIE standardization (reference api.py:1637-1686).
     Compression is tried first, mirroring ``parse``'s is_uri-then-is_curie
-    order (api.py:1700-1708)."""
+    order (api.py:1700-1708). Large converters run both in one Arrow pass
+    (:func:`compress_or_standardize_udf`)."""
     c = _col(s)
-    result = F.coalesce(compress_col(c, converter), standardize_curie_col(c, converter))
+    if len(_broadcast(converter).reverse_prefix_map) > NATIVE_COMPRESS_THRESHOLD:
+        result = compress_or_standardize_udf(converter)(c)
+    else:
+        result = F.coalesce(
+            compress_col(c, converter), standardize_curie_col(c, converter)
+        )
     return F.coalesce(result, c) if passthrough else result
 
 

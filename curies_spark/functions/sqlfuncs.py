@@ -15,13 +15,17 @@ picked by the same size thresholds:
   execution.
 - **Large maps** (past ``NATIVE_COMPRESS_THRESHOLD`` /
   ``NATIVE_EXPAND_THRESHOLD``, where codegen'd chains are the measured
-  slow path — kernels.py:298-304) register the Arrow-batched bucketed
-  kernels via ``spark.udf.register`` and build the SQL UDF bodies on
-  top of them (Spark resolves nested function calls at analysis).
+  slow path — see ``kernels._native_compress_pair``) register the
+  Arrow-batched bucketed kernels via ``spark.udf.register`` and build
+  the SQL UDF bodies on top of them (Spark resolves nested function
+  calls at analysis).
 
 Composite functions are SQL compositions of the primitives, mirroring
 the kernel compositions (``standardize_uri = expand ∘ compress``,
 ``compress_or_standardize = coalesce(compress, standardize_curie)``).
+Past ``NATIVE_COMPRESS_THRESHOLD`` those two are the fused one-pass
+kernels instead (``kernels.standardize_uri_udf`` /
+``kernels.compress_or_standardize_udf``), exactly as in the Column API.
 All functions are session-scoped temporaries: re-registering (e.g.
 after :meth:`SparkConverter.rebroadcast`) replaces them.
 """
@@ -89,12 +93,18 @@ def register_sql_functions(
         )
         names[op] = name
 
+    def register(op: str, udf: Any) -> None:
+        names[op] = f"{p}_{op}"
+        spark.udf.register(names[op], udf)
+
     # -- compress: native CASE chain or the Arrow bucketed kernel --------
-    if len(conv.reverse_prefix_map) <= kernels.NATIVE_COMPRESS_THRESHOLD:
+    native_compress = (
+        len(conv.reverse_prefix_map) <= kernels.NATIVE_COMPRESS_THRESHOLD
+    )
+    if native_compress:
         create("compress", "u STRING", _compress_case_sql(conv, "u"))
     else:
-        spark.udf.register(f"{p}_compress", kernels.compress_udf(converter))
-        names["compress"] = f"{p}_compress"
+        register("compress", kernels.compress_udf(converter))
 
     # -- prefix→canonical-URI lookup feeding expand ----------------------
     if len(conv.prefix_map) <= kernels.NATIVE_EXPAND_THRESHOLD:
@@ -124,16 +134,15 @@ def register_sql_functions(
             f"element_at({_map_sql(conv.synonym_to_prefix)}, pfx)",
         )
     else:
-        spark.udf.register(
-            f"{p}_standardize_prefix",
+        register(
+            "standardize_prefix",
             kernels._exact_match_udf(
                 converter, "_std_prefix_table", lambda cv: cv.synonym_to_prefix
             ),
         )
-        names["standardize_prefix"] = f"{p}_standardize_prefix"
 
-    # -- SQL compositions of the primitives (mirror the kernel
-    #    compositions, kernels.py:579-646) -------------------------------
+    # -- SQL compositions of the primitives, or the fused large-map
+    #    kernels (mirror standardize_uri_col / compress_or_standardize_col)
     create(
         "standardize_curie",
         "c STRING",
@@ -142,9 +151,16 @@ def register_sql_functions(
         f"THEN concat({p}_standardize_prefix(substring_index(c, ':', 1)), ':', "
         "substr(c, locate(':', c) + 1)) END",
     )
-    create("standardize_uri", "u STRING", f"{p}_expand({p}_compress(u))")
-    create("compress_or_standardize", "s STRING",
-           f"coalesce({p}_compress(s), {p}_standardize_curie(s))")
+    if native_compress:
+        create("standardize_uri", "u STRING", f"{p}_expand({p}_compress(u))")
+        create("compress_or_standardize", "s STRING",
+               f"coalesce({p}_compress(s), {p}_standardize_curie(s))")
+    else:
+        register("standardize_uri", kernels.standardize_uri_udf(converter))
+        register(
+            "compress_or_standardize",
+            kernels.compress_or_standardize_udf(converter),
+        )
     create("expand_or_standardize", "s STRING",
            f"coalesce({p}_standardize_uri(s), {p}_expand(s))")
     create("format_curie", "pfx STRING, i STRING", "concat(pfx, ':', i)")

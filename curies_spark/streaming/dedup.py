@@ -102,11 +102,24 @@ def _check_signature_format(spark: SparkSession, out_dir: str, *, k: int) -> Non
     Fresh stores get a ``_signature.json`` stamp; resumes compare it."""
     import json
 
+    from py4j.protocol import Py4JJavaError
+
     marker = f"{out_dir}/_signature.json"
     fmt = _signature_format(k)
-    existing = fs_read_text(spark, marker)
+    try:
+        existing = fs_read_text(spark, marker)
+        recorded = None if existing is None else json.loads(existing)
+    except (ValueError, Py4JJavaError) as exc:
+        # a crash mid-write leaves a torn stamp: truncated JSON, or on a
+        # checksummed filesystem a .crc that no longer matches the data
+        raise RuntimeError(
+            f"streaming dedup store at {out_dir!r} has a torn or unreadable "
+            "signature format stamp (_signature.json), so its "
+            "tokenizer/permutation recipe is unknown and a resume could "
+            "silently under-pair. Rebuild the store (or run with a fresh "
+            "out_dir)."
+        ) from exc
     if existing is not None:
-        recorded = json.loads(existing)
         if recorded != fmt:
             raise RuntimeError(
                 "streaming dedup store at "

@@ -338,11 +338,23 @@ def test_large_map_paths_match_native(spark, conv, sconv, monkeypatch):
     assert got == want
 
 
+#: the ops whose large-map form is one fused Arrow kernel, directly or
+#: by composition (expand_or_standardize = standardize_uri, else expand)
+FUSED_OPS = ("standardize_uri", "compress_or_standardize", "expand_or_standardize")
+
+
 def test_random_epms_kernels_match_core(spark, monkeypatch):
-    """Randomized differential for the HOT PATH: columnar compress/expand
-    (native when-chain AND forced Arrow-UDF) vs the driver core on
-    adversarial random EPMs — overlapping URI prefixes, synonym
-    collisions, multi-colon identifiers, unicode, near-miss probes.
+    """Randomized differential for the HOT PATH: columnar compress/expand,
+    the standardizations and the ambiguous forms, plain and
+    ``passthrough`` (native when-chain AND forced Arrow-UDF, where
+    standardize_uri and compress_or_standardize are the fused one-pass
+    kernels) vs the driver core on adversarial random EPMs — overlapping
+    URI prefixes, synonym collisions, multi-colon identifiers, unicode,
+    near-miss probes, and the probes a fused kernel can get wrong: a
+    multi-byte UTF-8 identifier right after a prefix, a CURIE whose
+    synonym prefix (``http``) is the head of every registered URI
+    prefix, a synonym prefix holding the delimiter, ``""``, a
+    delimiter-less token and NULL.
 
     Seeded random (not hypothesis): one Spark job per EPM is too slow
     for per-example shrinking, and a failing (seed, case) reproduces
@@ -367,6 +379,10 @@ def test_random_epms_kernels_match_core(spark, monkeypatch):
                 uri_prefix += f"{i}/"
             seen.add(uri_prefix)
             rec = {"prefix": f"p{i}", "uri_prefix": uri_prefix}
+            if i == 0:
+                rec["prefix_synonyms"] = ["http"]
+            elif i == 1:
+                rec["prefix_synonyms"] = ["q:1"]  # never a CURIE head
             if rng.random() < 0.5:
                 syn = f"https://alt{i}.example.net/{rng.randint(0, 9)}/"
                 if syn not in seen:
@@ -396,6 +412,17 @@ def test_random_epms_kernels_match_core(spark, monkeypatch):
             else:
                 probes.append(ident)
 
+        for r in records:
+            for head in (r["uri_prefix"], *r.get("uri_prefix_synonyms", [])):
+                probes.append(head + "é€𝄞:x")
+            probes.append(f"{r['prefix']}:ü𝄞")
+        probes += [
+            "http:" + records[-1]["uri_prefix"][5:],  # a URI when read whole
+            "http:é/x",
+            "q:1:2",
+            "",
+            "nodelimiter",
+        ]
         probes.append(None)  # NULL rows must propagate NULL, never crash
         df = spark.createDataFrame(
             [(i, p) for i, p in enumerate(probes)], ["i", "value"]
@@ -414,10 +441,16 @@ def test_random_epms_kernels_match_core(spark, monkeypatch):
                 kernels.expand_col("value", sc.broadcast).alias("e"),
                 kernels.standardize_curie_col("value", sc.broadcast).alias("sc"),
                 kernels.standardize_prefix_col("value", sc.broadcast).alias("sp"),
-                kernels.standardize_uri_col("value", sc.broadcast).alias("su"),
                 kernels.expand_all_col("value", sc.broadcast).alias("ea"),
                 parsed.getField("prefix").alias("pp"),
                 parsed.getField("identifier").alias("pi"),
+                *[
+                    getattr(kernels, f"{op}_col")(
+                        "value", sc.broadcast, passthrough=pt
+                    ).alias(f"{op}_{pt}")
+                    for op in FUSED_OPS
+                    for pt in (False, True)
+                ],
             ).collect()
             def core(fn, v):
                 # columnar kernels map per-value errors (e.g. the core's
@@ -440,9 +473,6 @@ def test_random_epms_kernels_match_core(spark, monkeypatch):
                 assert row["sp"] == core(conv.standardize_prefix, v), (
                     seed, forced_udf, "standardize_prefix", v,
                 )
-                assert row["su"] == core(conv.standardize_uri, v), (
-                    seed, forced_udf, "standardize_uri", v,
-                )
                 want_all = core(conv.expand_all, v)
                 got_all = sorted(row["ea"]) if row["ea"] is not None else None
                 assert got_all == (sorted(want_all) if want_all else want_all), (
@@ -455,3 +485,9 @@ def test_random_epms_kernels_match_core(spark, monkeypatch):
                 assert got_pair == (tuple(want_pair) if want_pair else None), (
                     seed, forced_udf, "parse_uri", v,
                 )
+                for op in FUSED_OPS:
+                    for pt in (False, True):
+                        want = core(
+                            lambda x: getattr(conv, op)(x, passthrough=pt), v
+                        )
+                        assert row[f"{op}_{pt}"] == want, (seed, forced_udf, op, pt, v)

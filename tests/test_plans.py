@@ -166,3 +166,21 @@ def test_band_pairs_shuffles_signatures_not_text(spark):
     plan = _plan(band_pairs(staged))
     assert _shuffles(plan) <= 3, plan
     assert plan.count("Scan ExistingRDD") >= 3, plan  # shared canon cut
+
+def test_large_epm_fused_canonicalization_plans(spark):
+    """Past NATIVE_COMPRESS_THRESHOLD, standardize_uri and
+    compress_or_standardize are each ONE Arrow stage that returns the
+    finished string (rule 2): no struct read back across the boundary,
+    and no ``element_at`` over a map literal after the UDF."""
+    from pyspark.sql import Row
+
+    from curies_spark.functions import SparkConverter
+    from curies_spark.plans.demo import large_converter
+
+    sc = SparkConverter(spark, large_converter())
+    df = spark.createDataFrame([Row(v="NS1:1")])
+    for op in ("standardize_uri", "compress_or_standardize"):
+        for passthrough in (False, True):
+            plan = _plan(df.select(getattr(sc, op)("v", passthrough=passthrough)))
+            assert _PY_RE.findall(plan) == ["ArrowEvalPython"], (op, plan)
+            assert "element_at" not in plan and "map(" not in plan, (op, plan)

@@ -106,3 +106,32 @@ def test_quote_escaping(spark):
         for r in spark.sql(f"SELECT {names['compress']}(v) AS out FROM esc_in").collect()
     ]
     assert got == ["q:1", "bs:2"]
+
+
+def test_large_converter_fused_functions_match_column_api(spark):
+    """With a converter past NATIVE_COMPRESS_THRESHOLD (no forcing), the
+    SQL standardize_uri / compress_or_standardize are the fused one-pass
+    kernels: results equal to the Column API's (and the core's), and no
+    map-literal lookup runs after the Arrow stage."""
+    from curies_spark.plans.demo import large_converter
+
+    conv = large_converter()
+    assert len(conv.reverse_prefix_map) > kernels.NATIVE_COMPRESS_THRESHOLD
+    big = SparkConverter(spark, conv)
+    names = big.register_sql(name_prefix="curies_large")
+    values = []
+    for r in conv.records[:20]:
+        values += [r.uri_prefix + "1", r.uri_prefix + "é", f"{r.prefix}:2"]
+        values += [u + "3" for u in r.uri_prefix_synonyms]
+        values += [f"{s}:4" for s in r.prefix_synonyms]
+    values += ["", "nodelimiter", "http://unregistered.example.com/5", None]
+    for op in ("standardize_uri", "compress_or_standardize", "expand_or_standardize"):
+        column = getattr(big, op)("v")
+        got, want = _pairs(spark, big, values, f"{names[op]}(v)", column)
+        assert got == want, op
+        assert got == [None if v is None else getattr(conv, op)(v) for v in values], op
+    plan = spark.sql(
+        f"SELECT {names['compress_or_standardize']}(v) AS a, "
+        f"{names['standardize_uri']}(v) AS b FROM sqlfunc_in"
+    )._jdf.queryExecution().executedPlan().toString()
+    assert "element_at" not in plan and "map(" not in plan, plan

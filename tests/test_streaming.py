@@ -924,6 +924,16 @@ def test_signature_format_guard(spark, tmp_path):
     with pytest.raises(RuntimeError, match="signature format"):
         SD._check_signature_format(spark, out, k=4)  # different shingle k
 
+    # a torn stamp (crash mid-write) gets the guided rebuild error, never
+    # a raw parse or checksum failure: first with its stale .crc (a
+    # checksummed filesystem), then without one (truncated JSON)
+    stamp = tmp_path / "out" / "_signature.json"
+    stamp.write_text(stamp.read_text()[:7])
+    for _ in range(2):
+        with pytest.raises(RuntimeError, match="torn or unreadable.*Rebuild"):
+            SD._check_signature_format(spark, out, k=3)
+        (tmp_path / "out" / "._signature.json.crc").unlink(missing_ok=True)
+
     # a populated store with NO stamp is an unknown recipe: refuse
     fs_delete(spark, f"{out}/_signature.json")
     (tmp_path / "out" / "store").mkdir(parents=True)

@@ -64,7 +64,7 @@ def test_arrow_shingles_and_fingerprint_match_native(spark):
         (5, "one two"),
         (6, "one two three four"),
         (7, "A B a b A B a b"),  # repeated shingles → multiset matters
-        (8, "nb sp and line sep tokens here"),
+        (8, "nb\u00a0sp and\u2028line sep tokens here"),  # NBSP, U+2028
         (9, "x " * 50),
     ]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
