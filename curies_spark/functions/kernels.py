@@ -590,18 +590,18 @@ def _exact_match_udf(converter, mapping_attr: str, mapping_builder):
     twin of a MapType-literal ``element_at``."""
     get = _converter_value_getter(converter)
 
+    def _build(conv):
+        import pyarrow as pa
+
+        mapping = mapping_builder(conv)
+        return pa.array(list(mapping)), pa.array(list(mapping.values()))
+
     @F.arrow_udf(StringType())
     def _lookup(arr):
         import pyarrow as pa
         import pyarrow.compute as pc
 
-        conv = get()
-        cached = getattr(conv, mapping_attr, None)
-        if cached is None:
-            mapping = mapping_builder(conv)
-            cached = (pa.array(list(mapping)), pa.array(list(mapping.values())))
-            setattr(conv, mapping_attr, cached)
-        keys, values = cached
+        keys, values = _cached_tables(get(), mapping_attr, _build)
         if isinstance(arr, pa.ChunkedArray):
             arr = arr.combine_chunks()
         return pc.take(values, pc.index_in(arr, value_set=keys))

@@ -54,6 +54,7 @@ from ..operators.dedup import (
     minhash_signature_col,
 )
 from ..operators.text import quality_features, quality_score_col
+from .pipeline import _atomic_write
 
 __all__ = [
     "band_keys",
@@ -360,5 +361,5 @@ def run_dedup_pipeline(
         "k": k,
         "wall_sec": round(time.perf_counter() - t0, 2),
     }
-    (out / "manifest.json").write_text(json.dumps(manifest, indent=1))
+    _atomic_write(out / "manifest.json", json.dumps(manifest, indent=1))
     return manifest

@@ -404,7 +404,7 @@ def run_pipeline(
                 "triples": n_entity_triples,
                 "wall_sec": round(time.perf_counter() - t0, 3),
             }
-            merge_manifest_path.write_text(json.dumps(merge_manifest))
+            _atomic_write(merge_manifest_path, json.dumps(merge_manifest))
 
         totals = {
             "shards": n_shards,
@@ -416,7 +416,7 @@ def run_pipeline(
             "manifests": metrics,
             "merge": merge_manifest,
         }
-        (out / "_manifests" / "_totals.json").write_text(json.dumps(totals))
+        _atomic_write(manifest_dir / "_totals.json", json.dumps(totals))
         return totals
     finally:
         if _agg_pd_prev is None:

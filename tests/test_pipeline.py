@@ -184,3 +184,33 @@ def test_resume_rejects_changed_shard_geometry(spark, repos, tmp_path):
     # and the new-geometry manifests resume cleanly
     totals_again = run_pipeline(spark, repos, out, n_shards=4)
     assert totals_again["resumed_shards"] == 4
+
+
+def test_crash_in_merge_manifest_write_reruns_clean(spark, repos, tmp_path, monkeypatch):
+    """A crash halfway through the merge-manifest write leaves no torn
+    ``merge.json``: a plain rerun recomputes the merge and returns the
+    totals of a clean run."""
+    clean = run_pipeline(spark, repos, str(tmp_path / "clean"), n_shards=2)
+
+    out = str(tmp_path / "crashed")
+    write_text = Path.write_text
+
+    def dies_halfway(self, text, *args, **kwargs):
+        if self.name.startswith("merge."):
+            write_text(self, text[: len(text) // 2], *args, **kwargs)
+            raise OSError("killed during the merge-manifest write")
+        return write_text(self, text, *args, **kwargs)
+
+    monkeypatch.setattr(Path, "write_text", dies_halfway)
+    with pytest.raises(OSError, match="merge-manifest"):
+        run_pipeline(spark, repos, out, n_shards=2)
+    monkeypatch.undo()
+
+    totals = run_pipeline(spark, repos, out, n_shards=2)
+    assert totals["resumed_shards"] == 2
+    for key in ("shards", "input_rows", "mentions", "linked_mentions", "triples"):
+        assert totals[key] == clean[key], key
+    assert totals["merge"]["triples"] == clean["merge"]["triples"]
+    assert spark.read.parquet(f"{out}/triples").count() == clean["triples"]
+    recorded = json.loads((Path(out) / "_manifests" / "_totals.json").read_text())
+    assert recorded["triples"] == clean["triples"]

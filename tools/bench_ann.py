@@ -20,7 +20,6 @@ import os
 import shutil
 import sys
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -36,16 +35,13 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "8")
 
-    from pyspark.sql import SparkSession, functions as F
+    from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("bench-ann")
-        .config("spark.sql.shuffle.partitions", str(int(cpus) * 2))
-        .config("spark.driver.memory", "8g")
-        .config("spark.ui.enabled", "true")
-        .getOrCreate()
-    )
+    import bench
+    from perfbench import harness
+
+    spark = bench._build_spark(cpus)
+    sql = harness.SqlMetrics(spark)
 
     from curies_spark.operators.similarity import (
         build_ann_index,
@@ -55,27 +51,8 @@ def main() -> None:
         query_ivf_index,
     )
 
-    def scanned_bytes() -> int:
-        units = {"B": 1, "KiB": 1024, "MiB": 1024**2, "GiB": 1024**3}
-        base = spark.sparkContext.uiWebUrl
-        app = spark.sparkContext.applicationId
-        url = (
-            f"{base}/api/v1/applications/{app}/sql"
-            "?details=true&planDescription=false&offset=0&length=100000"
-        )
-        with urllib.request.urlopen(url) as r:
-            execs = json.load(r)
-        total = 0
-        for e in execs:
-            for node in e.get("nodes", []):
-                for m in node.get("metrics", []):
-                    if m["name"] == "size of files read":
-                        parts = m["value"].replace("(", " ").replace(",", " ").split()
-                        for i, tok in enumerate(parts):
-                            if tok in units and i > 0:
-                                total += int(float(parts[i - 1]) * units[tok])
-                                break
-        return total
+    def scanned_bytes(mark: int) -> int:
+        return int(sum(e["metrics"].get("size of files read", 0) for e in sql.since(mark)))
 
     # deterministic 256x expansion: replica r of vector v adds a
     # hash-derived uniform jitter in [-0.05, 0.05] per element (the base
@@ -118,11 +95,11 @@ def main() -> None:
     scan_wall = 0.0
     exacts = []
     for q in queries:
-        b0 = scanned_bytes()
+        mark = sql.mark()
         t0 = time.perf_counter()
         exacts.append({r["vec_id"] for r in cosine_topk(corpus, q, k=K).collect()})
         scan_wall += time.perf_counter() - t0
-        scan_bytes += scanned_bytes() - b0
+        scan_bytes += scanned_bytes(mark)
 
     # probed top-k at increasing multiprobe radius: read fraction vs recall
     probes = {}
@@ -131,7 +108,7 @@ def main() -> None:
         probe_wall = 0.0
         recall_sum = 0.0
         for q, exact in zip(queries, exacts):
-            b0 = scanned_bytes()
+            mark = sql.mark()
             t0 = time.perf_counter()
             ann = {
                 r["vec_id"]
@@ -140,7 +117,7 @@ def main() -> None:
                 ).collect()
             }
             probe_wall += time.perf_counter() - t0
-            probe_bytes += scanned_bytes() - b0
+            probe_bytes += scanned_bytes(mark)
             recall_sum += len(ann & exact) / K
         probes[f"multiprobe_{mp}"] = {
             "probe_bytes_per_query": probe_bytes // QUERIES,
@@ -163,17 +140,11 @@ def main() -> None:
     build_ann_index(corpus, qindex, dim=dim, n_planes=N_PLANES, quantize=True)
     qbuild_wall = time.perf_counter() - t0
 
-    def _tree_bytes(path: str) -> int:
-        total = 0
-        for root, _, files in os.walk(path):
-            total += sum(os.path.getsize(os.path.join(root, f)) for f in files)
-        return total
-
     quant = {
         "quant_build_wall_sec": round(qbuild_wall, 2),
-        "float_index_bytes": _tree_bytes(INDEX),
-        "quant_codes_bytes": _tree_bytes(os.path.join(qindex, "codes")),
-        "quant_vectors_bytes": _tree_bytes(os.path.join(qindex, "vectors")),
+        "float_index_bytes": harness.dir_stats(INDEX)[1],
+        "quant_codes_bytes": harness.dir_stats(os.path.join(qindex, "codes"))[1],
+        "quant_vectors_bytes": harness.dir_stats(os.path.join(qindex, "vectors"))[1],
     }
     for mp in (1, 2, 3):
         for mode, rerank in (("codes_only", 0), ("rerank", None)):
@@ -183,7 +154,7 @@ def main() -> None:
             probe_wall = 0.0
             recall_sum = 0.0
             for q, exact in zip(queries, exacts):
-                b0 = scanned_bytes()
+                mark = sql.mark()
                 t0 = time.perf_counter()
                 ann = {
                     r["vec_id"]
@@ -193,7 +164,7 @@ def main() -> None:
                     ).collect()
                 }
                 probe_wall += time.perf_counter() - t0
-                probe_bytes += scanned_bytes() - b0
+                probe_bytes += scanned_bytes(mark)
                 recall_sum += len(ann & exact) / K
             quant[f"quant_{mode}_multiprobe_{mp}"] = {
                 "probe_bytes_per_query": probe_bytes // QUERIES,
@@ -216,7 +187,7 @@ def main() -> None:
         probe_wall = 0.0
         recall_sum = 0.0
         for q, exact in zip(queries, exacts):
-            b0 = scanned_bytes()
+            mark = sql.mark()
             t0 = time.perf_counter()
             ann = {
                 r["vec_id"]
@@ -225,7 +196,7 @@ def main() -> None:
                 ).collect()
             }
             probe_wall += time.perf_counter() - t0
-            probe_bytes += scanned_bytes() - b0
+            probe_bytes += scanned_bytes(mark)
             recall_sum += len(ann & exact) / K
         ivf[f"ivf_nprobe_{nprobe}"] = {
             "probe_bytes_per_query": probe_bytes // QUERIES,

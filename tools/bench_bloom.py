@@ -31,28 +31,17 @@ DUP_FRACTION = 10  # one in N is a true duplicate
 def main() -> None:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "8")
 
-    from pyspark.sql import SparkSession, functions as F
+    from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("bench-bloom")
-        .config("spark.sql.shuffle.partitions", str(int(cpus) * 2))
-        .config("spark.driver.memory", "8g")
-        .config("spark.ui.enabled", "true")
-        .getOrCreate()
-    )
+    import bench
+    from perfbench import harness
 
-    import urllib.request
+    spark = bench._build_spark(cpus)
+    sql = harness.SqlMetrics(spark)
 
-    def shuffle_bytes() -> int:
-        """Total shuffle write bytes across all completed stages (REST)."""
-        base = spark.sparkContext.uiWebUrl
-        app = spark.sparkContext.applicationId
-        with urllib.request.urlopen(
-            f"{base}/api/v1/applications/{app}/stages?status=complete"
-        ) as r:
-            stages = json.load(r)
-        return sum(s.get("shuffleWriteBytes", 0) for s in stages)
+    def shuffle_bytes(mark: int) -> int:
+        return int(sum(e["metrics"].get("shuffle bytes written", 0) for e in sql.since(mark)))
+
     from curies_spark.operators import bloom as B
 
     hist = (
@@ -116,16 +105,16 @@ def main() -> None:
         return df.count()
 
     approx_wall, _ = best_of(lambda: run_noop(B.exclude_seen(inc, bf)))
-    b0 = shuffle_bytes()
+    mark = sql.mark()
     bloom_wall, bloom_n = best_of(
         lambda: run_noop(B.exclude_seen(inc, bf, history=hist)), n=1
     )
-    bloom_shuffle = shuffle_bytes() - b0
-    b0 = shuffle_bytes()
+    bloom_shuffle = shuffle_bytes(mark)
+    mark = sql.mark()
     join_wall, join_n = best_of(
         lambda: run_noop(inc.join(hist, on="text", how="left_anti")), n=1
     )
-    join_shuffle = shuffle_bytes() - b0
+    join_shuffle = shuffle_bytes(mark)
     assert bloom_n == join_n, (bloom_n, join_n)
 
     spark.stop()

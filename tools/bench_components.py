@@ -21,16 +21,11 @@ CLUSTER = 5  # near-dup clusters are small and dense
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession, functions as F
+    from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("bench-components")
-        .config("spark.sql.shuffle.partitions", "16")
-        .config("spark.driver.memory", "8g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    import bench
+
+    spark = bench._build_spark("8")
     from curies_spark.operators.dedup import connected_components
 
     results = {}

@@ -30,19 +30,13 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "8")
 
-    from pyspark.sql import SparkSession, functions as F
+    from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("bench-dedup-pipeline")
-        .config("spark.sql.shuffle.partitions", str(int(cpus) * 2))
-        .config("spark.driver.memory", "8g")
-        .config("spark.sql.parquet.aggregatePushdown", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        # UI on: the status REST API is the scan-byte ground truth
-        .config("spark.ui.enabled", "true")
-        .getOrCreate()
-    )
+    import bench
+    from perfbench import harness
+
+    spark = bench._build_spark(cpus)
+    spark.conf.set("spark.sql.parquet.aggregatePushdown", "true")
 
     from curies_spark.plans.dedup_pipeline import run_dedup_pipeline
 
@@ -65,54 +59,23 @@ def main() -> None:
         )
         expanded.write.mode("overwrite").parquet(CORPUS)
 
-    def _dir_bytes(path: str) -> int:
-        total = 0
-        for root, _dirs, files in os.walk(path):
-            total += sum(os.path.getsize(os.path.join(root, f)) for f in files)
-        return total
-
-    def _scanned_bytes_for(path_fragment: str) -> int:
-        """Sum 'size of files read' over FileScan nodes whose plan node
-        reads the given path (status REST API; see bench_pipeline.py for
-        why stage inputBytes cannot be used)."""
-        import urllib.request
-
-        units = {"B": 1, "KiB": 1024, "MiB": 1024**2, "GiB": 1024**3, "TiB": 1024**4}
-        base_url = spark.sparkContext.uiWebUrl
-        app_id = spark.sparkContext.applicationId
-        url = (
-            f"{base_url}/api/v1/applications/{app_id}/sql"
-            "?details=true&planDescription=true&offset=0&length=100000"
-        )
-        with urllib.request.urlopen(url) as r:
-            execs = json.load(r)
-        total = 0
-        for e in execs:
-            relevant = path_fragment in (e.get("planDescription") or "")
-            for node in e.get("nodes", []):
-                node_relevant = relevant or path_fragment in node.get("nodeName", "")
-                if not node_relevant:
-                    continue
-                for m in node.get("metrics", []):
-                    if m["name"] == "size of files read":
-                        parts = (
-                            m["value"].replace("(", " ").replace(",", " ").split()
-                        )
-                        for i, tok in enumerate(parts):
-                            if tok in units and i > 0:
-                                total += int(float(parts[i - 1]) * units[tok])
-                                break
-        return total
-
     corpus = spark.read.parquet(CORPUS)
-    corpus_bytes = _dir_bytes(CORPUS)
+    corpus_bytes = harness.dir_stats(CORPUS)[1]
 
     shutil.rmtree(OUT, ignore_errors=True)
+    sql = harness.SqlMetrics(spark)
+    mark = sql.mark()
     t0 = time.perf_counter()
     manifest = run_dedup_pipeline(spark, corpus, OUT, min_est_jaccard=0.5)
     wall = time.perf_counter() - t0
 
-    raw_scanned = _scanned_bytes_for(os.path.basename(CORPUS))
+    # 'size of files read' of the executions whose plan reads the raw
+    # corpus (see bench_pipeline.py for why stage inputBytes cannot be used)
+    raw_scanned = int(sum(
+        e["metrics"].get("size of files read", 0)
+        for e in sql.since(mark, plans=True)
+        if os.path.basename(CORPUS) in e["plan"]
+    ))
     n_docs = manifest["input_docs"]
     result = {
         "metric": "dedup_pipeline_end_to_end",

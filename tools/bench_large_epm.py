@@ -23,20 +23,9 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "8")
 
-    from pyspark.sql import SparkSession
+    import bench
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("bench-large-epm")
-        .config("spark.sql.shuffle.partitions", str(int(cpus) * 2))
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # 10k-row default batches spend more time in Arrow framing than
-        # in the kernel; 64k batches measured +50% on this path
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "8g")
-        .getOrCreate()
-    )
+    spark = bench._build_spark(cpus)
 
     from curies_spark.functions import SparkConverter, kernels
     from curies_spark.plans.demo import URI_LARGE_EXPR, large_converter

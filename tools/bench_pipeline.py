@@ -26,23 +26,14 @@ OUT = "/tmp/curies_spark_pipe_out"
 def main() -> None:
     n_files = int(sys.argv[1]) if len(sys.argv) > 1 else 4_000_000
 
-    from pyspark.sql import SparkSession
+    import bench
+    from perfbench import harness
 
-    spark = (
-        SparkSession.builder.master("local-cluster[4,2,3072]")
-        .appName("bench-kg-pipeline")
-        .config("spark.driver.memory", "6g")
-        .config("spark.executor.memory", "2g")
-        .config("spark.sql.shuffle.partitions", "16")
-        .config("spark.sql.adaptive.enabled", "true")
-        # count-backs over written parquet (n_triples, manifests) answer
-        # from row-group metadata instead of scanning data pages
-        .config("spark.sql.parquet.aggregatePushdown", "true")
-        # UI stays on: the status REST API is how we account actual
-        # bytes scanned (proof the staging pass reads the source ONCE)
-        .config("spark.ui.enabled", "true")
-        .getOrCreate()
-    )
+    spark = bench._cluster_session(4, 2)
+    # count-backs over written parquet (n_triples, manifests) answer
+    # from row-group metadata instead of scanning data pages
+    spark.conf.set("spark.sql.parquet.aggregatePushdown", "true")
+    sql = harness.SqlMetrics(spark)
 
     from curies_spark.plans.pipeline import run_pipeline, validate_content_invariant
     from curies_spark.sources.synthetic import generate_repos
@@ -54,69 +45,35 @@ def main() -> None:
     repos = spark.read.parquet(CORPUS)
     n_files = repos.count()
 
-    def _scanned_bytes() -> int:
+    def _scanned_bytes(mark: int) -> int:
         """Sum 'size of files read' over every FileScan node of every SQL
-        execution (status REST API) — the ground truth for 'how many
+        execution since ``mark`` — the ground truth for 'how many
         bytes of parquet were actually scanned'. Stage-level inputBytes
         is unusable for this: it counts in-memory-cache reads, and
         Spark's local-file vectorized parquet path bypasses the Hadoop
         FS counters entirely (measured: a 20 MB full scan reports 8 KB).
         """
-        import urllib.request
+        return int(sum(e["metrics"].get("size of files read", 0) for e in sql.since(mark)))
 
-        units = {"B": 1, "KiB": 1024, "MiB": 1024**2, "GiB": 1024**3, "TiB": 1024**4}
-
-        def parse_size(text: str) -> int:
-            total = 0
-            # values look like "979.6 KiB" or "total (min, med, max)…";
-            # take the first number+unit pair
-            parts = text.replace("(", " ").replace(",", " ").split()
-            for i, tok in enumerate(parts):
-                if tok in units and i > 0:
-                    total = int(float(parts[i - 1]) * units[tok])
-                    break
-            return total
-
-        base = spark.sparkContext.uiWebUrl
-        app_id = spark.sparkContext.applicationId
-        url = (
-            f"{base}/api/v1/applications/{app_id}/sql"
-            "?details=true&planDescription=false&offset=0&length=100000"
-        )
-        with urllib.request.urlopen(url) as r:
-            execs = json.load(r)
-        total = 0
-        for e in execs:
-            for node in e.get("nodes", []):
-                for m in node.get("metrics", []):
-                    if m["name"] == "size of files read":
-                        total += parse_size(m["value"])
-        return total
-
-    def _dir_bytes(path: str) -> int:
-        total = 0
-        for root, _dirs, files in os.walk(path):
-            total += sum(os.path.getsize(os.path.join(root, f)) for f in files)
-        return total
-
-    source_bytes = _dir_bytes(CORPUS)
-    bytes_before = _scanned_bytes()
+    source_bytes = harness.dir_stats(CORPUS)[1]
 
     from curies_spark.plans.pipeline import _stage_shards
     from pathlib import Path
 
     shutil.rmtree(OUT, ignore_errors=True)
     t0 = time.perf_counter()
+    mark = sql.mark()
     # run the staging pass separately so its scan bytes are attributable:
     # this is the ONLY read of the raw source in the whole job
     _stage_shards(spark, repos, Path(OUT), 8, resume=False)
-    staging_scan = _scanned_bytes() - bytes_before
+    staging_scan = _scanned_bytes(mark)
+    mark = sql.mark()
     # resumes the staging marker; shard + merge phases read only the
     # staged copy (partition-pruned per shard) and the job's own outputs
     totals = run_pipeline(spark, repos, OUT, n_shards=8)
     wall = time.perf_counter() - t0
-    shard_phase_scan = _scanned_bytes() - bytes_before - staging_scan
-    staged_bytes = _dir_bytes(os.path.join(OUT, "_staged"))
+    shard_phase_scan = _scanned_bytes(mark)
+    staged_bytes = harness.dir_stats(os.path.join(OUT, "_staged"))[1]
     # the pre-staging design scanned the raw source once per shard:
     # (1 + n_shards) x source = 9x here
     source_scans = round(staging_scan / source_bytes, 2)

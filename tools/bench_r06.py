@@ -22,22 +22,6 @@ REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
 
-def build_spark(cpus: str):
-    from pyspark.sql import SparkSession
-
-    return (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("curies-spark-bench-r06")
-        .config("spark.sql.shuffle.partitions", str(max(int(cpus) * 2, 8)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "16g")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .getOrCreate()
-    )
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("queries", nargs="*", help="query names (default: bench.py headline)")
@@ -53,7 +37,7 @@ def main() -> None:
     names = args.queries or bench.HEADLINE
     queries = entrymod.queries()
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = build_spark(cpus)
+    spark = bench._build_spark(cpus)
     spark.read.parquet(f"{args.sf}/lineitem.parquet").count()
 
     plan_dir = REPO / "plans" / "r06"

@@ -24,18 +24,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> None:
     rows = int(sys.argv[1]) if len(sys.argv) > 1 else 30_000_000
 
-    from pyspark.sql import SparkSession, functions as F
+    from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master("local-cluster[4,2,3072]")
-        .appName("bench-skew")
-        .config("spark.driver.memory", "6g")
-        .config("spark.executor.memory", "2g")
-        .config("spark.sql.shuffle.partitions", "16")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    import bench
+
+    spark = bench._cluster_session(4, 2)
 
     from curies_spark.operators.skew import salted_count_distinct
 

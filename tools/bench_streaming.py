@@ -27,16 +27,11 @@ N_SOURCE_PARTS = 16  # written as 16 parquet files → 4 micro-batches of 4
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession, functions as F
+    from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("bench-streaming")
-        .config("spark.sql.shuffle.partitions", "16")
-        .config("spark.driver.memory", "8g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    import bench
+
+    spark = bench._build_spark("8")
 
     from curies_spark.functions.spark_converter import SparkConverter
     from curies_spark.sources.synthetic import generate_repos, pipeline_converter

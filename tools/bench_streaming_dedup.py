@@ -34,16 +34,11 @@ BASE = "/tmp/curies_spark_stream_dedup_bench"
 def main() -> None:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "8")
 
-    from pyspark.sql import SparkSession, functions as F
+    from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("bench-streaming-dedup")
-        .config("spark.sql.shuffle.partitions", str(int(cpus) * 2))
-        .config("spark.driver.memory", "8g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    import bench
+
+    spark = bench._build_spark(cpus)
 
     from curies_spark.streaming import start_dedup_stream, streamed_survivors
 

@@ -32,18 +32,12 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "8")
 
-    from pyspark.sql import SparkSession, functions as F
+    from pyspark.sql import functions as F
     from pyspark.sql.types import LongType
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("bench-text-dedup")
-        .config("spark.sql.shuffle.partitions", str(int(cpus) * 2))
-        .config("spark.driver.memory", "8g")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .getOrCreate()
-    )
+    import bench
+
+    spark = bench._build_spark(cpus)
 
     from curies_spark.operators.dedup import minhash_signature, simhash_col
 
