@@ -98,10 +98,8 @@ def _curies(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _triples(
-    spark: SparkSession, sf_dir: str, *, fanout: bool = False
-) -> DataFrame:
-    return _t(spark, sf_dir, "orders", fanout=fanout).selectExpr(
+def _triples(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _t(spark, sf_dir, "orders").selectExpr(
         f"{TRIPLE_SUBJECT_EXPR} AS subject",
         f"{TRIPLE_PREDICATE_EXPR} AS predicate",
         f"{TRIPLE_OBJECT_EXPR} AS object",

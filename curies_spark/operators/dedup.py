@@ -29,8 +29,14 @@ from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import ArrayType, LongType
 
 __all__ = [
+    "band_join",
+    "band_keys",
+    "band_pairs",
+    "collapse_signature_families",
     "connected_components",
     "dedup_by_pairs",
+    "drop_cluster_losers",
+    "estimated_jaccard_col",
     "exact_dedup",
     "exact_dup_groups",
     "minhash_candidate_pairs",
@@ -43,6 +49,7 @@ __all__ = [
     "shingles_col",
     "simhash_col",
     "simhash_candidate_pairs",
+    "verify_pairs",
 ]
 
 #: MinHash permutations: ``h_i = h XOR _R[i]`` over the 48-bit
@@ -332,57 +339,81 @@ def minhash_signature_col(text: "Column | str", *, k: int = 3) -> Column:
     return _minhash(c)
 
 
-def minhash_candidate_pairs(
-    df: DataFrame, *, text: str = "text", id_col: str = "doc_id", k: int = 3
-) -> DataFrame:
-    """LSH candidate pairs: documents agreeing on any band of the
-    signature. Returns (id_a, id_b) with id_a < id_b, distinct.
+def collapse_signature_families(
+    rows: DataFrame, *, id_col: str = "doc_id", sig: str = "mh"
+) -> "tuple[DataFrame, DataFrame]":
+    """The hot-key guard of every band join: rows with IDENTICAL full
+    signatures collapse to their min-id canon. Returns ``(star, reps)``:
+    ``star`` is one ``(id_a=canon, id_b=member)`` pair per non-canon
+    member, ``reps`` the canon rows (every input column kept) — only
+    they enter the band join.
 
-    Documents with IDENTICAL full signatures — every exact-duplicate
-    family, plus near-identical contents whose 16 minima happen to
-    coincide — collapse to their min-id canon BEFORE banding: an
-    n-member signature family meets itself in every band and would
-    emit O(n²) pairs (a document repeated 10^6 times → ~10^12 pairs).
-    Each member instead emits one star pair to its canon and only
-    canons enter the band join — linear in family size, and
-    candidate-set-equivalent up to connected components (identical
-    signatures ⇒ identical band keys, so every cross pair a member
-    would find, its canon finds). Mirrored literally in the DuckDB
-    oracle (plans/demo_training.oracle_minhash_pairs_sql)."""
-    sig = minhash_signature(df, text=text, id_col=id_col, k=k)
-    sig_cols = [f"mh{i}" for i in range(N_PERM)]
+    An n-member signature family (every exact-duplicate family, plus
+    near-identical contents whose signatures coincide) would otherwise
+    meet itself in every band and emit O(n²) pairs (a document repeated
+    10^6 times → ~10^12 pairs). Star pairs are linear in family size
+    and leave the component partition unchanged: they keep the family
+    connected, and any cross pair a member would find its canon finds
+    (identical signature ⇒ identical band keys). Star pairs are
+    distinct, and disjoint from band-join pairs (non-canon ids never
+    enter the band join). Mirrored in the DuckDB oracles
+    (plans/demo_training).
 
-    # signature-family collapse: min id per full 16-value signature;
-    # materialized once (lazily) — the star branch and both band-join
-    # sides would otherwise each recompute the canon aggregate+join
-    canon = sig.groupBy(*sig_cols).agg(F.min(id_col).alias("_canon"))
-    with_canon = sig.join(canon, on=sig_cols).localCheckpoint(eager=False)
+    The canon join is cut once with ``localCheckpoint(eager=False)``, so
+    the star branch and both band-join sides read the cut instead of
+    each recomputing the canon aggregate and join. Under AQE the cut
+    is not lazy: building the DataFrame already runs the canon
+    aggregate's stages (3 jobs when building :func:`band_pairs` over
+    200 rows; none with ``spark.sql.adaptive.enabled=false``)."""
+    canon = rows.groupBy(sig).agg(F.min(id_col).alias("_canon"))
+    with_canon = rows.join(canon, on=sig).localCheckpoint(eager=False)
     star = with_canon.filter(F.col(id_col) != F.col("_canon")).select(
         F.col("_canon").alias("id_a"), F.col(id_col).alias("id_b")
     )
     reps = with_canon.filter(F.col(id_col) == F.col("_canon")).drop("_canon")
+    return star, reps
 
-    n_bands = N_PERM // BAND_SIZE
+
+def _explode_bands(
+    rows: DataFrame,
+    keys: "list[Column]",
+    *,
+    id_col: str = "doc_id",
+    carry: "tuple[str, ...]" = (),
+) -> DataFrame:
+    """One row per (row, band): ``(id_col, *carry, band, key)``, band
+    ``b`` keyed by ``keys[b]``; ``carry`` names the columns the check
+    after :func:`band_join` needs."""
     bands = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.struct(
-                *[
-                    F.col(f"mh{b * BAND_SIZE + r}").alias(f"v{r}")
-                    for r in range(BAND_SIZE)
-                ]
-            ).alias("key"),
-        )
-        for b in range(n_bands)
+        F.struct(F.lit(b).alias("band"), key.alias("key"))
+        for b, key in enumerate(keys)
     ]
-    # the join key is the raw band tuple (band index + BAND_SIZE minhash
-    # values) — engine-independent and exactly as selective as hashing it
-    banded = reps.select(
-        F.col(id_col), F.explode(F.array(*bands)).alias("bk")
-    ).select(id_col, F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-    left = banded.alias("l")
-    right = banded.alias("r")
-    cross = (
+    return rows.select(
+        F.col(id_col), *carry, F.explode(F.array(*bands)).alias("bk")
+    ).select(id_col, *carry, "bk.band", "bk.key")
+
+
+def band_keys(
+    df: DataFrame, *, id_col: str = "doc_id", sig: str = "mh"
+) -> DataFrame:
+    """MinHash band keys ``(id_col, band, key)``, key = the band's
+    ``BAND_SIZE`` slice of the signature: the one layout of every MinHash
+    band join, batch and streaming alike."""
+    keys = [
+        F.slice(F.col(sig), b * BAND_SIZE + 1, BAND_SIZE)
+        for b in range(N_PERM // BAND_SIZE)
+    ]
+    return _explode_bands(df, keys, id_col=id_col)
+
+
+def band_join(banded: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
+    """The LSH band self-join: distinct ``(id_a, id_b)``, id_a < id_b,
+    over rows sharing any ``(band, key)`` — a bucketed equi-join, never
+    all-pairs. Each carried column ``c`` of ``banded`` comes out once
+    per side, as ``c_a`` and ``c_b``."""
+    carried = [c for c in banded.columns if c not in (id_col, "band", "key")]
+    left, right = banded.alias("l"), banded.alias("r")
+    return (
         left.join(
             right,
             on=[
@@ -392,13 +423,81 @@ def minhash_candidate_pairs(
             ],
         )
         .select(
-            F.col(f"l.{id_col}").alias("id_a"), F.col(f"r.{id_col}").alias("id_b")
+            F.col(f"l.{id_col}").alias("id_a"),
+            F.col(f"r.{id_col}").alias("id_b"),
+            *[F.col(f"l.{c}").alias(f"{c}_a") for c in carried],
+            *[F.col(f"r.{c}").alias(f"{c}_b") for c in carried],
         )
         .distinct()
     )
-    # star pairs are distinct by construction and disjoint from cross
-    # pairs (non-canon ids never enter the band join)
+
+
+def band_pairs(
+    staged: DataFrame, *, id_col: str = "doc_id", sig: str = "mh"
+) -> DataFrame:
+    """MinHash LSH candidate pairs: distinct ``(id_a, id_b)``, id_a <
+    id_b, of documents agreeing on any band — the star pairs of
+    :func:`collapse_signature_families` plus the canons' band join."""
+    star, reps = collapse_signature_families(
+        staged.select(F.col(id_col), F.col(sig)), id_col=id_col, sig=sig
+    )
+    cross = band_join(band_keys(reps, id_col=id_col, sig=sig), id_col=id_col)
     return cross.unionByName(star)
+
+
+def minhash_candidate_pairs(
+    df: DataFrame, *, text: str = "text", id_col: str = "doc_id", k: int = 3
+) -> DataFrame:
+    """LSH candidate pairs: :func:`band_pairs` over the
+    :func:`minhash_signature_col` signatures of ``text``. Returns
+    distinct ``(id_a, id_b)``, id_a < id_b. Mirrored in the DuckDB
+    oracle (plans/demo_training.oracle_minhash_pairs_sql)."""
+    sigs = df.select(
+        F.col(id_col), minhash_signature_col(F.col(text), k=k).alias("_mh")
+    )
+    return band_pairs(sigs, id_col=id_col, sig="_mh")
+
+
+def estimated_jaccard_col(sig_a, sig_b) -> Column:
+    """Unbiased LSH Jaccard estimate: the fraction of the N_PERM
+    minhash values on which the two signatures agree.
+
+    Unrolled to N_PERM static element comparisons — fully
+    whole-stage-codegen'd JVM arithmetic. The ``zip_with``/``aggregate``
+    form interprets its lambda per element (16 interpreted calls per
+    candidate pair — the verify stage runs over every pair the band
+    join emits, so at corpus scale this is a hot path)."""
+    total = None
+    for i in range(N_PERM):
+        term = (sig_a[i] == sig_b[i]).cast("int")
+        total = term if total is None else total + term
+    return total / F.lit(N_PERM)
+
+
+def verify_pairs(
+    candidates: DataFrame,
+    staged: DataFrame,
+    *,
+    id_col: str = "doc_id",
+    min_est_jaccard: float = 0.5,
+) -> DataFrame:
+    """Signature-estimate verification of candidate pairs: pure column
+    arithmetic over the staged ``mh`` signatures — the text column is
+    never touched. Pairs below ``min_est_jaccard`` are dropped."""
+    sig = staged.select(F.col(id_col), F.col("mh"))
+    return (
+        candidates.join(
+            sig.select(F.col(id_col).alias("id_a"), F.col("mh").alias("_ma")),
+            on="id_a",
+        )
+        .join(
+            sig.select(F.col(id_col).alias("id_b"), F.col("mh").alias("_mb")),
+            on="id_b",
+        )
+        .withColumn("est_jaccard", estimated_jaccard_col(F.col("_ma"), F.col("_mb")))
+        .filter(F.col("est_jaccard") >= min_est_jaccard)
+        .select("id_a", "id_b", "est_jaccard")
+    )
 
 
 def ngram_jaccard_pairs(
@@ -575,66 +674,50 @@ def simhash_candidate_pairs(
     max_hamming: int = 3,
     n_tables: int = 4,
 ) -> DataFrame:
-    """Near-duplicate pairs by SimHash: block on 16-bit rotated bands
-    (a pair within hamming distance ≤ 3 of 64 bits agrees on at least
-    one of 4 disjoint 16-bit bands, by pigeonhole), then verify the
-    exact hamming distance natively with bit_count(xor).
+    """Near-duplicate pairs by SimHash: block on ``n_tables`` disjoint
+    rotated bands of the 64-bit signature, then verify the exact
+    hamming distance natively with bit_count(xor). By pigeonhole a pair
+    within hamming distance ``max_hamming < n_tables`` agrees on at
+    least one band (the default: ≤ 3 differing bits, 4 bands of 16
+    bits); at ``max_hamming >= n_tables`` pairs whose differing bits
+    hit every band would be silently missed, so that raises.
 
-    As in :func:`minhash_candidate_pairs`, documents with IDENTICAL
-    signatures (every exact-duplicate family) collapse to their min-id
-    canon before banding — each member emits one star pair (hamming 0)
-    and only canons band-join, turning the O(family²) blow-up into
-    O(family) with the component partition unchanged (identical
+    Signature families collapse first
+    (:func:`collapse_signature_families`): each non-canon member emits
+    one star pair (hamming 0), and only canons band-join (identical
     signature ⇒ identical bands and identical hamming to any third
     document). Mirrored in the DuckDB oracle
     (plans/demo_training.oracle_simhash_pairs_sql)."""
-    h = F.col(simhash)
-    sigs = df.select(F.col(id_col), h.alias("_sh"))
-    canon = sigs.groupBy("_sh").agg(F.min(id_col).alias("_canon"))
-    # one lazy materialization shared by the star + band branches
-    with_canon = sigs.join(canon, on="_sh").localCheckpoint(eager=False)
-    star = with_canon.filter(F.col(id_col) != F.col("_canon")).select(
-        F.col("_canon").alias("id_a"),
-        F.col(id_col).alias("id_b"),
-        F.lit(0).cast("int").alias("hamming"),
+    if max_hamming >= n_tables:
+        raise ValueError(
+            f"max_hamming={max_hamming} needs n_tables > max_hamming (got "
+            f"n_tables={n_tables}): banded blocking only guarantees recall "
+            "for hamming distances below the band count"
+        )
+    star, reps = collapse_signature_families(
+        df.select(F.col(id_col), F.col(simhash).alias("_sh")),
+        id_col=id_col,
+        sig="_sh",
     )
-    reps = with_canon.filter(F.col(id_col) == F.col("_canon")).drop("_canon")
-
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(t).alias("band"),
-                F.shiftrightunsigned(F.col("_sh"), t * (64 // n_tables))
-                .bitwiseAND(F.lit((1 << (64 // n_tables)) - 1))
-                .alias("key"),
-            )
-            for t in range(n_tables)
-        ]
-    )
-    banded = reps.select(
-        F.col(id_col), F.col("_sh"), F.explode(bands).alias("bk")
-    ).select(id_col, "_sh", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-    a, b = banded.alias("a"), banded.alias("b")
+    width = 64 // n_tables
+    keys = [
+        F.shiftrightunsigned(F.col("_sh"), t * width).bitwiseAND(
+            F.lit((1 << width) - 1)
+        )
+        for t in range(n_tables)
+    ]
+    banded = _explode_bands(reps, keys, id_col=id_col, carry=("_sh",))
     cross = (
-        a.join(
-            b,
-            on=[
-                F.col("a.band") == F.col("b.band"),
-                F.col("a.key") == F.col("b.key"),
-                F.col(f"a.{id_col}") < F.col(f"b.{id_col}"),
-            ],
-        )
+        band_join(banded, id_col=id_col)
         .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.bit_count(F.col("a._sh").bitwiseXOR(F.col("b._sh"))).alias("hamming"),
+            "id_a",
+            "id_b",
+            F.bit_count(F.col("_sh_a").bitwiseXOR(F.col("_sh_b"))).alias("hamming"),
         )
-        .distinct()
         .filter(F.col("hamming") <= max_hamming)
     )
-    # star pairs are distinct and disjoint from cross pairs (non-canon
-    # ids never enter the band join); hamming 0 passes any threshold
-    return cross.unionByName(star)
+    # hamming 0 passes any threshold
+    return cross.unionByName(star.withColumn("hamming", F.lit(0).cast("int")))
 
 
 def _label_components(edges: DataFrame, *, rounds: int) -> "DataFrame | None":
@@ -847,9 +930,20 @@ def dedup_by_pairs(
     connected cluster only the min-id row survives — the deterministic
     survivor rule :func:`exact_dedup` uses, lifted to fuzzy pairs.
     """
-    members = connected_components(pairs, src=src, dst=dst).filter(
-        F.col("node") != F.col("component")
+    return drop_cluster_losers(
+        df, connected_components(pairs, src=src, dst=dst), id_col=id_col
     )
-    return df.join(
-        members, df[id_col] == members["node"], "left_anti"
+
+
+def drop_cluster_losers(
+    df: DataFrame, components: DataFrame, *, id_col: str = "doc_id"
+) -> DataFrame:
+    """The survivor rule: drop each row whose ``id_col`` is a node of
+    ``components`` (``node, component``) whose component is not itself.
+    :func:`connected_components` labels each cluster with its min node,
+    so exactly the min-id member of every cluster survives, and rows in
+    no cluster are untouched."""
+    losers = components.filter(F.col("node") != F.col("component")).select(
+        F.col("node").alias(id_col)
     )
+    return df.join(losers, on=id_col, how="left_anti")

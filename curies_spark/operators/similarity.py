@@ -447,17 +447,8 @@ def lsh_topk(
 ) -> DataFrame:
     """ANN top-k: probe the query's LSH bucket (plus all buckets within
     ``multiprobe_bits`` bit flips), exact-rank inside the probed set."""
-    dim = len(query)
-    planes = hyperplanes(dim, n_planes, seed=seed)
-    q = _unit([float(x) for x in query])
-    q_sig = 0
-    for i, plane in enumerate(planes):
-        if sum(a * b for a, b in zip(q, plane)) > 0:
-            q_sig |= 1 << i
-    probes = {q_sig}
-    if multiprobe_bits >= 1:
-        probes.update(q_sig ^ (1 << i) for i in range(n_planes))
-
+    planes = hyperplanes(len(query), n_planes, seed=seed)
+    probes = _probe_set(query_signature(query, planes), n_planes, multiprobe_bits)
     sig = lsh_signature_col(F.col(vec_col), planes)
     candidates = df.withColumn("_sig", sig).filter(
         F.col("_sig").isin([int(p) for p in probes])

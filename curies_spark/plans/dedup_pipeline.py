@@ -14,10 +14,11 @@ table (``doc_id, text, …``):
    pipeline's one-pass shard staging, plans/pipeline.py).
 2. **Exact groups** — hash groupBy on the 256-bit content hash
    (uniform keys, no skew), min-id winner per group.
-3. **LSH candidates** — band-key equi-join on the staged signatures
-   (operators/dedup.py ``minhash_candidate_pairs``'s banding, applied
-   to the staged table so signatures are not recomputed). Never
-   all-pairs.
+3. **LSH candidates** — operators/dedup.py ``band_pairs`` over the
+   staged signatures (the same operator ``minhash_candidate_pairs``
+   runs over freshly computed ones, so signatures are not
+   recomputed): signature families collapse to their min-id canon,
+   then canons band-join. Never all-pairs.
 4. **Verify** — estimated Jaccard from signature agreement (the
    fraction of the N_PERM minhash values two documents share — the
    standard unbiased LSH estimator). Pure column arithmetic over the
@@ -25,8 +26,10 @@ table (``doc_id, text, …``):
    ``min_est_jaccard`` are dropped.
 5. **Cluster** — connected components over surviving pairs
    (min-label propagation, lineage cut per round).
-6. **Survivors** — one representative (min doc_id) per near-dup
-   cluster plus every untouched document; exact duplicates collapse
+6. **Survivors** — every exact winner except the cluster losers
+   (operators/dedup.py ``drop_cluster_losers``: components are
+   labelled with their min doc_id, so each cluster keeps exactly that
+   one and untouched documents pass); exact duplicates collapse
    to their group winner first, so a near-dup cluster of exact
    duplicates costs one component node, not one per copy.
 
@@ -48,10 +51,13 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators.dedup import (
-    BAND_SIZE,
-    N_PERM,
+    band_keys,
+    band_pairs,
     connected_components,
+    drop_cluster_losers,
+    estimated_jaccard_col,
     minhash_signature_col,
+    verify_pairs,
 )
 from ..operators.text import quality_features, quality_score_col
 from .pipeline import _atomic_write
@@ -84,135 +90,6 @@ def stage_documents(
     )
 
 
-def band_keys(
-    df: DataFrame, *, id_col: str = "doc_id", sig: str = "mh"
-) -> DataFrame:
-    """Explode staged signatures into their LSH band keys:
-    ``(id_col, band, key)`` with one row per (document, band). The
-    shared banding layout for every band join (batch pipeline,
-    streaming) — ONE definition so batch and stream can never disagree
-    on which documents collide."""
-    n_bands = N_PERM // BAND_SIZE
-    bands = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.slice(F.col(sig), b * BAND_SIZE + 1, BAND_SIZE).alias("key"),
-        )
-        for b in range(n_bands)
-    ]
-    return df.select(
-        F.col(id_col), F.explode(F.array(*bands)).alias("bk")
-    ).select(id_col, "bk.band", "bk.key")
-
-
-def band_pairs(
-    staged: DataFrame, *, id_col: str = "doc_id", sig: str = "mh"
-) -> DataFrame:
-    """LSH candidate pairs from staged signatures: documents agreeing
-    on any (band, band-values) key; returns distinct (id_a, id_b),
-    id_a < id_b — bucketed equi-join, never all-pairs.
-
-    Documents with IDENTICAL full signatures collapse to their min-id
-    canon before banding: an n-member family of signature-identical
-    documents (near-identical contents — exact duplicates were already
-    collapsed upstream, but e.g. n copies differing only in a rare
-    shingle still share all 16 minima) would otherwise meet itself in
-    every band and emit O(n²) pairs. Each member instead emits one
-    star pair to the canon, and only canons enter the band join — the
-    same linear-in-family-size shape the exact-duplicate collapse
-    gives, one groupBy on the signature deeper. Candidate-set
-    semantics are preserved up to connected components: star pairs
-    keep the family connected, and any cross pair a member would have
-    produced is produced by its canon (identical signature ⇒ identical
-    band keys)."""
-    sigs = staged.select(F.col(id_col), F.col(sig))
-    canon = sigs.groupBy(sig).agg(F.min(id_col).alias("_canon"))
-    # materialized once (lazily): three branches consume it (star pairs
-    # + both sides of the band self-join) — without the cut each branch
-    # would recompute the full-corpus canon aggregate+join
-    with_canon = sigs.join(canon, on=sig).localCheckpoint(eager=False)
-    star = with_canon.filter(F.col(id_col) != F.col("_canon")).select(
-        F.col("_canon").alias("id_a"), F.col(id_col).alias("id_b")
-    )
-    reps = with_canon.filter(F.col(id_col) == F.col("_canon")).drop("_canon")
-
-    banded = band_keys(reps, id_col=id_col, sig=sig)
-    left, right = banded.alias("l"), banded.alias("r")
-    cross = (
-        left.join(
-            right,
-            on=[
-                F.col("l.band") == F.col("r.band"),
-                F.col("l.key") == F.col("r.key"),
-                F.col(f"l.{id_col}") < F.col(f"r.{id_col}"),
-            ],
-        )
-        .select(F.col(f"l.{id_col}").alias("id_a"), F.col(f"r.{id_col}").alias("id_b"))
-        .distinct()
-    )
-    # star pairs are already distinct (one row per non-canon member) and
-    # disjoint from cross pairs (non-canon ids never enter the band join)
-    return cross.unionByName(star)
-
-
-def estimated_jaccard_col(sig_a, sig_b) -> "F.Column":
-    """Unbiased LSH Jaccard estimate: the fraction of the N_PERM
-    minhash values on which the two signatures agree.
-
-    Unrolled to N_PERM static element comparisons — fully
-    whole-stage-codegen'd JVM arithmetic. The ``zip_with``/``aggregate``
-    form interprets its lambda per element (16 interpreted calls per
-    candidate pair — the verify stage runs over every pair the band
-    join emits, so at corpus scale this is a hot path)."""
-    total = None
-    for i in range(N_PERM):
-        term = (sig_a[i] == sig_b[i]).cast("int")
-        total = term if total is None else total + term
-    return total / F.lit(N_PERM)
-
-
-def verify_pairs(
-    candidates: DataFrame,
-    staged: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    min_est_jaccard: float = 0.5,
-) -> DataFrame:
-    """Signature-estimate verification of candidate pairs: pure column
-    arithmetic over the staged signatures — the text column is never
-    touched. Pairs below ``min_est_jaccard`` are dropped."""
-    sig = staged.select(F.col(id_col), F.col("mh"))
-    return (
-        candidates.join(
-            sig.select(F.col(id_col).alias("id_a"), F.col("mh").alias("_ma")),
-            on="id_a",
-        )
-        .join(
-            sig.select(F.col(id_col).alias("id_b"), F.col("mh").alias("_mb")),
-            on="id_b",
-        )
-        .withColumn("est_jaccard", estimated_jaccard_col(F.col("_ma"), F.col("_mb")))
-        .filter(F.col("est_jaccard") >= min_est_jaccard)
-        .select("id_a", "id_b", "est_jaccard")
-    )
-
-
-def _survivors_frame(
-    staged_winners: DataFrame, components: DataFrame, *, id_col: str = "doc_id"
-) -> DataFrame:
-    """Survivor selection: min-id representative per near-dup component
-    plus every untouched exact winner."""
-    cluster_winners = components.groupBy("component").agg(
-        F.min("node").alias(id_col)
-    )
-    clustered_ids = components.select(F.col("node").alias(id_col))
-    return (
-        staged_winners.join(clustered_ids, on=id_col, how="left_anti")
-        .select(id_col)
-        .unionByName(cluster_winners.select(id_col))
-    )
-
-
 def dedup_components_frame(
     docs: DataFrame,
     *,
@@ -231,8 +108,6 @@ def dedup_components_frame(
     resumable job adds materialization and a manifest, nothing
     semantic); the DuckDB oracle is
     plans/demo_training.oracle_dedup_survivors_sql."""
-    from ..operators.dedup import connected_components
-
     staged = stage_documents(docs, text=text, id_col=id_col, k=k)
     winners = staged.groupBy("content_hash").agg(F.min(id_col).alias(id_col))
     staged_winners = staged.join(
@@ -336,7 +211,9 @@ def run_dedup_pipeline(
     components = spark.read.parquet(clusters_path)
     n_clustered = components.count()
 
-    survivors = _survivors_frame(staged_winners, components, id_col=id_col)
+    survivors = drop_cluster_losers(
+        staged_winners.select(id_col), components, id_col=id_col
+    )
     survivors_path = str(out / "survivors")
     survivors.write.mode("overwrite").parquet(survivors_path)
     # staged_winners (via the winners semi-join) was consumed again by

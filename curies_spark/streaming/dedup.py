@@ -46,7 +46,14 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from ..plans.dedup_pipeline import band_keys, estimated_jaccard_col
+from ..operators.dedup import (
+    band_join,
+    band_keys,
+    collapse_signature_families,
+    connected_components,
+    drop_cluster_losers,
+    verify_pairs,
+)
 from ..plans.dedup_pipeline import stage_documents as _stage
 from .fsio import fs_delete, fs_exists, fs_read_text, fs_write_text, partition_ids
 
@@ -264,19 +271,8 @@ def _near_pairs(
     the batch side is broadcast (when under ``BROADCAST_NOVEL_CAP``),
     so the store is SCANNED once per batch but never shuffled."""
     batch_banded = band_keys(novel).localCheckpoint(eager=False)
-    left, right = batch_banded.alias("l"), batch_banded.alias("r")
-    within = (
-        left.join(
-            right,
-            on=[
-                F.col("l.band") == F.col("r.band"),
-                F.col("l.key") == F.col("r.key"),
-                F.col("l.doc_id") < F.col("r.doc_id"),
-            ],
-        )
-        .select(F.col("l.doc_id").alias("id_a"), F.col("r.doc_id").alias("id_b"))
-        .distinct()
-    )
+    pairs = band_join(batch_banded)
+    sig = novel.select("doc_id", "mh")
     if store is not None:
         store_banded = band_keys(store).alias("s")
         b = batch_banded.alias("b")
@@ -296,24 +292,12 @@ def _near_pairs(
             )
             .distinct()
         )
-        pairs = within.unionByName(cross)
-        sig = novel.select("doc_id", "mh").unionByName(store.select("doc_id", "mh"))
-    else:
-        pairs = within
-        sig = novel.select("doc_id", "mh")
-    return (
-        pairs.filter(F.col("id_a") != F.col("id_b"))
-        .join(
-            sig.select(F.col("doc_id").alias("id_a"), F.col("mh").alias("_ma")),
-            on="id_a",
-        )
-        .join(
-            sig.select(F.col("doc_id").alias("id_b"), F.col("mh").alias("_mb")),
-            on="id_b",
-        )
-        .withColumn("est_jaccard", estimated_jaccard_col(F.col("_ma"), F.col("_mb")))
-        .filter(F.col("est_jaccard") >= min_est_jaccard)
-        .select("id_a", "id_b", "est_jaccard")
+        pairs = pairs.unionByName(cross)
+        sig = sig.unionByName(store.select("doc_id", "mh"))
+    return verify_pairs(
+        pairs.filter(F.col("id_a") != F.col("id_b")),
+        sig,
+        min_est_jaccard=min_est_jaccard,
     )
 
 
@@ -326,26 +310,16 @@ def _pair_batch(
     """Returns (pairs, novel): the batch's duplicate pairs and the
     signature-novel staged rows to append to the store.
 
-    Signature-identical documents — which include every exact-duplicate
-    family, since identical contents hash to identical signatures —
-    collapse BEFORE the band join: banding an n-member family directly
-    is quadratic in n (a document repeated 10^6 times would emit ~10^12
-    band pairs). Each batch member instead emits ONE star pair
-    (est_jaccard = 1.0: full signature agreement) to its family's
-    canonical id — the min batch id, or the store's holder when the
-    signature is already stored — and only signature-novel documents
-    enter the band join and the store. Candidate connectivity is
-    preserved: a collapsed member's band keys are exactly its canon's,
-    so every cross pair it would have found, its canon finds."""
-    # within-batch signature collapse: min doc_id per full signature
-    canon = staged_batch.groupBy("mh").agg(F.min("doc_id").alias("_canon"))
-    with_canon = staged_batch.join(canon, on="mh")
-    batch_star = with_canon.filter(F.col("doc_id") != F.col("_canon")).select(
-        F.col("_canon").alias("id_a"),
-        F.col("doc_id").alias("id_b"),
-        F.lit(1.0).alias("est_jaccard"),
-    )
-    winners = with_canon.filter(F.col("doc_id") == F.col("_canon")).drop("_canon")
+    Signature families collapse BEFORE the band join, exactly as in the
+    batch operators
+    (:func:`~curies_spark.operators.dedup.collapse_signature_families`):
+    each batch member emits ONE star pair (est_jaccard = 1.0: full
+    signature agreement) to the min batch id of its family. Streaming
+    adds only the store-holder match: a batch canon whose signature is
+    already stored pairs with the store's holder instead. Only
+    signature-novel documents enter the band join and the store."""
+    batch_star, winners = collapse_signature_families(staged_batch)
+    batch_star = batch_star.withColumn("est_jaccard", F.lit(1.0))
 
     if store is not None:
         # winners whose signature already lives in the store: one pair
@@ -438,8 +412,6 @@ def _update_components(
         .filter(F.col("id_a") != F.col("id_b"))
         .distinct()
     )
-    from ..operators.dedup import connected_components
-
     moves = (
         connected_components(contracted)
         .filter(F.col("node") != F.col("component"))
@@ -578,8 +550,6 @@ def streamed_survivors(
     over the pairs table (the differential twin the tests compare
     against); ``incremental=True`` fails loud when no label table
     exists."""
-    from ..operators.dedup import connected_components
-
     store = _read_store(spark, f"{out_dir}/store", None)
     ids = store.select("doc_id") if store is not None else None
     comps = None
@@ -625,10 +595,7 @@ def streamed_survivors(
         if comps is not None:
             node_ids = comps.select(F.col("node").alias("doc_id"))
             ids = node_ids if ids is None else ids.unionByName(node_ids)
-            losers = comps.filter(F.col("node") != F.col("component")).select(
-                F.col("node").alias("doc_id")
-            )
-            return ids.distinct().join(losers, on="doc_id", how="left_anti")
+            return drop_cluster_losers(ids.distinct(), comps)
 
     pairs = read_stream_pairs(spark, out_dir)
     if pairs is not None:
@@ -642,9 +609,6 @@ def streamed_survivors(
     all_ids = ids.distinct()
     if pairs is None:
         return all_ids
-    losers = connected_components(
-        pairs.select("id_a", "id_b").distinct()
-    ).filter(F.col("node") != F.col("component")).select(
-        F.col("node").alias("doc_id")
+    return drop_cluster_losers(
+        all_ids, connected_components(pairs.select("id_a", "id_b").distinct())
     )
-    return all_ids.join(losers, on="doc_id", how="left_anti")

@@ -167,6 +167,24 @@ def test_band_pairs_shuffles_signatures_not_text(spark):
     assert _shuffles(plan) <= 3, plan
     assert plan.count("Scan ExistingRDD") >= 3, plan  # shared canon cut
 
+    # the MinHash and SimHash pair operators run the same collapse and
+    # band join: the same shape on their own inputs
+    from curies_spark.operators.dedup import (
+        minhash_candidate_pairs,
+        simhash_candidate_pairs,
+    )
+
+    docs = spark.createDataFrame(
+        [Row(doc_id=1, text="a b c d"), Row(doc_id=2, text="a b c e")]
+    )
+    signed = spark.createDataFrame(
+        [Row(doc_id=1, simhash=1), Row(doc_id=2, simhash=3)]
+    )
+    for pairs in (minhash_candidate_pairs(docs), simhash_candidate_pairs(signed)):
+        plan = _plan(pairs)
+        assert _shuffles(plan) <= 3, plan
+        assert plan.count("Scan ExistingRDD") >= 3, plan
+
 def test_large_epm_fused_canonicalization_plans(spark):
     """Past NATIVE_COMPRESS_THRESHOLD, standardize_uri and
     compress_or_standardize are each ONE Arrow stage that returns the

@@ -119,6 +119,22 @@ def test_simhash(spark, docs):
     assert got[(1, 2)] == 0
 
 
+def test_simhash_pairs_rejects_hamming_past_pigeonhole_bound(spark):
+    """Blocking on n_tables bands only guarantees recall below
+    n_tables differing bits: two signatures differing by one bit in
+    each 16-bit band (hamming 4) share no band, so max_hamming=4 with
+    4 tables must fail loud instead of silently returning no pair."""
+    one_bit_per_band = sum(1 << (16 * t) for t in range(4))
+    sh = spark.createDataFrame(
+        [Row(doc_id=1, simhash=0), Row(doc_id=2, simhash=one_bit_per_band)]
+    )
+    with pytest.raises(ValueError, match="n_tables"):
+        D.simhash_candidate_pairs(sh, max_hamming=4)
+    # eight 8-bit bands: the four clean bands find the pair
+    got = D.simhash_candidate_pairs(sh, max_hamming=4, n_tables=8).collect()
+    assert [(r["id_a"], r["id_b"], r["hamming"]) for r in got] == [(1, 2, 4)]
+
+
 def test_cosine_topk(spark):
     rows = [
         Row(vec_id=0, embedding=[1.0, 0.0, 0.0]),
@@ -146,6 +162,36 @@ def test_lsh_topk_matches_bruteforce_on_near_neighbors(spark):
     # the top hit must be found; recall@5 ≥ 3 for this easy distribution
     assert approx[0] == exact[0]
     assert len(set(exact) & set(approx)) >= 3
+
+
+def test_lsh_topk_probes_every_bucket_within_multiprobe_bits(spark):
+    """multiprobe_bits=2 probes the buckets two sign flips away: a
+    vector whose signature differs from the query's in exactly 2 bits
+    is found at radius 2 and missed at radius 1."""
+    import random
+
+    n_planes, dim = 6, 8
+    planes = S.hyperplanes(dim, n_planes, seed=7)
+    query = [1.0] * dim
+    q_sig = S.query_signature(query, planes)
+    rng = random.Random(3)
+    far = None
+    while far is None:
+        v = [rng.uniform(-1.0, 1.0) for _ in range(dim)]
+        if bin(S.query_signature(v, planes) ^ q_sig).count("1") == 2:
+            far = v
+    df = spark.createDataFrame([Row(vec_id=1, embedding=far)])
+
+    def hits(bits):
+        return [
+            r["vec_id"]
+            for r in S.lsh_topk(
+                df, query, k=5, n_planes=n_planes, multiprobe_bits=bits
+            ).collect()
+        ]
+
+    assert hits(1) == []
+    assert hits(2) == [1]
 
 
 def test_embedding_near_dup(spark):
