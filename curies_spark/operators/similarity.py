@@ -589,9 +589,23 @@ def _ann_params_path(index_path: str) -> str:
 
 
 def _write_ann_params(spark, index_path: str, params: "dict") -> None:
-    spark.createDataFrame([params]).coalesce(1).write.mode("overwrite").json(
-        _ann_params_path(index_path)
-    )
+    from ..streaming.fsio import fs_write_json
+
+    fs_write_json(spark, _ann_params_path(index_path), params)
+
+
+def _read_ann_params(spark, index_path: str) -> "dict[str, int]":
+    """An ANN/IVF index's ``_params`` JSON file: written LAST by the
+    build, so it is the index's commit record."""
+    from ..streaming.fsio import fs_read_json
+
+    stored = fs_read_json(spark, _ann_params_path(index_path))
+    if stored is None:
+        raise RuntimeError(
+            f"index at {index_path!r} has no _params commit record: its "
+            "build did not finish. Rebuild the index."
+        )
+    return stored
 
 
 def _check_ann_params(spark, index_path: str, params: "dict") -> None:
@@ -599,16 +613,8 @@ def _check_ann_params(spark, index_path: str, params: "dict") -> None:
     different hyperplanes — probes prune those buckets at planning time,
     so the appended vectors become silently unreachable. Fail loud."""
     stored = {
-        k: v
-        for k, v in spark.read.json(_ann_params_path(index_path))
-        .collect()[0]
-        .asDict()
-        .items()
-        if k in params
+        k: v for k, v in _read_ann_params(spark, index_path).items() if k in params
     }
-    # indexes built before the quantized layout existed are float-only
-    if "quantize" in params:
-        stored.setdefault("quantize", 0)
     if stored != params:
         raise ValueError(
             f"ANN index at {index_path!r} was built with {stored}, "
@@ -631,7 +637,7 @@ def build_ann_index(
     """Materialize a persisted ANN index: one pass computes every row's
     hyperplane signature, written ``partitionBy("sig")`` so each bucket
     is its own partition directory. The (seed, n_planes, dim) build
-    parameters ride along in a ``_params`` side table so appends can
+    parameters ride along in a ``_params`` JSON file so appends can
     verify compatibility.
 
     This is the amortization :func:`lsh_topk` lacks — ``lsh_topk``
@@ -647,7 +653,11 @@ def build_ann_index(
     touches floats — probe bytes are the index's scale currency. The
     choice is recorded in ``_params`` so appends/probes against a
     mismatched layout fail loud instead of silently reading the wrong
-    table."""
+    table. ``_params`` is deleted first and written last, so a build
+    that dies in between leaves an index that probes and appends refuse."""
+    from ..streaming.fsio import fs_delete
+
+    fs_delete(df.sparkSession, _ann_params_path(index_path))
     _write_signed(
         df,
         index_path,
@@ -684,7 +694,7 @@ def append_to_ann_index(
 ) -> None:
     """Incrementally extend a persisted ANN index: sign the new vectors
     with the SAME hyperplanes (verified against the index's ``_params``
-    side table) and append them to their bucket partitions. At 100 TB
+    file) and append them to their bucket partitions. At 100 TB
     this is the difference between a daily full rebuild and writing only
     the day's increment — dynamic partition append touches only the
     buckets the new vectors land in.
@@ -716,13 +726,6 @@ def append_to_ann_index(
     )
 
 
-def _read_ann_params(spark, index_path: str) -> "dict[str, int]":
-    row = spark.read.json(_ann_params_path(index_path)).collect()[0].asDict()
-    out = {k: int(row[k]) for k in ("dim", "n_planes", "seed")}
-    out["quantize"] = int(row.get("quantize") or 0)
-    return out
-
-
 def probe_ann_index(
     spark,
     index_path: str,
@@ -740,7 +743,7 @@ def probe_ann_index(
     ``PartitionFilters`` in the scan node).
 
     ``n_planes``/``seed`` default to the values the index was BUILT
-    with (read from its ``_params`` side table); passing explicit
+    with (read from its ``_params`` file); passing explicit
     values that disagree with the build fails loud — probing with the
     wrong hyperplanes would silently select the wrong buckets and
     return arbitrarily poor candidates (the same unreachability hazard
@@ -937,10 +940,14 @@ def build_ivf_index(
     ``write_vectors=False`` trains and persists ONLY the centroid side
     table (no vector partitions) — the seed step for a streamed index
     (:func:`curies_spark.streaming.start_ivf_index_stream`), whose
-    batch-scoped layout must not mix with the flat one.
+    batch-scoped layout must not mix with the flat one. ``_params`` is
+    deleted first and written after the vectors and ``_centroids``.
     """
+    from ..streaming.fsio import fs_delete
+
     if not 0.0 < train_fraction <= 1.0:
         raise ValueError(f"train_fraction must be in (0, 1], got {train_fraction}")
+    fs_delete(df.sparkSession, _ann_params_path(index_path))
     # quantize + write_vectors=False is the SEED for a streamed
     # quantized IVF index: no payload is written here, but _params
     # records the layout so every streamed batch writes codes+vectors
@@ -995,16 +1002,16 @@ def build_ivf_index(
             final.repartition("cid").write.mode("overwrite").partitionBy(
                 "cid"
             ).parquet(index_path)
-    # the layout rides along so probes/appends against the wrong one
-    # fail loud (legacy indexes have no params file → float layout)
-    df.sparkSession.createDataFrame(
-        [{"quantize": int(quantize), "dim": dim}]
-    ).coalesce(1).write.mode("overwrite").json(index_path + "_params")
     # centroids ride along as a driver-scale side table for the prober
     df.sparkSession.createDataFrame(
         [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
         ["cid", "centroid"],
     ).coalesce(1).write.mode("overwrite").parquet(index_path + "_centroids")
+    # the layout rides along so probes/appends against the wrong one
+    # fail loud; written last, it commits the build
+    _write_ann_params(
+        df.sparkSession, index_path, {"quantize": int(quantize), "dim": dim}
+    )
 
 
 def load_ivf_centroids(
@@ -1021,15 +1028,8 @@ def load_ivf_centroids(
 
 
 def _ivf_quantized(spark, index_path: str) -> bool:
-    """Whether an IVF index uses the quantized two-table layout (legacy
-    indexes predate the ``_params`` side table → float layout)."""
-    from ..streaming.fsio import fs_exists
-
-    path = index_path + "_params"
-    if not fs_exists(spark, path):
-        return False
-    row = spark.read.json(path).collect()[0].asDict()
-    return bool(int(row.get("quantize") or 0))
+    """Whether an IVF index uses the quantized two-table layout."""
+    return bool(_read_ann_params(spark, index_path)["quantize"])
 
 
 def append_to_ivf_index(

@@ -38,15 +38,14 @@ Outputs under ``out_dir``: ``staged/`` (hash+signature+quality),
 ``clusters/`` (doc_id → component), ``survivors/`` (the deduped
 doc_id set), and ``manifest.json`` with per-stage counts. The staged
 write is the only pass over the text; re-running with the same
-``out_dir`` resumes after staging (manifest-gated, like the KG
-pipeline's shard resume).
+``out_dir`` resumes after staging, gated by ``staged.json`` — the
+staging recipe ``{k, text, id_col}`` the signatures were computed
+with, like the KG pipeline's ``staged.json`` records ``n_shards``.
 """
 
 from __future__ import annotations
 
-import json
 import time
-from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -60,7 +59,6 @@ from ..operators.dedup import (
     verify_pairs,
 )
 from ..operators.text import quality_features, quality_score_col
-from .pipeline import _atomic_write
 
 __all__ = [
     "band_keys",
@@ -162,15 +160,21 @@ def run_dedup_pipeline(
     resume: bool = True,
 ) -> "dict":
     """Run the full dedup pipeline; returns the manifest dict."""
-    out = Path(out_dir)
-    out.mkdir(parents=True, exist_ok=True)
+    from ..streaming.fsio import fs_delete, fs_read_json, fs_write_json
+
     t0 = time.perf_counter()
 
-    staged_path = str(out / "staged")
-    if not (resume and (out / "staged" / "_SUCCESS").exists()):
+    staged_path = f"{out_dir}/staged"
+    # the staged signatures depend on the recipe, so another one
+    # restages; the stamp is dropped before a restage and written after
+    # it, so it only ever describes a finished staged write
+    stamp_path, recipe = f"{out_dir}/staged.json", {"k": k, "text": text, "id_col": id_col}
+    if not (resume and fs_read_json(spark, stamp_path) == recipe):
+        fs_delete(spark, stamp_path)
         stage_documents(docs, text=text, id_col=id_col, k=k).write.mode(
             "overwrite"
         ).parquet(staged_path)
+        fs_write_json(spark, stamp_path, recipe)
     staged = spark.read.parquet(staged_path)
 
     # exact dedup first: one winner per content hash; near-dup stages
@@ -199,14 +203,14 @@ def run_dedup_pipeline(
     verified = verify_pairs(
         candidates, staged_winners, id_col=id_col, min_est_jaccard=min_est_jaccard
     )
-    pairs_path = str(out / "pairs")
+    pairs_path = f"{out_dir}/pairs"
     verified.write.mode("overwrite").parquet(pairs_path)
     candidates.unpersist()
     verified = spark.read.parquet(pairs_path)
     n_pairs = verified.count()
 
     components = connected_components(verified)
-    clusters_path = str(out / "clusters")
+    clusters_path = f"{out_dir}/clusters"
     components.write.mode("overwrite").parquet(clusters_path)
     components = spark.read.parquet(clusters_path)
     n_clustered = components.count()
@@ -214,7 +218,7 @@ def run_dedup_pipeline(
     survivors = drop_cluster_losers(
         staged_winners.select(id_col), components, id_col=id_col
     )
-    survivors_path = str(out / "survivors")
+    survivors_path = f"{out_dir}/survivors"
     survivors.write.mode("overwrite").parquet(survivors_path)
     # staged_winners (via the winners semi-join) was consumed again by
     # the survivors write — only now is the aggregate free to go
@@ -238,5 +242,5 @@ def run_dedup_pipeline(
         "k": k,
         "wall_sec": round(time.perf_counter() - t0, 2),
     }
-    _atomic_write(out / "manifest.json", json.dumps(manifest, indent=1))
+    fs_write_json(spark, f"{out_dir}/manifest.json", manifest)
     return manifest

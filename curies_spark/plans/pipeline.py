@@ -28,9 +28,7 @@ Scale design:
 
 from __future__ import annotations
 
-import json
 import time
-from pathlib import Path
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -185,7 +183,7 @@ def _shard_col(n_shards: int):
 
 
 def _stage_shards(
-    spark: SparkSession, repos: DataFrame, out: Path, n_shards: int, *, resume: bool
+    spark: SparkSession, repos: DataFrame, out: str, n_shards: int, *, resume: bool
 ) -> str:
     """Stage 0: ONE full pass over the source materializes the shard id
     as a *partition* column (``{out}/_staged/_shard=K/``).
@@ -211,31 +209,27 @@ def _stage_shards(
     ``out_dir`` or ``resume=False``; ``validate_content_invariant``
     against the new source detects drift after the fact.
     """
-    staged = out / "_staged"
-    marker = out / "_manifests" / "staged.json"
-    if resume and marker.exists():
-        recorded = json.loads(marker.read_text())
-        if recorded.get("n_shards") == n_shards:
-            return str(staged)
+    from ..streaming.fsio import fs_delete, fs_read_json, fs_write_json
+
+    staged = f"{out}/_staged"
+    marker = f"{out}/_manifests/staged.json"
+    if resume and fs_read_json(spark, marker) == {"n_shards": n_shards}:
+        return staged
+    # the marker describes only a finished staged write: a restage that
+    # dies must not leave the previous marker vouching for its output
+    fs_delete(spark, marker)
     (
         repos.withColumn("_shard", _shard_col(n_shards))
         .write.mode("overwrite")
         .partitionBy("_shard")
-        .parquet(str(staged))
+        .parquet(staged)
     )
-    _atomic_write(marker, json.dumps({"n_shards": n_shards}))
-    return str(staged)
-
-
-def _atomic_write(path: Path, text: str) -> None:
-    path.parent.mkdir(parents=True, exist_ok=True)
-    tmp = path.with_suffix(".tmp")
-    tmp.write_text(text)
-    tmp.replace(path)
+    fs_write_json(spark, marker, {"n_shards": n_shards})
+    return staged
 
 
 def _run_shard(
-    spark: SparkSession, staged_path: str, out: Path, bc, shard: int, n_shards: int
+    spark: SparkSession, staged_path: str, out: str, bc, shard: int, n_shards: int
 ) -> dict:
     """One shard's map phase: stats → mentions → linking → file edges +
     entity side-output, finished by an atomic manifest write (the
@@ -245,6 +239,8 @@ def _run_shard(
     run concurrently a failure in one never loses the checkpoints of
     shards that already completed.
     """
+    from ..streaming.fsio import fs_write_json
+
     t0 = time.perf_counter()
     # _shard is a partition column: this filter prunes to the shard's
     # own files (PartitionFilters), reading 1/n_shards of the data
@@ -264,18 +260,17 @@ def _run_shard(
     n_mentions = linked.count()
     n_linked = linked.filter(F.col("entity").isNotNull()).count()
 
-    build_file_edges(linked).write.mode("overwrite").parquet(
-        str(out / "triples" / f"shard={shard}")
-    )
+    triples_path = f"{out}/triples/shard={shard}"
+    build_file_edges(linked).write.mode("overwrite").parquet(triples_path)
     # side output for the merge phase: this shard's (repo, entity) set
     (
         linked.filter(F.col("entity").isNotNull())
         .select("repo", "entity")
         .distinct()
         .write.mode("overwrite")
-        .parquet(str(out / "_entities" / f"shard={shard}"))
+        .parquet(f"{out}/_entities/shard={shard}")
     )
-    n_triples = spark.read.parquet(str(out / "triples" / f"shard={shard}")).count()
+    n_triples = spark.read.parquet(triples_path).count()
     linked.unpersist()
 
     manifest = {
@@ -290,7 +285,7 @@ def _run_shard(
         "triples": n_triples,
         "wall_sec": round(time.perf_counter() - t0, 3),
     }
-    _atomic_write(out / "_manifests" / f"shard-{shard}.json", json.dumps(manifest))
+    fs_write_json(spark, f"{out}/_manifests/shard-{shard}.json", manifest)
     return manifest
 
 
@@ -319,6 +314,9 @@ def run_pipeline(
     """
     from concurrent.futures import ThreadPoolExecutor
 
+    # function-level: the streaming package imports this module
+    from ..streaming.fsio import fs_delete, fs_list, fs_read_json, fs_write_json
+
     conv = converter
     if conv is None:
         from ..sources.synthetic import pipeline_converter
@@ -335,9 +333,12 @@ def run_pipeline(
     spark.conf.set(_agg_pd_key, "true")
 
     try:
-        out = Path(out_dir)
-        manifest_dir = out / "_manifests"
-        manifest_dir.mkdir(parents=True, exist_ok=True)
+        manifest_dir = f"{out_dir}/_manifests"
+        # each shard manifest is read once, for the guard and the resume
+        manifests = {
+            name: fs_read_json(spark, f"{manifest_dir}/{name}")
+            for name in fs_list(spark, manifest_dir, "shard-*.json")
+        }
 
         # geometry guard: a shard manifest produced under a different
         # n_shards describes a different hash slice — trusting it would
@@ -345,35 +346,30 @@ def run_pipeline(
         # be read by the directory-level merge phase. A geometry change
         # therefore invalidates ALL derived state (outputs + manifests),
         # not just the mismatched manifests.
-        existing = sorted(manifest_dir.glob("shard-*.json"))
-        if existing and any(
-            json.loads(p.read_text()).get("n_shards") != n_shards for p in existing
-        ):
-            import shutil
-
+        if any(m.get("n_shards") != n_shards for m in manifests.values()):
             for stale in ("triples", "_entities"):
-                shutil.rmtree(out / stale, ignore_errors=True)
-            for p in existing:
-                p.unlink()
-            (manifest_dir / "merge.json").unlink(missing_ok=True)
+                fs_delete(spark, f"{out_dir}/{stale}")
+            for name in (*manifests, "merge.json"):
+                fs_delete(spark, f"{manifest_dir}/{name}")
+            manifests = {}
 
         metrics: list[dict] = []
         resumed = 0
         pending: list[int] = []
         for shard in range(n_shards):
-            manifest_path = manifest_dir / f"shard-{shard}.json"
-            if resume and manifest_path.exists():
-                metrics.append(json.loads(manifest_path.read_text()))
+            manifest = manifests.get(f"shard-{shard}.json")
+            if resume and manifest is not None:
+                metrics.append(manifest)
                 resumed += 1
             else:
                 pending.append(shard)
 
         if pending:
-            staged_path = _stage_shards(spark, repos, out, n_shards, resume=resume)
+            staged_path = _stage_shards(spark, repos, out_dir, n_shards, resume=resume)
             with ThreadPoolExecutor(max_workers=max(1, max_concurrent_shards)) as pool:
                 futures = {
                     shard: pool.submit(
-                        _run_shard, spark, staged_path, out, bc, shard, n_shards
+                        _run_shard, spark, staged_path, out_dir, bc, shard, n_shards
                     )
                     for shard in pending
                 }
@@ -386,25 +382,25 @@ def run_pipeline(
         # merge phase: entity-scoped edges over the union of side outputs.
         # Recomputed whenever any shard ran this invocation; skipped only on
         # a fully-resumed run with an existing merge manifest.
-        merge_manifest_path = manifest_dir / "merge.json"
-        if resumed == n_shards and merge_manifest_path.exists():
-            merge_manifest = json.loads(merge_manifest_path.read_text())
-        else:
+        merge_manifest_path = f"{manifest_dir}/merge.json"
+        merge_manifest = (
+            fs_read_json(spark, merge_manifest_path) if resumed == n_shards else None
+        )
+        if merge_manifest is None:
             t0 = time.perf_counter()
-            repo_entities = spark.read.parquet(str(out / "_entities")).distinct()
+            repo_entities = spark.read.parquet(f"{out_dir}/_entities").distinct()
             entity_edges = build_entity_edges(repo_entities, bc).dropDuplicates(
                 ["subject", "predicate", "object"]
             )
-            entity_edges.write.mode("overwrite").parquet(str(out / "triples" / "shard=merge"))
-            n_entity_triples = spark.read.parquet(
-                str(out / "triples" / "shard=merge")
-            ).count()
+            merge_path = f"{out_dir}/triples/shard=merge"
+            entity_edges.write.mode("overwrite").parquet(merge_path)
+            n_entity_triples = spark.read.parquet(merge_path).count()
             merge_manifest = {
                 "shard": "merge",
                 "triples": n_entity_triples,
                 "wall_sec": round(time.perf_counter() - t0, 3),
             }
-            _atomic_write(merge_manifest_path, json.dumps(merge_manifest))
+            fs_write_json(spark, merge_manifest_path, merge_manifest)
 
         totals = {
             "shards": n_shards,
@@ -416,7 +412,7 @@ def run_pipeline(
             "manifests": metrics,
             "merge": merge_manifest,
         }
-        _atomic_write(manifest_dir / "_totals.json", json.dumps(totals))
+        fs_write_json(spark, f"{manifest_dir}/_totals.json", totals)
         return totals
     finally:
         if _agg_pd_prev is None:

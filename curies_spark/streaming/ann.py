@@ -9,7 +9,7 @@ increment shape at corpus scale, where embeddings land continuously
 and a full rebuild is infeasible. Each micro-batch:
 
 - signs its vectors with the SAME hyperplanes the index was created
-  with (the ``_params`` side table is written once and verified at
+  with (the ``_params`` file is written once and verified at
   every stream (re)start — mismatched planes would make vectors
   silently unreachable, the hazard the batch append already guards);
 - writes ``{index_path}/batch=N/sig=S/...`` with batch-scoped
@@ -120,8 +120,9 @@ def start_ann_index_stream(
     }
     # existence probed through the Hadoop FS API: the index path may be
     # any Hadoop filesystem URI, not just a local POSIX path
-    if fs_exists(spark, index_path + "_params"):
+    if fs_exists(spark, index_path) or fs_exists(spark, index_path + "_params"):
         # resuming into an existing index: planes AND layout must match
+        # (an index without a readable _params gets the rebuild error)
         _check_ann_params(spark, index_path, params)
     else:
         _write_ann_params(spark, index_path, params)
@@ -182,9 +183,9 @@ def start_ivf_index_stream(
 
     The index's centroids must already exist — train them once with
     ``build_ivf_index(seed_corpus, index_path, write_vectors=False)``
-    (or a full batch build at a DIFFERENT path whose ``_centroids``
-    table is copied here): standard IVF maintenance keeps cells fixed
-    between rare re-trains while appends arrive continuously. Each
+    (or a full batch build at a DIFFERENT path whose ``_centroids`` and
+    ``_params`` are copied here): standard IVF maintenance keeps cells
+    fixed between rare re-trains while appends arrive continuously. Each
     micro-batch runs the shared BLAS nearest-centroid kernel
     (``_ivf_assign`` — the same cell placement as the batch paths, so
     they can never diverge) and writes

@@ -55,7 +55,7 @@ from ..operators.dedup import (
     verify_pairs,
 )
 from ..plans.dedup_pipeline import stage_documents as _stage
-from .fsio import fs_delete, fs_exists, fs_read_text, fs_write_text, partition_ids
+from .fsio import fs_delete, fs_exists, fs_read_json, fs_write_json, partition_ids
 
 __all__ = [
     "DOC_SCHEMA",
@@ -106,27 +106,12 @@ def _check_signature_format(spark: SparkSession, out_dir: str, *, k: int) -> Non
     set holds signatures this code can never match, so a resumed stream
     would silently miss near-duplicates across the upgrade boundary
     (the round-5 ``\\s`` → WS_CHARS change was exactly such a break).
-    Fresh stores get a ``_signature.json`` stamp; resumes compare it."""
-    import json
-
-    from py4j.protocol import Py4JJavaError
-
+    Fresh stores get a ``_signature.json`` stamp; resumes compare it
+    (a torn stamp gets fsio's guided rebuild error)."""
     marker = f"{out_dir}/_signature.json"
     fmt = _signature_format(k)
-    try:
-        existing = fs_read_text(spark, marker)
-        recorded = None if existing is None else json.loads(existing)
-    except (ValueError, Py4JJavaError) as exc:
-        # a crash mid-write leaves a torn stamp: truncated JSON, or on a
-        # checksummed filesystem a .crc that no longer matches the data
-        raise RuntimeError(
-            f"streaming dedup store at {out_dir!r} has a torn or unreadable "
-            "signature format stamp (_signature.json), so its "
-            "tokenizer/permutation recipe is unknown and a resume could "
-            "silently under-pair. Rebuild the store (or run with a fresh "
-            "out_dir)."
-        ) from exc
-    if existing is not None:
+    recorded = fs_read_json(spark, marker)
+    if recorded is not None:
         if recorded != fmt:
             raise RuntimeError(
                 "streaming dedup store at "
@@ -141,10 +126,10 @@ def _check_signature_format(spark: SparkSession, out_dir: str, *, k: int) -> Non
             f"streaming dedup store at {out_dir!r} predates signature-format "
             "stamping — its tokenizer/permutation recipe is unknown, so a "
             "resume could silently under-pair. Rebuild the store (or stamp "
-            f"it manually with _signature.json = {json.dumps(fmt, sort_keys=True)} "
-            "after verifying it was written by this engine version)."
+            f"it with fsio.fs_write_json(spark, {marker!r}, {fmt!r}) after "
+            "verifying it was written by this engine version)."
         )
-    fs_write_text(spark, marker, json.dumps(fmt, sort_keys=True))
+    fs_write_json(spark, marker, fmt)
 
 
 def read_document_stream(

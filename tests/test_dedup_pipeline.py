@@ -220,3 +220,44 @@ def test_family_collapse_preserves_components(spark):
             )
         }
         assert components(got) == components(legacy)
+
+
+def test_resume_restages_on_changed_k(spark, corpus, tmp_path):
+    """MinHash signatures depend on the shingle size: resuming an out_dir
+    staged under another ``k`` restages instead of reusing signatures
+    of the wrong recipe, and the result equals a fresh run."""
+    out = str(tmp_path / "resume_k")
+    P.run_dedup_pipeline(spark, corpus, out, k=3, min_est_jaccard=0.4)
+    resumed = P.run_dedup_pipeline(spark, corpus, out, k=5, min_est_jaccard=0.4)
+    fresh = P.run_dedup_pipeline(
+        spark, corpus, str(tmp_path / "fresh_k"), k=5, min_est_jaccard=0.4
+    )
+
+    staged = {r["doc_id"]: r["mh"] for r in spark.read.parquet(f"{out}/staged").collect()}
+    want = {r["doc_id"]: r["mh"] for r in P.stage_documents(corpus, k=5).collect()}
+    assert staged == want
+    for key in ("candidate_pairs", "verified_pairs", "clustered_docs", "survivors"):
+        assert resumed[key] == fresh[key], key
+    with open(f"{out}/staged.json") as fh:
+        assert json.load(fh) == {"k": 5, "text": "text", "id_col": "doc_id"}
+
+
+def test_uri_out_dir_keeps_state_under_it(spark, corpus, tmp_path, monkeypatch):
+    """A ``file://`` out_dir keeps the manifest and the staged stamp
+    under that directory (none leaks into a cwd-relative ``file:``
+    path), and a rerun resumes after staging."""
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+    target = tmp_path / "dedup_uri"
+    first = P.run_dedup_pipeline(spark, corpus, f"file://{target}")
+    assert (target / "manifest.json").is_file()
+    assert (target / "staged.json").is_file()
+    assert list(cwd.iterdir()) == []
+
+    def boom(*a, **k):
+        raise AssertionError("staging must not recompute on resume")
+
+    monkeypatch.setattr(P, "stage_documents", boom)
+    again = P.run_dedup_pipeline(spark, corpus, f"file://{target}")
+    assert again["survivors"] == first["survivors"]

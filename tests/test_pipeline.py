@@ -14,6 +14,7 @@ from curies_spark.plans.pipeline import (
     validate_content_invariant,
 )
 from curies_spark.sources.synthetic import generate_repos, pipeline_converter
+from curies_spark.streaming import fsio
 
 
 @pytest.fixture(scope="module")
@@ -193,15 +194,16 @@ def test_crash_in_merge_manifest_write_reruns_clean(spark, repos, tmp_path, monk
     clean = run_pipeline(spark, repos, str(tmp_path / "clean"), n_shards=2)
 
     out = str(tmp_path / "crashed")
-    write_text = Path.write_text
+    write_file = fsio._write_file
 
-    def dies_halfway(self, text, *args, **kwargs):
-        if self.name.startswith("merge."):
-            write_text(self, text[: len(text) // 2], *args, **kwargs)
+    # the primitive's tmp write dies halfway through the merge manifest
+    def dies_halfway(fs, path, text):
+        if path.getName().startswith("merge."):
+            write_file(fs, path, text[: len(text) // 2])
             raise OSError("killed during the merge-manifest write")
-        return write_text(self, text, *args, **kwargs)
+        return write_file(fs, path, text)
 
-    monkeypatch.setattr(Path, "write_text", dies_halfway)
+    monkeypatch.setattr(fsio, "_write_file", dies_halfway)
     with pytest.raises(OSError, match="merge-manifest"):
         run_pipeline(spark, repos, out, n_shards=2)
     monkeypatch.undo()
@@ -214,3 +216,43 @@ def test_crash_in_merge_manifest_write_reruns_clean(spark, repos, tmp_path, monk
     assert spark.read.parquet(f"{out}/triples").count() == clean["triples"]
     recorded = json.loads((Path(out) / "_manifests" / "_totals.json").read_text())
     assert recorded["triples"] == clean["triples"]
+
+
+def test_uri_out_dir_keeps_state_under_it(spark, repos, tmp_path, monkeypatch):
+    """A ``file://`` out_dir keeps every manifest and stamp under that
+    directory (none leaks into a cwd-relative ``file:`` path), and a
+    rerun resumes from them."""
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+    target = tmp_path / "kg_uri"
+    totals = run_pipeline(spark, repos, f"file://{target}", n_shards=2)
+    assert totals["resumed_shards"] == 0
+    names = sorted(p.name for p in (target / "_manifests").glob("*.json"))
+    assert names == ["_totals.json", "merge.json", "shard-0.json", "shard-1.json", "staged.json"]
+    assert list(cwd.iterdir()) == []
+
+    again = run_pipeline(spark, repos, f"file://{target}", n_shards=2)
+    assert again["resumed_shards"] == 2
+    assert again["triples"] == totals["triples"]
+
+
+def test_crash_in_restage_does_not_trust_old_marker(spark, repos, tmp_path):
+    """A restage that dies after its overwrite dropped the old staged
+    copy must not leave the old ``staged.json`` vouching for it: the
+    next resume restages and returns the totals of a clean run."""
+    out = str(tmp_path / "restage")
+    clean = run_pipeline(spark, repos, out, n_shards=2)
+
+    killed = repos.withColumn(
+        "content", F.raise_error(F.lit("killed mid-restage")).cast("string")
+    )
+    with pytest.raises(Exception, match="killed mid-restage"):
+        run_pipeline(spark, killed, out, n_shards=2, resume=False)
+    for manifest in (Path(out) / "_manifests").glob("shard-*.json"):
+        manifest.unlink()
+
+    totals = run_pipeline(spark, repos, out, n_shards=2)
+    assert totals["resumed_shards"] == 0
+    for key in ("input_rows", "mentions", "linked_mentions", "triples"):
+        assert totals[key] == clean[key], key

@@ -50,6 +50,7 @@ def main() -> None:
         query_ann_index,
         query_ivf_index,
     )
+    from curies_spark.streaming.fsio import fs_delete
 
     def scanned_bytes(mark: int) -> int:
         return int(sum(e["metrics"].get("size of files read", 0) for e in sql.since(mark)))
@@ -135,7 +136,7 @@ def main() -> None:
     # files, so the codes-only row is the clean read-fraction signal)
     qindex = INDEX + "_quant"
     shutil.rmtree(qindex, ignore_errors=True)
-    shutil.rmtree(qindex + "_params", ignore_errors=True)
+    fs_delete(spark, qindex + "_params")
     t0 = time.perf_counter()
     build_ann_index(corpus, qindex, dim=dim, n_planes=N_PLANES, quantize=True)
     qbuild_wall = time.perf_counter() - t0

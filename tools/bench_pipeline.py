@@ -58,14 +58,13 @@ def main() -> None:
     source_bytes = harness.dir_stats(CORPUS)[1]
 
     from curies_spark.plans.pipeline import _stage_shards
-    from pathlib import Path
 
     shutil.rmtree(OUT, ignore_errors=True)
     t0 = time.perf_counter()
     mark = sql.mark()
     # run the staging pass separately so its scan bytes are attributable:
     # this is the ONLY read of the raw source in the whole job
-    _stage_shards(spark, repos, Path(OUT), 8, resume=False)
+    _stage_shards(spark, repos, OUT, 8, resume=False)
     staging_scan = _scanned_bytes(mark)
     mark = sql.mark()
     # resumes the staging marker; shard + merge phases read only the
