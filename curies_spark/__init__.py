@@ -16,6 +16,7 @@ from __future__ import annotations
 
 from typing import TYPE_CHECKING, Any
 
+from . import _worker  # noqa: F401  (patches a Python worker on import)
 from .core.converter import (
     CompressionError,
     ConversionError,

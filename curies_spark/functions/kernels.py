@@ -41,6 +41,7 @@ from typing import Iterable
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
+from .. import _worker
 from ..core.converter import Converter
 from ..core.w3c import LOCAL_UNIQUE_IDENTIFIER_PATTERN, NCNAME_PATTERN
 
@@ -191,6 +192,7 @@ def expand_col(
 
         @F.arrow_udf(StringType())
         def _expand(arr):
+            _worker.install()
             return _joined_match(arr, _expand_arrow_buckets(get()), "")
 
         expanded = _expand(c)
@@ -219,6 +221,7 @@ def expand_all_col(curie: "Column | str", converter) -> Column:
 
         @F.arrow_udf(ArrayType(StringType()))
         def _expand_all(arr):
+            _worker.install()
             import numpy as np
             import pyarrow as pa
             import pyarrow.compute as pc
@@ -490,6 +493,7 @@ def parse_uri_col(uri: "Column | str", converter) -> Column:
 
     @F.arrow_udf(PARSE_SCHEMA)
     def _parse(arr):
+        _worker.install()
         import pyarrow as pa
 
         prefixes, identifiers = _bucketed_prefix_match(arr, _arrow_buckets(get()))
@@ -529,6 +533,7 @@ def compress_udf(converter):
 
     @F.arrow_udf(StringType())
     def _compress(arr):
+        _worker.install()
         return _joined_match(arr, _arrow_buckets(get()), ":")
 
     return _compress
@@ -545,6 +550,7 @@ def standardize_uri_udf(converter):
 
     @F.arrow_udf(StringType())
     def _standardize_uri(arr):
+        _worker.install()
         return _joined_match(arr, _standardize_uri_arrow_buckets(get()), "")
 
     return _standardize_uri
@@ -561,6 +567,7 @@ def compress_or_standardize_udf(converter):
 
     @F.arrow_udf(StringType())
     def _compress_or_standardize(arr):
+        _worker.install()
         import pyarrow as pa
         import pyarrow.compute as pc
 
@@ -598,6 +605,7 @@ def _exact_match_udf(converter, mapping_attr: str, mapping_builder):
 
     @F.arrow_udf(StringType())
     def _lookup(arr):
+        _worker.install()
         import pyarrow as pa
         import pyarrow.compute as pc
 
@@ -649,6 +657,7 @@ def parse_curie_col(curie: "Column | str", converter) -> Column:
 
     @F.arrow_udf(PARSE_SCHEMA)
     def _parse_curie(arr):
+        _worker.install()
         import pyarrow as pa
 
         prefixes, identifiers = _bucketed_prefix_match(

@@ -34,6 +34,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import BooleanType
 
+from .. import _worker
+
 __all__ = [
     "BloomFilter",
     "bloom_seen_col",
@@ -149,6 +151,7 @@ def build_bloom_filter(
     m, k = _plan_bits(expected_items, fpp)
 
     def per_partition(batches):
+        _worker.install()
         bits = np.zeros(m // 8, dtype=np.uint8)
         count = 0
         for pdf in batches:
@@ -168,6 +171,7 @@ def build_bloom_filter(
         groups = max(1, BLOOM_COLLECT_BUDGET_BYTES // (2 * bitmap_bytes))
 
         def or_group(batches):
+            _worker.install()
             acc = np.zeros(bitmap_bytes, dtype=np.uint8)
             count = 0
             for pdf in batches:
@@ -198,6 +202,7 @@ def bloom_seen_col(column: "Column | str", bloom: BloomFilter) -> Column:
 
     @F.arrow_udf(BooleanType())
     def _probe(arr):
+        _worker.install()
         import pyarrow as pa
 
         if isinstance(arr, pa.ChunkedArray):

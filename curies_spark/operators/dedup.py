@@ -28,6 +28,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import ArrayType, LongType
 
+from .. import _worker
+
 __all__ = [
     "band_join",
     "band_keys",
@@ -42,7 +44,6 @@ __all__ = [
     "minhash_candidate_pairs",
     "minhash_signature",
     "minhash_signature_col",
-    "minhash_signature_exploded",
     "ngram_jaccard_pairs",
     "shingle_hash_col",
     "shingles_arrow_col",
@@ -164,6 +165,7 @@ def shingles_arrow_col(text: "Column | str", *, k: int = 3) -> Column:
 
     @F.arrow_udf(ArrayType(StringType()))
     def _shingles(arr):
+        _worker.install()
         import numpy as np
         import pyarrow as pa
 
@@ -244,7 +246,7 @@ def minhash_signature(
 ) -> DataFrame:
     """Per-document MinHash signature via the shuffle-free batch kernel
     (:func:`minhash_signature_col`). Output schema AND values match
-    :func:`minhash_signature_exploded` (the differential twin) on any
+    the exploded-shuffle twin in ``tests/differential_twins.py`` on any
     input — both tokenize on the engine's ONE explicit whitespace class
     (:data:`~curies_spark.operators.text.WS_CHARS`), including
     NBSP/U+2028-style separators real corpora contain. As a map-only
@@ -255,23 +257,6 @@ def minhash_signature(
     return df.select(F.col(id_col), sig.alias("_mh")).select(
         id_col, *[F.col("_mh")[i].alias(f"mh{i}") for i in range(N_PERM)]
     )
-
-
-def minhash_signature_exploded(
-    df: DataFrame, *, text: str = "text", id_col: str = "doc_id", k: int = 3
-) -> DataFrame:
-    """Per-document MinHash signature as N_PERM min-aggregates over the
-    exploded shingle hashes — one shuffle keyed by document id. The
-    set-based twin of :func:`minhash_signature` (same values; kept for
-    differential testing and as the oracle-shaped form)."""
-    exploded = df.select(
-        F.col(id_col), F.explode(shingles_col(text, k=k)).alias("_sh")
-    ).select(F.col(id_col), shingle_hash_col(F.col("_sh")).alias("_h"))
-    aggs = [
-        F.min(F.col("_h").bitwiseXOR(F.lit(_R[i]))).alias(f"mh{i}")
-        for i in range(N_PERM)
-    ]
-    return exploded.groupBy(id_col).agg(*aggs)
 
 
 def minhash_signature_col(text: "Column | str", *, k: int = 3) -> Column:
@@ -298,6 +283,7 @@ def minhash_signature_col(text: "Column | str", *, k: int = 3) -> Column:
 
     @F.arrow_udf(ArrayType(LongType()))
     def _minhash(arr):
+        _worker.install()
         import hashlib
 
         import pyarrow as pa
@@ -566,27 +552,6 @@ def ngram_jaccard_pairs(
     )
 
 
-def _simhash_reference_one(s: "str | None", n_bits: int = 64) -> "int | None":
-    """Straightforward per-row SimHash — the differential twin for
-    :func:`simhash_col` tests (never used in a Spark plan)."""
-    import hashlib
-
-    if s is None:
-        return None
-    tokens = s.lower().split()
-    if not tokens:
-        return 0
-    word = 0
-    for b in range(n_bits):
-        votes = 0
-        for t in tokens:
-            h = int.from_bytes(hashlib.sha256(t.encode("utf-8")).digest()[:8], "big")
-            votes += 1 if (h >> b) & 1 else -1
-        if votes > 0:
-            word |= 1 << b
-    return word - (1 << 64) if word >= (1 << 63) else word
-
-
 def simhash_col(text: "Column | str", *, n_bits: int = 64) -> Column:
     """64-bit SimHash over whitespace tokens — Arrow-batched pandas UDF,
     fully batch-vectorized: the whole batch is tokenized with pandas'
@@ -609,6 +574,7 @@ def simhash_col(text: "Column | str", *, n_bits: int = 64) -> Column:
 
     @F.pandas_udf(LongType())
     def _simhash(series: pd.Series) -> pd.Series:
+        _worker.install()
         import hashlib
 
         token_lists = series.str.lower().str.split()

@@ -32,6 +32,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from .. import _worker
+
 __all__ = [
     "MEDIA_SCHEMA",
     "decode_stub",
@@ -128,6 +130,7 @@ def extract_features(
     decoder = decode or deterministic_fake_decode
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        _worker.install()
         for batch in batches:
             yield pd.DataFrame(
                 {

@@ -22,6 +22,8 @@ import struct
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from .. import _worker
+
 __all__ = [
     "append_to_ann_index",
     "append_to_ivf_index",
@@ -63,15 +65,6 @@ def hyperplanes(dim: int, n_planes: int, *, seed: int = 7) -> "list[list[float]]
             v.append(2.0 * u - 1.0)
         planes.append(_unit(v))
     return planes
-
-
-def _dot_lit(vec: Column, plane: "list[float]") -> Column:
-    lit = F.array(*[F.lit(float(x)) for x in plane])
-    return F.aggregate(
-        F.zip_with(vec, lit, lambda a, b: a.cast("double") * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
 
 
 def _flat_valid(a, b=None):
@@ -134,8 +127,8 @@ def cosine_vs_query_col(vec: Column, query: "list[float]") -> Column:
     """Exact cosine similarity against a constant query vector — ONE
     (batch × dim) @ dim BLAS product per Arrow batch plus a vectorized
     row-norm, the ``_ivf_assign`` kernel shape. Replaces the
-    ``zip_with``/``aggregate`` form (kept as
-    :func:`_cosine_similarity_col_hof` for differential tests): Spark's
+    ``zip_with``/``aggregate`` form (kept in
+    ``tests/differential_twins.py`` for differential tests): Spark's
     higher-order functions interpret their lambdas per element, paying
     ~dim interpreted calls per ROW on a full-corpus scan — the same
     shape BASELINE.md measured 22× slower on the LSH signing path.
@@ -151,6 +144,7 @@ def cosine_vs_query_col(vec: Column, query: "list[float]") -> Column:
 
     @F.arrow_udf(DoubleType())
     def _cos(arr):
+        _worker.install()
         valid, (vecs,) = _flat_valid(arr)
         if vecs.shape[0] and vecs.shape[1] != q_arr.shape[0]:
             raise ValueError(
@@ -179,6 +173,7 @@ def cosine_pair_col(
 
     @F.arrow_udf(DoubleType())
     def _cos(a, b):
+        _worker.install()
         import pyarrow as pa
 
         valid, (va, vb) = _flat_valid(a, b)
@@ -237,6 +232,7 @@ def quantize_vector_col(vec: Column) -> Column:
 
     @F.arrow_udf(ST([SF("code", BinaryType()), SF("scale", FloatType())]))
     def _quant(arr):
+        _worker.install()
         import pyarrow as pa
 
         valid, (vecs,) = _flat_valid(arr)
@@ -285,6 +281,7 @@ def cosine_codes_vs_query_col(code: Column, query: "list[float]") -> Column:
 
     @F.arrow_udf(DoubleType())
     def _cos(arr):
+        _worker.install()
         import pyarrow as pa
 
         if isinstance(arr, pa.ChunkedArray):
@@ -326,22 +323,6 @@ def cosine_codes_vs_query_col(code: Column, query: "list[float]") -> Column:
     return _cos(code)
 
 
-def _cosine_similarity_col_hof(vec: Column, query: "list[float]") -> Column:
-    """The interpreted higher-order-function form — kept ONLY as the
-    differential twin for :func:`cosine_vs_query_col` tests; never use
-    it on a corpus-scale pass (dim interpreted calls per row)."""
-    q = _unit([float(x) for x in query])
-    dot = _dot_lit(vec, q)
-    norm = F.sqrt(
-        F.aggregate(
-            F.transform(vec, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-    return dot / F.when(norm > 0, norm).otherwise(F.lit(1.0))
-
-
 #: public name used across the module — the BLAS kernel
 cosine_similarity_col = cosine_vs_query_col
 
@@ -363,21 +344,6 @@ def cosine_topk(
         .orderBy(F.desc("cosine"), F.col(id_col))
         .limit(k)
     )
-
-
-def _lsh_signature_col_hof(vec: Column, planes: "list[list[float]]") -> Column:
-    """Signature via per-plane ``zip_with``/``aggregate`` — kept ONLY as
-    the differential twin for :func:`lsh_signature_col` tests. Spark's
-    higher-order functions interpret their lambdas per element, so this
-    form pays n_planes × dim interpreted calls per row; never use it on
-    a corpus-scale pass."""
-    sig = F.lit(0).cast("long")
-    for i, plane in enumerate(planes):
-        bit = F.when(_dot_lit(vec, plane) > 0, F.lit(1).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        sig = sig + F.shiftleft(bit, i)
-    return sig
 
 
 def lsh_signature_col(vec: Column, planes: "list[list[float]]") -> Column:
@@ -406,6 +372,7 @@ def lsh_signature_col(vec: Column, planes: "list[list[float]]") -> Column:
 
     @F.arrow_udf(LongType())
     def _sign(arr):
+        _worker.install()
         import pyarrow as pa
 
         if isinstance(arr, pa.ChunkedArray):
@@ -874,6 +841,7 @@ def _ivf_assign(
 
     @F.arrow_udf(IntegerType())
     def _nearest(arr):
+        _worker.install()
         import pyarrow as pa
 
         if isinstance(arr, pa.ChunkedArray):

@@ -8,6 +8,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from .. import _worker
+
 __all__ = [
     "REDACT_PATTERNS",
     "WS_CHARS",
@@ -16,7 +18,6 @@ __all__ = [
     "WS_CLASS_RE2",
     "redact_col",
     "doc_fingerprint_col",
-    "doc_fingerprint_native_col",
     "language_id_col",
     "quality_features",
     "quality_score_col",
@@ -187,8 +188,8 @@ def doc_fingerprint_col(text: "Column | str", *, k: int = 3) -> Column:
     DISTINCT shingle via factorize + one digest per document over the
     byte-sorted hash buffer): value-identical to the native
     ``sha2(concat_ws('', array_sort(transform(shingles, sha2[:16]))))``
-    form — kept below as :func:`doc_fingerprint_native_col` for
-    differential tests — but without its per-element interpreted
+    form — kept in ``tests/differential_twins.py`` for differential
+    tests — but without its per-element interpreted
     transform lambda (measured 5.4s → sub-second on the sf0.1 bench
     corpus)."""
     from pyspark.sql.types import StringType
@@ -199,6 +200,7 @@ def doc_fingerprint_col(text: "Column | str", *, k: int = 3) -> Column:
 
     @F.arrow_udf(StringType())
     def _fingerprint(arr):
+        _worker.install()
         import hashlib
 
         import numpy as np
@@ -232,20 +234,6 @@ def doc_fingerprint_col(text: "Column | str", *, k: int = 3) -> Column:
         return pa.array(out, type=pa.string())
 
     return _fingerprint(c)
-
-
-def doc_fingerprint_native_col(text: "Column | str", *, k: int = 3) -> Column:
-    """The JVM-native fingerprint (differential twin of
-    :func:`doc_fingerprint_col`; also the shape the DuckDB oracle
-    mirrors). Interpreted per-element transform — use the Arrow kernel
-    in hot paths."""
-    from .dedup import shingles_col
-
-    sh = shingles_col(text, k=k)
-    hashes = F.array_sort(
-        F.transform(sh, lambda s: F.substring(F.sha2(s, 256), 1, 16))
-    )
-    return F.sha2(F.concat_ws("", hashes), 256)
 
 
 #: redaction patterns, ordered: URLs first so an email-shaped credential

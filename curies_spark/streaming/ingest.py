@@ -46,6 +46,7 @@ from pyspark.sql.types import (
 
 from pyspark.sql import functions as F
 
+from .. import _worker
 from ..plans.pipeline import file_edges_raw, extract_mentions, link_mentions
 
 __all__ = [
@@ -183,6 +184,7 @@ def stream_discover_prefixes(
     )
 
     def detect(key, pdfs, state):
+        _worker.install()
         if state.exists:
             (luids, was_emitted) = state.get
             seen = set(luids or ())

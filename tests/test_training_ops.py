@@ -9,6 +9,8 @@ from curies_spark.operators import similarity as S
 from curies_spark.operators import text as X
 from curies_spark.operators.skew import salted_count_distinct
 
+import differential_twins as T
+
 
 @pytest.fixture(scope="module")
 def docs(spark):
@@ -51,10 +53,8 @@ def test_arrow_shingles_and_fingerprint_match_native(spark):
     repeated shingles (multiset order in the fingerprint)."""
     from pyspark.sql import functions as F
 
-    from curies_spark.operators.text import (
-        doc_fingerprint_col,
-        doc_fingerprint_native_col,
-    )
+    from curies_spark.operators.text import doc_fingerprint_col
+    from differential_twins import doc_fingerprint_native_col
 
     rows = [
         (1, None),
@@ -667,7 +667,7 @@ def test_lsh_signature_blas_matches_hof(spark):
     planes = S.hyperplanes(24, 12, seed=5)
     cmp = df.select(
         S.lsh_signature_col(F.col("embedding"), planes).alias("blas"),
-        S._lsh_signature_col_hof(F.col("embedding"), planes).alias("hof"),
+        T.lsh_signature_col_hof(F.col("embedding"), planes).alias("hof"),
     )
     bad = cmp.filter(~F.col("blas").eqNullSafe(F.col("hof"))).count()
     assert bad == 0
@@ -700,7 +700,7 @@ def test_simhash_vectorized_differential(spark):
     df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], ["i", "t"])
     got = {r["i"]: r["s"] for r in df.select("i", D.simhash_col("t").alias("s")).collect()}
     for i, t in enumerate(texts):
-        assert got[i] == D._simhash_reference_one(t), (i, t)
+        assert got[i] == T.simhash_reference_one(t), (i, t)
 
 
 def test_minhash_batch_kernel_matches_exploded(spark):
@@ -728,7 +728,7 @@ def test_minhash_batch_kernel_matches_exploded(spark):
     }
     exploded = {
         r["doc_id"]: tuple(r[f"mh{i}"] for i in range(D.N_PERM))
-        for r in D.minhash_signature_exploded(df).collect()
+        for r in T.minhash_signature_exploded(df).collect()
     }
     assert set(batch) == set(exploded) == set(range(len(texts)))
     for i in batch:
@@ -800,7 +800,7 @@ def test_minhash_unicode_separator_differential(spark):
     batch = {r["doc_id"]: tuple(r[f"mh{i}"] for i in range(D.N_PERM))
              for r in D.minhash_signature(df).collect()}
     exploded = {r["doc_id"]: tuple(r[f"mh{i}"] for i in range(D.N_PERM))
-                for r in D.minhash_signature_exploded(df).collect()}
+                for r in T.minhash_signature_exploded(df).collect()}
     assert batch == exploded
     # and the separators genuinely separate: the all-NBSP doc has 4
     # tokens, i.e. 2 shingles at k=3 — not one giant token
@@ -821,9 +821,9 @@ def test_simhash_unicode_separator_differential(spark):
     df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], ["i", "t"])
     got = {r["i"]: r["s"] for r in df.select("i", D.simhash_col("t").alias("s")).collect()}
     for i, t in enumerate(texts):
-        assert got[i] == D._simhash_reference_one(t), (i, t)
+        assert got[i] == T.simhash_reference_one(t), (i, t)
     # all-unicode-separator docs tokenize identically to ASCII spaces
-    assert got[0] == D._simhash_reference_one("one two three")
+    assert got[0] == T.simhash_reference_one("one two three")
 
 
 def test_oracle_tokenizer_matches_spark_on_unicode(spark):
@@ -877,7 +877,7 @@ def test_minhash_batch_kernel_random_corpus(spark):
     batch = {r["doc_id"]: tuple(r[f"mh{i}"] for i in range(D.N_PERM))
              for r in D.minhash_signature(df).collect()}
     exploded = {r["doc_id"]: tuple(r[f"mh{i}"] for i in range(D.N_PERM))
-                for r in D.minhash_signature_exploded(df).collect()}
+                for r in T.minhash_signature_exploded(df).collect()}
     assert batch == exploded
 
 
@@ -892,7 +892,7 @@ def test_minhash_signature_plan_has_no_shuffle(spark, docs):
     )
     assert "Exchange" not in plan, plan
     twin = (
-        D.minhash_signature_exploded(docs)
+        T.minhash_signature_exploded(docs)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -1001,7 +1001,7 @@ def test_blas_cosine_matches_hof_twin(spark):
         r["vec_id"]: r["c"]
         for r in df.select(
             "vec_id",
-            S._cosine_similarity_col_hof(F.col("embedding"), q).alias("c"),
+            T.cosine_similarity_col_hof(F.col("embedding"), q).alias("c"),
         ).collect()
     }
     assert set(got) == set(want)

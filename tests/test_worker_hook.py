@@ -1,0 +1,204 @@
+"""The Python-worker hook (``curies_spark/_worker.py``): inside a worker
+it stops ``importlib.invalidate_caches()`` from re-reading the archives
+under ``SPARK_HOME`` and nothing else; every Python stage of the package
+installs it; and it costs the driver nothing."""
+
+import ast
+import json
+import subprocess
+import sys
+import textwrap
+from pathlib import Path
+
+import pytest
+
+from worker_hook_stages import STAGES
+
+REPO = Path(__file__).resolve().parent.parent
+PACKAGE = REPO / "curies_spark"
+
+#: A fresh interpreter that plays the worker. ``SPARK_HOME`` is a symlink
+#: to a versioned tmp dir, as a Spark install often is; ``write_zip``
+#: writes a one-module archive.
+_WORKER_PRELUDE = """
+import importlib, importlib.util, os, sys, zipfile, zipimport
+from pyspark.core.files import SparkFiles
+
+original = zipimport.zipimporter.invalidate_caches
+tmp = sys.argv[1]
+real = os.path.join(tmp, "spark-4.1.2")
+os.makedirs(os.path.join(real, "work"))
+home = os.path.join(tmp, "spark")
+os.symlink(real, home)
+
+
+def write_zip(path, module):
+    with zipfile.ZipFile(path, "w") as z:
+        z.writestr(module + ".py", "")
+"""
+
+
+def _play_worker(tmp_path, body: str) -> None:
+    code = _WORKER_PRELUDE + textwrap.dedent(body)
+    proc = subprocess.run(
+        [sys.executable, "-c", code, str(tmp_path)],
+        cwd=REPO,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+
+
+def test_hook_skips_only_archives_under_spark_home(tmp_path):
+    _play_worker(
+        tmp_path,
+        """
+        os.environ["SPARK_HOME"] = home
+        SparkFiles._is_running_on_worker = True
+        SparkFiles._root_directory = os.path.join(home, "work")
+        # the spark-core jar sits on the path under the resolved directory
+        archives = {
+            "spark": os.path.join(real, "spark.zip"),
+            "linked": os.path.join(home, "linked.zip"),
+            "user": os.path.join(real, "work", "user.zip"),  # addPyFile
+            "other": os.path.join(tmp, "other.zip"),
+        }
+        for name, path in archives.items():
+            write_zip(path, name + "_old")
+            sys.path.insert(0, path)
+            importlib.import_module(name + "_old")
+        import curies_spark  # the package installs the hook on import
+
+        assert zipimport.zipimporter.invalidate_caches is not original
+        for name, path in archives.items():
+            write_zip(path, name + "_new")
+        importlib.invalidate_caches()
+        found = {n: importlib.util.find_spec(n + "_new") is not None for n in archives}
+        assert found == {"spark": False, "linked": False, "user": True, "other": True}, found
+        """,
+    )
+
+
+def test_hook_leaves_the_driver_and_an_unset_spark_home_alone(tmp_path):
+    _play_worker(
+        tmp_path,
+        """
+        os.environ["SPARK_HOME"] = home
+        import curies_spark._worker as hook  # the driver: the flag is false
+
+        assert zipimport.zipimporter.invalidate_caches is original
+        del os.environ["SPARK_HOME"]
+        SparkFiles._is_running_on_worker = True
+        hook.install()
+        assert zipimport.zipimporter.invalidate_caches is original
+        """,
+    )
+
+
+def test_hook_installs_once(tmp_path):
+    _play_worker(
+        tmp_path,
+        """
+        os.environ["SPARK_HOME"] = home
+        SparkFiles._is_running_on_worker = True
+        import curies_spark._worker as hook
+
+        hook.install()
+        hook.install()
+        assert zipimport.zipimporter.invalidate_caches.__wrapped__ is original
+        """,
+    )
+
+
+@pytest.fixture(scope="module")
+def stage_results():
+    proc = subprocess.run(
+        [sys.executable, str(REPO / "tests" / "worker_hook_stages.py")],
+        capture_output=True,
+        text=True,
+        timeout=900,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    return json.loads(proc.stdout.strip().splitlines()[-1])
+
+
+@pytest.mark.parametrize("stage", list(STAGES))
+def test_python_stage_leaves_its_worker_patched(stage_results, stage):
+    assert stage_results[stage] is True
+
+
+def test_worker_module_imports_only_the_stdlib():
+    # a Python worker pays for every module-level import (``import
+    # pandas`` alone is 0.37-0.44 CPU-s per fresh worker)
+    tree = ast.parse((PACKAGE / "_worker.py").read_text())
+    imported = {
+        alias.name.split(".")[0]
+        for node in tree.body
+        if isinstance(node, ast.Import)
+        for alias in node.names
+    } | {
+        node.module.split(".")[0]
+        for node in tree.body
+        if isinstance(node, ast.ImportFrom)
+    }
+    assert imported - sys.stdlib_module_names - {"__future__"} == set()
+
+
+def test_import_starts_no_jvm():
+    code = "\n".join(
+        [
+            "import curies_spark",
+            "from pyspark import SparkContext",
+            "assert SparkContext._gateway is None, 'a JVM was launched'",
+            "assert SparkContext._active_spark_context is None",
+        ]
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", code], cwd=REPO, capture_output=True, text=True, timeout=300
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+
+
+_STAGE_METHODS = {"mapInPandas", "mapInArrow", "applyInPandas", "applyInPandasWithState"}
+
+
+def _calls_install_first(fn: ast.FunctionDef) -> bool:
+    first = fn.body[0]
+    return (
+        isinstance(first, ast.Expr)
+        and isinstance(first.value, ast.Call)
+        and ast.unparse(first.value.func) == "_worker.install"
+    )
+
+
+def test_every_python_stage_body_installs_the_hook():
+    # a body that cloudpickle ships by value may import nothing of the
+    # package, so each one installs the hook itself
+    offenders, bodies = [], 0
+    for path in sorted(PACKAGE.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        passed = {
+            node.args[0].id
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr in _STAGE_METHODS
+            and node.args
+            and isinstance(node.args[0], ast.Name)
+        }
+        for fn in ast.walk(tree):
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            decorated = any(
+                isinstance(d, ast.Call)
+                and isinstance(d.func, ast.Attribute)
+                and d.func.attr in {"arrow_udf", "pandas_udf"}
+                for d in fn.decorator_list
+            )
+            if decorated or fn.name in passed:
+                bodies += 1
+                if not _calls_install_first(fn):
+                    offenders.append(f"{path.relative_to(REPO)}:{fn.lineno} {fn.name}")
+    assert bodies >= 20
+    assert offenders == []
