@@ -36,7 +36,11 @@ table (``doc_id, text, …``):
 Outputs under ``out_dir``: ``staged/`` (hash+signature+quality),
 ``pairs/`` (verified near-dup pairs with their estimate),
 ``clusters/`` (doc_id → component), ``survivors/`` (the deduped
-doc_id set), and ``manifest.json`` with per-stage counts. The staged
+doc_id set), and ``manifest.json`` with per-stage counts, observed
+(plans/pipeline.py ``observed``) on frames the job consumes anyway:
+staged docs and exact groups on the winners aggregate (narrow staged
+columns, never the text), candidates and verified pairs on the pairs
+write, clustered docs and survivors on their own writes. The staged
 write is the only pass over the text; re-running with the same
 ``out_dir`` resumes after staging, gated by ``staged.json`` — the
 staging recipe ``{k, text, id_col}`` the signatures were computed
@@ -59,6 +63,7 @@ from ..operators.dedup import (
     verify_pairs,
 )
 from ..operators.text import quality_features, quality_score_col
+from .pipeline import observed
 
 __all__ = [
     "band_keys",
@@ -177,67 +182,58 @@ def run_dedup_pipeline(
         fs_write_json(spark, stamp_path, recipe)
     staged = spark.read.parquet(staged_path)
 
+    rows = F.count(F.lit(1)).alias("n")
     # exact dedup first: one winner per content hash; near-dup stages
-    # then operate on exact-group winners only. Persisted: the aggregate
-    # feeds the dup-group count, the winner count, AND the semi-join —
-    # unpersisted it would run three times (the same
-    # recompute-per-consumer shape the candidate join had)
-    winners = (
-        staged.groupBy("content_hash")
-        .agg(F.min(id_col).alias(id_col), F.count(F.lit(1)).alias("_n"))
-        .persist()
+    # then operate on exact-group winners only. Persisted: the semi-join
+    # feeds the band join, both verify sides and the survivors write —
+    # unpersisted, the aggregate would run once per consumer
+    groups, groups_n = observed(
+        staged.groupBy("content_hash").agg(
+            F.min(id_col).alias(id_col), F.count(F.lit(1)).alias("_n")
+        ),
+        rows,
+        F.coalesce(F.sum("_n"), F.lit(0)).alias("docs"),
+        F.count_if(F.col("_n") > 1).alias("dups"),
     )
-    n_exact_winners = winners.count()
-    n_exact_dups = winners.filter(F.col("_n") > 1).count()
-    staged_winners = staged.join(
-        winners.select(id_col), on=id_col, how="left_semi"
-    )
+    winners = groups.select(id_col).persist()
+    try:
+        staged_winners = staged.join(winners, on=id_col, how="left_semi")
+        candidates, candidates_n = observed(band_pairs(staged_winners, id_col=id_col), rows)
+        # candidate ids are winners only, so the smaller winners slice is
+        # the right signature side for the verify joins
+        pairs, pairs_n = observed(
+            verify_pairs(
+                candidates, staged_winners, id_col=id_col, min_est_jaccard=min_est_jaccard
+            ),
+            rows,
+        )
+        pairs.write.mode("overwrite").parquet(f"{out_dir}/pairs")
+        clusters, clusters_n = observed(
+            connected_components(spark.read.parquet(f"{out_dir}/pairs")), rows
+        )
+        clusters.write.mode("overwrite").parquet(f"{out_dir}/clusters")
+        survivors, survivors_n = observed(
+            drop_cluster_losers(
+                staged_winners.select(id_col),
+                spark.read.parquet(f"{out_dir}/clusters"),
+                id_col=id_col,
+            ),
+            rows,
+        )
+        survivors.write.mode("overwrite").parquet(f"{out_dir}/survivors")
+    finally:
+        winners.unpersist()
 
-    # persist the band self-join — the pipeline's most expensive stage —
-    # so the verify join and the manifest's candidate count share ONE
-    # computation instead of running the join twice (round-3 finding)
-    candidates = band_pairs(staged_winners, id_col=id_col).persist()
-    n_candidates = candidates.count()
-    # candidate ids are winners only, so the smaller winners slice is
-    # the right signature side for the verify joins
-    verified = verify_pairs(
-        candidates, staged_winners, id_col=id_col, min_est_jaccard=min_est_jaccard
-    )
-    pairs_path = f"{out_dir}/pairs"
-    verified.write.mode("overwrite").parquet(pairs_path)
-    candidates.unpersist()
-    verified = spark.read.parquet(pairs_path)
-    n_pairs = verified.count()
-
-    components = connected_components(verified)
-    clusters_path = f"{out_dir}/clusters"
-    components.write.mode("overwrite").parquet(clusters_path)
-    components = spark.read.parquet(clusters_path)
-    n_clustered = components.count()
-
-    survivors = drop_cluster_losers(
-        staged_winners.select(id_col), components, id_col=id_col
-    )
-    survivors_path = f"{out_dir}/survivors"
-    survivors.write.mode("overwrite").parquet(survivors_path)
-    # staged_winners (via the winners semi-join) was consumed again by
-    # the survivors write — only now is the aggregate free to go
-    winners.unpersist()
-
-    # counted on the narrow staged table: counting the raw corpus would
-    # re-touch the text files (the staging pass must stay the ONLY read
-    # of the text — bench_dedup_pipeline.py proves it); one count reused
-    # for both manifest fields
-    n_staged = staged.count()
+    exact = groups_n()
     manifest = {
-        "input_docs": n_staged,
-        "staged_docs": n_staged,
-        "exact_dup_groups_gt1": n_exact_dups,
-        "exact_winners": n_exact_winners,
-        "candidate_pairs": n_candidates,
-        "verified_pairs": n_pairs,
-        "clustered_docs": n_clustered,
-        "survivors": spark.read.parquet(survivors_path).count(),
+        "input_docs": exact["docs"],
+        "staged_docs": exact["docs"],
+        "exact_dup_groups_gt1": exact["dups"],
+        "exact_winners": exact["n"],
+        "candidate_pairs": candidates_n()["n"],
+        "verified_pairs": pairs_n()["n"],
+        "clustered_docs": clusters_n()["n"],
+        "survivors": survivors_n()["n"],
         "min_est_jaccard": min_est_jaccard,
         "k": k,
         "wall_sec": round(time.perf_counter() - t0, 2),

@@ -21,6 +21,9 @@ Scale design:
   sha256 rollup, per-stage counts). On restart, shards with manifests
   are skipped. On Iceberg at 10^12 files the staging pass is the
   ``bucket(N, …)`` partition transform at ingest.
+- Manifest counts are observed (:func:`observed`) on frames the writes
+  consume anyway — input rows and sha rollup on the shard's staged rows,
+  (linked) mentions on the linked frame, triples on the written edges.
 - The per-row invariant ``sha2(content, 256)`` is rolled up per shard
   commutatively (sum of the first 15 hex digits as bigint) and can be
   re-validated against the source at any time.
@@ -29,9 +32,10 @@ Scale design:
 from __future__ import annotations
 
 import time
-from typing import Any
+from typing import Any, Callable
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from ..core.converter import Converter
 from ..functions import kernels
@@ -175,7 +179,26 @@ def validate_content_invariant(source: DataFrame, manifests: "list[dict]") -> bo
     of shard manifests — proves no content row was lost or altered."""
     total = source.select(sha256_rollup(source).alias("s")).collect()[0]["s"]
     recorded = sum(int(m["content_sha_rollup"]) for m in manifests)
-    return int(total) == recorded
+    # an empty source sums to NULL; its shards record "0"
+    return int(total or 0) == recorded
+
+
+def observed(df: DataFrame, *metrics) -> "tuple[DataFrame, Callable[[], dict]]":
+    """``df`` observing ``metrics`` (unnamed: shards run on concurrent
+    driver threads), and a reader of their values to call only after
+    the action consuming ``df`` returned — one that failed reads as
+    zeros. Adaptive execution drops the branch under a stage that came
+    out empty, and an observation in it completes with no row: only
+    then does the reader compute ``metrics`` with an action of its own."""
+    obs = Observation()
+
+    def read() -> dict:
+        try:
+            return obs.get
+        except Py4JJavaError:
+            return df.agg(*metrics).first().asDict()
+
+    return df.observe(obs, *metrics), read
 
 
 def _shard_col(n_shards: int):
@@ -231,9 +254,9 @@ def _stage_shards(
 def _run_shard(
     spark: SparkSession, staged_path: str, out: str, bc, shard: int, n_shards: int
 ) -> dict:
-    """One shard's map phase: stats → mentions → linking → file edges +
-    entity side-output, finished by an atomic manifest write (the
-    checkpoint marker — a shard is done iff its manifest exists).
+    """One shard's map phase: mentions → linking → file edges + entity
+    side-output, finished by an atomic manifest write (the checkpoint
+    marker — a shard is done iff its manifest exists).
 
     The manifest is written HERE, inside the shard job, so when shards
     run concurrently a failure in one never loses the checkpoints of
@@ -244,45 +267,40 @@ def _run_shard(
     t0 = time.perf_counter()
     # _shard is a partition column: this filter prunes to the shard's
     # own files (PartitionFilters), reading 1/n_shards of the data
-    shard_df = (
-        spark.read.parquet(staged_path)
-        .filter(F.col("_shard") == shard)
-        .drop("_shard")
-    )
-
-    stats_row = shard_df.select(
+    staged = spark.read.parquet(staged_path).filter(F.col("_shard") == shard)
+    shard_df, stats = observed(
+        staged.drop("_shard"),
         F.count(F.lit(1)).alias("input_rows"),
-        sha256_rollup(shard_df).alias("content_sha_rollup"),
-    ).collect()[0]
-
-    mentions = extract_mentions(shard_df)
-    linked = link_mentions(mentions, bc).cache()
-    n_mentions = linked.count()
-    n_linked = linked.filter(F.col("entity").isNotNull()).count()
-
-    triples_path = f"{out}/triples/shard={shard}"
-    build_file_edges(linked).write.mode("overwrite").parquet(triples_path)
-    # side output for the merge phase: this shard's (repo, entity) set
-    (
-        linked.filter(F.col("entity").isNotNull())
-        .select("repo", "entity")
-        .distinct()
-        .write.mode("overwrite")
-        .parquet(f"{out}/_entities/shard={shard}")
+        sha256_rollup(staged).alias("content_sha_rollup"),
     )
-    n_triples = spark.read.parquet(triples_path).count()
-    linked.unpersist()
+    linked, stages = observed(
+        link_mentions(extract_mentions(shard_df), bc),
+        F.count(F.lit(1)).alias("mentions"),
+        F.count("entity").alias("linked_mentions"),
+    )
+    linked = linked.cache()
+    try:
+        file_edges, edges = observed(build_file_edges(linked), F.count(F.lit(1)).alias("triples"))
+        file_edges.write.mode("overwrite").parquet(f"{out}/triples/shard={shard}")
+        # side output for the merge phase: this shard's (repo, entity) set
+        (
+            linked.filter(F.col("entity").isNotNull())
+            .select("repo", "entity")
+            .distinct()
+            .write.mode("overwrite")
+            .parquet(f"{out}/_entities/shard={shard}")
+        )
+    finally:
+        linked.unpersist()
 
+    counts = {**stats(), **stages(), **edges()}
+    counts["content_sha_rollup"] = str(counts["content_sha_rollup"] or 0)
     manifest = {
         "shard": shard,
         # the hash-slice geometry this manifest describes: a resume under
         # a different n_shards must NOT trust it (different slice)
         "n_shards": n_shards,
-        "input_rows": stats_row["input_rows"],
-        "content_sha_rollup": str(stats_row["content_sha_rollup"] or 0),
-        "mentions": n_mentions,
-        "linked_mentions": n_linked,
-        "triples": n_triples,
+        **counts,
         "wall_sec": round(time.perf_counter() - t0, 3),
     }
     fs_write_json(spark, f"{out}/_manifests/shard-{shard}.json", manifest)
@@ -324,98 +342,83 @@ def run_pipeline(
         conv = pipeline_converter()
     bc = spark.sparkContext.broadcast(conv)
 
-    # count-backs over just-written parquet (n_triples, merge totals)
-    # answer from row-group metadata instead of re-scanning data pages —
-    # measured 2x on the end-to-end job (BENCH/round2_pipeline.json).
-    # Scoped: restored on exit so the caller's session is not mutated.
-    _agg_pd_key = "spark.sql.parquet.aggregatePushdown"
-    _agg_pd_prev = spark.conf.get(_agg_pd_key, None)
-    spark.conf.set(_agg_pd_key, "true")
+    manifest_dir = f"{out_dir}/_manifests"
+    # each shard manifest is read once, for the guard and the resume
+    manifests = {
+        name: fs_read_json(spark, f"{manifest_dir}/{name}")
+        for name in fs_list(spark, manifest_dir, "shard-*.json")
+    }
 
-    try:
-        manifest_dir = f"{out_dir}/_manifests"
-        # each shard manifest is read once, for the guard and the resume
-        manifests = {
-            name: fs_read_json(spark, f"{manifest_dir}/{name}")
-            for name in fs_list(spark, manifest_dir, "shard-*.json")
-        }
+    # geometry guard: a shard manifest produced under a different
+    # n_shards describes a different hash slice — trusting it would
+    # silently mix slices, and its stale shard=K outputs would still
+    # be read by the directory-level merge phase. A geometry change
+    # therefore invalidates ALL derived state (outputs + manifests),
+    # not just the mismatched manifests.
+    if any(m.get("n_shards") != n_shards for m in manifests.values()):
+        for stale in ("triples", "_entities"):
+            fs_delete(spark, f"{out_dir}/{stale}")
+        for name in (*manifests, "merge.json"):
+            fs_delete(spark, f"{manifest_dir}/{name}")
+        manifests = {}
 
-        # geometry guard: a shard manifest produced under a different
-        # n_shards describes a different hash slice — trusting it would
-        # silently mix slices, and its stale shard=K outputs would still
-        # be read by the directory-level merge phase. A geometry change
-        # therefore invalidates ALL derived state (outputs + manifests),
-        # not just the mismatched manifests.
-        if any(m.get("n_shards") != n_shards for m in manifests.values()):
-            for stale in ("triples", "_entities"):
-                fs_delete(spark, f"{out_dir}/{stale}")
-            for name in (*manifests, "merge.json"):
-                fs_delete(spark, f"{manifest_dir}/{name}")
-            manifests = {}
-
-        metrics: list[dict] = []
-        resumed = 0
-        pending: list[int] = []
-        for shard in range(n_shards):
-            manifest = manifests.get(f"shard-{shard}.json")
-            if resume and manifest is not None:
-                metrics.append(manifest)
-                resumed += 1
-            else:
-                pending.append(shard)
-
-        if pending:
-            staged_path = _stage_shards(spark, repos, out_dir, n_shards, resume=resume)
-            with ThreadPoolExecutor(max_workers=max(1, max_concurrent_shards)) as pool:
-                futures = {
-                    shard: pool.submit(
-                        _run_shard, spark, staged_path, out_dir, bc, shard, n_shards
-                    )
-                    for shard in pending
-                }
-                # each shard persists its own manifest on success; one
-                # failing shard therefore never discards finished ones
-                for shard, future in futures.items():
-                    metrics.append(future.result())
-        metrics.sort(key=lambda m: m["shard"])
-
-        # merge phase: entity-scoped edges over the union of side outputs.
-        # Recomputed whenever any shard ran this invocation; skipped only on
-        # a fully-resumed run with an existing merge manifest.
-        merge_manifest_path = f"{manifest_dir}/merge.json"
-        merge_manifest = (
-            fs_read_json(spark, merge_manifest_path) if resumed == n_shards else None
-        )
-        if merge_manifest is None:
-            t0 = time.perf_counter()
-            repo_entities = spark.read.parquet(f"{out_dir}/_entities").distinct()
-            entity_edges = build_entity_edges(repo_entities, bc).dropDuplicates(
-                ["subject", "predicate", "object"]
-            )
-            merge_path = f"{out_dir}/triples/shard=merge"
-            entity_edges.write.mode("overwrite").parquet(merge_path)
-            n_entity_triples = spark.read.parquet(merge_path).count()
-            merge_manifest = {
-                "shard": "merge",
-                "triples": n_entity_triples,
-                "wall_sec": round(time.perf_counter() - t0, 3),
-            }
-            fs_write_json(spark, merge_manifest_path, merge_manifest)
-
-        totals = {
-            "shards": n_shards,
-            "input_rows": sum(m["input_rows"] for m in metrics),
-            "mentions": sum(m["mentions"] for m in metrics),
-            "linked_mentions": sum(m["linked_mentions"] for m in metrics),
-            "triples": sum(m["triples"] for m in metrics) + merge_manifest["triples"],
-            "resumed_shards": resumed,
-            "manifests": metrics,
-            "merge": merge_manifest,
-        }
-        fs_write_json(spark, f"{manifest_dir}/_totals.json", totals)
-        return totals
-    finally:
-        if _agg_pd_prev is None:
-            spark.conf.unset(_agg_pd_key)
+    metrics: list[dict] = []
+    resumed = 0
+    pending: list[int] = []
+    for shard in range(n_shards):
+        manifest = manifests.get(f"shard-{shard}.json")
+        if resume and manifest is not None:
+            metrics.append(manifest)
+            resumed += 1
         else:
-            spark.conf.set(_agg_pd_key, _agg_pd_prev)
+            pending.append(shard)
+
+    if pending:
+        staged_path = _stage_shards(spark, repos, out_dir, n_shards, resume=resume)
+        with ThreadPoolExecutor(max_workers=max(1, max_concurrent_shards)) as pool:
+            futures = {
+                shard: pool.submit(
+                    _run_shard, spark, staged_path, out_dir, bc, shard, n_shards
+                )
+                for shard in pending
+            }
+            # each shard persists its own manifest on success; one
+            # failing shard therefore never discards finished ones
+            for shard, future in futures.items():
+                metrics.append(future.result())
+    metrics.sort(key=lambda m: m["shard"])
+
+    # merge phase: entity-scoped edges over the union of side outputs.
+    # Recomputed whenever any shard ran this invocation; skipped only on
+    # a fully-resumed run with an existing merge manifest.
+    merge_manifest_path = f"{manifest_dir}/merge.json"
+    merge_manifest = (
+        fs_read_json(spark, merge_manifest_path) if resumed == n_shards else None
+    )
+    if merge_manifest is None:
+        t0 = time.perf_counter()
+        repo_entities = spark.read.parquet(f"{out_dir}/_entities").distinct()
+        entity_edges = build_entity_edges(repo_entities, bc).dropDuplicates(
+            ["subject", "predicate", "object"]
+        )
+        entity_edges, edges = observed(entity_edges, F.count(F.lit(1)).alias("triples"))
+        entity_edges.write.mode("overwrite").parquet(f"{out_dir}/triples/shard=merge")
+        merge_manifest = {
+            "shard": "merge",
+            "triples": edges()["triples"],
+            "wall_sec": round(time.perf_counter() - t0, 3),
+        }
+        fs_write_json(spark, merge_manifest_path, merge_manifest)
+
+    totals = {
+        "shards": n_shards,
+        "input_rows": sum(m["input_rows"] for m in metrics),
+        "mentions": sum(m["mentions"] for m in metrics),
+        "linked_mentions": sum(m["linked_mentions"] for m in metrics),
+        "triples": sum(m["triples"] for m in metrics) + merge_manifest["triples"],
+        "resumed_shards": resumed,
+        "manifests": metrics,
+        "merge": merge_manifest,
+    }
+    fs_write_json(spark, f"{manifest_dir}/_totals.json", totals)
+    return totals

@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import Row, functions as F
 
 from curies_spark.plans import dedup_pipeline as P
+from pipeline_faults import dedup_counts
 
 
 @pytest.fixture()
@@ -61,6 +62,25 @@ def test_pipeline_end_to_end(spark, corpus, tmp_path):
     with open(f"{out}/manifest.json") as fh:
         on_disk = json.load(fh)
     assert on_disk["verified_pairs"] == manifest["verified_pairs"]
+
+    # every count field equals an independent count(), fresh and resumed
+    counted = dedup_counts(spark, corpus, out)
+    assert counted["candidate_pairs"] > 0
+    assert {k: manifest[k] for k in counted} == counted
+    resumed = P.run_dedup_pipeline(spark, corpus, out, min_est_jaccard=0.4)
+    assert {k: resumed[k] for k in counted} == dedup_counts(spark, corpus, out)
+
+
+def test_empty_corpus_counts_zero(spark, tmp_path):
+    """An empty corpus leaves every stage empty, so adaptive execution
+    prunes the plan branches the counts are observed in: the manifest
+    still reads zeros."""
+    out = str(tmp_path / "empty")
+    empty = spark.createDataFrame([], "doc_id long, text string")
+    manifest = P.run_dedup_pipeline(spark, empty, out)
+    counted = dedup_counts(spark, empty, out)
+    assert set(counted.values()) == {0}
+    assert {k: manifest[k] for k in counted} == counted
 
 
 def test_staging_is_map_only(spark, corpus):

@@ -15,6 +15,7 @@ from curies_spark.plans.pipeline import (
 )
 from curies_spark.sources.synthetic import generate_repos, pipeline_converter
 from curies_spark.streaming import fsio
+from pipeline_faults import kg_counts
 
 
 @pytest.fixture(scope="module")
@@ -80,6 +81,15 @@ def test_triple_families(spark):
     assert ("CHEBI:5", "owl:sameAs", "https://identifiers.org/chebi:5") in rows
 
 
+def _assert_counts(spark, repos, out, totals):
+    """Every count of every shard manifest and of the merge manifest
+    equals an independent ``count()``."""
+    shards, merge = kg_counts(spark, repos, out, totals["shards"])
+    for manifest, counted in zip(totals["manifests"], shards):
+        assert {k: manifest[k] for k in counted} == counted, manifest["shard"]
+    assert totals["merge"]["triples"] == merge
+
+
 def test_pipeline_end_to_end_and_resume(spark, repos, tmp_path):
     out = str(tmp_path / "kg")
     totals = run_pipeline(spark, repos, out, n_shards=4)
@@ -96,11 +106,13 @@ def test_pipeline_end_to_end_and_resume(spark, repos, tmp_path):
 
     # sha256 invariant holds against the source
     assert validate_content_invariant(repos, totals["manifests"])
+    _assert_counts(spark, repos, out, totals)
 
     # resume: second run skips all shards (same totals, no recompute)
     totals2 = run_pipeline(spark, repos, out, n_shards=4)
     assert totals2["resumed_shards"] == 4
     assert totals2["triples"] == totals["triples"]
+    _assert_counts(spark, repos, out, totals2)
 
     # partial resume: delete one manifest → exactly one shard recomputes
     manifest = Path(out) / "_manifests" / "shard-2.json"
@@ -108,6 +120,28 @@ def test_pipeline_end_to_end_and_resume(spark, repos, tmp_path):
     totals3 = run_pipeline(spark, repos, out, n_shards=4)
     assert totals3["resumed_shards"] == 3
     assert totals3["triples"] == totals["triples"]
+    _assert_counts(spark, repos, out, totals3)
+    assert validate_content_invariant(repos, totals3["manifests"])
+
+
+def test_content_invariant_on_empty_source(spark, repos, tmp_path):
+    """A source with no rows sums to NULL, not 0: it still matches the
+    manifests of empty shards, which each record ``"0"``. The same tiny
+    corpus has a shard whose mentions all fail to link — adaptive
+    execution then prunes the plan branch its counts are observed in,
+    and the manifest must still count it exactly."""
+    unlinked = ("orgZ/none", "x.py", "d" * 40, "py", "see nope:1 and https://unlinked.example.com/a")
+    few = spark.createDataFrame([*repos.head(3), unlinked], repos.schema)
+    out = str(tmp_path / "kg_few")
+    totals = run_pipeline(spark, few, out, n_shards=8)
+    assert validate_content_invariant(few, totals["manifests"])
+    _assert_counts(spark, few, out, totals)
+    assert any(m["mentions"] and not m["linked_mentions"] for m in totals["manifests"])
+    empty_shards = [m for m in totals["manifests"] if m["input_rows"] == 0]
+    assert len(empty_shards) >= 4
+    assert {m["content_sha_rollup"] for m in empty_shards} == {"0"}
+    assert {m["mentions"] + m["triples"] for m in empty_shards} == {0}
+    assert validate_content_invariant(repos.limit(0), empty_shards)
 
 
 def test_manifest_contents(spark, repos, tmp_path):

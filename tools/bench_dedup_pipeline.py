@@ -36,7 +36,6 @@ def main() -> None:
     from perfbench import harness
 
     spark = bench._build_spark(cpus)
-    spark.conf.set("spark.sql.parquet.aggregatePushdown", "true")
 
     from curies_spark.plans.dedup_pipeline import run_dedup_pipeline
 

@@ -30,9 +30,6 @@ def main() -> None:
     from perfbench import harness
 
     spark = bench._cluster_session(4, 2)
-    # count-backs over written parquet (n_triples, manifests) answer
-    # from row-group metadata instead of scanning data pages
-    spark.conf.set("spark.sql.parquet.aggregatePushdown", "true")
     sql = harness.SqlMetrics(spark)
 
     from curies_spark.plans.pipeline import run_pipeline, validate_content_invariant
