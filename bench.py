@@ -42,6 +42,14 @@ HEADLINE = [
 ]
 
 
+def _driver_memory() -> str:
+    """Half of RAM, at most 16g: a heap larger than the host gets the JVM
+    OOM-killed (the 10M-node pass of ``tools/bench_components.py`` peaks
+    at 8.7 GiB resident on an 8g heap)."""
+    ram_mib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(16 * 1024, ram_mib // 2)}m"
+
+
 def _build_spark(cpus: str):
     from pyspark.sql import SparkSession
 
@@ -50,7 +58,7 @@ def _build_spark(cpus: str):
         .appName("curies-spark-bench")
         .config("spark.sql.shuffle.partitions", str(max(int(cpus) * 2, 8)))
         .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "16g")
+        .config("spark.driver.memory", _driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # 64k Arrow batches: framing overhead of the 10k default costs

@@ -1,10 +1,15 @@
-"""Run each Python stage of the package on ``local[1]``, then a by-value
-probe UDF in the same Python worker; print ``{stage: patched}`` as JSON.
+"""Run each Python stage of the package twice on ``local[1]``, then a
+by-value probe UDF in the same Python worker; print ``{stage: {"patched",
+"frozen", "tracked"}}`` as JSON: whether the worker is patched, how many
+objects it holds frozen (``gc.get_freeze_count()``) and how many the
+collector still tracks (``len(gc.get_objects())``).
 
 ``python tests/worker_hook_stages.py [stage ...]`` (all stages when none
 is named). The probe is defined in ``__main__``, so cloudpickle ships it
 by value and it imports nothing of the package: it sees the worker hook
-only if the stage before it left the worker patched.
+only if the stage before it left the worker patched and frozen. The
+stage runs twice so that what its first run imported has been frozen by
+the second run's batches.
 
 Python workers are pooled per environment, so each stage sets its own
 entry in ``SparkContext.environment`` before building its UDFs: the
@@ -100,10 +105,15 @@ STAGES = {
 }
 
 
-def _patched():
+def _worker_state():
+    import gc
     import zipimport
 
-    return hasattr(zipimport.zipimporter.invalidate_caches, "__wrapped__")
+    return (
+        hasattr(zipimport.zipimporter.invalidate_caches, "__wrapped__"),
+        gc.get_freeze_count(),
+        len(gc.get_objects()),
+    )
 
 
 def main(names):
@@ -120,8 +130,11 @@ def main(names):
     for name in names:
         env["CURIES_SPARK_STAGE_POOL"] = name
         STAGES[name](spark)
-        probe = F.udf(lambda _: _patched(), "boolean")
-        result[name] = spark.range(1).select(probe("id")).first()[0]
+        STAGES[name](spark)
+        probe = F.udf(
+            lambda _: _worker_state(), "struct<patched:boolean,frozen:long,tracked:long>"
+        )
+        result[name] = spark.range(1).select(probe("id").alias("s")).first()["s"].asDict()
     spark.stop()
     print(json.dumps(result))
 
