@@ -69,7 +69,6 @@ __all__ = [
     "band_keys",
     "band_pairs",
     "dedup_components_frame",
-    "dedup_survivors_frame",
     "estimated_jaccard_col",
     "run_dedup_pipeline",
     "stage_documents",
@@ -131,25 +130,6 @@ def dedup_components_frame(
             F.coalesce(F.col("component"), F.col(id_col)).alias("component"),
         )
         .withColumn("survives", F.col("component") == F.col(id_col))
-    )
-
-
-def dedup_survivors_frame(
-    docs: DataFrame,
-    *,
-    text: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-    min_est_jaccard: float = 0.5,
-) -> DataFrame:
-    """The deduped ``id_col`` set of the full composition — the rows of
-    :func:`dedup_components_frame` that survive."""
-    return (
-        dedup_components_frame(
-            docs, text=text, id_col=id_col, k=k, min_est_jaccard=min_est_jaccard
-        )
-        .filter(F.col("survives"))
-        .select(id_col)
     )
 
 

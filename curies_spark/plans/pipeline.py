@@ -27,6 +27,12 @@ Scale design:
 - The per-row invariant ``sha2(content, 256)`` is rolled up per shard
   commutatively (sum of the first 15 hex digits as bigint) and can be
   re-validated against the source at any time.
+
+Each edge family is deduplicated once, where it is built: file edges in
+:func:`build_file_edges` (per shard), declares-prefix and sameAs edges in
+:func:`build_entity_edges` (in the merge). The families have different
+predicates, so their union is already duplicate-free and no caller
+dedups it again.
 """
 
 from __future__ import annotations
@@ -125,12 +131,18 @@ def build_file_edges(linked: DataFrame) -> DataFrame:
 
 
 def build_entity_edges(repo_entities: DataFrame, converter) -> DataFrame:
-    """repo-declares-prefix + curie-sameAs-uri edges from the globally
-    deduplicated (repo, entity) set.
+    """repo-declares-prefix + curie-sameAs-uri edges from ``(repo, entity)``
+    rows, duplicates allowed — each family dedups its own key here.
 
     These edge families are entity-scoped: the same entity appears in
     many shards, so they are built in a final merge phase over the
     shards' side outputs — the reduce stage of the job.
+
+    Declares-prefix takes the distinct ``(repo, prefix)`` set and maps
+    it injectively (fixed-literal ``concat``); sameAs takes the distinct
+    ``entity`` set and explodes its expansions, made distinct per entity
+    because a record may list one URI-prefix synonym twice. The two
+    predicates differ, so the union holds no duplicate.
     """
     declares_edges = (
         repo_entities.select(F.col("repo"), curie_prefix("entity").alias("prefix"))
@@ -144,26 +156,26 @@ def build_entity_edges(repo_entities: DataFrame, converter) -> DataFrame:
     # curie-sameAs-uri: one edge per synonym expansion of each distinct
     # entity (the dynamic owl:sameAs triples of the reference's mapping
     # service, mapping_service/api.py:96-118)
+    expansions = F.array_distinct(kernels.expand_all_col("entity", converter))
     sameas_edges = (
         repo_entities.select("entity")
         .distinct()
         .select(
             F.col("entity").alias("subject"),
             F.lit("owl:sameAs").alias("predicate"),
-            F.explode(kernels.expand_all_col("entity", converter)).alias("object"),
+            F.explode(expansions).alias("object"),
         )
     )
     return declares_edges.unionByName(sameas_edges)
 
 
 def build_triples(linked: DataFrame, converter) -> DataFrame:
-    """Single-pass (unsharded) form: all three edge families, dedup'd."""
+    """Single-pass (unsharded) form: all three edge families, each
+    deduplicated by its builder; their predicates differ, so the union
+    needs no dedup of its own."""
     entities = linked.filter(F.col("entity").isNotNull())
-    repo_entities = entities.select("repo", "entity").distinct()
-    return (
-        build_file_edges(linked)
-        .unionByName(build_entity_edges(repo_entities, converter))
-        .dropDuplicates(["subject", "predicate", "object"])
+    return build_file_edges(linked).unionByName(
+        build_entity_edges(entities.select("repo", "entity"), converter)
     )
 
 
@@ -397,10 +409,8 @@ def run_pipeline(
     )
     if merge_manifest is None:
         t0 = time.perf_counter()
-        repo_entities = spark.read.parquet(f"{out_dir}/_entities").distinct()
-        entity_edges = build_entity_edges(repo_entities, bc).dropDuplicates(
-            ["subject", "predicate", "object"]
-        )
+        # the shards' side outputs overlap; build_entity_edges dedups
+        entity_edges = build_entity_edges(spark.read.parquet(f"{out_dir}/_entities"), bc)
         entity_edges, edges = observed(entity_edges, F.count(F.lit(1)).alias("triples"))
         entity_edges.write.mode("overwrite").parquet(f"{out_dir}/triples/shard=merge")
         merge_manifest = {

@@ -1,11 +1,13 @@
 """End-to-end tests for the KG-construction pipeline."""
 
 import json
+import re
 from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 
+from curies_spark.core import Converter
 from curies_spark.plans.pipeline import (
     build_triples,
     extract_mentions,
@@ -13,7 +15,7 @@ from curies_spark.plans.pipeline import (
     run_pipeline,
     validate_content_invariant,
 )
-from curies_spark.sources.synthetic import generate_repos, pipeline_converter
+from curies_spark.sources.synthetic import PIPELINE_EPM, generate_repos, pipeline_converter
 from curies_spark.streaming import fsio
 from pipeline_faults import kg_counts
 
@@ -66,19 +68,73 @@ def test_linking_and_canonicalization(spark):
     assert got["nope:x"] is None  # unlinkable stays NULL
 
 
-def test_triple_families(spark):
-    conv = pipeline_converter()
+def _duplicate_synonym_converter():
+    """The pipeline EPM with CHEBI's URI-prefix synonym listed twice in
+    its record: ``expand_all`` then repeats that expansion."""
+    epm = [dict(r) for r in PIPELINE_EPM]
+    chebi = next(r for r in epm if r["prefix"] == "CHEBI")
+    chebi["uri_prefix_synonyms"] = chebi["uri_prefix_synonyms"] * 2
+    return Converter.from_extended_prefix_map(epm)
+
+
+def test_triple_families(spark, tmp_path):
     df = spark.createDataFrame(
         [("orgA/x", "f.py", "c" * 40, "py", "ref http://purl.obolibrary.org/obo/CHEBI_5")],
         ["repo", "path", "commit", "lang", "content"],
     )
-    triples = build_triples(link_mentions(extract_mentions(df), conv), conv)
-    rows = {(r["subject"], r["predicate"], r["object"]) for r in triples.collect()}
+    dup = _duplicate_synonym_converter()
+    assert len(dup.expand_all("CHEBI:5")) == 3  # the synonym repeats
+    results = []
+    for name, conv in (("plain", pipeline_converter()), ("dup", dup)):
+        built = build_triples(link_mentions(extract_mentions(df), conv), conv).collect()
+        out = str(tmp_path / name)
+        run_pipeline(spark, df, out, converter=conv, n_shards=2)
+        merged = spark.read.parquet(f"{out}/triples/shard=merge").select(
+            "subject", "predicate", "object"
+        ).collect()
+        for rows in (built, merged):
+            assert len(rows) == len(set(rows)), (name, rows)
+        results.append(({tuple(r) for r in built}, {tuple(r) for r in merged}))
+    assert results[0] == results[1]
+    rows, merged = results[0]
+    assert merged == {r for r in rows if r[1] != "cs:mentions"}
     assert (f"codefile:orgA/x@{'c'*40}/f.py", "cs:mentions", "CHEBI:5") in rows
     assert ("coderepo:orgA/x", "cs:declaresPrefix", "csprefix:CHEBI") in rows
     # sameAs fan-out: canonical + synonym URI prefix
     assert ("CHEBI:5", "owl:sameAs", "http://purl.obolibrary.org/obo/CHEBI_5") in rows
     assert ("CHEBI:5", "owl:sameAs", "https://identifiers.org/chebi:5") in rows
+
+
+def _final_hash_exchanges(description: str) -> int:
+    """Hash-partitioned shuffle exchanges in the final plan of a formatted
+    physical-plan description (an adaptive one also lists its initial
+    plan, whose nodes are not counted)."""
+    tree = description.split("\n\n", 1)[0]
+    tree = tree.split("== Final Plan ==", 1)[-1].split("== Initial Plan ==", 1)[0]
+    return sum(
+        bool(re.search(rf"^\({node}\) Exchange\n(?:.+\n)*?Arguments: hashpartitioning", description, re.M))
+        for node in re.findall(r"\bExchange \((\d+)\)", tree)
+    )
+
+
+def test_each_edge_family_deduplicated_once(spark, repos, tmp_path):
+    """Each edge family is deduplicated where it is built, and nothing
+    dedups their union again: the merge write shuffles once per
+    entity-scoped family, ``build_triples`` once per family."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    mark = int(store.executionsCount())
+    run_pipeline(spark, repos, str(tmp_path / "kg"), n_shards=2)
+    executions = store.executionsList(mark, int(store.executionsCount()) - mark)
+    plans = [executions.apply(i).physicalPlanDescription() for i in range(executions.size())]
+    merge = [plan for plan in plans if "triples/shard=merge" in plan]
+    assert len(merge) == 1, merge
+    assert "== Final Plan ==" in merge[0], merge[0]
+    assert 0 < _final_hash_exchanges(merge[0]) <= 2, merge[0]
+
+    conv = pipeline_converter()
+    triples = build_triples(link_mentions(extract_mentions(repos), conv), conv)
+    plan = triples._jdf.queryExecution().executedPlan().toString()
+    assert len(re.findall(r"Exchange (hash|range|SinglePartition)", plan)) <= 3, plan
 
 
 def _assert_counts(spark, repos, out, totals):

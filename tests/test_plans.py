@@ -49,7 +49,7 @@ EXPECTATIONS = {
     "standardize_curie": (1, False, []),
     "standardize_uri": (1, False, []),
     "expand_all": (1, False, []),
-    "compress_or_standardize": (2, False, []),  # two fanned-out scan branches
+    "compress_or_standardize": (1, False, []),  # one scan, a 2-element explode
     "triple_hash": (1, False, []),
     "preprocess_parse": (1, False, []),
     # the ONE intentional hot-path Python stage: large-EPM trie probe
@@ -62,13 +62,13 @@ EXPECTATIONS = {
     "w3c_validation": (1, False, []),
     # aggregations: partial+final, bounded shuffle count (+1 fan-out
     # where the pre-aggregation map work is regex/conversion-heavy)
-    "mentions": (3, False, []),
-    "dedup_exact": (2, False, []),
-    "unique_prefixes": (3, False, []),
+    "mentions": (2, False, []),
+    "dedup_exact": (1, False, []),
+    "unique_prefixes": (2, False, []),
     # signatures are map-only Arrow kernels (rule 8)
     "minhash_signature": (0, True, ["BatchEvalPython"]),
     "simhash_docs": (0, True, ["BatchEvalPython"]),
-    "fingerprint": (2, True, ["BatchEvalPython"]),  # Arrow fingerprint kernel
+    "fingerprint": (0, True, ["BatchEvalPython"]),  # Arrow fingerprint kernel
     # metadata scans prune the binary payload (rule 7)
     "media_metadata": (0, False, ["payload"]),
     # text analysis is JVM-native
