@@ -11,6 +11,12 @@
   dim) so signatures are reproducible across runs and engines. Probing
   cost drops from O(N) to O(N / 2^bits) per query at the usual recall
   trade-off; multi-probe widens recall.
+- Persisted LSH and IVF indexes are one cell-partitioned layout
+  (``sig=S`` or ``cid=C`` directories; flat, or the quantized
+  ``codes/`` + ``vectors/`` pair). :func:`_write_cells` is its one
+  write (build, append and every streamed batch) and
+  :func:`_read_cells` its one read; :func:`_query_cells` ranks a
+  query over the cells a probe picked.
 - Embedding near-duplicate pairs: bucket join on full signatures, then
   exact cosine verification.
 """
@@ -41,7 +47,6 @@ __all__ = [
     "lsh_topk",
     "probe_ann_index",
     "quantize_vector_col",
-    "write_quantized_partitions",
     "query_ann_index",
     "query_ivf_index",
     "query_signature",
@@ -67,11 +72,13 @@ def hyperplanes(dim: int, n_planes: int, *, seed: int = 7) -> "list[list[float]]
     return planes
 
 
-def _flat_valid(a, b=None):
-    """Shared Arrow-batch prep for the cosine kernels: combine chunks,
+def _flat_valid(a, b=None, *, dim=0):
+    """Shared Arrow-batch prep for the vector kernels: combine chunks,
     intersect validity, and return (valid_mask_or_None, dense matrices).
     ``flatten()`` honors list offsets AND skips null entries, so dense
-    rows line up with the filtered arrays exactly."""
+    rows line up with the filtered arrays exactly. A batch with no
+    non-NULL row comes back as a ``0 × dim`` matrix, so the kernel's
+    product still has matching shapes."""
     import numpy as np
     import pyarrow as pa
 
@@ -106,21 +113,22 @@ def _flat_valid(a, b=None):
                     "at least one element"
                 )
         flat = np.asarray(x.flatten(), dtype=np.float64)
-        mats.append(flat.reshape(len(x), -1) if len(x) else flat.reshape(0, 0))
+        mats.append(flat.reshape(len(x), -1) if len(x) else flat.reshape(0, dim))
     return valid, mats
 
 
-def _scatter(values, valid, n):
-    """Place kernel results back at their original row positions,
-    nulling rows whose input was null."""
+def _scatter(values, valid, n, *, fill=None):
+    """Place kernel results (a numpy array) back at their original row
+    positions; a row whose input was null gets ``fill``, or NULL when
+    ``fill`` is None."""
     import numpy as np
     import pyarrow as pa
 
     if valid is None:
-        return pa.array(values, type=pa.float64())
-    out = np.zeros(n, dtype=np.float64)
+        return pa.array(values)
+    out = np.full(n, 0 if fill is None else fill, dtype=values.dtype)
     out[valid] = values
-    return pa.array(out, type=pa.float64(), mask=~valid)
+    return pa.array(out, mask=None if fill is not None else ~valid)
 
 
 def cosine_vs_query_col(vec: Column, query: "list[float]") -> Column:
@@ -145,8 +153,8 @@ def cosine_vs_query_col(vec: Column, query: "list[float]") -> Column:
     @F.arrow_udf(DoubleType())
     def _cos(arr):
         _worker.install()
-        valid, (vecs,) = _flat_valid(arr)
-        if vecs.shape[0] and vecs.shape[1] != q_arr.shape[0]:
+        valid, (vecs,) = _flat_valid(arr, dim=q_arr.shape[0])
+        if vecs.shape[1] != q_arr.shape[0]:
             raise ValueError(
                 f"vector dim {vecs.shape[1]} != query dim {q_arr.shape[0]}"
             )
@@ -373,30 +381,14 @@ def lsh_signature_col(vec: Column, planes: "list[list[float]]") -> Column:
     @F.arrow_udf(LongType())
     def _sign(arr):
         _worker.install()
-        import pyarrow as pa
-
-        if isinstance(arr, pa.ChunkedArray):
-            arr = arr.combine_chunks()
-        valid_mask = None
-        dense = arr
-        if arr.null_count:
-            valid_mask = arr.is_valid().to_numpy(zero_copy_only=False)
-            dense = arr.drop_null()
-        # flatten() honors list offsets (a sliced batch's .values would
-        # include out-of-window elements)
-        flat = np.asarray(dense.flatten(), dtype=np.float64)
-        vecs = flat.reshape(len(dense), -1) if len(dense) else flat.reshape(0, plane_matrix.shape[0])
+        valid, (vecs,) = _flat_valid(arr, dim=plane_matrix.shape[0])
         if vecs.shape[1] != plane_matrix.shape[0]:
             raise ValueError(
                 f"vector dim {vecs.shape[1]} != hyperplane dim "
                 f"{plane_matrix.shape[0]} — vectors do not match the planes"
             )
         sigs = ((vecs @ plane_matrix) > 0).astype(np.uint64) @ weights
-        if valid_mask is None:
-            return pa.array(sigs.astype(np.int64))
-        out = np.zeros(len(arr), dtype=np.int64)
-        out[valid_mask] = sigs.astype(np.int64)
-        return pa.array(out)
+        return _scatter(sigs.astype(np.int64), valid, len(arr), fill=0)
 
     return _sign(vec)
 
@@ -453,102 +445,181 @@ def _probe_set(q_sig: int, n_planes: int, multiprobe_bits: int) -> "set[int]":
     return probes
 
 
-def write_quantized_partitions(
+def _table_root(index_path: str, quantized: bool, table: str) -> str:
+    """Directory of one table of a cell-partitioned index: ``codes`` or
+    ``vectors`` under the index on the quantized layout; on the flat
+    layout both are the index root itself."""
+    return f"{index_path}/{table}" if quantized else index_path
+
+
+def _write_cells(
     df: DataFrame,
     root: str,
-    *,
-    partition_col: str,
-    vec_col: str,
-    id_col: str,
+    cell: str,
+    quantize: bool,
     mode: str = "overwrite",
     batch_id: "int | None" = None,
 ) -> None:
-    """THE one definition of the quantized two-table write — every
-    build/append/streaming site funnels through it, so the layout
-    (column names, directory names, write ORDER) cannot drift between
-    writers (the same one-definition rule as ``_write_signed``'s
-    signing layout).
+    """THE one write of a cell-partitioned vector index: LSH and IVF
+    build and append and every streamed batch go through it, so the
+    layout (column names, directory names, write ORDER) cannot drift
+    between writers. ``df`` is ``(id, vector, cell)``, as
+    :func:`_signed` and :func:`_ivf_assign` produce it.
 
-    ``{root}/codes/...`` carries ``(id, code, scale)`` — int8
-    per-vector-scale quantization, ~4× fewer bytes per probed bucket —
-    and ``{root}/vectors/...`` the float vectors for the optional exact
-    rerank; ``batch_id`` nests the streamed ``batch=N`` level. One
-    staging pass (repartition + quantize + checkpoint) feeds both
-    writes. The VECTORS side is written FIRST: the ranking scan reads
-    codes, so a crash (or concurrent read) between the two writes
-    leaves the increment wholly invisible to probes — consistent
-    absence — instead of code-ranked but missing from the rerank fetch,
-    which would silently drop the true nearest neighbors.
+    One shuffle by ``cell`` so each cell directory is written by a
+    single task (avoids one tiny file per cell per input task);
+    ``batch_id`` nests the streamed ``batch=N`` level, whose
+    batch-scoped overwrite keeps a replayed batch idempotent.
 
-    An in-place ``overwrite`` of an ALREADY-POPULATED index inverts
-    that guarantee (between the new vectors write and the codes
-    overwrite, probes would rank from STALE codes whose ids may be
-    absent from the new vectors side), so the stale codes table is
-    deleted up front — the whole rebuild window is then
-    consistent-absence too."""
+    ``quantize=True`` writes the two-table layout: ``{root}/codes``
+    carries ``(id, code, scale)`` — int8 per-vector-scale quantization,
+    ~4× fewer bytes per probed cell — and ``{root}/vectors`` the float
+    vectors for the optional exact rerank. One staging pass (quantize +
+    checkpoint) feeds both writes. The VECTORS side is written FIRST:
+    the ranking scan reads codes, so a crash (or concurrent read)
+    between the two writes leaves the increment wholly invisible to
+    probes — consistent absence — instead of code-ranked but missing
+    from the rerank fetch, which would silently drop the true nearest
+    neighbors.
+
+    A quantized rebuild (``overwrite`` without ``batch_id``) deletes
+    the old index directory once the staging pass holds the rows: stale
+    codes would otherwise rank ids the new vectors side lacks, and a
+    flat index rebuilt as quantized would keep its old ``sig``/``cid``
+    directories. A flat overwrite replaces the directory by itself."""
+    from ..streaming.fsio import fs_delete
+
+    id_col, vec_col, _ = df.columns
+    staged = df.repartition(cell)
+    if quantize:
+        staged = staged.withColumn(
+            "_q", quantize_vector_col(F.col(vec_col))
+        ).localCheckpoint()  # one quantization pass for both writes
+        if mode == "overwrite" and batch_id is None:
+            fs_delete(df.sparkSession, root)
+        tables = {
+            "vectors": staged.select(id_col, vec_col, cell),
+            "codes": staged.select(
+                id_col,
+                F.col("_q.code").alias("code"),
+                F.col("_q.scale").alias("scale"),
+                cell,
+            ),
+        }
+    else:
+        tables = {"vectors": staged}
     suffix = f"/batch={batch_id}" if batch_id is not None else ""
-    if mode == "overwrite" and batch_id is None:
-        from ..streaming.fsio import fs_delete, fs_exists
-
-        spark = df.sparkSession
-        if fs_exists(spark, f"{root}/codes"):
-            fs_delete(spark, f"{root}/codes")
-    staged = (
-        df.repartition(partition_col)
-        .withColumn("_q", quantize_vector_col(F.col(vec_col)))
-        .localCheckpoint()  # one quantization pass for both writes
-    )
-    staged.select(id_col, vec_col, partition_col).write.mode(mode).partitionBy(
-        partition_col
-    ).parquet(f"{root}/vectors{suffix}")
-    staged.select(
-        id_col,
-        F.col("_q.code").alias("code"),
-        F.col("_q.scale").alias("scale"),
-        partition_col,
-    ).write.mode(mode).partitionBy(partition_col).parquet(
-        f"{root}/codes{suffix}"
-    )
+    for table, frame in tables.items():
+        frame.write.mode(mode).partitionBy(cell).parquet(
+            _table_root(root, quantize, table) + suffix
+        )
 
 
-def _write_signed(
-    df: DataFrame,
+def _read_cells(
+    spark, index_path: str, quantized: bool, table: str, cells: Column
+) -> DataFrame:
+    """THE one read of a cell-partitioned index: the rows of ``table``
+    in the cells ``cells`` selects. ``cells`` is a predicate on the
+    partition column, so Spark prunes every other cell's files at
+    planning time (``PartitionFilters`` in the scan node); a streamed
+    index's extra ``batch`` level only adds directories."""
+    root = _table_root(index_path, quantized, table)
+    return spark.read.parquet(root).filter(cells)
+
+
+def _query_cells(
+    spark,
     index_path: str,
-    *,
-    dim: int,
-    n_planes: int,
-    seed: int,
+    quantized: bool,
+    cells: Column,
+    query: "list[float]",
+    k: int,
+    rerank: "int | None",
     vec_col: str,
     id_col: str,
-    mode: str,
-    quantize: bool = False,
-) -> None:
-    """Shared sign-and-write for build/append — ONE definition of the
-    signing layout so the append-equals-rebuild invariant can't drift.
+) -> DataFrame:
+    """Top-k of ``query`` over the cells a probe picked: the one query
+    path of the LSH and IVF indexes.
 
-    ``quantize=True`` writes the two-table layout
-    (:func:`write_quantized_partitions`) instead of the flat one."""
-    planes = hyperplanes(dim, n_planes, seed=seed)
-    signed = df.select(
+    A flat index is an exact :func:`cosine_topk` over the cells. On a
+    quantized index the ranking scan reads ONLY the int8 codes table
+    (cosine is scale-invariant, so the codes suffice), then the top
+    ``rerank`` candidates — default ``max(4k, 32)``, a driver-scale
+    shortlist — are re-scored exactly against the float side of the
+    same cells plus an id pushdown. ``rerank=0`` skips the float fetch
+    and returns the code-ranked top-k (the minimum-bytes path;
+    quantized cosine error is ~1/127 per element, so ranking flips only
+    near-ties)."""
+    if not quantized:
+        vecs = _read_cells(spark, index_path, False, "vectors", cells)
+        return cosine_topk(vecs, query, k=k, vec_col=vec_col, id_col=id_col)
+    scored = (
+        _read_cells(spark, index_path, True, "codes", cells)
+        .select(
+            F.col(id_col),
+            cosine_codes_vs_query_col(F.col("code"), query).alias("cosine"),
+        )
+        .orderBy(F.desc("cosine"), F.col(id_col))
+    )
+    if rerank is None:
+        rerank = max(4 * k, 32)
+    if rerank <= 0:
+        return scored.limit(k)
+    shortlist = [r[id_col] for r in scored.limit(rerank).collect()]
+    vecs = _read_cells(
+        spark, index_path, True, "vectors", cells & F.col(id_col).isin(shortlist)
+    )
+    return cosine_topk(vecs, query, k=k, vec_col=vec_col, id_col=id_col)
+
+
+def _refuse_mixed_layout(
+    spark, index_path: str, quantized: bool, cell: str, *, streamed: bool
+) -> None:
+    """Refuse a write that would put the batch layout (``{cell}=K``)
+    and the streamed one (``batch=N/{cell}=K``) under one index:
+    Spark's partition discovery cannot read both, so every later query
+    would fail. Decided from the directories the probe reads, once per
+    append call or stream start."""
+    from ..streaming.fsio import fs_list
+
+    other = cell if streamed else "batch"
+    found = fs_list(spark, _table_root(index_path, quantized, "codes"), f"{other}=*")
+    if not found:
+        return
+    if streamed:
+        how = (
+            "was built in batch; streaming into it would mix layouts. "
+            "Append to it with append_to_ann_index/append_to_ivf_index, or "
+            "stream into a new index path"
+        )
+    else:
+        how = (
+            "was built by a stream; a batch append would mix layouts. "
+            "Land the rows in the stream's source directory, or rebuild "
+            "the index with build_ann_index/build_ivf_index"
+        )
+    raise ValueError(
+        f"index at {index_path!r} ({found[0]}/...) {how} — a mixed "
+        "layout makes every query fail."
+    )
+
+
+def _signed(
+    df: DataFrame, planes: "list[list[float]]", vec_col: str, id_col: str
+) -> DataFrame:
+    """``(id, vector, sig)``: the one signing of the LSH build, append
+    and stream batch, so the append-equals-rebuild invariant can't
+    drift."""
+    return df.select(
         F.col(id_col),
         F.col(vec_col),
         lsh_signature_col(F.col(vec_col), planes).alias("sig"),
     )
-    if not quantize:
-        # one shuffle by bucket so each partition directory is written
-        # by a single task (avoids 2^n_planes tiny files per input task)
-        signed.repartition("sig").write.mode(mode).partitionBy("sig").parquet(
-            index_path
-        )
-        return
-    write_quantized_partitions(
-        signed,
-        index_path,
-        partition_col="sig",
-        vec_col=vec_col,
-        id_col=id_col,
-        mode=mode,
-    )
+
+
+def _ann_params(dim: int, n_planes: int, seed: int, quantize: bool) -> "dict":
+    """An LSH index's ``_params`` record: its hyperplanes and layout."""
+    return {"dim": dim, "n_planes": n_planes, "seed": seed, "quantize": int(quantize)}
 
 
 def _ann_params_path(index_path: str) -> str:
@@ -615,7 +686,7 @@ def build_ann_index(
     difference between touching ~2^-bits of the table and all of it).
 
     ``quantize=True`` additionally stores int8-quantized codes beside
-    the float vectors (:func:`_write_signed`): probes then rank from
+    the float vectors (:func:`_write_cells`): probes then rank from
     the ~4×-smaller codes table and only the optional exact rerank
     touches floats — probe bytes are the index's scale currency. The
     choice is recorded in ``_params`` so appends/probes against a
@@ -625,26 +696,10 @@ def build_ann_index(
     from ..streaming.fsio import fs_delete
 
     fs_delete(df.sparkSession, _ann_params_path(index_path))
-    _write_signed(
-        df,
-        index_path,
-        dim=dim,
-        n_planes=n_planes,
-        seed=seed,
-        vec_col=vec_col,
-        id_col=id_col,
-        mode="overwrite",
-        quantize=quantize,
-    )
+    planes = hyperplanes(dim, n_planes, seed=seed)
+    _write_cells(_signed(df, planes, vec_col, id_col), index_path, "sig", quantize)
     _write_ann_params(
-        df.sparkSession,
-        index_path,
-        {
-            "dim": dim,
-            "n_planes": n_planes,
-            "seed": seed,
-            "quantize": int(quantize),
-        },
+        df.sparkSession, index_path, _ann_params(dim, n_planes, seed, quantize)
     )
 
 
@@ -669,28 +724,45 @@ def append_to_ann_index(
     ``quantize`` must match the index's build layout (it is verified
     against ``_params`` alongside the hyperplane parameters): appending
     float-only rows into a quantized index would leave them invisible
-    to code-ranked probes."""
-    _check_ann_params(
-        df.sparkSession,
-        index_path,
-        {
-            "dim": dim,
-            "n_planes": n_planes,
-            "seed": seed,
-            "quantize": int(quantize),
-        },
+    to code-ranked probes. An index built by
+    :func:`curies_spark.streaming.start_ann_index_stream` is refused:
+    its ``batch=N`` layout does not mix with the batch one."""
+    spark = df.sparkSession
+    _check_ann_params(spark, index_path, _ann_params(dim, n_planes, seed, quantize))
+    _refuse_mixed_layout(spark, index_path, quantize, "sig", streamed=False)
+    planes = hyperplanes(dim, n_planes, seed=seed)
+    _write_cells(
+        _signed(df, planes, vec_col, id_col), index_path, "sig", quantize, "append"
     )
-    _write_signed(
-        df,
-        index_path,
-        dim=dim,
-        n_planes=n_planes,
-        seed=seed,
-        vec_col=vec_col,
-        id_col=id_col,
-        mode="append",
-        quantize=quantize,
-    )
+
+
+def _ann_cells(
+    spark,
+    index_path: str,
+    query: "list[float]",
+    n_planes: "int | None",
+    multiprobe_bits: int,
+    seed: "int | None",
+) -> "tuple[bool, Column]":
+    """``(quantized, sig filter)`` of a query against a persisted ANN
+    index, from ONE read of its ``_params`` and one derivation of its
+    hyperplanes; explicit ``n_planes``/``seed`` must match the build."""
+    stored = _read_ann_params(spark, index_path)
+    if len(query) != stored["dim"]:
+        raise ValueError(
+            f"query dim {len(query)} != index dim {stored['dim']} at {index_path!r}"
+        )
+    for name, given in (("n_planes", n_planes), ("seed", seed)):
+        if given is not None and given != stored[name]:
+            raise ValueError(
+                f"ANN index at {index_path!r} was built with "
+                f"{name}={stored[name]}, probe called with {name}={given} — "
+                "mismatched hyperplanes would probe the wrong buckets"
+            )
+    n_planes = stored["n_planes"]
+    planes = hyperplanes(len(query), n_planes, seed=stored["seed"])
+    probes = _probe_set(query_signature(query, planes), n_planes, multiprobe_bits)
+    return bool(stored["quantize"]), F.col("sig").isin(sorted(int(p) for p in probes))
 
 
 def probe_ann_index(
@@ -721,24 +793,10 @@ def probe_ann_index(
     should touch) or ``"vectors"`` (the float side, for the exact
     rerank). Ignored on a float-only index.
     """
-    stored = _read_ann_params(spark, index_path)
-    if len(query) != stored["dim"]:
-        raise ValueError(
-            f"query dim {len(query)} != index dim {stored['dim']} at {index_path!r}"
-        )
-    for name, given in (("n_planes", n_planes), ("seed", seed)):
-        if given is not None and given != stored[name]:
-            raise ValueError(
-                f"ANN index at {index_path!r} was built with "
-                f"{name}={stored[name]}, probe called with {name}={given} — "
-                "mismatched hyperplanes would probe the wrong buckets"
-            )
-    n_planes, seed = stored["n_planes"], stored["seed"]
-    planes = hyperplanes(len(query), n_planes, seed=seed)
-    probes = _probe_set(query_signature(query, planes), n_planes, multiprobe_bits)
-    root = f"{index_path}/{table}" if stored["quantize"] else index_path
-    idx = spark.read.parquet(root)
-    return idx.filter(F.col("sig").isin(sorted(int(p) for p in probes)))
+    quantized, cells = _ann_cells(
+        spark, index_path, query, n_planes, multiprobe_bits, seed
+    )
+    return _read_cells(spark, index_path, quantized, table, cells)
 
 
 def query_ann_index(
@@ -757,56 +815,14 @@ def query_ann_index(
     """Top-k over the probed buckets only — per-query cost is
     O(N / 2^n_planes · |probes|) rows read instead of O(N).
     ``n_planes``/``seed`` default to the index's build parameters.
-
-    On a quantized index the ranking scan reads ONLY the int8 codes
-    table (~4× fewer bytes per probed bucket; cosine is scale-invariant
-    so the codes suffice), then the top ``rerank`` candidates — default
-    ``max(4k, 32)``, a driver-scale shortlist — are re-scored exactly
-    against the float side restricted to the probed partitions plus an
-    id pushdown. ``rerank=0`` skips the float fetch entirely and
-    returns the code-ranked top-k (the minimum-bytes path; quantized
-    cosine error is ~1/127 per element, so ranking flips only
-    near-ties)."""
-    stored = _read_ann_params(spark, index_path)
-    if not stored["quantize"]:
-        candidates = probe_ann_index(
-            spark,
-            index_path,
-            query,
-            n_planes=n_planes,
-            multiprobe_bits=multiprobe_bits,
-            seed=seed,
-        )
-        return cosine_topk(candidates, query, k=k, vec_col=vec_col, id_col=id_col)
-
-    codes = probe_ann_index(
-        spark,
-        index_path,
-        query,
-        n_planes=n_planes,
-        multiprobe_bits=multiprobe_bits,
-        seed=seed,
-        table="codes",
+    On a quantized index the ranking reads only the int8 codes and
+    ``rerank`` sets the exact-rerank shortlist (:func:`_query_cells`)."""
+    quantized, cells = _ann_cells(
+        spark, index_path, query, n_planes, multiprobe_bits, seed
     )
-    scored = codes.select(
-        F.col(id_col),
-        cosine_codes_vs_query_col(F.col("code"), query).alias("cosine"),
-    ).orderBy(F.desc("cosine"), F.col(id_col))
-    if rerank is None:
-        rerank = max(4 * k, 32)
-    if rerank <= 0:
-        return scored.limit(k)
-    shortlist = [r[id_col] for r in scored.limit(rerank).collect()]
-    vecs = probe_ann_index(
-        spark,
-        index_path,
-        query,
-        n_planes=n_planes,
-        multiprobe_bits=multiprobe_bits,
-        seed=seed,
-        table="vectors",
-    ).filter(F.col(id_col).isin(shortlist))
-    return cosine_topk(vecs, query, k=k, vec_col=vec_col, id_col=id_col)
+    return _query_cells(
+        spark, index_path, quantized, cells, query, k, rerank, vec_col, id_col
+    )
 
 
 def _ivf_assign(
@@ -844,12 +860,13 @@ def _ivf_assign(
         _worker.install()
         import pyarrow as pa
 
-        if isinstance(arr, pa.ChunkedArray):
-            arr = arr.combine_chunks()
-        # flatten() honors list offsets (a sliced batch's .values would
-        # include out-of-window elements)
-        flat = np.asarray(arr.flatten(), dtype=np.float64)
-        vecs = flat.reshape(len(arr), -1)
+        valid, (vecs,) = _flat_valid(arr, dim=cent_matrix.shape[0])
+        if valid is not None:
+            raise ValueError(
+                f"{len(arr) - int(valid.sum())} NULL vector(s) in IVF cell "
+                "assignment — a NULL vector has no nearest centroid; drop "
+                "or fill NULL embeddings first"
+            )
         if vecs.shape[1] != cent_matrix.shape[0]:
             raise ValueError(
                 f"vector dim {vecs.shape[1]} != centroid dim "
@@ -908,7 +925,7 @@ def build_ivf_index(
     ``write_vectors=False`` trains and persists ONLY the centroid side
     table (no vector partitions) — the seed step for a streamed index
     (:func:`curies_spark.streaming.start_ivf_index_stream`), whose
-    batch-scoped layout must not mix with the flat one. ``_params`` is
+    batch-scoped layout is refused beside the flat one. ``_params`` is
     deleted first and written after the vectors and ``_centroids``.
     """
     from ..streaming.fsio import fs_delete
@@ -955,21 +972,7 @@ def build_ivf_index(
 
     if write_vectors:
         final = _ivf_assign(tagged, centroids, contiguous, vec_col, id_col)
-        if quantize:
-            # two-table layout, same rationale as the quantized ANN
-            # index: probes rank from the ~4×-smaller codes/cid=C side,
-            # exact rerank reads vectors/cid=C
-            write_quantized_partitions(
-                final,
-                index_path,
-                partition_col="cid",
-                vec_col=vec_col,
-                id_col=id_col,
-            )
-        else:
-            final.repartition("cid").write.mode("overwrite").partitionBy(
-                "cid"
-            ).parquet(index_path)
+        _write_cells(final, index_path, "cid", quantize)
     # centroids ride along as a driver-scale side table for the prober
     df.sparkSession.createDataFrame(
         [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
@@ -1015,25 +1018,18 @@ def append_to_ivf_index(
     operation than daily appends. The index's own layout (float vs
     quantized, from ``_params``) decides what the append writes — both
     sides on a quantized index, so appended rows stay visible to
-    code-ranked probes.
+    code-ranked probes. An index built by
+    :func:`curies_spark.streaming.start_ivf_index_stream` is refused:
+    its ``batch=N`` layout does not mix with the batch one.
     """
-    cids, cents = load_ivf_centroids(df.sparkSession, index_path)
+    spark = df.sparkSession
+    quantized = _ivf_quantized(spark, index_path)
+    _refuse_mixed_layout(spark, index_path, quantized, "cid", streamed=False)
+    cids, cents = load_ivf_centroids(spark, index_path)
     # a dim mismatch fails loud inside _ivf_assign's kernel (per-batch
     # shape check) — no driver-side scan needed here
     assigned = _ivf_assign(df, cents, cids, vec_col, id_col)
-    if _ivf_quantized(df.sparkSession, index_path):
-        write_quantized_partitions(
-            assigned,
-            index_path,
-            partition_col="cid",
-            vec_col=vec_col,
-            id_col=id_col,
-            mode="append",
-        )
-        return
-    assigned.repartition("cid").write.mode("append").partitionBy("cid").parquet(
-        index_path
-    )
+    _write_cells(assigned, index_path, "cid", quantized, "append")
 
 
 def query_ivf_index(
@@ -1056,43 +1052,22 @@ def query_ivf_index(
     reads only the int8 codes side (``rerank`` as in
     :func:`query_ann_index`).
     """
+    quantized = _ivf_quantized(spark, index_path)
+    cids, cents = load_ivf_centroids(spark, index_path)
     q = [float(x) for x in query]
-    cents = spark.read.parquet(index_path + "_centroids").collect()
-    for r in cents:
-        if len(q) != len(r["centroid"]):
-            # zip would silently truncate and score a dim-prefix —
-            # mirror _ivf_assign's loud shape check on the write path
-            raise ValueError(
-                f"query dim {len(q)} != index dim {len(r['centroid'])} "
-                f"at {index_path!r}"
-            )
-    scored = sorted(
-        (sum((a - b) ** 2 for a, b in zip(q, r["centroid"])), r["cid"]) for r in cents
-    )
-    probe_cids = [cid for _, cid in scored[:nprobe]]
-    if not _ivf_quantized(spark, index_path):
-        candidates = spark.read.parquet(index_path).filter(
-            F.col("cid").isin(probe_cids)
+    if len(q) != len(cents[0]):
+        # zip would silently truncate and score a dim-prefix — mirror
+        # _ivf_assign's loud shape check on the write path
+        raise ValueError(
+            f"query dim {len(q)} != index dim {len(cents[0])} at {index_path!r}"
         )
-        return cosine_topk(candidates, query, k=k, vec_col=vec_col, id_col=id_col)
-    # quantized layout: rank from the int8 codes of the probed cells,
-    # then exact-rerank a driver-scale shortlist against the float side
-    codes = spark.read.parquet(f"{index_path}/codes").filter(
-        F.col("cid").isin(probe_cids)
+    scored = sorted(
+        (sum((a - b) ** 2 for a, b in zip(q, c)), cid) for cid, c in zip(cids, cents)
     )
-    approx = codes.select(
-        F.col(id_col),
-        cosine_codes_vs_query_col(F.col("code"), query).alias("cosine"),
-    ).orderBy(F.desc("cosine"), F.col(id_col))
-    if rerank is None:
-        rerank = max(4 * k, 32)
-    if rerank <= 0:
-        return approx.limit(k)
-    shortlist = [r[id_col] for r in approx.limit(rerank).collect()]
-    vecs = spark.read.parquet(f"{index_path}/vectors").filter(
-        F.col("cid").isin(probe_cids) & F.col(id_col).isin(shortlist)
+    cells = F.col("cid").isin([cid for _, cid in scored[:nprobe]])
+    return _query_cells(
+        spark, index_path, quantized, cells, query, k, rerank, vec_col, id_col
     )
-    return cosine_topk(vecs, query, k=k, vec_col=vec_col, id_col=id_col)
 
 
 def embedding_near_dup_pairs(

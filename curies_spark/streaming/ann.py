@@ -20,15 +20,16 @@ and a full rebuild is infeasible. Each micro-batch:
 Probing is unchanged: ``probe_ann_index`` partition-discovers
 ``(batch, sig)`` and the ``sig`` filter still prunes every non-probed
 bucket's files at planning time — the extra ``batch`` partition level
-only adds directories, never scanned bytes. Do NOT mix this layout
-with ``build_ann_index``'s flat ``sig=S`` layout at one path (Spark's
-partition discovery requires a consistent depth); a streamed index
-lives at its own path from batch 0.
+only adds directories, never scanned bytes. Spark's partition
+discovery cannot read this layout and ``build_ann_index``'s flat
+``sig=S`` one at one path, so mixing them is refused: a stream will
+not start on a batch-built index, and a batch append refuses a
+streamed one. A streamed index lives at its own path from batch 0.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import (
     ArrayType,
@@ -39,10 +40,16 @@ from pyspark.sql.types import (
 )
 
 from ..operators.similarity import (
+    _ann_params,
     _check_ann_params,
+    _ivf_assign,
+    _ivf_quantized,
+    _refuse_mixed_layout,
+    _signed,
     _write_ann_params,
+    _write_cells,
     hyperplanes,
-    lsh_signature_col,
+    load_ivf_centroids,
 )
 
 __all__ = [
@@ -85,6 +92,45 @@ def read_embedding_stream(
     return reader.parquet(source_dir)
 
 
+def _start_cell_stream(
+    spark: SparkSession,
+    source_dir: str,
+    index_path: str,
+    checkpoint_dir: str,
+    cell: str,
+    quantized: bool,
+    place,
+    *,
+    vec_col: str,
+    id_col: str,
+    available_now: bool,
+    max_files_per_trigger: "int | None",
+) -> StreamingQuery:
+    """The appender both index streams share: refuse a batch-built
+    index once per start, then write each micro-batch, placed into
+    cells by ``place`` (``batch -> (id, vector, cell)``), as its own
+    ``batch=N`` directory through the one index write."""
+    _refuse_mixed_layout(spark, index_path, quantized, cell, streamed=True)
+
+    def process(batch: DataFrame, batch_id: int) -> None:
+        _write_cells(place(batch), index_path, cell, quantized, batch_id=batch_id)
+
+    writer = (
+        read_embedding_stream(
+            spark,
+            source_dir,
+            id_col=id_col,
+            vec_col=vec_col,
+            max_files_per_trigger=max_files_per_trigger,
+        )
+        .writeStream.foreachBatch(process)
+        .option("checkpointLocation", checkpoint_dir)
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
 def start_ann_index_stream(
     spark: SparkSession,
     source_dir: str,
@@ -112,12 +158,7 @@ def start_ann_index_stream(
     layout would leave rows invisible to the other layout's probes."""
     from .fsio import fs_exists
 
-    params = {
-        "dim": dim,
-        "n_planes": n_planes,
-        "seed": seed,
-        "quantize": int(quantize),
-    }
+    params = _ann_params(dim, n_planes, seed, quantize)
     # existence probed through the Hadoop FS API: the index path may be
     # any Hadoop filesystem URI, not just a local POSIX path
     if fs_exists(spark, index_path) or fs_exists(spark, index_path + "_params"):
@@ -127,45 +168,19 @@ def start_ann_index_stream(
     else:
         _write_ann_params(spark, index_path, params)
     planes = hyperplanes(dim, n_planes, seed=seed)
-
-    def process(batch: DataFrame, batch_id: int) -> None:
-        signed = batch.select(
-            F.col(id_col),
-            F.col(vec_col),
-            lsh_signature_col(F.col(vec_col), planes).alias("sig"),
-        )
-        # one shuffle by bucket so each sig directory is written by a
-        # single task; batch-scoped overwrite keeps replays idempotent
-        if quantize:
-            from ..operators.similarity import write_quantized_partitions
-
-            write_quantized_partitions(
-                signed,
-                index_path,
-                partition_col="sig",
-                vec_col=vec_col,
-                id_col=id_col,
-                batch_id=batch_id,
-            )
-            return
-        signed.repartition("sig").write.mode("overwrite").partitionBy(
-            "sig"
-        ).parquet(f"{index_path}/batch={batch_id}")
-
-    writer = (
-        read_embedding_stream(
-            spark,
-            source_dir,
-            id_col=id_col,
-            vec_col=vec_col,
-            max_files_per_trigger=max_files_per_trigger,
-        )
-        .writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
+    return _start_cell_stream(
+        spark,
+        source_dir,
+        index_path,
+        checkpoint_dir,
+        "sig",
+        quantize,
+        lambda batch: _signed(batch, planes, vec_col, id_col),
+        vec_col=vec_col,
+        id_col=id_col,
+        available_now=available_now,
+        max_files_per_trigger=max_files_per_trigger,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def start_ivf_index_stream(
@@ -192,48 +207,20 @@ def start_ivf_index_stream(
     ``{index_path}/batch=N/cid=C/...`` with batch-scoped overwrite —
     idempotent under crash replay, and ``query_ivf_index``'s ``cid``
     filter partition-prunes the nested layout exactly like the flat
-    batch one."""
-    from ..operators.similarity import (
-        _ivf_assign,
-        _ivf_quantized,
-        load_ivf_centroids,
-    )
-
-    # the index's OWN recorded layout decides what each batch writes —
-    # exactly like the batch appender, so appended rows are always
-    # visible to the layout's probes
+    batch one. The index's OWN recorded layout (``_params``) decides
+    what each batch writes, exactly like the batch appender."""
     quantized = _ivf_quantized(spark, index_path)
     cids, cents = load_ivf_centroids(spark, index_path)
-
-    def process(batch: DataFrame, batch_id: int) -> None:
-        assigned = _ivf_assign(batch, cents, cids, vec_col, id_col)
-        if quantized:
-            from ..operators.similarity import write_quantized_partitions
-
-            write_quantized_partitions(
-                assigned,
-                index_path,
-                partition_col="cid",
-                vec_col=vec_col,
-                id_col=id_col,
-                batch_id=batch_id,
-            )
-            return
-        assigned.repartition("cid").write.mode("overwrite").partitionBy(
-            "cid"
-        ).parquet(f"{index_path}/batch={batch_id}")
-
-    writer = (
-        read_embedding_stream(
-            spark,
-            source_dir,
-            id_col=id_col,
-            vec_col=vec_col,
-            max_files_per_trigger=max_files_per_trigger,
-        )
-        .writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
+    return _start_cell_stream(
+        spark,
+        source_dir,
+        index_path,
+        checkpoint_dir,
+        "cid",
+        quantized,
+        lambda batch: _ivf_assign(batch, cents, cids, vec_col, id_col),
+        vec_col=vec_col,
+        id_col=id_col,
+        available_now=available_now,
+        max_files_per_trigger=max_files_per_trigger,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
