@@ -12,16 +12,23 @@ Physical design (see SURVEY.md §3.2-3.3):
   ordered ``when``-chain of ``startswith`` probes (JVM, codegen'd,
   longest-first so the longest-prefix-wins guarantee of reference
   api.py:1762-1769 holds). Past a threshold, we switch to an
-  ``arrow_udf`` doing length-bucketed vectorized probes against the
-  broadcast converter: one C-speed byte-slice + hash set-lookup per
-  DISTINCT URI-prefix length over the whole Arrow batch (byte-prefix
-  match ≡ codepoint startswith for UTF-8), never per-row Python.
-  Measured ~2× the reference's in-process per-core trie throughput at
-  8 cores on a 200-record EPM (tools/bench_large_epm.py) and
-  ~1.8M ops/s/core in-kernel. On that path ``compress``,
-  ``standardize_uri`` and ``compress_or_standardize`` are each ONE
-  arrow_udf that returns the finished string: no struct crosses back
-  to the JVM and no map literal is probed after the UDF.
+  ``arrow_udf`` running :func:`_prefix_match` against the broadcast
+  converter — the ONE length-bucketed probe, which all five large-map
+  table sets (compress, standardize-URI, expand, parse-CURIE,
+  expand_all) go through: a stem lookup drops the rows that start no
+  key, then one C-speed byte-slice + hash set-lookup per DISTINCT key
+  length, longest first, over the rows still unmatched (byte-prefix
+  match ≡ codepoint startswith for UTF-8), never per-row Python; each
+  output string is built once, from the hit rows. When a strided
+  sample of the Arrow batch repeats values, :func:`_per_distinct`
+  probes the batch's dictionary instead and takes the result back to
+  row order. On that path ``compress``, ``standardize_uri`` and
+  ``compress_or_standardize`` are each ONE arrow_udf that returns the
+  finished string: no struct crosses back to the JVM and no map
+  literal is probed after the UDF. In-kernel, one core of a 4-core
+  microVM runs the three ops' bodies at 3.2–4.0M conversions per
+  CPU-second on 64k-row batches that are ~45% distinct (the
+  ``canon_large_epm`` mix) and 2.5–3.4M on all-distinct batches.
 
 Strictness mapping (reference api.py:1732-1778 etc.):
 - default    → miss = NULL
@@ -222,35 +229,12 @@ def expand_all_col(curie: "Column | str", converter) -> Column:
         @F.arrow_udf(ArrayType(StringType()))
         def _expand_all(arr):
             _worker.install()
-            import numpy as np
-            import pyarrow as pa
-            import pyarrow.compute as pc
+            tables, flat_uris, rec_offsets, rec_counts = _expand_all_arrow_tables(get())
 
-            buckets, flat_values, rec_offsets, rec_counts = _expand_all_arrow_tables(
-                get()
-            )
-            idx_arr, identifiers = _bucketed_prefix_match(arr, buckets)
-            valid = pc.is_valid(idx_arr)
-            valid_np = valid.to_numpy(zero_copy_only=False)
-            idx_np = (
-                idx_arr.fill_null(0).to_numpy(zero_copy_only=False).astype(np.int64)
-            )
-            counts_row = np.where(valid_np, rec_counts[idx_np], 0)
-            offsets = np.concatenate(([0], np.cumsum(counts_row)))
-            row_rep = np.repeat(np.arange(len(counts_row)), counts_row)
-            # position of each output element inside its row's list
-            pos = np.arange(int(offsets[-1]), dtype=np.int64) - np.repeat(
-                offsets[:-1], counts_row
-            )
-            val_idx = rec_offsets[idx_np][row_rep] + pos
-            bases = flat_values.take(pa.array(val_idx))
-            idents_rep = identifiers.take(pa.array(row_rep))
-            joined = pc.binary_join_element_wise(bases, idents_rep, "")
-            return pa.ListArray.from_arrays(
-                pa.array(offsets.astype(np.int32), pa.int32()),
-                joined,
-                mask=pc.invert(valid),
-            )
+            def finish(records, identifiers):
+                return _fan_out(records, identifiers, flat_uris, rec_offsets, rec_counts)
+
+            return _per_distinct(arr, lambda a: _prefix_match(a, tables, finish))
 
         return _expand_all(c)
     pairs: list[Column] = []
@@ -305,25 +289,33 @@ def _native_compress_pair(conv: Converter, uri: Column) -> "tuple[Column, Column
     return _native_pair_from_map(conv.reverse_prefix_map, uri)
 
 
-def _build_arrow_buckets(mapping: "dict[str, str]"):
-    """Per-BYTE-length (slice_len, binary key_set, value_array) pyarrow
-    lookup tables. Keys are UTF-8 bytes: byte-prefix match is exactly
-    equivalent to codepoint startswith for UTF-8 (prefix property), and
-    byte slicing is O(1) offset math where codepoint slicing scans."""
+def _build_arrow_buckets(mapping: "dict[str, object]", value_type=None):
+    """Length-bucketed lookup tables for :func:`_prefix_match`:
+    ``(buckets, values, (shortest, stems))``. ``buckets`` is
+    ``[(byte_length, binary key_set, offset)]``, longest first;
+    ``values`` concatenates every bucket's values, so key ``i`` of a
+    bucket maps to ``values[offset + i]``; ``stems`` holds the first
+    ``shortest`` bytes (the shortest key's length) of every key. Keys
+    are UTF-8 bytes: byte-prefix match is exactly equivalent to
+    codepoint startswith for UTF-8 (prefix property), and byte slicing
+    is O(1) offset math where codepoint slicing scans."""
     import pyarrow as pa
 
-    buckets: dict[int, dict[bytes, str]] = {}
+    by_length: dict[int, dict[bytes, object]] = {}
     for k, v in mapping.items():
         key = k.encode("utf-8")
-        buckets.setdefault(len(key), {})[key] = v
-    return [
-        (
-            length,
-            pa.array(list(bucket.keys()), type=pa.binary()),
-            pa.array(list(bucket.values())),
-        )
-        for length, bucket in sorted(buckets.items(), reverse=True)
-    ]
+        by_length.setdefault(len(key), {})[key] = v
+    buckets, flat = [], []
+    for length, bucket in sorted(by_length.items(), reverse=True):
+        buckets.append((length, pa.array(list(bucket), type=pa.binary()), len(flat)))
+        flat.extend(bucket.values())
+    shortest = min(by_length, default=0)
+    stems = {key[:shortest] for bucket in by_length.values() for key in bucket}
+    return (
+        buckets,
+        pa.array(flat, type=value_type or pa.string()),
+        (shortest, pa.array(sorted(stems), type=pa.binary())),
+    )
 
 
 def _cached_tables(conv: Converter, attr: str, build):
@@ -397,7 +389,7 @@ def _expand_all_arrow_tables(conv: Converter):
     index`` probes plus the record-major flattened URI-prefix array
     (canonical first, then synonyms in record order — reference
     api.py:2182-2219) with per-record offsets/counts for the vectorized
-    list fan-out."""
+    list fan-out (:func:`_fan_out`)."""
     return _cached_tables(conv, "_expand_all_arrow_tables_cache", _build_expand_all_tables)
 
 
@@ -417,60 +409,155 @@ def _build_expand_all_tables(conv: Converter):
         for prefix in record._all_prefixes:
             mapping[prefix] = i
     return (
-        _build_arrow_buckets(_curie_keyed(mapping)),
+        _build_arrow_buckets(_curie_keyed(mapping), pa.int64()),
         pa.array(flat, pa.string()),
         np.asarray(rec_offsets, dtype=np.int64),
         np.asarray(rec_counts, dtype=np.int64),
     )
 
 
-def _bucketed_prefix_match(arr, buckets):
-    """(matched value, remainder) Arrow arrays via length-bucketed
-    vectorized probes: one byte-slice + set-lookup per DISTINCT key
-    length (typically a few dozen) — every probe a C-speed kernel over
-    the whole Arrow batch, no per-row Python. Longest length first ⇒
-    longest-match wins."""
+def _fan_out(records, identifiers, flat_uris, rec_offsets, rec_counts):
+    """``finish`` for :func:`_prefix_match` in ``expand_all``: each hit
+    row's list of its record's URI prefixes + identifier, with no per-row
+    Python (``np.repeat`` over per-record counts + one element-wise join)."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    rec = records.to_numpy()
+    counts = rec_counts[rec]
+    offsets = np.concatenate(([0], np.cumsum(counts)))
+    row_rep = np.repeat(np.arange(len(counts)), counts)
+    # position of each output element inside its row's list
+    pos = np.arange(int(offsets[-1]), dtype=np.int64) - np.repeat(offsets[:-1], counts)
+    bases = flat_uris.take(pa.array(rec_offsets[rec][row_rep] + pos))
+    joined = pc.binary_join_element_wise(bases, identifiers.take(pa.array(row_rep)), "")
+    return pa.ListArray.from_arrays(
+        pa.array(offsets.astype(np.int32), pa.int32()), joined
+    )
+
+
+#: :func:`_per_distinct` counts the distinct values of at most this many
+#: rows, sampled at a stride over the batch
+_SAMPLE_ROWS = 8192
+#: ... and dictionary-encodes the batch when fewer than this share of the
+#: sampled rows are distinct
+_ENCODE_BELOW_DISTINCT_SHARE = 0.95
+
+
+def _per_distinct(arr, fn):
+    """``fn(arr)``, computed once per distinct value when the batch
+    repeats values: a strided sample of at most :data:`_SAMPLE_ROWS` rows
+    decides, then :func:`_over_dictionary` runs ``fn`` on the batch's
+    dictionary. ``fn`` maps an array to an array of the same length, row
+    for row, and a NULL row to NULL. The choice changes speed only,
+    never output."""
+    import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
 
     if isinstance(arr, pa.ChunkedArray):
         arr = arr.combine_chunks()
     n = len(arr)
-    raw = arr.cast(pa.binary())  # zero-copy view; byte slicing is offset math
-    # value type follows the buckets (string for prefix maps, int for
-    # the expand_all record-index tables)
-    matched_values = pa.nulls(n, buckets[0][2].type if buckets else pa.string())
-    # remainders stay BINARY until every bucket has run: a bucket's byte
-    # offset can split a multi-byte UTF-8 char on rows that did NOT
-    # match that bucket, and casting such a tail to string throws —
-    # if_else keeps only hit rows (whose offset is a char boundary by
-    # construction: the byte-prefix matched exactly), so the single
-    # final cast sees valid UTF-8 everywhere it is non-null
-    remainders_bin = pa.nulls(n, pa.binary())
-    matched = pc.is_null(arr)
-    stop = 2**31 - 1
-    for length, keys, values in buckets:
-        if pc.all(matched).as_py():
-            break
-        sliced = pc.binary_slice(raw, 0, length)
-        idx = pc.index_in(sliced, value_set=keys)
-        hit = pc.and_not(pc.is_valid(idx), matched)
-        if pc.any(hit).as_py():
-            matched_values = pc.if_else(hit, pc.take(values, idx), matched_values)
-            tail = pc.binary_slice(raw, length, stop)
-            remainders_bin = pc.if_else(hit, tail, remainders_bin)
-            matched = pc.or_(matched, hit)
-    return matched_values, remainders_bin.cast(pa.string())
+    if not n:
+        return fn(arr)
+    sample = arr
+    if n > _SAMPLE_ROWS:
+        sample = arr.take(pa.array(np.arange(0, n, -(-n // _SAMPLE_ROWS))))
+    distinct = pc.count_distinct(sample).as_py()
+    if distinct < _ENCODE_BELOW_DISTINCT_SHARE * len(sample):
+        return _over_dictionary(arr, fn)
+    return fn(arr)
 
 
-def _joined_match(arr, buckets, sep: str):
-    """One bucketed probe rendered as the finished string — matched value
-    + ``sep`` + remainder, joined inside Arrow; a miss (NULL on either
-    side) stays NULL."""
+def _over_dictionary(arr, fn):
+    """``fn`` over the distinct non-NULL values of ``arr``, taken back to
+    row order (a NULL row has a NULL index, so it stays NULL)."""
+    encoded = arr.dictionary_encode()
+    return fn(encoded.dictionary).take(encoded.indices)
+
+
+def _prefix_match(arr, tables, finish):
+    """The length-bucketed longest-prefix probe every large-map kernel
+    runs. ``tables`` come from :func:`_build_arrow_buckets`.
+
+    One byte-slice + set-lookup per DISTINCT key length, longest first,
+    so the longest match wins: each a C-speed kernel over the rows that
+    are still unmatched, never per-row Python. A first lookup of every
+    row's stem drops the rows (and NULLs) that start no key, and each
+    bucket that hits filters the rest down. A bucket's hits keep their
+    rows and flat value indexes as numpy ints; the strings are built
+    once, at the end: one tail slice per matched length, cut from hit
+    rows only (whose byte offset is a character boundary by
+    construction, so the one cast to string sees valid UTF-8 — a
+    shorter bucket's offset can split a multi-byte character on a row it
+    did not match), one value ``take``, then ``finish(values,
+    remainders)`` over the hit rows, and one scatter ``take`` back to
+    row order: NULL where a row did not match."""
+    import numpy as np
+    import pyarrow as pa
     import pyarrow.compute as pc
 
-    values, remainders = _bucketed_prefix_match(arr, buckets)
-    return pc.binary_join_element_wise(values, remainders, sep)
+    buckets, flat_values, (shortest, stems) = tables
+    n = len(arr)
+    raw = arr.cast(pa.binary())  # zero-copy view; byte slicing is offset math
+    live = pc.is_in(pc.binary_slice(raw, 0, shortest), value_set=stems)
+    pending = np.flatnonzero(live.to_numpy(zero_copy_only=False))
+    raw = raw.filter(live)
+    rows, value_idx, tails = [], [], []
+    for length, keys, offset in buckets:
+        if not len(pending):
+            break
+        idx = pc.index_in(pc.binary_slice(raw, 0, length), value_set=keys)
+        if idx.null_count == len(idx):
+            continue
+        hit = idx.is_valid()
+        hit_np = hit.to_numpy(zero_copy_only=False)
+        rows.append(pending[hit_np])
+        value_idx.append(pc.drop_null(idx).to_numpy() + offset)
+        tails.append(pc.binary_slice(raw.filter(hit), length, 2**31 - 1))
+        pending = pending[~hit_np]
+        raw = raw.filter(pc.invert(hit))
+    if rows:
+        hit_rows = np.concatenate(rows)
+        values = flat_values.take(pa.array(np.concatenate(value_idx)))
+        remainders = pa.concat_arrays(tails).cast(pa.string())
+    else:
+        hit_rows = pending[:0]
+        values = flat_values.slice(0, 0)
+        remainders = pa.array([], pa.string())
+    out = finish(values, remainders)
+    where = np.zeros(n, np.int64)
+    where[hit_rows] = np.arange(len(hit_rows))
+    missed = np.ones(n, bool)
+    missed[hit_rows] = False
+    return out.take(pa.array(where, mask=missed))
+
+
+def _joiner(sep: str):
+    """``finish`` for :func:`_prefix_match`: value + ``sep`` + remainder."""
+    import pyarrow.compute as pc
+
+    return lambda values, remainders: pc.binary_join_element_wise(
+        values, remainders, sep
+    )
+
+
+def _parsed_struct(prefixes, identifiers):
+    """``finish`` for :func:`_prefix_match`: a :data:`PARSE_SCHEMA` struct
+    (the scatter makes a miss a NULL struct, not a struct of NULLs)."""
+    import pyarrow as pa
+
+    return pa.StructArray.from_arrays(
+        [prefixes, identifiers], names=["prefix", "identifier"]
+    )
+
+
+def _joined_match(arr, tables, sep: str):
+    """One bucketed probe per distinct value, rendered as the finished
+    string — matched value + ``sep`` + remainder, joined inside Arrow;
+    a miss stays NULL."""
+    return _per_distinct(arr, lambda a: _prefix_match(a, tables, _joiner(sep)))
 
 
 def parse_uri_col(uri: "Column | str", converter) -> Column:
@@ -494,15 +581,10 @@ def parse_uri_col(uri: "Column | str", converter) -> Column:
     @F.arrow_udf(PARSE_SCHEMA)
     def _parse(arr):
         _worker.install()
-        import pyarrow as pa
+        tables = _arrow_buckets(get())
+        return _per_distinct(arr, lambda a: _prefix_match(a, tables, _parsed_struct))
 
-        prefixes, identifiers = _bucketed_prefix_match(arr, _arrow_buckets(get()))
-        return pa.StructArray.from_arrays(
-            [prefixes, identifiers], names=["prefix", "identifier"]
-        )
-
-    struct = _parse(c)
-    return F.when(struct.getField("prefix").isNotNull(), struct)
+    return _parse(c)
 
 
 def compress_col(
@@ -568,22 +650,26 @@ def compress_or_standardize_udf(converter):
     @F.arrow_udf(StringType())
     def _compress_or_standardize(arr):
         _worker.install()
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
         conv = get()
-        if isinstance(arr, pa.ChunkedArray):
-            arr = arr.combine_chunks()
-        out = _joined_match(arr, _arrow_buckets(conv), ":")
-        misses = pc.and_not(pc.is_null(out), pc.is_null(arr))
-        if pc.any(misses).as_py():
-            standardized = _joined_match(
-                arr.filter(misses), _parse_curie_arrow_buckets(conv), ":"
-            )
-            out = pc.replace_with_mask(out, misses, standardized)
-        return out
+        compress, curie = _arrow_buckets(conv), _parse_curie_arrow_buckets(conv)
+        return _per_distinct(
+            arr, lambda a: _compress_else_standardize(a, compress, curie)
+        )
 
     return _compress_or_standardize
+
+
+def _compress_else_standardize(arr, compress_tables, curie_tables):
+    """The compression probe, then the CURIE-standardization probe over
+    its non-NULL misses only, merged in the batch."""
+    import pyarrow.compute as pc
+
+    out = _prefix_match(arr, compress_tables, _joiner(":"))
+    misses = pc.and_not(pc.is_null(out), pc.is_null(arr))
+    if pc.any(misses).as_py():
+        standardized = _prefix_match(arr.filter(misses), curie_tables, _joiner(":"))
+        out = pc.replace_with_mask(out, misses, standardized)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -658,17 +744,10 @@ def parse_curie_col(curie: "Column | str", converter) -> Column:
     @F.arrow_udf(PARSE_SCHEMA)
     def _parse_curie(arr):
         _worker.install()
-        import pyarrow as pa
+        tables = _parse_curie_arrow_buckets(get())
+        return _per_distinct(arr, lambda a: _prefix_match(a, tables, _parsed_struct))
 
-        prefixes, identifiers = _bucketed_prefix_match(
-            arr, _parse_curie_arrow_buckets(get())
-        )
-        return pa.StructArray.from_arrays(
-            [prefixes, identifiers], names=["prefix", "identifier"]
-        )
-
-    struct = _parse_curie(c)
-    return F.when(struct.getField("prefix").isNotNull(), struct)
+    return _parse_curie(c)
 
 
 def standardize_curie_col(

@@ -8,6 +8,9 @@ Python). None of them belongs on a corpus-scale pass.
 - :func:`doc_fingerprint_native_col` twins ``text.doc_fingerprint_col``
 - :func:`minhash_signature_exploded` twins ``dedup.minhash_signature``
 - :func:`simhash_reference_one` twins ``dedup.simhash_col``
+- :func:`bucketed_prefix_match_if_else` twins ``kernels._prefix_match``:
+  every length bucket probes every row and merges its hits into two
+  whole-batch arrays with ``if_else``
 """
 
 import hashlib
@@ -95,3 +98,43 @@ def simhash_reference_one(s: "str | None", n_bits: int = 64) -> "int | None":
         if votes > 0:
             word |= 1 << b
     return word - (1 << 64) if word >= (1 << 63) else word
+
+
+def bucketed_prefix_match_if_else(arr, buckets):
+    """(matched value, remainder) Arrow arrays via length-bucketed
+    vectorized probes: one byte-slice + set-lookup per DISTINCT key
+    length (typically a few dozen) — every probe a C-speed kernel over
+    the whole Arrow batch, no per-row Python. Longest length first ⇒
+    longest-match wins. ``buckets`` is ``[(byte_length, binary key_set,
+    value_array)]``, longest first."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.combine_chunks()
+    n = len(arr)
+    raw = arr.cast(pa.binary())  # zero-copy view; byte slicing is offset math
+    # value type follows the buckets (string for prefix maps, int for
+    # the expand_all record-index tables)
+    matched_values = pa.nulls(n, buckets[0][2].type if buckets else pa.string())
+    # remainders stay BINARY until every bucket has run: a bucket's byte
+    # offset can split a multi-byte UTF-8 char on rows that did NOT
+    # match that bucket, and casting such a tail to string throws —
+    # if_else keeps only hit rows (whose offset is a char boundary by
+    # construction: the byte-prefix matched exactly), so the single
+    # final cast sees valid UTF-8 everywhere it is non-null
+    remainders_bin = pa.nulls(n, pa.binary())
+    matched = pc.is_null(arr)
+    stop = 2**31 - 1
+    for length, keys, values in buckets:
+        if pc.all(matched).as_py():
+            break
+        sliced = pc.binary_slice(raw, 0, length)
+        idx = pc.index_in(sliced, value_set=keys)
+        hit = pc.and_not(pc.is_valid(idx), matched)
+        if pc.any(hit).as_py():
+            matched_values = pc.if_else(hit, pc.take(values, idx), matched_values)
+            tail = pc.binary_slice(raw, length, stop)
+            remainders_bin = pc.if_else(hit, tail, remainders_bin)
+            matched = pc.or_(matched, hit)
+    return matched_values, remainders_bin.cast(pa.string())

@@ -3,9 +3,13 @@
 builds its own session or scrapes the status REST API, and importing
 one starts nothing."""
 
+import importlib.util
+import os
 import subprocess
 import sys
 from pathlib import Path
+
+import pytest
 
 REPO = Path(__file__).resolve().parent.parent
 TOOLS = sorted((REPO / "tools").glob("*.py"))
@@ -38,3 +42,32 @@ def test_tools_import_without_starting_spark():
         [sys.executable, "-c", code], cwd=REPO, capture_output=True, text=True, timeout=300
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
+
+
+def _load_tool(name):
+    spec = importlib.util.spec_from_file_location(name, REPO / "tools" / f"{name}.py")
+    module = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(module)
+    return module
+
+
+def test_bench_ann_scales_share_no_corpus_and_leave_nothing(tmp_path):
+    """Runs at two scales write distinct corpora, every path of a run
+    sits under one temp dir, and that dir is gone after the run, also
+    when the run fails."""
+    run_paths = _load_tool("bench_ann").run_paths
+    (tmp_path / "sf0.01").mkdir()
+    (tmp_path / "sf0.1").mkdir()
+    roots = []
+    with pytest.raises(RuntimeError):
+        with run_paths(str(tmp_path / "sf0.01")) as small:
+            with run_paths(str(tmp_path / "sf0.1")) as large:
+                assert small["corpus"] != large["corpus"]
+                for paths in (small, large):
+                    root = os.path.dirname(paths["corpus"])
+                    assert os.path.isdir(root)
+                    assert {os.path.dirname(p) for p in paths.values()} == {root}
+                    roots.append(root)
+                raise RuntimeError("a failed run")
+    assert roots[0] != roots[1]
+    assert not any(os.path.exists(root) for root in roots)

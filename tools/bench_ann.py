@@ -10,20 +10,23 @@ embeddings table (512k vectors, dim 64), then measures per-query:
 - wall per query for both paths;
 - recall@k of the probed top-k against the exact top-k.
 
-Prints one JSON line.
+Prints one JSON line. The corpus and every index live under one temp
+dir made for the run and removed at exit (see :func:`run_paths`).
 """
 
 from __future__ import annotations
 
+import contextlib
+import hashlib
 import json
 import os
 import shutil
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-INDEX = "/tmp/curies_spark_ann_index"
 K = 10
 N_PLANES = 8
 IVF_CELLS = 64
@@ -31,8 +34,34 @@ REPLICAS = 256
 QUERIES = 5
 
 
+@contextlib.contextmanager
+def run_paths(sf_dir: str):
+    """The paths one run writes — ``corpus``, the float and quantized LSH
+    indexes ``index``/``qindex`` and the IVF index ``ivf`` (each index
+    keeps its ``_params``/``_centroids`` beside it) — all under one fresh
+    temp dir, removed when the block exits, however it exits. The corpus
+    name is keyed on ``sf_dir``, so runs at two scales never read one
+    corpus."""
+    root = tempfile.mkdtemp(prefix="curies_spark_ann_")
+    scale = hashlib.sha256(os.path.realpath(sf_dir).encode()).hexdigest()[:16]
+    try:
+        yield {
+            "corpus": f"{root}/corpus_{scale}",
+            "index": f"{root}/ann_index",
+            "qindex": f"{root}/ann_index_quant",
+            "ivf": f"{root}/ivf_index",
+        }
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    with run_paths(sf_dir) as paths:
+        _run(sf_dir, paths)
+
+
+def _run(sf_dir: str, paths: dict) -> None:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "8")
 
     from pyspark.sql import functions as F
@@ -50,7 +79,6 @@ def main() -> None:
         query_ann_index,
         query_ivf_index,
     )
-    from curies_spark.streaming.fsio import fs_delete
 
     def scanned_bytes(mark: int) -> int:
         return int(sum(e["metrics"].get("size of files read", 0) for e in sql.since(mark)))
@@ -78,15 +106,13 @@ def main() -> None:
             ).alias("embedding"),
         )
     )
-    corpus_path = "/tmp/curies_spark_ann_corpus"
-    if not os.path.exists(os.path.join(corpus_path, "_SUCCESS")):
-        expanded.write.mode("overwrite").parquet(corpus_path)
-    corpus = spark.read.parquet(corpus_path)
+    expanded.write.parquet(paths["corpus"])
+    corpus = spark.read.parquet(paths["corpus"])
     n = corpus.count()
 
-    shutil.rmtree(INDEX, ignore_errors=True)
+    index = paths["index"]
     t0 = time.perf_counter()
-    build_ann_index(corpus, INDEX, dim=dim, n_planes=N_PLANES)
+    build_ann_index(corpus, index, dim=dim, n_planes=N_PLANES)
     build_wall = time.perf_counter() - t0
 
     queries = [r["embedding"] for r in base.limit(QUERIES).collect()]
@@ -114,7 +140,7 @@ def main() -> None:
             ann = {
                 r["vec_id"]
                 for r in query_ann_index(
-                    spark, INDEX, q, k=K, n_planes=N_PLANES, multiprobe_bits=mp
+                    spark, index, q, k=K, n_planes=N_PLANES, multiprobe_bits=mp
                 ).collect()
             }
             probe_wall += time.perf_counter() - t0
@@ -134,16 +160,14 @@ def main() -> None:
     # at deployment it is a page-index point lookup bounded by the
     # shortlist size, but this sandbox metric charges whole probed
     # files, so the codes-only row is the clean read-fraction signal)
-    qindex = INDEX + "_quant"
-    shutil.rmtree(qindex, ignore_errors=True)
-    fs_delete(spark, qindex + "_params")
+    qindex = paths["qindex"]
     t0 = time.perf_counter()
     build_ann_index(corpus, qindex, dim=dim, n_planes=N_PLANES, quantize=True)
     qbuild_wall = time.perf_counter() - t0
 
     quant = {
         "quant_build_wall_sec": round(qbuild_wall, 2),
-        "float_index_bytes": harness.dir_stats(INDEX)[1],
+        "float_index_bytes": harness.dir_stats(index)[1],
         "quant_codes_bytes": harness.dir_stats(os.path.join(qindex, "codes"))[1],
         "quant_vectors_bytes": harness.dir_stats(os.path.join(qindex, "vectors"))[1],
     }
@@ -175,9 +199,7 @@ def main() -> None:
             }
 
     # IVF: corpus-adaptive cells vs the data-independent LSH buckets
-    ivf_path = "/tmp/curies_spark_ivf_index"
-    shutil.rmtree(ivf_path, ignore_errors=True)
-    shutil.rmtree(ivf_path + "_centroids", ignore_errors=True)
+    ivf_path = paths["ivf"]
     t0 = time.perf_counter()
     build_ivf_index(corpus, ivf_path, dim=dim, k=IVF_CELLS, iters=3)
     ivf_build_wall = time.perf_counter() - t0
