@@ -9,6 +9,9 @@ derivations and oracle-SQL generators live in
 
 from __future__ import annotations
 
+import os
+import shutil
+import tempfile
 import weakref
 from collections.abc import Callable
 
@@ -41,6 +44,26 @@ _LARGE_CONVERTER = demo.large_converter()
 _SPARK_CONVERTERS: "weakref.WeakKeyDictionary[SparkSession, dict[str, SparkConverter]]" = (
     weakref.WeakKeyDictionary()
 )
+
+
+#: per session, per sf dir: the temp dir that holds ``q_ann_index_topk``'s
+#: index and the finalizer that removes it once the session is collected,
+#: or at exit. The returned frame reads the index lazily, so the dir must
+#: outlive the query; weak keys, as above, do not pin the session.
+_ANN_INDEX_DIRS: (
+    "weakref.WeakKeyDictionary[SparkSession, dict[str, tuple[str, weakref.finalize]]]"
+) = weakref.WeakKeyDictionary()
+
+
+def _ann_index_dir(spark: SparkSession, sf_dir: str) -> str:
+    per_session = _ANN_INDEX_DIRS.setdefault(spark, {})
+    if sf_dir not in per_session:
+        path = tempfile.mkdtemp(prefix="curies_spark_ann_qindex_")
+        per_session[sf_dir] = (
+            path,
+            weakref.finalize(spark, shutil.rmtree, path, ignore_errors=True),
+        )
+    return per_session[sf_dir][0]
 
 
 def _sc(spark: SparkSession, which: str = "demo") -> SparkConverter:
@@ -457,17 +480,12 @@ def q_ann_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     makes the answer identical to the float index's (asserted in
     tests/test_training_ops.py), so the float-path DuckDB oracle gates
     this query unchanged."""
-    import hashlib as _hl
-
     from pyspark.sql import Window
 
     from curies_spark.operators.similarity import build_ann_index, query_ann_index
 
     emb = _t(spark, sf_dir, "embeddings")
-    index_path = (
-        "/tmp/curies_spark_ann_qindex_"
-        + _hl.sha256(sf_dir.encode()).hexdigest()[:12]
-    )
+    index_path = os.path.join(_ann_index_dir(spark, sf_dir), "index")
     build_ann_index(emb, index_path, dim=64, n_planes=6, seed=7, quantize=True)
     qvec = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
     top = query_ann_index(

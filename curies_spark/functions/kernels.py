@@ -30,6 +30,24 @@ Physical design (see SURVEY.md §3.2-3.3):
   CPU-second on 64k-row batches that are ~45% distinct (the
   ``canon_large_epm`` mix) and 2.5–3.4M on all-distinct batches.
 
+Each choice is made in one place:
+
+- **Native or Arrow**: one predicate per map family, read by every
+  Column kernel and by :func:`~curies_spark.functions.sqlfuncs.register_sql_functions`.
+  :func:`_native_uri_prefix_map` (every URI prefix and synonym, against
+  :data:`NATIVE_COMPRESS_THRESHOLD`) decides ``compress``, ``parse_uri``,
+  ``standardize_uri`` and ``compress_or_standardize``;
+  :func:`_native_prefix_map` (every prefix and synonym, against
+  :data:`NATIVE_EXPAND_THRESHOLD`) decides ``expand``, ``expand_all``,
+  ``parse_curie`` and ``standardize_prefix``.
+- **The Arrow UDF**: :func:`_arrow_udf` is the one factory. Its one
+  body installs the worker hook and runs an op's module-level body
+  ``(arr, converter)``, so the Column API and the SQL surface run the
+  same UDF for an op.
+- **The lookup tables**: :data:`_TABLE_BUILDERS` names every table set
+  the bodies read; :func:`_tables` builds each once per Python worker,
+  on its first batch, and caches it in one dict on the converter.
+
 Strictness mapping (reference api.py:1732-1778 etc.):
 - default    → miss = NULL
 - passthrough → ``F.coalesce(converted, original)``
@@ -50,7 +68,7 @@ from pyspark.sql.types import StringType, StructField, StructType
 
 from .. import _worker
 from ..core.converter import Converter
-from ..core.w3c import LOCAL_UNIQUE_IDENTIFIER_PATTERN, NCNAME_PATTERN
+from ..core.w3c import NCNAME_PATTERN
 
 __all__ = [
     "assert_no_nulls",
@@ -117,12 +135,43 @@ def _broadcast(converter) -> Converter:
     return converter.value  # pyspark.Broadcast
 
 
-def _converter_value_getter(converter):
-    """Defer ``.value`` into the executor when a Broadcast is given, so the
-    converter ships once per executor instead of once per serialized UDF."""
-    if isinstance(converter, Converter):
-        return lambda: converter
-    return lambda: converter.value
+def _native_uri_prefix_map(conv: Converter) -> bool:
+    """Whether the URI-prefix family (``compress``, ``parse_uri``,
+    ``standardize_uri``, ``compress_or_standardize``) runs as the
+    codegen'd when-chain: at most :data:`NATIVE_COMPRESS_THRESHOLD` URI
+    prefixes, synonyms included. Past it, :func:`_arrow_udf`."""
+    return len(conv.reverse_prefix_map) <= NATIVE_COMPRESS_THRESHOLD
+
+
+def _native_prefix_map(conv: Converter) -> bool:
+    """Whether the prefix family (``expand``, ``expand_all``,
+    ``parse_curie``, ``standardize_prefix``) runs through map literals:
+    at most :data:`NATIVE_EXPAND_THRESHOLD` prefixes, synonyms included
+    (``prefix_map`` and ``synonym_to_prefix`` share that key set). Past
+    it, :func:`_arrow_udf`."""
+    return len(conv.prefix_map) <= NATIVE_EXPAND_THRESHOLD
+
+
+def _arrow_udf(body, converter, return_type=StringType()):
+    """The one arrow_udf of every large-map op: install the worker hook,
+    then ``body(arr, converter)``. ``body`` is a module-level function,
+    so cloudpickle ships it by reference; ``converter`` (a Converter or a
+    Broadcast of one) rides in the closure and a Broadcast's ``.value``
+    is read in the executor, so the converter ships once per executor
+    instead of once per serialized UDF."""
+
+    @F.arrow_udf(return_type)
+    def _kernel(arr):
+        _worker.install()
+        return body(arr, _broadcast(converter))
+
+    return _kernel
+
+
+def _map_literal(mapping: "dict[str, str]") -> Column:
+    """MapType literal of a ``str → str`` mapping (``create_map()`` when
+    it is empty)."""
+    return F.create_map(*[F.lit(x) for pair in mapping.items() for x in pair])
 
 
 # ---------------------------------------------------------------------------
@@ -155,24 +204,6 @@ def format_curie_col(prefix: "Column | str", identifier: "Column | str") -> Colu
 # ---------------------------------------------------------------------------
 
 
-def _prefix_to_uri_map_expr(conv: Converter) -> Column:
-    """MapType literal: every prefix + synonym → canonical URI prefix
-    (reference ``prefix_map`` property, api.py:923-928)."""
-    pairs: list[Column] = []
-    for prefix, uri_prefix in conv.prefix_map.items():
-        pairs.append(F.lit(prefix))
-        pairs.append(F.lit(uri_prefix))
-    return F.create_map(*pairs) if pairs else F.create_map()
-
-
-def _synonym_to_prefix_map_expr(conv: Converter) -> Column:
-    pairs: list[Column] = []
-    for synonym, prefix in conv.synonym_to_prefix.items():
-        pairs.append(F.lit(synonym))
-        pairs.append(F.lit(prefix))
-    return F.create_map(*pairs) if pairs else F.create_map()
-
-
 def expand_col(
     curie: "Column | str",
     converter,
@@ -188,21 +219,14 @@ def expand_col(
     """
     c = _col(curie)
     conv = _broadcast(converter)
-    if len(conv.prefix_map) <= NATIVE_EXPAND_THRESHOLD:
+    if _native_prefix_map(conv):
         prefix = F.substring_index(c, ":", 1)
         pos = F.locate(":", c)
         identifier = F.substr(c, pos + F.lit(1))
-        uri_prefix = F.element_at(_prefix_to_uri_map_expr(conv), prefix)
+        uri_prefix = F.element_at(_map_literal(conv.prefix_map), prefix)
         expanded = F.when(pos > 0, F.concat(uri_prefix, identifier))
     else:
-        get = _converter_value_getter(converter)
-
-        @F.arrow_udf(StringType())
-        def _expand(arr):
-            _worker.install()
-            return _joined_match(arr, _expand_arrow_buckets(get()), "")
-
-        expanded = _expand(c)
+        expanded = _arrow_udf(_expand, converter)(c)
     return F.coalesce(expanded, c) if passthrough else expanded
 
 
@@ -221,22 +245,10 @@ def expand_all_col(curie: "Column | str", converter) -> Column:
     """
     c = _col(curie)
     conv = _broadcast(converter)
-    if len(conv.prefix_map) > NATIVE_EXPAND_THRESHOLD:
+    if not _native_prefix_map(conv):
         from pyspark.sql.types import ArrayType
 
-        get = _converter_value_getter(converter)
-
-        @F.arrow_udf(ArrayType(StringType()))
-        def _expand_all(arr):
-            _worker.install()
-            tables, flat_uris, rec_offsets, rec_counts = _expand_all_arrow_tables(get())
-
-            def finish(records, identifiers):
-                return _fan_out(records, identifiers, flat_uris, rec_offsets, rec_counts)
-
-            return _per_distinct(arr, lambda a: _prefix_match(a, tables, finish))
-
-        return _expand_all(c)
+        return _arrow_udf(_expand_all, converter, ArrayType(StringType()))(c)
     pairs: list[Column] = []
     for record in conv.records:
         uri_prefixes = F.array(
@@ -245,7 +257,7 @@ def expand_all_col(curie: "Column | str", converter) -> Column:
         for prefix in record._all_prefixes:
             pairs.append(F.lit(prefix))
             pairs.append(uri_prefixes)
-    map_expr = F.create_map(*pairs) if pairs else F.create_map()
+    map_expr = F.create_map(*pairs)
     prefix = F.substring_index(c, ":", 1)
     pos = F.locate(":", c)
     identifier = F.substr(c, pos + F.lit(1))
@@ -266,6 +278,12 @@ def _native_pair_from_map(
     """(prefix, identifier) via an ordered when-chain over the given
     ``uri_prefix → prefix`` mapping, longest first — preserves the
     trie's longest-match guarantee within the mapping."""
+    # NOTE a "hybrid" (JVM when-chain over the hot prefixes + Arrow
+    # fallback for the tail) was measured and REJECTED: a 64-entry
+    # codegen'd startsWith chain runs at ~260k rows/s on this host —
+    # 3× slower than shipping every row through the Arrow kernel
+    # (~800k rows/s at 3 partitions). Long when-chains are the slow
+    # path; that is exactly why NATIVE_COMPRESS_THRESHOLD exists.
     entries = sorted(mapping.items(), key=lambda kv: len(kv[0]), reverse=True)
     prefix_expr: Column = F.lit(None).cast(StringType())
     ident_expr: Column = F.lit(None).cast(StringType())
@@ -277,16 +295,6 @@ def _native_pair_from_map(
             ident_expr
         )
     return prefix_expr, ident_expr
-
-
-def _native_compress_pair(conv: Converter, uri: Column) -> "tuple[Column, Column]":
-    # NOTE a "hybrid" (JVM when-chain over the hot prefixes + Arrow
-    # fallback for the tail) was measured and REJECTED: a 64-entry
-    # codegen'd startsWith chain runs at ~260k rows/s on this host —
-    # 3× slower than shipping every row through the Arrow kernel
-    # (~800k rows/s at 3 partitions). Long when-chains are the slow
-    # path; that is exactly why NATIVE_COMPRESS_THRESHOLD exists.
-    return _native_pair_from_map(conv.reverse_prefix_map, uri)
 
 
 def _build_arrow_buckets(mapping: "dict[str, object]", value_type=None):
@@ -318,42 +326,6 @@ def _build_arrow_buckets(mapping: "dict[str, object]", value_type=None):
     )
 
 
-def _cached_tables(conv: Converter, attr: str, build):
-    """Lookup tables cached on the converter under ``attr`` — built once
-    per executor, on the first batch that needs them (the broadcast
-    value is one object per Python worker)."""
-    cached = getattr(conv, attr, None)
-    if cached is None:
-        cached = build(conv)
-        setattr(conv, attr, cached)
-    return cached
-
-
-def _arrow_buckets(conv: Converter):
-    """Compression tables (uri_prefix → canonical prefix)."""
-    return _cached_tables(
-        conv, "_arrow_buckets", lambda cv: _build_arrow_buckets(cv.reverse_prefix_map)
-    )
-
-
-def _standardize_uri_arrow_buckets(conv: Converter):
-    """URI-standardization tables: every URI prefix, synonyms included →
-    its record's canonical URI prefix. Same keys as the compression
-    tables, so the longest match is the same; only the value differs,
-    and the kernel's output is the finished string."""
-    return _cached_tables(
-        conv,
-        "_standardize_uri_arrow_buckets",
-        lambda cv: _build_arrow_buckets(
-            {
-                uri_prefix: record.uri_prefix
-                for record in cv.records
-                for uri_prefix in record._all_uri_prefixes
-            }
-        ),
-    )
-
-
 def _curie_keyed(mapping: "dict[str, object]") -> "dict[str, object]":
     """``prefix:``-keyed copy of a prefix-keyed mapping. A prefix that
     itself contains the delimiter can never be the head of a CURIE split
@@ -364,36 +336,12 @@ def _curie_keyed(mapping: "dict[str, object]") -> "dict[str, object]":
     return {f"{k}:": v for k, v in mapping.items() if ":" not in k}
 
 
-def _expand_arrow_buckets(conv: Converter):
-    """Expansion tables (``prefix:`` → canonical uri_prefix, synonyms
-    included)."""
-    return _cached_tables(
-        conv,
-        "_expand_arrow_buckets",
-        lambda cv: _build_arrow_buckets(_curie_keyed(cv.prefix_map)),
-    )
-
-
-def _parse_curie_arrow_buckets(conv: Converter):
-    """CURIE-standardization tables (``prefix:`` → canonical prefix,
-    synonyms included)."""
-    return _cached_tables(
-        conv,
-        "_parse_curie_arrow_buckets",
-        lambda cv: _build_arrow_buckets(_curie_keyed(cv.synonym_to_prefix)),
-    )
-
-
-def _expand_all_arrow_tables(conv: Converter):
+def _build_expand_all_tables(conv: Converter):
     """expand_all lookup tables: length-bucketed ``prefix: → record
     index`` probes plus the record-major flattened URI-prefix array
     (canonical first, then synonyms in record order — reference
     api.py:2182-2219) with per-record offsets/counts for the vectorized
     list fan-out (:func:`_fan_out`)."""
-    return _cached_tables(conv, "_expand_all_arrow_tables_cache", _build_expand_all_tables)
-
-
-def _build_expand_all_tables(conv: Converter):
     import numpy as np
     import pyarrow as pa
 
@@ -414,6 +362,52 @@ def _build_expand_all_tables(conv: Converter):
         np.asarray(rec_offsets, dtype=np.int64),
         np.asarray(rec_counts, dtype=np.int64),
     )
+
+
+def _build_exact_match_table(mapping: "dict[str, str]"):
+    """``(keys, values)`` for a whole-string exact lookup: one
+    ``index_in`` + ``take`` per batch."""
+    import pyarrow as pa
+
+    return pa.array(list(mapping)), pa.array(list(mapping.values()))
+
+
+#: Every lookup table set the large-map op bodies read, by name: a
+#: builder from the converter. :func:`_tables` runs each at most once per
+#: converter object.
+_TABLE_BUILDERS = {
+    # uri_prefix (synonyms included) → canonical prefix
+    "compress": lambda conv: _build_arrow_buckets(conv.reverse_prefix_map),
+    # uri_prefix (synonyms included) → its record's canonical uri_prefix:
+    # the compression keys, so the longest match is the same; only the
+    # value differs, and the kernel's output is the finished string
+    "standardize_uri": lambda conv: _build_arrow_buckets(
+        {
+            uri_prefix: record.uri_prefix
+            for record in conv.records
+            for uri_prefix in record._all_uri_prefixes
+        }
+    ),
+    # ``prefix:`` (synonyms included) → canonical uri_prefix
+    "expand": lambda conv: _build_arrow_buckets(_curie_keyed(conv.prefix_map)),
+    # ``prefix:`` (synonyms included) → canonical prefix
+    "parse_curie": lambda conv: _build_arrow_buckets(
+        _curie_keyed(conv.synonym_to_prefix)
+    ),
+    "expand_all": _build_expand_all_tables,
+    # whole prefix (synonyms included) → canonical prefix
+    "standardize_prefix": lambda conv: _build_exact_match_table(conv.synonym_to_prefix),
+}
+
+
+def _tables(conv: Converter, name: str):
+    """The ``name`` tables of :data:`_TABLE_BUILDERS`, cached in one dict
+    on the converter: built once per executor, on the first batch that
+    needs them (the broadcast value is one object per Python worker)."""
+    cache = vars(conv).setdefault("_arrow_tables", {})
+    if name not in cache:
+        cache[name] = _TABLE_BUILDERS[name](conv)
+    return cache[name]
 
 
 def _fan_out(records, identifiers, flat_uris, rec_offsets, rec_counts):
@@ -560,103 +554,10 @@ def _joined_match(arr, tables, sep: str):
     return _per_distinct(arr, lambda a: _prefix_match(a, tables, _joiner(sep)))
 
 
-def parse_uri_col(uri: "Column | str", converter) -> Column:
-    """URI → struct(prefix, identifier) by longest-prefix match
-    (reference ``parse_uri`` api.py:1793-1821 over the trie at api.py:3331-3347).
-
-    Small converters compile to a codegen'd ``startswith`` chain; large
-    ones use an Arrow-batched pandas UDF doing length-bucketed
-    vectorized probes against the broadcast converter.
-    """
-    c = _col(uri)
-    conv = _broadcast(converter)
-    if len(conv.reverse_prefix_map) <= NATIVE_COMPRESS_THRESHOLD:
-        prefix_expr, ident_expr = _native_compress_pair(conv, c)
-        return F.when(
-            prefix_expr.isNotNull(),
-            F.struct(prefix_expr.alias("prefix"), ident_expr.alias("identifier")),
-        )
-    get = _converter_value_getter(converter)
-
-    @F.arrow_udf(PARSE_SCHEMA)
-    def _parse(arr):
-        _worker.install()
-        tables = _arrow_buckets(get())
-        return _per_distinct(arr, lambda a: _prefix_match(a, tables, _parsed_struct))
-
-    return _parse(c)
-
-
-def compress_col(
-    uri: "Column | str",
-    converter,
-    *,
-    passthrough: bool = False,
-) -> Column:
-    """URI → CURIE with longest-prefix matching (reference ``compress``,
-    api.py:1732-1778). Miss → NULL, or input when ``passthrough``."""
-    c = _col(uri)
-    conv = _broadcast(converter)
-    if len(conv.reverse_prefix_map) <= NATIVE_COMPRESS_THRESHOLD:
-        prefix_expr, ident_expr = _native_compress_pair(conv, c)
-        compressed = F.when(
-            prefix_expr.isNotNull(), F.concat(prefix_expr, F.lit(":"), ident_expr)
-        )
-    else:
-        compressed = compress_udf(converter)(c)
-    return F.coalesce(compressed, c) if passthrough else compressed
-
-
-def compress_udf(converter):
-    """The large-map compression kernel as a standalone arrow_udf —
-    shared by :func:`compress_col` and SQL-function registration
-    (:mod:`curies_spark.functions.sqlfuncs`)."""
-    get = _converter_value_getter(converter)
-
-    @F.arrow_udf(StringType())
-    def _compress(arr):
-        _worker.install()
-        return _joined_match(arr, _arrow_buckets(get()), ":")
-
-    return _compress
-
-
-def standardize_uri_udf(converter):
-    """The large-map URI-standardization kernel as a standalone
-    arrow_udf: one longest-match probe from every URI prefix (synonyms
-    included) straight to its canonical URI prefix, joined with the
-    identifier in the batch, so the finished URI is what crosses back
-    to the JVM. Shared by :func:`standardize_uri_col` and SQL-function
-    registration."""
-    get = _converter_value_getter(converter)
-
-    @F.arrow_udf(StringType())
-    def _standardize_uri(arr):
-        _worker.install()
-        return _joined_match(arr, _standardize_uri_arrow_buckets(get()), "")
-
-    return _standardize_uri
-
-
-def compress_or_standardize_udf(converter):
-    """The large-map ``compress_or_standardize`` kernel as a standalone
-    arrow_udf: the compression probe, then CURIE standardization over
-    the ``prefix:`` synonym tables on the compression misses only,
-    coalesced in the batch (compression wins, reference api.py:1700-1708).
-    Shared by :func:`compress_or_standardize_col` and SQL-function
-    registration."""
-    get = _converter_value_getter(converter)
-
-    @F.arrow_udf(StringType())
-    def _compress_or_standardize(arr):
-        _worker.install()
-        conv = get()
-        compress, curie = _arrow_buckets(conv), _parse_curie_arrow_buckets(conv)
-        return _per_distinct(
-            arr, lambda a: _compress_else_standardize(a, compress, curie)
-        )
-
-    return _compress_or_standardize
+def _parsed_match(arr, tables):
+    """One bucketed probe per distinct value, rendered as a
+    :data:`PARSE_SCHEMA` struct; a miss is a NULL struct."""
+    return _per_distinct(arr, lambda a: _prefix_match(a, tables, _parsed_struct))
 
 
 def _compress_else_standardize(arr, compress_tables, curie_tables):
@@ -673,34 +574,112 @@ def _compress_else_standardize(arr, compress_tables, curie_tables):
 
 
 # ---------------------------------------------------------------------------
-# standardization (native)
+# the large-map op bodies: ``(arr, converter)`` → arr, run by :func:`_arrow_udf`
 # ---------------------------------------------------------------------------
 
 
-def _exact_match_udf(converter, mapping_attr: str, mapping_builder):
-    """arrow_udf doing a whole-string exact lookup against a broadcast
-    dict — one ``index_in`` + ``take`` per Arrow batch. The large-map
-    twin of a MapType-literal ``element_at``."""
-    get = _converter_value_getter(converter)
+def _compress(arr, conv):
+    """URI → CURIE."""
+    return _joined_match(arr, _tables(conv, "compress"), ":")
 
-    def _build(conv):
-        import pyarrow as pa
 
-        mapping = mapping_builder(conv)
-        return pa.array(list(mapping)), pa.array(list(mapping.values()))
+def _parse_uri(arr, conv):
+    """URI → struct(prefix, identifier)."""
+    return _parsed_match(arr, _tables(conv, "compress"))
 
-    @F.arrow_udf(StringType())
-    def _lookup(arr):
-        _worker.install()
-        import pyarrow as pa
-        import pyarrow.compute as pc
 
-        keys, values = _cached_tables(get(), mapping_attr, _build)
-        if isinstance(arr, pa.ChunkedArray):
-            arr = arr.combine_chunks()
-        return pc.take(values, pc.index_in(arr, value_set=keys))
+def _standardize_uri(arr, conv):
+    """URI → URI under its record's canonical URI prefix: one
+    longest-match probe straight to the canonical URI prefix, joined
+    with the identifier in the batch, so the finished URI is what
+    crosses back to the JVM."""
+    return _joined_match(arr, _tables(conv, "standardize_uri"), "")
 
-    return _lookup
+
+def _compress_or_standardize(arr, conv):
+    """The compression probe, then CURIE standardization over the
+    ``prefix:`` synonym tables on the compression misses only, coalesced
+    in the batch (compression wins, reference api.py:1700-1708)."""
+    compress, curie = _tables(conv, "compress"), _tables(conv, "parse_curie")
+    return _per_distinct(arr, lambda a: _compress_else_standardize(a, compress, curie))
+
+
+def _expand(arr, conv):
+    """CURIE → URI."""
+    return _joined_match(arr, _tables(conv, "expand"), "")
+
+
+def _expand_all(arr, conv):
+    """CURIE → list of every URI of its record: the probe resolves to a
+    RECORD INDEX, then :func:`_fan_out` builds the lists."""
+    tables, flat_uris, rec_offsets, rec_counts = _tables(conv, "expand_all")
+
+    def finish(records, identifiers):
+        return _fan_out(records, identifiers, flat_uris, rec_offsets, rec_counts)
+
+    return _per_distinct(arr, lambda a: _prefix_match(a, tables, finish))
+
+
+def _parse_curie(arr, conv):
+    """CURIE → struct(canonical prefix, identifier) (keys ``prefix:`` —
+    at most one can match, see :func:`_curie_keyed`)."""
+    return _parsed_match(arr, _tables(conv, "parse_curie"))
+
+
+def _standardize_prefix(arr, conv):
+    """Prefix or synonym → canonical prefix: a whole-string exact lookup,
+    the large-map twin of a MapType-literal ``element_at``."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    keys, values = _tables(conv, "standardize_prefix")
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.combine_chunks()
+    return pc.take(values, pc.index_in(arr, value_set=keys))
+
+
+# ---------------------------------------------------------------------------
+# compression and standardization
+# ---------------------------------------------------------------------------
+
+
+def parse_uri_col(uri: "Column | str", converter) -> Column:
+    """URI → struct(prefix, identifier) by longest-prefix match
+    (reference ``parse_uri`` api.py:1793-1821 over the trie at api.py:3331-3347).
+
+    Small converters compile to a codegen'd ``startswith`` chain; large
+    ones use an Arrow-batched UDF doing length-bucketed vectorized
+    probes against the broadcast converter.
+    """
+    c = _col(uri)
+    conv = _broadcast(converter)
+    if not _native_uri_prefix_map(conv):
+        return _arrow_udf(_parse_uri, converter, PARSE_SCHEMA)(c)
+    prefix_expr, ident_expr = _native_pair_from_map(conv.reverse_prefix_map, c)
+    return F.when(
+        prefix_expr.isNotNull(),
+        F.struct(prefix_expr.alias("prefix"), ident_expr.alias("identifier")),
+    )
+
+
+def compress_col(
+    uri: "Column | str",
+    converter,
+    *,
+    passthrough: bool = False,
+) -> Column:
+    """URI → CURIE with longest-prefix matching (reference ``compress``,
+    api.py:1732-1778). Miss → NULL, or input when ``passthrough``."""
+    c = _col(uri)
+    conv = _broadcast(converter)
+    if _native_uri_prefix_map(conv):
+        prefix_expr, ident_expr = _native_pair_from_map(conv.reverse_prefix_map, c)
+        compressed = F.when(
+            prefix_expr.isNotNull(), F.concat(prefix_expr, F.lit(":"), ident_expr)
+        )
+    else:
+        compressed = _arrow_udf(_compress, converter)(c)
+    return F.coalesce(compressed, c) if passthrough else compressed
 
 
 def standardize_prefix_col(
@@ -713,12 +692,10 @@ def standardize_prefix_col(
     ~10k entries bloat every serialized task)."""
     c = _col(prefix)
     conv = _broadcast(converter)
-    if len(conv.synonym_to_prefix) <= NATIVE_EXPAND_THRESHOLD:
-        standardized = F.element_at(_synonym_to_prefix_map_expr(conv), c)
+    if _native_prefix_map(conv):
+        standardized = F.element_at(_map_literal(conv.synonym_to_prefix), c)
     else:
-        standardized = _exact_match_udf(
-            converter, "_std_prefix_table", lambda cv: cv.synonym_to_prefix
-        )(c)
+        standardized = _arrow_udf(_standardize_prefix, converter)(c)
     return F.coalesce(standardized, c) if passthrough else standardized
 
 
@@ -726,28 +703,19 @@ def parse_curie_col(curie: "Column | str", converter) -> Column:
     """CURIE → struct(prefix, identifier) with prefix standardization
     (reference ``parse_curie`` api.py:2039-2052). NULL when there is no
     delimiter or the prefix is unknown. Large maps go through the same
-    bucketed arrow_udf machinery as expansion (keys ``prefix:`` — at
-    most one can match, see :func:`_expand_arrow_buckets`)."""
+    bucketed arrow_udf machinery as expansion."""
     c = _col(curie)
     conv = _broadcast(converter)
+    if not _native_prefix_map(conv):
+        return _arrow_udf(_parse_curie, converter, PARSE_SCHEMA)(c)
     pos = F.locate(":", c)
     identifier = F.substr(c, pos + F.lit(1))
-    if len(conv.synonym_to_prefix) <= NATIVE_EXPAND_THRESHOLD:
-        raw_prefix = F.substring_index(c, ":", 1)
-        norm_prefix = F.element_at(_synonym_to_prefix_map_expr(conv), raw_prefix)
-        return F.when(
-            (pos > 0) & norm_prefix.isNotNull(),
-            F.struct(norm_prefix.alias("prefix"), identifier.alias("identifier")),
-        )
-    get = _converter_value_getter(converter)
-
-    @F.arrow_udf(PARSE_SCHEMA)
-    def _parse_curie(arr):
-        _worker.install()
-        tables = _parse_curie_arrow_buckets(get())
-        return _per_distinct(arr, lambda a: _prefix_match(a, tables, _parsed_struct))
-
-    return _parse_curie(c)
+    raw_prefix = F.substring_index(c, ":", 1)
+    norm_prefix = F.element_at(_map_literal(conv.synonym_to_prefix), raw_prefix)
+    return F.when(
+        (pos > 0) & norm_prefix.isNotNull(),
+        F.struct(norm_prefix.alias("prefix"), identifier.alias("identifier")),
+    )
 
 
 def standardize_curie_col(
@@ -772,20 +740,18 @@ def standardize_uri_col(
     through the canonical URI prefix (reference api.py:2363-2413).
 
     Small converters parse with the codegen'd chain and re-expand through
-    a MapType literal; large ones run :func:`standardize_uri_udf`, one
+    a MapType literal; large ones run :func:`_standardize_uri`, one
     Arrow pass that returns the finished URI."""
     c = _col(uri)
     conv = _broadcast(converter)
-    if len(conv.reverse_prefix_map) > NATIVE_COMPRESS_THRESHOLD:
-        standardized = standardize_uri_udf(converter)(c)
-    else:
+    if _native_uri_prefix_map(conv):
         parsed = parse_uri_col(c, converter)
-        canonical = F.element_at(
-            _prefix_to_uri_map_expr(conv), parsed.getField("prefix")
-        )
+        canonical = F.element_at(_map_literal(conv.prefix_map), parsed.getField("prefix"))
         standardized = F.when(
             parsed.isNotNull(), F.concat(canonical, parsed.getField("identifier"))
         )
+    else:
+        standardized = _arrow_udf(_standardize_uri, converter)(c)
     return F.coalesce(standardized, c) if passthrough else standardized
 
 
@@ -810,14 +776,14 @@ def compress_or_standardize_col(
     """URI → CURIE, else CURIE standardization (reference api.py:1637-1686).
     Compression is tried first, mirroring ``parse``'s is_uri-then-is_curie
     order (api.py:1700-1708). Large converters run both in one Arrow pass
-    (:func:`compress_or_standardize_udf`)."""
+    (:func:`_compress_or_standardize`)."""
     c = _col(s)
-    if len(_broadcast(converter).reverse_prefix_map) > NATIVE_COMPRESS_THRESHOLD:
-        result = compress_or_standardize_udf(converter)(c)
-    else:
+    if _native_uri_prefix_map(_broadcast(converter)):
         result = F.coalesce(
             compress_col(c, converter), standardize_curie_col(c, converter)
         )
+    else:
+        result = _arrow_udf(_compress_or_standardize, converter)(c)
     return F.coalesce(result, c) if passthrough else result
 
 
@@ -835,22 +801,13 @@ def expand_or_standardize_col(
 # ---------------------------------------------------------------------------
 
 
-def _map_literal(mapping: "dict[str, str]") -> "Column | None":
-    if not mapping:
-        return None
-    pairs: list[Column] = []
-    for k, v in mapping.items():
-        pairs.append(F.lit(k))
-        pairs.append(F.lit(v))
-    return F.create_map(*pairs)
-
-
 def _remap_full_expr(rules, c: Column, context: "str | None") -> Column:
     """Exact-string → CURIE rewrite; per-context rules win
     (reference preprocessing.py:91-99)."""
-    ctx_map = _map_literal(rules.rewrites.resource_full.get(context, {}) if context else {})
-    global_map = _map_literal(rules.rewrites.full)
-    exprs = [F.element_at(m, c) for m in (ctx_map, global_map) if m is not None]
+    ctx_map = rules.rewrites.resource_full.get(context, {}) if context else {}
+    exprs = [
+        F.element_at(_map_literal(m), c) for m in (ctx_map, rules.rewrites.full) if m
+    ]
     if not exprs:
         return F.lit(None).cast(StringType())
     return F.coalesce(*exprs) if len(exprs) > 1 else exprs[0]
@@ -936,24 +893,11 @@ def _postprocess_identifier_expr(rules, prefix: Column, identifier: Column) -> C
     return expr
 
 
-def parse_preprocessed_col(
-    value: "Column | str",
-    converter,
-    rules,
-    *,
-    context: "str | None" = None,
-    preclean=None,
-) -> Column:
-    """Columnar twin of ``PreprocessingConverter.parse``
-    (reference preprocessing.py:213-227): preclean → remap_full →
-    remap_prefix → blocklist → URI-else-CURIE parse → per-prefix suffix
-    strip. Fully JVM-native for native-sized converters; ``blocked`` and
-    unparsable inputs yield NULL (``block_action="pass"`` semantics —
-    audit with :func:`assert_no_nulls` for fail-fast).
-    """
-    pre = preprocess_value_col(value, rules, context=context, preclean=preclean)
-    s = pre.getField("value")
-    parsed = F.coalesce(parse_uri_col(s, converter), parse_curie_col(s, converter))
+def _preprocessed_result(rules, pre: Column, parsed: Column) -> Column:
+    """The preprocessed parse's result from the preamble struct ``pre``
+    (:func:`preprocess_value_col`) and ``parsed``, the URI-else-CURIE
+    parse of its value: the exact rewrite if one hit, else NULL when
+    blocked, else the parse with its identifier suffix-stripped."""
     post_identifier = _postprocess_identifier_expr(
         rules, parsed.getField("prefix"), parsed.getField("identifier")
     )
@@ -983,6 +927,27 @@ def parse_preprocessed_col(
             )
         )
     )
+
+
+def parse_preprocessed_col(
+    value: "Column | str",
+    converter,
+    rules,
+    *,
+    context: "str | None" = None,
+    preclean=None,
+) -> Column:
+    """Columnar twin of ``PreprocessingConverter.parse``
+    (reference preprocessing.py:213-227): preclean → remap_full →
+    remap_prefix → blocklist → URI-else-CURIE parse → per-prefix suffix
+    strip. Fully JVM-native for native-sized converters; ``blocked`` and
+    unparsable inputs yield NULL (``block_action="pass"`` semantics —
+    audit with :func:`assert_no_nulls` for fail-fast).
+    """
+    pre = preprocess_value_col(value, rules, context=context, preclean=preclean)
+    s = pre.getField("value")
+    parsed = F.coalesce(parse_uri_col(s, converter), parse_curie_col(s, converter))
+    return _preprocessed_result(rules, pre, parsed)
 
 
 def parse_preprocessed_df(
@@ -1017,32 +982,7 @@ def parse_preprocessed_df(
     out = out.withColumn(
         parsed_col, F.coalesce(parse_uri_col(s, converter), parse_curie_col(s, converter))
     )
-    post_identifier = _postprocess_identifier_expr(
-        rules, F.col(f"{parsed_col}.prefix"), F.col(f"{parsed_col}.identifier")
-    )
-    full = F.col(f"{pre_col}.full_curie")
-    full_pos = F.locate(":", full)
-    final = (
-        F.when(
-            full.isNotNull(),
-            F.struct(
-                F.substring_index(full, ":", 1).alias("prefix"),
-                F.when(full_pos > 0, F.substr(full, full_pos + F.lit(1)))
-                .otherwise(F.lit(""))
-                .alias("identifier"),
-            ),
-        )
-        .when(F.col(f"{pre_col}.blocked"), F.lit(None).cast(PARSE_SCHEMA))
-        .otherwise(
-            F.when(
-                F.col(parsed_col).isNotNull(),
-                F.struct(
-                    F.col(f"{parsed_col}.prefix").alias("prefix"),
-                    post_identifier.alias("identifier"),
-                ),
-            )
-        )
-    )
+    final = _preprocessed_result(rules, F.col(pre_col), F.col(parsed_col))
     return out.withColumn(target, final).drop(pre_col, parsed_col)
 
 
@@ -1126,14 +1066,12 @@ def is_w3c_curie_col(curie: "Column | str") -> Column:
     c = _col(curie)
     pos = F.locate(":", c)
     prefix = F.substring_index(c, ":", 1)
-    luid_ok = F.lit(True)  # see docstring — reference LUID pattern matches anything
-    _ = LOCAL_UNIQUE_IDENTIFIER_PATTERN  # retained for parity documentation
     return (
         F.when(c.contains("[") | c.contains("]"), F.lit(False))
         .when(F.trim(c) == "", F.lit(False))
-        .when(pos == 0, luid_ok)  # no delimiter: LUID-only form (locate is 1-based)
-        .when(prefix == "", luid_ok)  # ":x" — empty prefix is allowed
-        .otherwise(prefix.rlike(f"^{NCNAME_PATTERN}$") & luid_ok)
+        .when(pos == 0, F.lit(True))  # no delimiter: LUID-only form (locate is 1-based)
+        .when(prefix == "", F.lit(True))  # ":x" — empty prefix is allowed
+        .otherwise(prefix.rlike(f"^{NCNAME_PATTERN}$"))
     )
 
 

@@ -6,26 +6,27 @@ The reference has no SQL surface (its closest analogue is the pandas
 ``pd_*`` helpers, reference dataframe.py); this is the Spark-native
 completion of that idea. The registered functions are the SAME
 measured kernels as the Column API (:mod:`curies_spark.functions.kernels`),
-picked by the same size thresholds:
+picked by the same two predicates (``kernels._native_uri_prefix_map``
+for the URI-prefix family, ``kernels._native_prefix_map`` for the
+prefix family):
 
 - **Native-sized maps** become ``CREATE OR REPLACE TEMPORARY FUNCTION
   … RETURNS STRING RETURN <expr>`` SQL UDFs. Catalyst inlines the body
   at analysis time, so calls run inside whole-stage codegen exactly
   like the Column kernels' when-chains / map literals — zero Python at
   execution.
-- **Large maps** (past ``NATIVE_COMPRESS_THRESHOLD`` /
-  ``NATIVE_EXPAND_THRESHOLD``, where codegen'd chains are the measured
-  slow path — see ``kernels._native_compress_pair``) register the
-  Arrow-batched bucketed kernels via ``spark.udf.register`` and build
-  the SQL UDF bodies on top of them (Spark resolves nested function
-  calls at analysis).
+- **Large maps** (where codegen'd chains are the measured slow path —
+  see ``kernels._native_pair_from_map``) register the Column kernels'
+  own Arrow UDFs (``kernels._arrow_udf`` over the op's body) via
+  ``spark.udf.register``, and the SQL UDF bodies build on top of them
+  (Spark resolves nested function calls at analysis).
 
 Composite functions are SQL compositions of the primitives, mirroring
 the kernel compositions (``standardize_uri = expand ∘ compress``,
 ``compress_or_standardize = coalesce(compress, standardize_curie)``).
 Past ``NATIVE_COMPRESS_THRESHOLD`` those two are the fused one-pass
-kernels instead (``kernels.standardize_uri_udf`` /
-``kernels.compress_or_standardize_udf``), exactly as in the Column API.
+kernels instead (``kernels._standardize_uri`` /
+``kernels._compress_or_standardize``), exactly as in the Column API.
 All functions are session-scoped temporaries: re-registering (e.g.
 after :meth:`SparkConverter.rebroadcast`) replaces them.
 """
@@ -55,7 +56,7 @@ def _map_sql(mapping: "Mapping[str, str]") -> str:
 
 def _compress_case_sql(conv: Converter, v: str) -> str:
     """Longest-prefix-first CASE chain — the SQL twin of
-    ``_native_compress_pair`` (kernels.py:279-296)."""
+    ``kernels._native_pair_from_map``."""
     entries = sorted(
         conv.reverse_prefix_map.items(), key=lambda kv: len(kv[0]), reverse=True
     )
@@ -93,53 +94,35 @@ def register_sql_functions(
         )
         names[op] = name
 
-    def register(op: str, udf: Any) -> None:
+    def register(op: str, body: Any) -> None:
         names[op] = f"{p}_{op}"
-        spark.udf.register(names[op], udf)
+        spark.udf.register(names[op], kernels._arrow_udf(body, converter))
 
     # -- compress: native CASE chain or the Arrow bucketed kernel --------
-    native_compress = (
-        len(conv.reverse_prefix_map) <= kernels.NATIVE_COMPRESS_THRESHOLD
-    )
+    native_compress = kernels._native_uri_prefix_map(conv)
     if native_compress:
         create("compress", "u STRING", _compress_case_sql(conv, "u"))
     else:
-        register("compress", kernels.compress_udf(converter))
+        register("compress", kernels._compress)
 
-    # -- prefix→canonical-URI lookup feeding expand ----------------------
-    if len(conv.prefix_map) <= kernels.NATIVE_EXPAND_THRESHOLD:
-        p2u = lambda arg: f"element_at({_map_sql(conv.prefix_map)}, {arg})"  # noqa: E731
-    else:
-        spark.udf.register(
-            f"{p}__prefix_to_uri",
-            kernels._exact_match_udf(
-                converter, "_sql_p2u_table", lambda cv: dict(cv.prefix_map)
-            ),
+    # -- expand and synonym→canonical prefix: map literals or the Arrow
+    #    kernels -------------------------------------------------------
+    if kernels._native_prefix_map(conv):
+        create(
+            "expand",
+            "c STRING",
+            "CASE WHEN locate(':', c) > 0 THEN "
+            f"concat(element_at({_map_sql(conv.prefix_map)}, substring_index(c, ':', 1)), "
+            "substr(c, locate(':', c) + 1)) END",
         )
-        p2u = lambda arg: f"{p}__prefix_to_uri({arg})"  # noqa: E731
-    prefix_arg = "substring_index(c, ':', 1)"
-    create(
-        "expand",
-        "c STRING",
-        "CASE WHEN locate(':', c) > 0 THEN "
-        f"concat({p2u(prefix_arg)}, substr(c, locate(':', c) + 1)) "
-        "END",
-    )
-
-    # -- synonym→canonical prefix lookup ---------------------------------
-    if len(conv.synonym_to_prefix) <= kernels.NATIVE_EXPAND_THRESHOLD:
         create(
             "standardize_prefix",
             "pfx STRING",
             f"element_at({_map_sql(conv.synonym_to_prefix)}, pfx)",
         )
     else:
-        register(
-            "standardize_prefix",
-            kernels._exact_match_udf(
-                converter, "_std_prefix_table", lambda cv: cv.synonym_to_prefix
-            ),
-        )
+        register("expand", kernels._expand)
+        register("standardize_prefix", kernels._standardize_prefix)
 
     # -- SQL compositions of the primitives, or the fused large-map
     #    kernels (mirror standardize_uri_col / compress_or_standardize_col)
@@ -156,11 +139,8 @@ def register_sql_functions(
         create("compress_or_standardize", "s STRING",
                f"coalesce({p}_compress(s), {p}_standardize_curie(s))")
     else:
-        register("standardize_uri", kernels.standardize_uri_udf(converter))
-        register(
-            "compress_or_standardize",
-            kernels.compress_or_standardize_udf(converter),
-        )
+        register("standardize_uri", kernels._standardize_uri)
+        register("compress_or_standardize", kernels._compress_or_standardize)
     create("expand_or_standardize", "s STRING",
            f"coalesce({p}_standardize_uri(s), {p}_expand(s))")
     create("format_curie", "pfx STRING, i STRING", "concat(pfx, ':', i)")

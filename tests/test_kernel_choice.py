@@ -1,0 +1,141 @@
+"""Native or Arrow is decided in one place per map family, and both
+surfaces follow it: at the threshold the Column kernels and the SQL
+functions stay in the JVM, one entry past it both run the one Arrow UDF
+of ``kernels._arrow_udf``."""
+
+import ast
+from pathlib import Path
+
+import pytest
+from pyspark.sql import Row
+from pyspark.sql.udf import UDFRegistration
+
+from curies_spark.core import Converter
+from curies_spark.functions import kernels, register_sql_functions
+
+FUNCTIONS = Path(kernels.__file__).parent
+
+#: three records: three prefixes and three URI prefixes
+EPM = [
+    {"prefix": p, "uri_prefix": f"http://{p.lower()}.example.org/"}
+    for p in ("A", "B", "C")
+]
+
+#: map family → (threshold name, the synonym that adds one entry to that
+#: family's map only, {SQL op: its Column kernel})
+FAMILIES = {
+    "uri_prefix": (
+        "NATIVE_COMPRESS_THRESHOLD",
+        {"uri_prefix_synonyms": ["https://a.example.org/"]},
+        {
+            "compress": kernels.compress_col,
+            "standardize_uri": kernels.standardize_uri_col,
+            "compress_or_standardize": kernels.compress_or_standardize_col,
+            "is_uri": kernels.is_uri_col,
+        },
+    ),
+    "prefix": (
+        "NATIVE_EXPAND_THRESHOLD",
+        {"prefix_synonyms": ["a"]},
+        {
+            "expand": kernels.expand_col,
+            "standardize_prefix": kernels.standardize_prefix_col,
+            "standardize_curie": kernels.standardize_curie_col,
+            "is_curie": kernels.is_curie_col,
+        },
+    ),
+}
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.mark.parametrize("past", [False, True], ids=["at_threshold", "one_past"])
+@pytest.mark.parametrize("family", sorted(FAMILIES))
+def test_column_and_sql_surfaces_switch_at_the_same_entry(spark, monkeypatch, family, past):
+    threshold, synonym, ops = FAMILIES[family]
+    monkeypatch.setattr(kernels, threshold, len(EPM))
+    epm = [dict(EPM[0], **synonym) if past else EPM[0], *EPM[1:]]
+    conv = Converter.from_extended_prefix_map(epm)
+
+    registered = []
+    register = UDFRegistration.register
+    monkeypatch.setattr(
+        UDFRegistration,
+        "register",
+        lambda self, name, f, *a: registered.append(name) or register(self, name, f, *a),
+    )
+    prefix = f"choice_{family}_{int(past)}"
+    names = register_sql_functions(spark, conv, name_prefix=prefix)
+
+    df = spark.createDataFrame([Row(v="http://a.example.org/1"), Row(v="A:1")])
+    df.createOrReplaceTempView("kernel_choice_in")
+    for op, column_kernel in ops.items():
+        column_plan = _plan(df.select(column_kernel("v", conv)))
+        sql_plan = _plan(spark.sql(f"SELECT {names[op]}(v) FROM kernel_choice_in"))
+        assert ("ArrowEvalPython" in column_plan) is past, (op, column_plan)
+        assert ("ArrowEvalPython" in sql_plan) is past, (op, sql_plan)
+        if op in ("compress", "expand", "standardize_prefix"):
+            assert (names[op] in registered) is past, (op, registered)
+    # the SQL surface registers Python UDFs only for the family past its threshold
+    assert all(name.startswith(prefix) for name in registered)
+    assert bool(registered) is past
+
+
+def _names(tree: ast.Module) -> "set[str]":
+    """Every identifier and string constant in a module's code."""
+    out = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name):
+            out.add(node.id)
+        elif isinstance(node, ast.Attribute):
+            out.add(node.attr)
+        elif isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+            out.add(node.name)
+        elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+            out.add(node.value)
+    return out
+
+
+def test_one_arrow_udf_body_and_one_decision_per_map_family():
+    kernels_tree = ast.parse((FUNCTIONS / "kernels.py").read_text())
+    sql_tree = ast.parse((FUNCTIONS / "sqlfuncs.py").read_text())
+    decorated = [
+        fn.name
+        for fn in ast.walk(kernels_tree)
+        if isinstance(fn, ast.FunctionDef)
+        and any("arrow_udf" in ast.unparse(d) for d in fn.decorator_list)
+    ]
+    assert decorated == ["_kernel"]
+
+    # each threshold is read inside its predicate and nowhere else
+    readers = {}
+    for fn in ast.walk(kernels_tree):
+        if isinstance(fn, ast.FunctionDef):
+            for node in ast.walk(fn):
+                if isinstance(node, ast.Name) and node.id.startswith("NATIVE_"):
+                    readers.setdefault(node.id, set()).add(fn.name)
+    assert readers == {
+        "NATIVE_COMPRESS_THRESHOLD": {"_native_uri_prefix_map"},
+        "NATIVE_EXPAND_THRESHOLD": {"_native_prefix_map"},
+    }
+    assert not {n for n in _names(sql_tree) if n.startswith("NATIVE_")}
+
+    for gone in (
+        "_converter_value_getter",
+        "_cached_tables",
+        "_arrow_buckets",
+        "_standardize_uri_arrow_buckets",
+        "_expand_arrow_buckets",
+        "_parse_curie_arrow_buckets",
+        "_expand_all_arrow_tables",
+        "_exact_match_udf",
+        "_sql_p2u_table",
+        "_native_compress_pair",
+        "_prefix_to_uri_map_expr",
+        "_synonym_to_prefix_map_expr",
+    ):
+        assert not hasattr(kernels, gone), gone
+        assert gone not in _names(kernels_tree) | _names(sql_tree), gone
+    assert not any("__prefix_to_uri" in n for n in _names(sql_tree))

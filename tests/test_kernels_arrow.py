@@ -120,8 +120,8 @@ def _batches(probes, hits):
 def _table_sets(conv):
     """(name, tables, finish, expected(arr)) for each of the five table
     sets; ``expected`` is the twin's output for that finish."""
-    expand_all_tables, flat_uris, rec_offsets, rec_counts = K._expand_all_arrow_tables(
-        conv
+    expand_all_tables, flat_uris, rec_offsets, rec_counts = K._tables(
+        conv, "expand_all"
     )
 
     def joined(tables, sep):
@@ -146,19 +146,19 @@ def _table_sets(conv):
             rows.append([u + ident for u in uris])
         return pa.array(rows, pa.list_(pa.string()))
 
-    compress = K._arrow_buckets(conv)
-    curie = K._parse_curie_arrow_buckets(conv)
+    compress = K._tables(conv, "compress")
+    curie = K._tables(conv, "parse_curie")
     return [
         ("compress", compress, K._joiner(":"), joined(compress, ":")),
         ("parse_uri", compress, K._parsed_struct, parsed(compress)),
         (
             "standardize_uri",
-            K._standardize_uri_arrow_buckets(conv),
+            K._tables(conv, "standardize_uri"),
             K._joiner(""),
-            joined(K._standardize_uri_arrow_buckets(conv), ""),
+            joined(K._tables(conv, "standardize_uri"), ""),
         ),
-        ("expand", K._expand_arrow_buckets(conv), K._joiner(""),
-         joined(K._expand_arrow_buckets(conv), "")),
+        ("expand", K._tables(conv, "expand"), K._joiner(""),
+         joined(K._tables(conv, "expand"), "")),
         ("parse_curie", curie, K._parsed_struct, parsed(curie)),
         (
             "expand_all",
@@ -185,7 +185,7 @@ def _same(got, want, label=""):
 @pytest.mark.parametrize("case", sorted(CASES))
 def test_prefix_match_matches_if_else_twin(case):
     conv, probes = CASES[case]()
-    matched, _ = twin(pa.array(probes), _twin_buckets(K._arrow_buckets(conv)))
+    matched, _ = twin(pa.array(probes), _twin_buckets(K._tables(conv, "compress")))
     hits = {p for p, m in zip(probes, matched.is_valid().to_pylist()) if m}
     assert hits and set(probes) - hits
     for batch_name, batch in _batches(probes, hits).items():
@@ -209,7 +209,7 @@ def test_compress_else_standardize_matches_twin(case):
     """``compress_or_standardize``'s body: the CURIE-standardization probe
     runs on the compression misses only, on either path."""
     conv, probes = CASES[case]()
-    compress, curie = K._arrow_buckets(conv), K._parse_curie_arrow_buckets(conv)
+    compress, curie = K._tables(conv, "compress"), K._tables(conv, "parse_curie")
     arr = pa.array(probes * 2 + [None])
     want = pc.binary_join_element_wise(*twin(arr, _twin_buckets(compress)), ":")
     misses = pc.and_not(pc.is_null(want), pc.is_null(arr))
@@ -234,7 +234,7 @@ def test_per_distinct_encodes_only_batches_that_repeat(monkeypatch):
     monkeypatch.setattr(
         K, "_over_dictionary", lambda arr, fn: encoded.append(len(arr)) or real(arr, fn)
     )
-    tables = K._arrow_buckets(large_converter())
+    tables = K._tables(large_converter(), "compress")
     uri = "http://vocab{}.example.org/term/{}"
     distinct = pa.array([uri.format(i % 200, i) for i in range(20_000)])
     repeats = pa.array([uri.format(i % 200, i % 7) for i in range(20_000)])

@@ -158,8 +158,8 @@ def test_hook_never_freezes_the_driver(tmp_path):
 
         conv = large_converter()
         uri = next(iter(conv.reverse_prefix_map)) + "123"
-        for build in (kernels.compress_udf, kernels.standardize_uri_udf):
-            out = build(conv).func(pa.array([uri, "https://unregistered.example/x", None]))
+        for body in (kernels._compress, kernels._standardize_uri):
+            out = kernels._arrow_udf(body, conv).func(pa.array([uri, "https://unregistered.example/x", None]))
             assert out[0].as_py() is not None and out[1].as_py() is None
         import_new_module()  # an import after the kernels ran
 
@@ -300,7 +300,7 @@ def _calls_install_first(fn: ast.FunctionDef) -> bool:
 def test_every_python_stage_body_installs_the_hook():
     # a body that cloudpickle ships by value may import nothing of the
     # package, so each one installs the hook itself
-    offenders, bodies = [], 0
+    offenders, bodies = [], []
     for path in sorted(PACKAGE.rglob("*.py")):
         tree = ast.parse(path.read_text())
         passed = {
@@ -322,8 +322,11 @@ def test_every_python_stage_body_installs_the_hook():
                 for d in fn.decorator_list
             )
             if decorated or fn.name in passed:
-                bodies += 1
+                bodies.append(f"{path.relative_to(REPO)}::{fn.name}")
                 if not _calls_install_first(fn):
                     offenders.append(f"{path.relative_to(REPO)}:{fn.lineno} {fn.name}")
-    assert bodies >= 20
+    # every large-map conversion op runs the one body of the Arrow UDF
+    # factory, ``kernels._arrow_udf``; the other 15 are operator stages
+    assert "curies_spark/functions/kernels.py::_kernel" in bodies
+    assert len(bodies) == 16, bodies
     assert offenders == []
