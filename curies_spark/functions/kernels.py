@@ -275,9 +275,11 @@ def expand_all_col(curie: "Column | str", converter) -> Column:
 def _native_pair_from_map(
     mapping: "dict[str, str]", uri: Column
 ) -> "tuple[Column, Column]":
-    """(prefix, identifier) via an ordered when-chain over the given
-    ``uri_prefix → prefix`` mapping, longest first — preserves the
-    trie's longest-match guarantee within the mapping."""
+    """(value, identifier) via an ordered when-chain over the given
+    ``uri_prefix → value`` mapping, longest first — preserves the
+    trie's longest-match guarantee within the mapping. The value is the
+    canonical prefix for :func:`compress_col` and the canonical URI
+    prefix for :func:`standardize_uri_col`."""
     # NOTE a "hybrid" (JVM when-chain over the hot prefixes + Arrow
     # fallback for the tail) was measured and REJECTED: a 64-entry
     # codegen'd startsWith chain runs at ~260k rows/s on this host —
@@ -295,6 +297,18 @@ def _native_pair_from_map(
             ident_expr
         )
     return prefix_expr, ident_expr
+
+
+def _canonical_uri_prefixes(conv: Converter) -> "dict[str, str]":
+    """Every URI prefix (synonyms included) → its record's canonical URI
+    prefix: the compression keys, so the longest match is the same; only
+    the value differs. ``standardize_uri`` is one longest-first probe of
+    this mapping, then a concat with the identifier, on every surface."""
+    return {
+        uri_prefix: record.uri_prefix
+        for record in conv.records
+        for uri_prefix in record._all_uri_prefixes
+    }
 
 
 def _build_arrow_buckets(mapping: "dict[str, object]", value_type=None):
@@ -378,16 +392,9 @@ def _build_exact_match_table(mapping: "dict[str, str]"):
 _TABLE_BUILDERS = {
     # uri_prefix (synonyms included) → canonical prefix
     "compress": lambda conv: _build_arrow_buckets(conv.reverse_prefix_map),
-    # uri_prefix (synonyms included) → its record's canonical uri_prefix:
-    # the compression keys, so the longest match is the same; only the
-    # value differs, and the kernel's output is the finished string
-    "standardize_uri": lambda conv: _build_arrow_buckets(
-        {
-            uri_prefix: record.uri_prefix
-            for record in conv.records
-            for uri_prefix in record._all_uri_prefixes
-        }
-    ),
+    # uri_prefix (synonyms included) → its record's canonical uri_prefix;
+    # the kernel's output is the finished string
+    "standardize_uri": lambda conv: _build_arrow_buckets(_canonical_uri_prefixes(conv)),
     # ``prefix:`` (synonyms included) → canonical uri_prefix
     "expand": lambda conv: _build_arrow_buckets(_curie_keyed(conv.prefix_map)),
     # ``prefix:`` (synonyms included) → canonical prefix
@@ -736,20 +743,20 @@ def standardize_curie_col(
 def standardize_uri_col(
     uri: "Column | str", converter, *, passthrough: bool = False
 ) -> Column:
-    """Idempotent URI standardization: longest-prefix parse then re-expand
-    through the canonical URI prefix (reference api.py:2363-2413).
+    """Idempotent URI standardization: the longest URI-prefix match,
+    replaced by its record's canonical URI prefix (reference
+    api.py:2363-2413).
 
-    Small converters parse with the codegen'd chain and re-expand through
-    a MapType literal; large ones run :func:`_standardize_uri`, one
-    Arrow pass that returns the finished URI."""
+    Small converters run the codegen'd chain over
+    :func:`_canonical_uri_prefixes`; large ones run
+    :func:`_standardize_uri`, one Arrow pass over the same mapping that
+    returns the finished URI. Either way the op reads only the URI-prefix
+    family, never the prefix map."""
     c = _col(uri)
     conv = _broadcast(converter)
     if _native_uri_prefix_map(conv):
-        parsed = parse_uri_col(c, converter)
-        canonical = F.element_at(_map_literal(conv.prefix_map), parsed.getField("prefix"))
-        standardized = F.when(
-            parsed.isNotNull(), F.concat(canonical, parsed.getField("identifier"))
-        )
+        canonical, identifier = _native_pair_from_map(_canonical_uri_prefixes(conv), c)
+        standardized = F.when(canonical.isNotNull(), F.concat(canonical, identifier))
     else:
         standardized = _arrow_udf(_standardize_uri, converter)(c)
     return F.coalesce(standardized, c) if passthrough else standardized

@@ -21,11 +21,14 @@ prefix family):
   ``spark.udf.register``, and the SQL UDF bodies build on top of them
   (Spark resolves nested function calls at analysis).
 
-Composite functions are SQL compositions of the primitives, mirroring
-the kernel compositions (``standardize_uri = expand ∘ compress``,
-``compress_or_standardize = coalesce(compress, standardize_curie)``).
-Past ``NATIVE_COMPRESS_THRESHOLD`` those two are the fused one-pass
-kernels instead (``kernels._standardize_uri`` /
+``standardize_uri`` is, like ``compress``, one longest-first CASE chain
+over a URI-prefix mapping (``kernels._canonical_uri_prefixes``: URI
+prefix → its record's canonical URI prefix), so it never reads the
+prefix map. Composite functions are SQL compositions of the primitives,
+mirroring the kernel compositions (``compress_or_standardize =
+coalesce(compress, standardize_curie)``). Past
+``NATIVE_COMPRESS_THRESHOLD`` those two are the fused one-pass kernels
+instead (``kernels._standardize_uri`` /
 ``kernels._compress_or_standardize``), exactly as in the Column API.
 All functions are session-scoped temporaries: re-registering (e.g.
 after :meth:`SparkConverter.rebroadcast`) replaces them.
@@ -35,7 +38,6 @@ from __future__ import annotations
 
 from typing import Any, Mapping
 
-from ..core.converter import Converter
 from . import kernels
 
 __all__ = ["register_sql_functions"]
@@ -54,16 +56,15 @@ def _map_sql(mapping: "Mapping[str, str]") -> str:
     return f"map({pairs})"
 
 
-def _compress_case_sql(conv: Converter, v: str) -> str:
-    """Longest-prefix-first CASE chain — the SQL twin of
-    ``kernels._native_pair_from_map``."""
-    entries = sorted(
-        conv.reverse_prefix_map.items(), key=lambda kv: len(kv[0]), reverse=True
-    )
+def _prefix_case_sql(mapping: "Mapping[str, str]", v: str, sep: str) -> str:
+    """Longest-prefix-first CASE chain over a ``uri_prefix → value``
+    mapping, the value joined to the identifier by ``sep`` — the SQL
+    twin of ``kernels._native_pair_from_map``."""
+    entries = sorted(mapping.items(), key=lambda kv: len(kv[0]), reverse=True)
     whens = " ".join(
         f"WHEN startswith({v}, {_q(up)}) "
-        f"THEN concat({_q(p)}, ':', substr({v}, {len(up) + 1}))"
-        for up, p in entries
+        f"THEN concat({_q(value)}, {_q(sep)}, substr({v}, {len(up) + 1}))"
+        for up, value in entries
     )
     return f"CASE {whens} END" if whens else "CAST(NULL AS STRING)"
 
@@ -101,7 +102,7 @@ def register_sql_functions(
     # -- compress: native CASE chain or the Arrow bucketed kernel --------
     native_compress = kernels._native_uri_prefix_map(conv)
     if native_compress:
-        create("compress", "u STRING", _compress_case_sql(conv, "u"))
+        create("compress", "u STRING", _prefix_case_sql(conv.reverse_prefix_map, "u", ":"))
     else:
         register("compress", kernels._compress)
 
@@ -124,8 +125,9 @@ def register_sql_functions(
         register("expand", kernels._expand)
         register("standardize_prefix", kernels._standardize_prefix)
 
-    # -- SQL compositions of the primitives, or the fused large-map
-    #    kernels (mirror standardize_uri_col / compress_or_standardize_col)
+    # -- standardize_uri's CASE chain and SQL compositions of the
+    #    primitives, or the fused large-map kernels (mirror
+    #    standardize_uri_col / compress_or_standardize_col)
     create(
         "standardize_curie",
         "c STRING",
@@ -135,7 +137,11 @@ def register_sql_functions(
         "substr(c, locate(':', c) + 1)) END",
     )
     if native_compress:
-        create("standardize_uri", "u STRING", f"{p}_expand({p}_compress(u))")
+        create(
+            "standardize_uri",
+            "u STRING",
+            _prefix_case_sql(kernels._canonical_uri_prefixes(conv), "u", ""),
+        )
         create("compress_or_standardize", "s STRING",
                f"coalesce({p}_compress(s), {p}_standardize_curie(s))")
     else:

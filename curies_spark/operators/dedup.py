@@ -47,7 +47,6 @@ __all__ = [
     "ngram_jaccard_pairs",
     "shingle_hash_col",
     "shingles_arrow_col",
-    "shingles_col",
     "simhash_col",
     "simhash_candidate_pairs",
     "verify_pairs",
@@ -85,30 +84,13 @@ N_PERM = 16
 BAND_SIZE = 4  # 4 bands × 4 rows
 
 
-def shingles_col(text: "Column | str", *, k: int = 3) -> Column:
-    """k-token shingles of the lowercased whitespace tokenization.
-
-    Documents shorter than k tokens produce their full token join as a
-    single shingle (so short docs still dedup exactly)."""
-    from .text import tokens_col
-
-    toks = tokens_col(text)
-    n = F.size(toks)
-    full = F.array(F.concat_ws(" ", toks))
-    windows = F.transform(
-        F.sequence(F.lit(0), n - F.lit(k)),
-        lambda i: F.concat_ws(" ", F.slice(toks, i + 1, k)),
-    )
-    return F.when(n >= k, windows).otherwise(full)
-
-
 def _batch_shingles(series, k: int):
     """Vectorized k-token shingle windows for a pandas Series of texts —
-    the batch twin of :func:`shingles_col` (same lowercasing, same
-    whitespace set: pandas ``.str.split()`` splits on exactly the
-    engine's :data:`~curies_spark.operators.text.WS_CHARS` class,
-    asserted in tests; same short-document rule: < k tokens → one
-    shingle joining all tokens, NULL/empty → the ``""`` shingle).
+    the batch twin of ``tests/differential_twins.shingles_col`` (same
+    lowercasing, same whitespace set: pandas ``.str.split()`` splits on
+    exactly the engine's :data:`~curies_spark.operators.text.WS_CHARS`
+    class, asserted in tests; same short-document rule: < k tokens →
+    one shingle joining all tokens, NULL/empty → the ``""`` shingle).
 
     Returns ``(shingles, wc, seg_starts)``: the flat object array of
     every document's shingles, the per-document shingle counts, and the
@@ -152,13 +134,14 @@ def _batch_shingles(series, k: int):
 
 
 def shingles_arrow_col(text: "Column | str", *, k: int = 3) -> Column:
-    """:func:`shingles_col` as an Arrow-batched kernel — identical
-    values (verified row-for-row in tests), ~7× faster than the
-    higher-order-function form, whose ``transform``+``slice`` lambdas
-    are interpreted per element (the measured cost of generating 264k
-    shingles dropped from 4.0s to 0.6s on this host). Use this form in
-    hot paths that explode the shingle stream (n-gram Jaccard); the
-    native column stays as the oracle-shaped differential twin."""
+    """k-token shingles of the lowercased whitespace tokenization, as an
+    Arrow-batched kernel. Documents shorter than k tokens produce their
+    full token join as a single shingle (so short docs still dedup
+    exactly). Values are identical row-for-row to the JVM
+    higher-order-function twin ``tests/differential_twins.shingles_col``
+    and ~7× faster, since its ``transform``+``slice`` lambdas are
+    interpreted per element (generating 264k shingles dropped from 4.0s
+    to 0.6s on a 4-core host)."""
     from pyspark.sql.types import StringType
 
     c = F.col(text) if isinstance(text, str) else text
@@ -190,7 +173,7 @@ def shingle_hash_col(shingle: Column) -> Column:
     return F.conv(F.substring(F.sha2(shingle, 256), 1, 12), 16, 10).cast(LongType())
 
 
-def exact_dedup(df: DataFrame, *, text: str = "text", keep: str = "min", id_col: str = "doc_id") -> DataFrame:
+def exact_dedup(df: DataFrame, *, text: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Keep one row per exact content hash (the ``min`` id wins —
     deterministic, unlike dropDuplicates' arbitrary survivor)."""
     h = F.sha2(F.col(text), 256).alias("_h")
@@ -268,8 +251,9 @@ def minhash_signature_col(text: "Column | str", *, k: int = 3) -> Column:
     minima are ``np.minimum.reduceat`` segment reductions.
 
     Matches :func:`shingle_hash_col` exactly (first 6 sha256 bytes,
-    big-endian = the first 12 hex chars as a base-16 number) and
-    :func:`shingles_col`'s short-document rule (fewer than ``k`` tokens
+    big-endian = the first 12 hex chars as a base-16 number) and the
+    short-document rule of the JVM twin
+    ``tests/differential_twins.shingles_col`` (fewer than ``k`` tokens
     → one shingle joining all tokens; NULL/empty text → the ``""``
     shingle). Tokenization lowercases and splits on Python's whitespace
     set — which is exactly the engine's explicit
@@ -501,7 +485,7 @@ def ngram_jaccard_pairs(
     documents before the self-join — the standard guard against the
     quadratic blow-up a corpus-wide hot shingle would cause.
     """
-    # Arrow shingle kernel: values identical to shingles_col, ~7× less
+    # Arrow shingle kernel: values identical to the JVM twin, ~7× less
     # map time per text pass (the HOF transform+slice windows are
     # interpreted per element)
     doc_shingles = (
@@ -693,8 +677,8 @@ def _label_components(edges: DataFrame, *, rounds: int) -> "DataFrame | None":
     stops decreasing (labels only ever decrease, so the sum is a
     strictly monotone progress measure — one cheap aggregate per round
     instead of an old-vs-new join). Rounds needed = cluster diameter.
-    Returns None when not converged within ``rounds`` (the caller
-    decides between failing loud and switching algorithms)."""
+    Returns None when not converged within ``rounds``
+    (:func:`connected_components` then switches to star contraction)."""
     sym = edges.union(
         edges.select(F.col("_d").alias("_s"), F.col("_s").alias("_d"))
     ).localCheckpoint(eager=False)
@@ -826,7 +810,6 @@ def connected_components(
     src: str = "id_a",
     dst: str = "id_b",
     max_iter: int = 50,
-    algorithm: str = "auto",
     switch_after: int = 8,
 ) -> DataFrame:
     """Connected components over a (numeric-id) pair table →
@@ -837,48 +820,29 @@ def connected_components(
     relations are not transitive pair-by-pair, so clusters must be
     closed before picking one representative per cluster.
 
-    Two engines, one contract:
+    Two engines, one contract; the graph picks between them:
 
     - **min-label propagation** (:func:`_label_components`): one join +
       one aggregate per round, rounds = cluster diameter. Near-dup
       clusters are dense and shallow (2-4 rounds), so this is the fast
-      path.
+      path and always runs first, for ``min(switch_after, max_iter)``
+      rounds.
     - **large-star/small-star contraction** (:func:`_star_components`,
       Kiveris et al.): O(log n) rounds regardless of diameter — the
       guard against adversarial long chains (10^5 templated documents
       each near-dup of the next would otherwise need 10^5 propagation
-      rounds = a hung job).
+      rounds = a hung job). When propagation has not converged within
+      its rounds — the diameter exceeds the dense-cluster regime — the
+      job restarts on star contraction, which raises ``RuntimeError``
+      if it has not converged within ``max_iter`` rounds.
 
-    ``algorithm="auto"`` (default) runs propagation for
-    ``switch_after`` rounds and, if the graph hasn't converged —
-    i.e. its diameter exceeds the dense-cluster regime — restarts on
-    star contraction, whose logarithmic rounds finish any diameter
-    within ``max_iter``. ``"label"`` / ``"star"`` force one engine
-    (label fails loud at ``max_iter`` like previous releases).
     Lineage is cut with ``localCheckpoint`` per round in both engines
     so plans stay flat at any iteration count.
     """
-    if algorithm not in ("auto", "label", "star"):
-        raise ValueError(
-            f"unknown algorithm {algorithm!r}: expected auto|label|star"
-        )
     edges = pairs.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
-    if algorithm == "star":
-        return _star_components(edges, max_iter=max_iter)
-    label_rounds = max_iter if algorithm == "label" else min(switch_after, max_iter)
-    labels = _label_components(edges, rounds=label_rounds)
+    labels = _label_components(edges, rounds=min(switch_after, max_iter))
     if labels is not None:
         return labels
-    if algorithm == "label":
-        # silent truncation here would leak duplicates through
-        # dedup_by_pairs (stale labels on long chains look like extra
-        # clusters) — fail loud
-        raise RuntimeError(
-            f"connected_components did not converge within max_iter="
-            f"{max_iter} rounds; the pair graph contains a component with "
-            "diameter >= max_iter — raise max_iter, or use "
-            "algorithm='auto'/'star' (logarithmic rounds on long chains)"
-        )
     return _star_components(edges, max_iter=max_iter)
 
 

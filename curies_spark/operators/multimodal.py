@@ -117,10 +117,7 @@ def media_metadata(df: DataFrame) -> DataFrame:
 
 
 def extract_features(
-    df: DataFrame,
-    *,
-    decode: "Callable[[bytes], list[float] | None]" = None,
-    batch_hint: int = 64,
+    df: DataFrame, *, decode: "Callable[[bytes], list[float] | None]" = None
 ) -> DataFrame:
     """Decode payloads → feature vectors via streaming ``mapInPandas``.
 

@@ -38,10 +38,10 @@ dedups it again.
 from __future__ import annotations
 
 import time
-from typing import Any, Callable
+from typing import Callable
 
 from py4j.protocol import Py4JJavaError
-from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F
 
 from ..core.converter import Converter
 from ..functions import kernels
@@ -179,7 +179,7 @@ def build_triples(linked: DataFrame, converter) -> DataFrame:
     )
 
 
-def sha256_rollup(df: DataFrame, *, content: str = "content") -> "Any":
+def sha256_rollup(*, content: str = "content") -> Column:
     """Commutative rollup of per-row sha256(content): sum of the first 15
     hex digits as bigint. Order-independent, overflow-safe at 10^12 rows
     (sum fits in a Spark decimal aggregate)."""
@@ -189,7 +189,7 @@ def sha256_rollup(df: DataFrame, *, content: str = "content") -> "Any":
 def validate_content_invariant(source: DataFrame, manifests: "list[dict]") -> bool:
     """Re-derive the sha rollup from the source and compare with the sum
     of shard manifests — proves no content row was lost or altered."""
-    total = source.select(sha256_rollup(source).alias("s")).collect()[0]["s"]
+    total = source.select(sha256_rollup().alias("s")).collect()[0]["s"]
     recorded = sum(int(m["content_sha_rollup"]) for m in manifests)
     # an empty source sums to NULL; its shards record "0"
     return int(total or 0) == recorded
@@ -283,7 +283,7 @@ def _run_shard(
     shard_df, stats = observed(
         staged.drop("_shard"),
         F.count(F.lit(1)).alias("input_rows"),
-        sha256_rollup(staged).alias("content_sha_rollup"),
+        sha256_rollup().alias("content_sha_rollup"),
     )
     linked, stages = observed(
         link_mentions(extract_mentions(shard_df), bc),

@@ -423,8 +423,8 @@ def read_stream_components(
 ) -> "DataFrame | None":
     """The maintained ``(node, component)`` labels over everything the
     stream has processed (committed batches only), min-wins resolved.
-    None when the stream ran with ``maintain_components=False`` (or has
-    produced nothing yet)."""
+    None when the stream has produced nothing yet, or ``out_dir`` was
+    written before the stream maintained labels."""
     deltas = _read_store(spark, f"{out_dir}/components", None)
     return None if deltas is None else _fold_components(deltas)
 
@@ -440,13 +440,14 @@ def start_dedup_stream(
     available_now: bool = True,
     max_files_per_trigger: "int | None" = None,
     compact_every: int = 8,
-    maintain_components: bool = True,
 ) -> StreamingQuery:
     """Start (or resume) the streaming near-dup detector.
 
     Writes under ``out_dir``: ``store/batch=N/`` (the batch's novel
-    signatures) and ``pairs/batch=N/`` (the duplicate pairs batch N
-    introduced) — BOTH folded into ``compact=M/`` partitions every
+    signatures), ``pairs/batch=N/`` (the duplicate pairs batch N
+    introduced) and ``components/batch=N/`` (the batch's delta to the
+    ``(node, component)`` labels, :func:`_update_components`) — all
+    three folded into ``compact=M/`` partitions every
     ``compact_every`` batches, so neither read side's directory listing
     grows with the batch count on a long-running stream (pairs are
     append-only facts, so the store's superseded-dir-ignoring read rule
@@ -472,11 +473,10 @@ def start_dedup_stream(
         if compact_every:
             _compact_store(spark, store_path, batch_id, compact_every)
             _compact_store(spark, pairs_path, batch_id, compact_every)
-            if maintain_components:
-                _compact_store(
-                    spark, comp_path, batch_id, compact_every,
-                    fold=_fold_components,
-                )
+            _compact_store(
+                spark, comp_path, batch_id, compact_every,
+                fold=_fold_components,
+            )
         store = _read_store(spark, store_path, batch_id)
         staged = _stage(batch, k=k).localCheckpoint()
         pairs, novel = _pair_batch(
@@ -494,8 +494,7 @@ def start_dedup_stream(
             f"{store_path}/batch={batch_id}"
         )
         pairs.write.mode("overwrite").parquet(f"{pairs_path}/batch={batch_id}")
-        if maintain_components:
-            _update_components(spark, comp_path, pairs, batch_id)
+        _update_components(spark, comp_path, pairs, batch_id)
 
     writer = (
         read_document_stream(
@@ -517,7 +516,7 @@ def read_stream_pairs(spark: SparkSession, out_dir: str) -> "DataFrame | None":
 
 
 def streamed_survivors(
-    spark: SparkSession, out_dir: str, *, incremental: "bool | None" = None
+    spark: SparkSession, out_dir: str, *, incremental: bool = True
 ) -> DataFrame:
     """Survivor selection over everything the stream has processed:
     min-id representative per near-duplicate component, plus every
@@ -526,38 +525,25 @@ def streamed_survivors(
     DataFrame equal to the batch pipeline's survivors on the same
     corpus (asserted in tests/test_streaming.py).
 
-    ``incremental=None`` (default) uses the per-batch-maintained
-    component labels when the stream wrote them
-    (``maintain_components=True``) — the losers are then a read of the
-    label table, with NO closure recomputation over the accumulated
-    pairs, so survivor queries stay cheap as pairs accumulate on a
-    long-running stream. ``incremental=False`` forces the full closure
-    over the pairs table (the differential twin the tests compare
-    against); ``incremental=True`` fails loud when no label table
-    exists."""
+    ``incremental=True`` (default) reads the losers off the component
+    labels the stream maintains per batch, with NO closure recomputation
+    over the accumulated pairs, so survivor queries stay cheap as pairs
+    accumulate on a long-running stream. It falls back to the exact
+    closure whenever the labels do not cover every pair endpoint.
+    ``incremental=False`` always computes the full closure over the
+    pairs table (the reference the tests compare against)."""
     store = _read_store(spark, f"{out_dir}/store", None)
     ids = store.select("doc_id") if store is not None else None
-    comps = None
-    if incremental is None or incremental:
-        comps = read_stream_components(spark, out_dir)
-        if incremental and comps is None:
-            raise ValueError(
-                f"no maintained component labels under {out_dir!r} — the "
-                "stream ran with maintain_components=False; use "
-                "incremental=False for the full-closure path"
-            )
-    if incremental is False:
-        comps = None
+    comps = read_stream_components(spark, out_dir) if incremental else None
 
     if comps is not None:
         # coverage guard: the label table is only trustworthy if it
-        # covers EVERY accumulated pair endpoint. A stream resumed from
-        # a checkpoint whose earlier batches ran without maintenance
-        # (maintain_components=False, or a pre-maintenance layout) has
-        # pairs the labels never saw — silently using the partial table
-        # would let those duplicates survive. One anti-join probe
-        # detects the gap; incremental=True fails loud on it, the
-        # default falls back to the full closure.
+        # covers EVERY accumulated pair endpoint. A reader between batch
+        # N's pairs write and its components write, or a store written
+        # before labels existed, sees pairs the labels never saw —
+        # silently using the partial table would let those duplicates
+        # survive. One anti-join probe detects the gap and falls back to
+        # the full closure.
         pairs0 = read_stream_pairs(spark, out_dir)
         if pairs0 is not None:
             endpoints = (
@@ -569,13 +555,6 @@ def streamed_survivors(
                 comps.select("node"), on="node", how="left_anti"
             )
             if not uncovered.isEmpty():
-                if incremental:
-                    raise ValueError(
-                        f"component labels under {out_dir!r} do not cover "
-                        "every accumulated pair endpoint (earlier batches "
-                        "ran without maintain_components?) — use "
-                        "incremental=False for the full-closure path"
-                    )
                 comps = None  # fall through to the exact closure below
         if comps is not None:
             node_ids = comps.select(F.col("node").alias("doc_id"))

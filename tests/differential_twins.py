@@ -7,6 +7,7 @@ Python). None of them belongs on a corpus-scale pass.
 - :func:`lsh_signature_col_hof` twins ``similarity.lsh_signature_col``
 - :func:`doc_fingerprint_native_col` twins ``text.doc_fingerprint_col``
 - :func:`minhash_signature_exploded` twins ``dedup.minhash_signature``
+- :func:`shingles_col` twins ``dedup.shingles_arrow_col``
 - :func:`simhash_reference_one` twins ``dedup.simhash_col``
 - :func:`bucketed_prefix_match_if_else` twins ``kernels._prefix_match``:
   every length bucket probes every row and merges its hits into two
@@ -17,8 +18,9 @@ import hashlib
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from curies_spark.operators.dedup import N_PERM, _R, shingle_hash_col, shingles_col
+from curies_spark.operators.dedup import N_PERM, _R, shingle_hash_col
 from curies_spark.operators.similarity import _unit
+from curies_spark.operators.text import tokens_col
 
 
 def _dot_lit(vec: Column, plane: "list[float]") -> Column:
@@ -55,6 +57,22 @@ def lsh_signature_col_hof(vec: Column, planes: "list[list[float]]") -> Column:
         )
         sig = sig + F.shiftleft(bit, i)
     return sig
+
+
+def shingles_col(text: "Column | str", *, k: int = 3) -> Column:
+    """k-token shingles of the lowercased whitespace tokenization through
+    ``transform``+``slice``: n - k + 1 interpreted calls per row.
+
+    Documents shorter than k tokens produce their full token join as a
+    single shingle (so short docs still dedup exactly)."""
+    toks = tokens_col(text)
+    n = F.size(toks)
+    full = F.array(F.concat_ws(" ", toks))
+    windows = F.transform(
+        F.sequence(F.lit(0), n - F.lit(k)),
+        lambda i: F.concat_ws(" ", F.slice(toks, i + 1, k)),
+    )
+    return F.when(n >= k, windows).otherwise(full)
 
 
 def doc_fingerprint_native_col(text: "Column | str", *, k: int = 3) -> Column:

@@ -47,6 +47,14 @@ FAMILIES = {
 }
 
 
+#: the ops that read one map family only (``compress_or_standardize``
+#: reads both)
+SINGLE_FAMILY = {
+    "compress", "standardize_uri", "is_uri",
+    "expand", "standardize_prefix", "standardize_curie", "is_curie",
+}
+
+
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
@@ -78,6 +86,15 @@ def test_column_and_sql_surfaces_switch_at_the_same_entry(spark, monkeypatch, fa
         assert ("ArrowEvalPython" in sql_plan) is past, (op, sql_plan)
         if op in ("compress", "expand", "standardize_prefix"):
             assert (names[op] in registered) is past, (op, registered)
+    # the other family's single-family ops stay in the JVM on both
+    # surfaces, also when this family is past its threshold
+    (other,) = set(FAMILIES) - {family}
+    for op, column_kernel in FAMILIES[other][2].items():
+        if op in SINGLE_FAMILY:
+            column_plan = _plan(df.select(column_kernel("v", conv)))
+            sql_plan = _plan(spark.sql(f"SELECT {names[op]}(v) FROM kernel_choice_in"))
+            assert "ArrowEvalPython" not in column_plan, (op, column_plan)
+            assert "ArrowEvalPython" not in sql_plan, (op, sql_plan)
     # the SQL surface registers Python UDFs only for the family past its threshold
     assert all(name.startswith(prefix) for name in registered)
     assert bool(registered) is past

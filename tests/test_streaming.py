@@ -490,17 +490,19 @@ def test_incremental_components_match_closure_every_batch(spark, tmp_path):
     assert inc == {3, 5, 7, 99}
     import pytest
 
-    with pytest.raises(ValueError, match="maintain_components"):
+    with pytest.raises(ValueError, match="no committed stream output"):
         streamed_survivors(
             spark, str(tmp_path / "nowhere"), incremental=True
         )
 
 
 def test_incremental_survivors_guard_partial_labels(spark, tmp_path):
-    """A stream whose earlier batches ran WITHOUT component maintenance
-    leaves pairs the label table never saw. The default survivors path
-    must detect the gap and fall back to the exact closure (not
-    silently trust the partial labels); incremental=True fails loud."""
+    """A store whose earlier batches were written before the stream
+    maintained component labels holds pairs the label table never saw.
+    The default survivors path must detect the gap and fall back to the
+    exact closure (not silently trust the partial labels)."""
+    import shutil
+
     from pyspark.sql import Row
 
     from curies_spark.streaming import start_dedup_stream, streamed_survivors
@@ -509,18 +511,19 @@ def test_incremental_survivors_guard_partial_labels(spark, tmp_path):
     out = str(tmp_path / "gout")
     ckpt = str(tmp_path / "gckpt")
     base = " ".join(f"g{i}" for i in range(30))
-    # wave 1 (duplicates!) processed with maintenance OFF
+    # wave 1 (duplicates!), then its labels removed: the pre-labels shape
     spark.createDataFrame(
         [Row(doc_id=1, text=base), Row(doc_id=2, text=base)]
     ).coalesce(1).write.mode("append").parquet(src)
-    q = start_dedup_stream(spark, src, out, ckpt, maintain_components=False)
+    q = start_dedup_stream(spark, src, out, ckpt)
     q.awaitTermination(120)
-    # wave 2 processed with maintenance ON (the resumed-with-new-default
-    # shape): labels now exist but don't cover wave 1's pair
+    shutil.rmtree(tmp_path / "gout" / "components")
+    # wave 2 resumes on that store: labels now exist but don't cover
+    # wave 1's pair
     spark.createDataFrame(
         [Row(doc_id=3, text=base), Row(doc_id=9, text="unrelated words here")]
     ).coalesce(1).write.mode("append").parquet(src)
-    q = start_dedup_stream(spark, src, out, ckpt, maintain_components=True)
+    q = start_dedup_stream(spark, src, out, ckpt)
     q.awaitTermination(120)
 
     full = {
@@ -530,10 +533,6 @@ def test_incremental_survivors_guard_partial_labels(spark, tmp_path):
     assert full == {1, 9}
     # default: detects the coverage gap, falls back, stays exact
     assert {r["doc_id"] for r in streamed_survivors(spark, out).collect()} == full
-    import pytest
-
-    with pytest.raises(ValueError, match="do not cover"):
-        streamed_survivors(spark, out, incremental=True).collect()
 
 
 def test_update_components_merges_and_relabels(spark, tmp_path):

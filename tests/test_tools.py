@@ -71,3 +71,17 @@ def test_bench_ann_scales_share_no_corpus_and_leave_nothing(tmp_path):
                 raise RuntimeError("a failed run")
     assert roots[0] != roots[1]
     assert not any(os.path.exists(root) for root in roots)
+
+
+def test_tools_write_no_fixed_tmp_path():
+    """Every bench takes its scratch paths from the one ``run_paths``
+    (a temp dir per run, removed at exit); only ``make_sf1.py``, whose
+    output is meant to outlive the run, names a fixed path."""
+    offenders = [
+        path.name
+        for path in TOOLS
+        if path.name != "make_sf1.py" and "/tmp/curies_spark_" in path.read_text()
+    ]
+    assert offenders == []
+    definers = [path.name for path in TOOLS if "def run_paths(" in path.read_text()]
+    assert definers == ["bench_paths.py"]

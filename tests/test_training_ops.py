@@ -39,7 +39,7 @@ def test_shingles(spark):
     df = spark.createDataFrame([Row(doc_id=1, text="a b c d"), Row(doc_id=2, text="a b")])
     got = {
         r["doc_id"]: list(r["s"])
-        for r in df.select("doc_id", D.shingles_col("text", k=3).alias("s")).collect()
+        for r in df.select("doc_id", T.shingles_col("text", k=3).alias("s")).collect()
     }
     assert got[1] == ["a b c", "b c d"]
     assert got[2] == ["a b"]  # shorter than k → whole doc
@@ -68,7 +68,7 @@ def test_arrow_shingles_and_fingerprint_match_native(spark):
         (9, "x " * 50),
     ]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
-    native = df.select("doc_id", F.explode(D.shingles_col("text", k=3)).alias("s"))
+    native = df.select("doc_id", F.explode(T.shingles_col("text", k=3)).alias("s"))
     arrow = df.select(
         "doc_id", F.explode(D.shingles_arrow_col("text", k=3)).alias("s")
     )
@@ -467,6 +467,12 @@ def test_connected_components_long_chain_converges(spark):
     assert len(rows) == n + 1
 
 
+def _cc_edges(pairs):
+    """The ``(_s, _d)`` edge list both component engines take, as
+    :func:`D.connected_components` builds it."""
+    return pairs.select(F.col("id_a").alias("_s"), F.col("id_b").alias("_d"))
+
+
 def test_connected_components_star_engine_matches_label(spark):
     """large-star/small-star must produce the identical (node, component)
     map as min-label propagation on mixed topologies: chains, a
@@ -478,11 +484,11 @@ def test_connected_components_star_engine_matches_label(spark):
     )
     label = {
         (r["node"], r["component"])
-        for r in D.connected_components(pairs, algorithm="label").collect()
+        for r in D._label_components(_cc_edges(pairs), rounds=50).collect()
     }
     star = {
         (r["node"], r["component"])
-        for r in D.connected_components(pairs, algorithm="star").collect()
+        for r in D._star_components(_cc_edges(pairs), max_iter=50).collect()
     }
     assert star == label
     assert (33, 33) in star and (50, 33) in star  # reversed-order chain
@@ -499,11 +505,11 @@ def test_connected_components_star_random_differential(spark):
     pairs = spark.createDataFrame(edges, ["id_a", "id_b"])
     label = {
         (r["node"], r["component"])
-        for r in D.connected_components(pairs, algorithm="label").collect()
+        for r in D._label_components(_cc_edges(pairs), rounds=50).collect()
     }
     star = {
         (r["node"], r["component"])
-        for r in D.connected_components(pairs, algorithm="star").collect()
+        for r in D._star_components(_cc_edges(pairs), max_iter=50).collect()
     }
     assert star == label
 
@@ -511,8 +517,9 @@ def test_connected_components_star_random_differential(spark):
 def test_connected_components_auto_switches_on_deep_chain(spark):
     """A 10^4-diameter chain — the adversarial templated-document shape —
     must converge via the auto star fallback in logarithmic rounds
-    instead of hanging for diameter-many label rounds; forcing
-    algorithm='label' at a low max_iter still fails loud."""
+    instead of hanging for diameter-many label rounds; label propagation
+    alone at a low round count reports non-convergence (None), the
+    signal the switch acts on."""
     n = 10_000
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(n)], ["id_a", "id_b"]
@@ -522,16 +529,7 @@ def test_connected_components_auto_switches_on_deep_chain(spark):
     rows = D.connected_components(pairs, max_iter=20, switch_after=2).collect()
     assert len(rows) == n + 1
     assert {r["component"] for r in rows} == {0}
-    with pytest.raises(RuntimeError, match="did not converge"):
-        D.connected_components(
-            pairs, algorithm="label", max_iter=5
-        ).collect()
-
-
-def test_connected_components_rejects_unknown_algorithm(spark):
-    pairs = spark.createDataFrame([(1, 2)], ["id_a", "id_b"])
-    with pytest.raises(ValueError, match="unknown algorithm"):
-        D.connected_components(pairs, algorithm="bogus")
+    assert D._label_components(_cc_edges(pairs), rounds=5) is None
 
 
 def test_index_incremental_append(spark, tmp_path):

@@ -11,21 +11,20 @@ embeddings table (512k vectors, dim 64), then measures per-query:
 - recall@k of the probed top-k against the exact top-k.
 
 Prints one JSON line. The corpus and every index live under one temp
-dir made for the run and removed at exit (see :func:`run_paths`).
+dir made for the run and removed at exit
+(:func:`tools.bench_paths.run_paths`).
 """
 
 from __future__ import annotations
 
-import contextlib
-import hashlib
 import json
 import os
-import shutil
 import sys
-import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from tools.bench_paths import run_paths  # noqa: E402
 
 K = 10
 N_PLANES = 8
@@ -34,30 +33,9 @@ REPLICAS = 256
 QUERIES = 5
 
 
-@contextlib.contextmanager
-def run_paths(sf_dir: str):
-    """The paths one run writes — ``corpus``, the float and quantized LSH
-    indexes ``index``/``qindex`` and the IVF index ``ivf`` (each index
-    keeps its ``_params``/``_centroids`` beside it) — all under one fresh
-    temp dir, removed when the block exits, however it exits. The corpus
-    name is keyed on ``sf_dir``, so runs at two scales never read one
-    corpus."""
-    root = tempfile.mkdtemp(prefix="curies_spark_ann_")
-    scale = hashlib.sha256(os.path.realpath(sf_dir).encode()).hexdigest()[:16]
-    try:
-        yield {
-            "corpus": f"{root}/corpus_{scale}",
-            "index": f"{root}/ann_index",
-            "qindex": f"{root}/ann_index_quant",
-            "ivf": f"{root}/ivf_index",
-        }
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    with run_paths(sf_dir) as paths:
+    with run_paths(os.path.realpath(sf_dir), "index", "qindex", "ivf") as paths:
         _run(sf_dir, paths)
 
 

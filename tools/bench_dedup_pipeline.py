@@ -15,19 +15,23 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-CORPUS = os.environ.get("SPARK_GRAFT_DEDUP_CORPUS", "/tmp/curies_spark_dedup_corpus")
-OUT = os.environ.get("SPARK_GRAFT_DEDUP_OUT", "/tmp/curies_spark_dedup_out")
+from tools.bench_paths import run_paths  # noqa: E402
+
 REPLICAS = int(os.environ.get("SPARK_GRAFT_DEDUP_REPLICAS", "64"))
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    with run_paths(os.path.realpath(sf_dir), "out") as paths:
+        _run(sf_dir, paths["corpus"], paths["out"])
+
+
+def _run(sf_dir: str, corpus_path: str, out: str) -> None:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "8")
 
     from pyspark.sql import functions as F
@@ -39,33 +43,31 @@ def main() -> None:
 
     from curies_spark.plans.dedup_pipeline import run_dedup_pipeline
 
-    if not os.path.exists(os.path.join(CORPUS, "_SUCCESS")):
-        base = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        expanded = (
-            base.crossJoin(spark.range(REPLICAS).withColumnRenamed("id", "r"))
-            .select(
-                (F.col("doc_id") * REPLICAS + F.col("r")).alias("doc_id"),
-                # exact duplicates by default; every 8th replica edits
-                # one leading token → a near-duplicate family member
-                F.when(
-                    F.col("r") % 8 == 0,
-                    F.concat(F.lit("edited"), F.expr("substring(text, 6)")),
-                )
-                .otherwise(F.col("text"))
-                .alias("text"),
+    base = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    expanded = (
+        base.crossJoin(spark.range(REPLICAS).withColumnRenamed("id", "r"))
+        .select(
+            (F.col("doc_id") * REPLICAS + F.col("r")).alias("doc_id"),
+            # exact duplicates by default; every 8th replica edits
+            # one leading token → a near-duplicate family member
+            F.when(
+                F.col("r") % 8 == 0,
+                F.concat(F.lit("edited"), F.expr("substring(text, 6)")),
             )
-            .repartition(int(cpus) * 4)
+            .otherwise(F.col("text"))
+            .alias("text"),
         )
-        expanded.write.mode("overwrite").parquet(CORPUS)
+        .repartition(int(cpus) * 4)
+    )
+    expanded.write.parquet(corpus_path)
 
-    corpus = spark.read.parquet(CORPUS)
-    corpus_bytes = harness.dir_stats(CORPUS)[1]
+    corpus = spark.read.parquet(corpus_path)
+    corpus_bytes = harness.dir_stats(corpus_path)[1]
 
-    shutil.rmtree(OUT, ignore_errors=True)
     sql = harness.SqlMetrics(spark)
     mark = sql.mark()
     t0 = time.perf_counter()
-    manifest = run_dedup_pipeline(spark, corpus, OUT, min_est_jaccard=0.5)
+    manifest = run_dedup_pipeline(spark, corpus, out, min_est_jaccard=0.5)
     wall = time.perf_counter() - t0
 
     # 'size of files read' of the executions whose plan reads the raw
@@ -73,7 +75,7 @@ def main() -> None:
     raw_scanned = int(sum(
         e["metrics"].get("size of files read", 0)
         for e in sql.since(mark, plans=True)
-        if os.path.basename(CORPUS) in e["plan"]
+        if os.path.basename(corpus_path) in e["plan"]
     ))
     n_docs = manifest["input_docs"]
     result = {

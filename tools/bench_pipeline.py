@@ -13,19 +13,21 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-CORPUS = os.environ.get("SPARK_GRAFT_PIPE_CORPUS", "/tmp/curies_spark_pipe_corpus")
-OUT = "/tmp/curies_spark_pipe_out"
+from tools.bench_paths import run_paths  # noqa: E402
 
 
 def main() -> None:
     n_files = int(sys.argv[1]) if len(sys.argv) > 1 else 4_000_000
+    with run_paths(f"generate_repos({n_files})", "out") as paths:
+        _run(n_files, paths["corpus"], paths["out"])
 
+
+def _run(n_files: int, corpus: str, out: str) -> None:
     import bench
     from perfbench import harness
 
@@ -35,11 +37,8 @@ def main() -> None:
     from curies_spark.plans.pipeline import run_pipeline, validate_content_invariant
     from curies_spark.sources.synthetic import generate_repos
 
-    if not os.path.exists(os.path.join(CORPUS, "_SUCCESS")):
-        generate_repos(spark, n_files, partitions=64).write.mode("overwrite").parquet(
-            CORPUS
-        )
-    repos = spark.read.parquet(CORPUS)
+    generate_repos(spark, n_files, partitions=64).write.parquet(corpus)
+    repos = spark.read.parquet(corpus)
     n_files = repos.count()
 
     def _scanned_bytes(mark: int) -> int:
@@ -52,24 +51,23 @@ def main() -> None:
         """
         return int(sum(e["metrics"].get("size of files read", 0) for e in sql.since(mark)))
 
-    source_bytes = harness.dir_stats(CORPUS)[1]
+    source_bytes = harness.dir_stats(corpus)[1]
 
     from curies_spark.plans.pipeline import _stage_shards
 
-    shutil.rmtree(OUT, ignore_errors=True)
     t0 = time.perf_counter()
     mark = sql.mark()
     # run the staging pass separately so its scan bytes are attributable:
     # this is the ONLY read of the raw source in the whole job
-    _stage_shards(spark, repos, OUT, 8, resume=False)
+    _stage_shards(spark, repos, out, 8, resume=False)
     staging_scan = _scanned_bytes(mark)
     mark = sql.mark()
     # resumes the staging marker; shard + merge phases read only the
     # staged copy (partition-pruned per shard) and the job's own outputs
-    totals = run_pipeline(spark, repos, OUT, n_shards=8)
+    totals = run_pipeline(spark, repos, out, n_shards=8)
     wall = time.perf_counter() - t0
     shard_phase_scan = _scanned_bytes(mark)
-    staged_bytes = harness.dir_stats(os.path.join(OUT, "_staged"))[1]
+    staged_bytes = harness.dir_stats(os.path.join(out, "_staged"))[1]
     # the pre-staging design scanned the raw source once per shard:
     # (1 + n_shards) x source = 9x here
     source_scans = round(staging_scan / source_bytes, 2)
@@ -78,9 +76,9 @@ def main() -> None:
 
     # resume: drop two shard manifests, re-run, totals must be identical
     for shard in (2, 5):
-        os.remove(os.path.join(OUT, "_manifests", f"shard-{shard}.json"))
+        os.remove(os.path.join(out, "_manifests", f"shard-{shard}.json"))
     t0 = time.perf_counter()
-    resumed = run_pipeline(spark, repos, OUT, n_shards=8)
+    resumed = run_pipeline(spark, repos, out, n_shards=8)
     resume_wall = time.perf_counter() - t0
     spark.stop()
 

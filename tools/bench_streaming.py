@@ -16,17 +16,24 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from tools.bench_paths import run_paths  # noqa: E402
 
 N_FILES = 400_000
 N_SOURCE_PARTS = 16  # written as 16 parquet files → 4 micro-batches of 4
 
 
 def main() -> None:
+    with run_paths(f"generate_repos({N_FILES})", "run") as paths:
+        # the repos corpus, and every stream's sink and checkpoint
+        _run(paths["corpus"], paths["run"])
+
+
+def _run(src: str, base: str) -> None:
     from pyspark.sql import functions as F
 
     import bench
@@ -37,9 +44,7 @@ def main() -> None:
     from curies_spark.sources.synthetic import generate_repos, pipeline_converter
     from curies_spark.streaming import read_repo_stream, stream_discover_prefixes
 
-    base = "/tmp/curies_spark_stream_bench"
-    src, out, ckpt = f"{base}/src", f"{base}/out", f"{base}/ckpt"
-    shutil.rmtree(base, ignore_errors=True)
+    out, ckpt = f"{base}/out", f"{base}/ckpt"
     generate_repos(spark, N_FILES, partitions=N_SOURCE_PARTS).write.parquet(src)
     sc = SparkConverter(spark, pipeline_converter())
 

@@ -19,19 +19,24 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from tools.bench_paths import run_paths  # noqa: E402
+
 N_BATCHES = 12
 BATCH_ROWS = 20_000
 N_TOKENS = 12
-BASE = "/tmp/curies_spark_stream_dedup_bench"
 
 
 def main() -> None:
+    with run_paths(f"{N_BATCHES}x{BATCH_ROWS}", "out", "ckpt") as paths:
+        _run(paths["corpus"], paths["out"], paths["ckpt"])
+
+
+def _run(src: str, out: str, ckpt: str) -> None:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "8")
 
     from pyspark.sql import functions as F
@@ -41,9 +46,6 @@ def main() -> None:
     spark = bench._build_spark(cpus)
 
     from curies_spark.streaming import start_dedup_stream, streamed_survivors
-
-    shutil.rmtree(BASE, ignore_errors=True)
-    src, out, ckpt = f"{BASE}/src", f"{BASE}/out", f"{BASE}/ckpt"
 
     def tok(r_col, i: int) -> "F.Column":
         return F.sha2(
