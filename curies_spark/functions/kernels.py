@@ -4,14 +4,14 @@ Physical design (see SURVEY.md §3.2-3.3):
 
 - **Expansion / CURIE standardization are JVM-native.** A CURIE splits on
   the first delimiter with ``substring_index``/``locate``, the prefix is
-  standardized through a ``MapType`` literal built from the broadcast
-  converter's synonym-inclusive prefix map, and the URI is a ``concat``.
+  looked up once in a ``MapType`` literal of the broadcast converter's
+  synonym-inclusive prefix map, and the result is a ``concat``.
   Whole-stage codegen keeps the whole path in the JVM — no Python worker.
 - **Compression (longest-prefix URI matching) has no native Spark
-  operator.** For small converters we compile the prefix set into an
-  ordered ``when``-chain of ``startswith`` probes (JVM, codegen'd,
+  operator.** For small converters each URI-prefix op is ONE
+  codegen'd ``CASE WHEN startswith`` chain (:func:`_uri_prefix_chain`),
   longest-first so the longest-prefix-wins guarantee of reference
-  api.py:1762-1769 holds). Past a threshold, we switch to an
+  api.py:1762-1769 holds. Past a threshold, we switch to an
   ``arrow_udf`` running :func:`_prefix_match` against the broadcast
   converter — the ONE length-bucketed probe, which all five large-map
   table sets (compress, standardize-URI, expand, parse-CURIE,
@@ -272,38 +272,40 @@ def expand_all_col(curie: "Column | str", converter) -> Column:
 # ---------------------------------------------------------------------------
 
 
-def _native_pair_from_map(
-    mapping: "dict[str, str]", uri: Column
-) -> "tuple[Column, Column]":
-    """(value, identifier) via an ordered when-chain over the given
-    ``uri_prefix → value`` mapping, longest first — preserves the
-    trie's longest-match guarantee within the mapping. The value is the
-    canonical prefix for :func:`compress_col` and the canonical URI
-    prefix for :func:`standardize_uri_col`."""
+def _longest_first(mapping: "dict[str, str]") -> "list[tuple[str, str]]":
+    """The probe order of every URI-prefix chain, Column and SQL."""
+    return sorted(mapping.items(), key=lambda kv: len(kv[0]), reverse=True)
+
+
+def _uri_prefix_chain(
+    uri: Column, mapping, branch=lambda v, rest: F.concat(F.lit(v), rest), miss_type=StringType()
+) -> Column:
+    """One ``CASE WHEN startswith`` chain over a ``uri_prefix → value``
+    mapping, longest first. A branch is the finished result
+    ``branch(value, substr(uri, len(uri_prefix) + 1))``, by default their
+    concat; no match is a NULL of ``miss_type``, the result's type."""
     # NOTE a "hybrid" (JVM when-chain over the hot prefixes + Arrow
     # fallback for the tail) was measured and REJECTED: a 64-entry
     # codegen'd startsWith chain runs at ~260k rows/s on this host —
     # 3× slower than shipping every row through the Arrow kernel
     # (~800k rows/s at 3 partitions). Long when-chains are the slow
     # path; that is exactly why NATIVE_COMPRESS_THRESHOLD exists.
-    entries = sorted(mapping.items(), key=lambda kv: len(kv[0]), reverse=True)
-    prefix_expr: Column = F.lit(None).cast(StringType())
-    ident_expr: Column = F.lit(None).cast(StringType())
-    # build the chain from the shortest up so the longest ends up outermost
-    for uri_prefix, prefix in reversed(entries):
-        cond = uri.startswith(uri_prefix)
-        prefix_expr = F.when(cond, F.lit(prefix)).otherwise(prefix_expr)
-        ident_expr = F.when(cond, F.substr(uri, F.lit(len(uri_prefix) + 1))).otherwise(
-            ident_expr
-        )
-    return prefix_expr, ident_expr
+    chain = F  # F.when opens the chain, Column.when extends it
+    for uri_prefix, value in _longest_first(mapping):
+        remainder = F.substr(uri, F.lit(len(uri_prefix) + 1))
+        chain = chain.when(uri.startswith(uri_prefix), branch(value, remainder))
+    miss = F.lit(None).cast(miss_type)
+    return miss if chain is F else chain.otherwise(miss)
+
+
+def _curie_heads(conv: Converter) -> "dict[str, str]":
+    """URI prefix (synonyms included) → ``prefix:``, native ``compress``'s chain."""
+    return {uri_prefix: f"{prefix}:" for uri_prefix, prefix in conv.reverse_prefix_map.items()}
 
 
 def _canonical_uri_prefixes(conv: Converter) -> "dict[str, str]":
-    """Every URI prefix (synonyms included) → its record's canonical URI
-    prefix: the compression keys, so the longest match is the same; only
-    the value differs. ``standardize_uri`` is one longest-first probe of
-    this mapping, then a concat with the identifier, on every surface."""
+    """URI prefix (synonyms included) → its record's canonical URI prefix,
+    ``standardize_uri``'s chain and Arrow table: the compression keys."""
     return {
         uri_prefix: record.uri_prefix
         for record in conv.records
@@ -662,10 +664,11 @@ def parse_uri_col(uri: "Column | str", converter) -> Column:
     conv = _broadcast(converter)
     if not _native_uri_prefix_map(conv):
         return _arrow_udf(_parse_uri, converter, PARSE_SCHEMA)(c)
-    prefix_expr, ident_expr = _native_pair_from_map(conv.reverse_prefix_map, c)
-    return F.when(
-        prefix_expr.isNotNull(),
-        F.struct(prefix_expr.alias("prefix"), ident_expr.alias("identifier")),
+    return _uri_prefix_chain(
+        c,
+        conv.reverse_prefix_map,
+        lambda prefix, rest: F.struct(F.lit(prefix).alias("prefix"), rest.alias("identifier")),
+        PARSE_SCHEMA,
     )
 
 
@@ -680,10 +683,7 @@ def compress_col(
     c = _col(uri)
     conv = _broadcast(converter)
     if _native_uri_prefix_map(conv):
-        prefix_expr, ident_expr = _native_pair_from_map(conv.reverse_prefix_map, c)
-        compressed = F.when(
-            prefix_expr.isNotNull(), F.concat(prefix_expr, F.lit(":"), ident_expr)
-        )
+        compressed = _uri_prefix_chain(c, _curie_heads(conv))
     else:
         compressed = _arrow_udf(_compress, converter)(c)
     return F.coalesce(compressed, c) if passthrough else compressed
@@ -730,13 +730,15 @@ def standardize_curie_col(
 ) -> Column:
     """Idempotent CURIE standardization (reference api.py:2298-2343)."""
     c = _col(curie)
-    parsed = parse_curie_col(c, converter)
-    standardized = F.when(
-        parsed.isNotNull(),
-        F.concat(
-            parsed.getField("prefix"), F.lit(":"), parsed.getField("identifier")
-        ),
-    )
+    conv = _broadcast(converter)
+    if _native_prefix_map(conv):
+        pos = F.locate(":", c)
+        # an unknown prefix is NULL, and so is the concat
+        prefix = F.element_at(_map_literal(conv.synonym_to_prefix), F.substring_index(c, ":", 1))
+        standardized = F.when(pos > 0, F.concat(prefix, F.lit(":"), F.substr(c, pos + F.lit(1))))
+    else:
+        parsed = parse_curie_col(c, converter)  # a NULL struct's fields are NULL
+        standardized = format_curie_col(parsed.getField("prefix"), parsed.getField("identifier"))
     return F.coalesce(standardized, c) if passthrough else standardized
 
 
@@ -755,8 +757,7 @@ def standardize_uri_col(
     c = _col(uri)
     conv = _broadcast(converter)
     if _native_uri_prefix_map(conv):
-        canonical, identifier = _native_pair_from_map(_canonical_uri_prefixes(conv), c)
-        standardized = F.when(canonical.isNotNull(), F.concat(canonical, identifier))
+        standardized = _uri_prefix_chain(c, _canonical_uri_prefixes(conv))
     else:
         standardized = _arrow_udf(_standardize_uri, converter)(c)
     return F.coalesce(standardized, c) if passthrough else standardized

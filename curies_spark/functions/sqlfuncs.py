@@ -16,17 +16,20 @@ prefix family):
   like the Column kernels' when-chains / map literals — zero Python at
   execution.
 - **Large maps** (where codegen'd chains are the measured slow path —
-  see ``kernels._native_pair_from_map``) register the Column kernels'
+  see ``kernels._uri_prefix_chain``) register the Column kernels'
   own Arrow UDFs (``kernels._arrow_udf`` over the op's body) via
   ``spark.udf.register``, and the SQL UDF bodies build on top of them
   (Spark resolves nested function calls at analysis).
 
-``standardize_uri`` is, like ``compress``, one longest-first CASE chain
-over a URI-prefix mapping (``kernels._canonical_uri_prefixes``: URI
-prefix → its record's canonical URI prefix), so it never reads the
-prefix map. Composite functions are SQL compositions of the primitives,
-mirroring the kernel compositions (``compress_or_standardize =
-coalesce(compress, standardize_curie)``). Past
+``compress`` and ``standardize_uri`` are each one CASE chain over a
+URI-prefix mapping in ``kernels._longest_first`` order
+(``kernels._curie_heads``: URI prefix → ``prefix:``;
+``kernels._canonical_uri_prefixes``: URI prefix → its record's
+canonical URI prefix), the same expression as the Column kernel, so
+``standardize_uri`` never reads the prefix map. ``standardize_curie``
+calls ``standardize_prefix`` once. Composite functions are SQL
+compositions of the primitives, mirroring the kernel compositions
+(``compress_or_standardize = coalesce(compress, standardize_curie)``). Past
 ``NATIVE_COMPRESS_THRESHOLD`` those two are the fused one-pass kernels
 instead (``kernels._standardize_uri`` /
 ``kernels._compress_or_standardize``), exactly as in the Column API.
@@ -56,15 +59,13 @@ def _map_sql(mapping: "Mapping[str, str]") -> str:
     return f"map({pairs})"
 
 
-def _prefix_case_sql(mapping: "Mapping[str, str]", v: str, sep: str) -> str:
+def _prefix_case_sql(mapping: "Mapping[str, str]", v: str) -> str:
     """Longest-prefix-first CASE chain over a ``uri_prefix → value``
-    mapping, the value joined to the identifier by ``sep`` — the SQL
-    twin of ``kernels._native_pair_from_map``."""
-    entries = sorted(mapping.items(), key=lambda kv: len(kv[0]), reverse=True)
+    mapping, each branch the value concatenated to the remainder — the
+    SQL twin of ``kernels._uri_prefix_chain``, in its order."""
     whens = " ".join(
-        f"WHEN startswith({v}, {_q(up)}) "
-        f"THEN concat({_q(value)}, {_q(sep)}, substr({v}, {len(up) + 1}))"
-        for up, value in entries
+        f"WHEN startswith({v}, {_q(up)}) THEN concat({_q(value)}, substr({v}, {len(up) + 1}))"
+        for up, value in kernels._longest_first(mapping)
     )
     return f"CASE {whens} END" if whens else "CAST(NULL AS STRING)"
 
@@ -87,11 +88,11 @@ def register_sql_functions(
     p = name_prefix
     names: "dict[str, str]" = {}
 
-    def create(op: str, arg_sql: str, body: str) -> None:
+    def create(op: str, arg_sql: str, body: str, returns: str = "STRING") -> None:
         name = f"{p}_{op}"
         spark.sql(
             f"CREATE OR REPLACE TEMPORARY FUNCTION {name}({arg_sql}) "
-            f"RETURNS STRING RETURN {body}"
+            f"RETURNS {returns} RETURN {body}"
         )
         names[op] = name
 
@@ -102,7 +103,7 @@ def register_sql_functions(
     # -- compress: native CASE chain or the Arrow bucketed kernel --------
     native_compress = kernels._native_uri_prefix_map(conv)
     if native_compress:
-        create("compress", "u STRING", _prefix_case_sql(conv.reverse_prefix_map, "u", ":"))
+        create("compress", "u STRING", _prefix_case_sql(kernels._curie_heads(conv), "u"))
     else:
         register("compress", kernels._compress)
 
@@ -131,8 +132,8 @@ def register_sql_functions(
     create(
         "standardize_curie",
         "c STRING",
+        # concat is NULL when the prefix is unknown
         "CASE WHEN locate(':', c) > 0 "
-        f"AND {p}_standardize_prefix(substring_index(c, ':', 1)) IS NOT NULL "
         f"THEN concat({p}_standardize_prefix(substring_index(c, ':', 1)), ':', "
         "substr(c, locate(':', c) + 1)) END",
     )
@@ -140,7 +141,7 @@ def register_sql_functions(
         create(
             "standardize_uri",
             "u STRING",
-            _prefix_case_sql(kernels._canonical_uri_prefixes(conv), "u", ""),
+            _prefix_case_sql(kernels._canonical_uri_prefixes(conv), "u"),
         )
         create("compress_or_standardize", "s STRING",
                f"coalesce({p}_compress(s), {p}_standardize_curie(s))")
@@ -151,13 +152,7 @@ def register_sql_functions(
            f"coalesce({p}_standardize_uri(s), {p}_expand(s))")
     create("format_curie", "pfx STRING, i STRING", "concat(pfx, ':', i)")
 
-    for op, body in (("is_uri", f"{p}_compress(s) IS NOT NULL"),
-                     ("is_curie", f"{p}_expand(s) IS NOT NULL")):
-        name = f"{p}_{op}"
-        spark.sql(
-            f"CREATE OR REPLACE TEMPORARY FUNCTION {name}(s STRING) "
-            f"RETURNS BOOLEAN RETURN {body}"
-        )
-        names[op] = name
+    create("is_uri", "s STRING", f"{p}_compress(s) IS NOT NULL", "BOOLEAN")
+    create("is_curie", "s STRING", f"{p}_expand(s) IS NOT NULL", "BOOLEAN")
 
     return names

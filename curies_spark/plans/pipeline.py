@@ -290,7 +290,8 @@ def _run_shard(
         F.count(F.lit(1)).alias("mentions"),
         F.count("entity").alias("linked_mentions"),
     )
-    linked = linked.cache()
+    # cache only what the two writes read: not each mention's file content
+    linked = linked.select("repo", "path", "commit", "entity").cache()
     try:
         file_edges, edges = observed(build_file_edges(linked), F.count(F.lit(1)).alias("triples"))
         file_edges.write.mode("overwrite").parquet(f"{out}/triples/shard={shard}")

@@ -12,6 +12,8 @@ from pyspark.sql.udf import UDFRegistration
 
 from curies_spark.core import Converter
 from curies_spark.functions import kernels, register_sql_functions
+from curies_spark.plans.demo import demo_converter
+from curies_spark.sources.synthetic import pipeline_converter
 
 FUNCTIONS = Path(kernels.__file__).parent
 
@@ -98,6 +100,41 @@ def test_column_and_sql_surfaces_switch_at_the_same_entry(spark, monkeypatch, fa
     # the SQL surface registers Python UDFs only for the family past its threshold
     assert all(name.startswith(prefix) for name in registered)
     assert bool(registered) is past
+
+
+@pytest.mark.parametrize("make", [pipeline_converter, demo_converter])
+def test_each_native_op_is_one_expression(spark, make):
+    """A native URI-prefix op is one longest-first chain, N ``StartsWith``
+    for N URI prefixes, and a native CURIE standardization one prefix
+    lookup, on both surfaces."""
+    conv = make()
+    assert kernels._native_uri_prefix_map(conv) and kernels._native_prefix_map(conv)
+    n = len(conv.reverse_prefix_map)
+    df = spark.createDataFrame([Row(v="http://a.example.org/1")])
+
+    def analyzed(column):
+        # aliased: an unnamed column's name repeats its expression
+        return df.select(column.alias("o"))._jdf.queryExecution().analyzed().toString()
+
+    for op in (kernels.compress_col, kernels.parse_uri_col, kernels.standardize_uri_col):
+        plan = analyzed(op("v", conv))
+        assert plan.count("StartsWith(") == n, (op.__name__, plan)
+    plan = analyzed(kernels.standardize_curie_col("v", conv))
+    assert plan.count("element_at(") == 1, plan
+    assert df.select(kernels.parse_uri_col("v", conv)).schema[0].dataType == kernels.PARSE_SCHEMA
+
+    names = register_sql_functions(spark, conv, name_prefix=f"shape_{make.__name__}")
+    df.createOrReplaceTempView("kernel_shape_in")
+    # a SQL function's body is inlined into the optimized plan
+    for op, node, count in (
+        ("compress", "StartsWith(", n),
+        ("standardize_uri", "StartsWith(", n),
+        ("standardize_curie", "element_at(", 1),
+    ):
+        sql = spark.sql(f"SELECT {names[op]}(v) AS o FROM kernel_shape_in")
+        plan = sql._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.count(node) == count, (op, plan)
+    assert not hasattr(kernels, "_native_pair_from_map")
 
 
 def _names(tree: ast.Module) -> "set[str]":

@@ -122,10 +122,15 @@ def test_each_edge_family_deduplicated_once(spark, repos, tmp_path):
     dedups their union again: the merge write shuffles once per
     entity-scoped family, ``build_triples`` once per family."""
     store = spark._jsparkSession.sharedState().statusStore()
-    mark = int(store.executionsCount())
+
+    def executions():
+        # by id: the retained count stops at spark.sql.ui.retainedExecutions
+        listed = store.executionsList()
+        return [listed.apply(i) for i in range(listed.size())]
+
+    mark = max((e.executionId() for e in executions()), default=-1)
     run_pipeline(spark, repos, str(tmp_path / "kg"), n_shards=2)
-    executions = store.executionsList(mark, int(store.executionsCount()) - mark)
-    plans = [executions.apply(i).physicalPlanDescription() for i in range(executions.size())]
+    plans = [e.physicalPlanDescription() for e in executions() if e.executionId() > mark]
     merge = [plan for plan in plans if "triples/shard=merge" in plan]
     assert len(merge) == 1, merge
     assert "== Final Plan ==" in merge[0], merge[0]
