@@ -97,19 +97,23 @@ __all__ = [
     "validate_identifier_col",
 ]
 
-#: Above this many URI prefixes the compress kernel switches from a
-#: codegen'd when-chain to the length-bucketed arrow_udf. The when-chain
-#: is O(#prefixes) per row but JVM-side; the arrow_udf is O(#distinct
-#: prefix lengths) batch-level kernels and pays the Python-worker
-#: boundary once per Arrow batch.
-NATIVE_COMPRESS_THRESHOLD = 48
+#: The most URI prefixes (synonyms included) at which the URI-prefix
+#: family stays one codegen'd when-chain; past it, the length-bucketed
+#: arrow_udf. The largest chain whose whole-stage method HotSpot still
+#: compiles (the NOTE in :func:`_uri_prefix_chain`).
+NATIVE_COMPRESS_THRESHOLD = 45
 
-#: Above this many prefix-map entries the expand kernel switches from a
-#: MapType literal (embedded in the plan, constant-folded) to the
-#: bucketed arrow_udf against the broadcast converter. Literal maps
-#: beyond ~10k entries bloat the plan serialization shipped with every
-#: task.
-NATIVE_EXPAND_THRESHOLD = 10_000
+#: The most prefix-map entries (synonyms included) at which the prefix
+#: family stays an ``element_at`` on a MapType literal; past it, the
+#: bucketed arrow_udf against the broadcast converter. ``element_at``
+#: scans the literal's keys on every row, so the native cost grows with
+#: the map. CPU-s per 400k CURIEs, native vs Arrow (``generate_epm``
+#: converters, 4-core host, median of 3 passes after 2 warm ones): 0.75
+#: vs 0.90 at 200 entries, 0.82 vs 1.06 at 300, 0.96 vs 0.85 at 350,
+#: 1.05 vs 0.88 at 400, 2.20 vs 0.84 at 1,000. The plan size of a
+#: literal shipped with every task bounds the native path only far
+#: above this crossover.
+NATIVE_EXPAND_THRESHOLD = 300
 
 PARSE_SCHEMA = StructType(
     [
@@ -236,11 +240,11 @@ def expand_all_col(curie: "Column | str", converter) -> Column:
 
     Native: a ``MapType(string, array<string>)`` literal keyed by every
     prefix+synonym, then ``transform`` concatenates the identifier.
-    Past :data:`NATIVE_EXPAND_THRESHOLD` the map literal would bloat
-    every serialized task, so an ``arrow_udf`` takes over: the same
-    length-bucketed byte-prefix probe as :func:`expand_col`, resolving
-    to a RECORD INDEX instead of a single URI prefix, then a vectorized
-    list fan-out (``np.repeat`` over per-record counts + one
+    Past :data:`NATIVE_EXPAND_THRESHOLD` a per-row scan of the map
+    literal's keys costs more than an ``arrow_udf``, which takes over:
+    the same length-bucketed byte-prefix probe as :func:`expand_col`,
+    resolving to a RECORD INDEX instead of a single URI prefix, then a
+    vectorized list fan-out (``np.repeat`` over per-record counts + one
     element-wise join) builds the result ListArray — no per-row Python.
     """
     c = _col(curie)
@@ -284,12 +288,20 @@ def _uri_prefix_chain(
     mapping, longest first. A branch is the finished result
     ``branch(value, substr(uri, len(uri_prefix) + 1))``, by default their
     concat; no match is a NULL of ``miss_type``, the result's type."""
-    # NOTE a "hybrid" (JVM when-chain over the hot prefixes + Arrow
-    # fallback for the tail) was measured and REJECTED: a 64-entry
-    # codegen'd startsWith chain runs at ~260k rows/s on this host —
-    # 3× slower than shipping every row through the Arrow kernel
-    # (~800k rows/s at 3 partitions). Long when-chains are the slow
-    # path; that is exactly why NATIVE_COMPRESS_THRESHOLD exists.
+    # NOTE a long chain is slow through one JVM limit: HotSpot compiles
+    # no method over 8,000 bytes of bytecode (DontCompileHugeMethods),
+    # and Spark does not split a CASE chain inside whole-stage codegen,
+    # so the chain sits in the stage's one method, which grows ~163
+    # bytes per entry over a parquet scan. Native
+    # compress_or_standardize is 2,862 bytes at 14 URI prefixes, 7,915
+    # at 45 and 8,078 at 46, where it stops being compiled: per 400k
+    # values (4-core host) it costs 0.88 CPU-s at 45 against 1.05 for
+    # the Arrow kernel, and 3.46 at 46 against 1.07. compress alone
+    # (7,856 bytes at 48) crosses later; the threshold is the last size
+    # both fit (tests/test_kernel_choice.py). Two chain ops in one
+    # projection share that method, so together they cross the limit
+    # below the threshold. A "hybrid" (a chain over the hot prefixes,
+    # Arrow for the tail) is the same chain, and was rejected.
     chain = F  # F.when opens the chain, Column.when extends it
     for uri_prefix, value in _longest_first(mapping):
         remainder = F.substr(uri, F.lit(len(uri_prefix) + 1))
@@ -695,8 +707,8 @@ def standardize_prefix_col(
     """Synonym → canonical prefix (reference api.py:2239-2278).
 
     MapType-literal probe for native-sized maps; a broadcast exact-match
-    arrow_udf past :data:`NATIVE_EXPAND_THRESHOLD` (literal maps beyond
-    ~10k entries bloat every serialized task)."""
+    arrow_udf past :data:`NATIVE_EXPAND_THRESHOLD` (the literal's keys
+    are scanned per row)."""
     c = _col(prefix)
     conv = _broadcast(converter)
     if _native_prefix_map(conv):

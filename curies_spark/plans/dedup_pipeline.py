@@ -41,10 +41,9 @@ doc_id set), and ``manifest.json`` with per-stage counts, observed
 staged docs and exact groups on the winners aggregate (narrow staged
 columns, never the text), candidates and verified pairs on the pairs
 write, clustered docs and survivors on their own writes. The staged
-write is the only pass over the text; re-running with the same
-``out_dir`` resumes after staging, gated by ``staged.json`` — the
-staging recipe ``{k, text, id_col}`` the signatures were computed
-with, like the KG pipeline's ``staged.json`` records ``n_shards``.
+write is the only pass over the text, a ``handoff`` stamped
+``staged.json`` with the recipe the signatures depend on,
+``{k, text, id_col}``: a rerun with the same recipe resumes after it.
 """
 
 from __future__ import annotations
@@ -63,7 +62,7 @@ from ..operators.dedup import (
     verify_pairs,
 )
 from ..operators.text import quality_features, quality_score_col
-from .pipeline import observed
+from .pipeline import handoff, observed
 
 __all__ = [
     "band_keys",
@@ -145,22 +144,17 @@ def run_dedup_pipeline(
     resume: bool = True,
 ) -> "dict":
     """Run the full dedup pipeline; returns the manifest dict."""
-    from ..streaming.fsio import fs_delete, fs_read_json, fs_write_json
+    from ..streaming.fsio import fs_write_json
 
     t0 = time.perf_counter()
 
-    staged_path = f"{out_dir}/staged"
-    # the staged signatures depend on the recipe, so another one
-    # restages; the stamp is dropped before a restage and written after
-    # it, so it only ever describes a finished staged write
-    stamp_path, recipe = f"{out_dir}/staged.json", {"k": k, "text": text, "id_col": id_col}
-    if not (resume and fs_read_json(spark, stamp_path) == recipe):
-        fs_delete(spark, stamp_path)
-        stage_documents(docs, text=text, id_col=id_col, k=k).write.mode(
-            "overwrite"
-        ).parquet(staged_path)
-        fs_write_json(spark, stamp_path, recipe)
-    staged = spark.read.parquet(staged_path)
+    staged = handoff(
+        spark,
+        lambda: stage_documents(docs, text=text, id_col=id_col, k=k),
+        f"{out_dir}/staged",
+        stamp=(f"{out_dir}/staged.json", {"k": k, "text": text, "id_col": id_col}),
+        resume=resume,
+    )
 
     rows = F.count(F.lit(1)).alias("n")
     # exact dedup first: one winner per content hash; near-dup stages
@@ -187,15 +181,13 @@ def run_dedup_pipeline(
             ),
             rows,
         )
-        pairs.write.mode("overwrite").parquet(f"{out_dir}/pairs")
         clusters, clusters_n = observed(
-            connected_components(spark.read.parquet(f"{out_dir}/pairs")), rows
+            connected_components(handoff(spark, lambda: pairs, f"{out_dir}/pairs")), rows
         )
-        clusters.write.mode("overwrite").parquet(f"{out_dir}/clusters")
         survivors, survivors_n = observed(
             drop_cluster_losers(
                 staged_winners.select(id_col),
-                spark.read.parquet(f"{out_dir}/clusters"),
+                handoff(spark, lambda: clusters, f"{out_dir}/clusters"),
                 id_col=id_col,
             ),
             rows,

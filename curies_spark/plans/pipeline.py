@@ -13,14 +13,20 @@ materialization of a deduplicated (subject, predicate, object) graph:
 Scale design:
 - Everything is native Spark SQL (regexp / explode / broadcast maps);
   the only potential Python is the compress kernel's large-map path.
-- The job is **sharded and checkpoint-resumable**: a one-pass staging
-  write materializes the shard hash as a partition column
-  (``_staged/_shard=K/``), so the source is scanned ONCE for the whole
-  job and every shard read prunes to its own files; each shard then
-  writes its triples partition and a lineage manifest (input rows,
-  sha256 rollup, per-stage counts). On restart, shards with manifests
-  are skipped. On Iceberg at 10^12 files the staging pass is the
-  ``bucket(N, …)`` partition transform at ingest.
+- The job is **sharded and checkpoint-resumable**: one staging pass (a
+  :func:`handoff` stamped with ``n_shards``) materializes the shard hash
+  as a partition column (``_staged/_shard=K/``). The hash is a computed
+  expression no format can push down, so filtering the source on it
+  would rescan the source per shard; instead it is scanned ONCE and
+  each shard's filter of the staged frame prunes to its own files. Each
+  shard writes its triples partition and a lineage manifest (input
+  rows, sha256 rollup, per-stage counts). On restart, shards with
+  manifests are skipped and a matching stamp reuses the staged copy:
+  **snapshot semantics**, so recomputed shards derive from the same
+  input as the manifests they join (for changed input use a fresh
+  ``out_dir`` or ``resume=False``; :func:`validate_content_invariant`
+  detects drift after the fact). On Iceberg at 10^12 files the staging
+  pass is the ``bucket(N, …)`` partition transform at ingest.
 - Manifest counts are observed (:func:`observed`) on frames the writes
   consume anyway — input rows and sha rollup on the shard's staged rows,
   (linked) mentions on the linked frame, triples on the written edges.
@@ -42,6 +48,7 @@ from typing import Callable
 
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 from ..core.converter import Converter
 from ..functions import kernels
@@ -70,8 +77,14 @@ CURIE_MENTION_RE = r"[A-Za-z_][A-Za-z0-9._-]*:[A-Za-z0-9][A-Za-z0-9._/-]*"
 #: Single-pass scan: URI alternative first, so a URI consumes its span
 #: before the CURIE alternative can fire inside it (leftmost-first
 #: alternation) — equivalent to extract-URIs-then-mask-then-extract-CURIEs
-#: but one regex pass over content instead of three.
+#: but one regex pass over content instead of three. RE2 runs this form.
 MENTION_RE = f"(?:{URI_MENTION_RE})|(?:{CURIE_MENTION_RE})"
+
+#: :data:`MENTION_RE`'s matches, which Java scans without backtracking:
+#: a possessive run stops only where the match cannot continue, and a
+#: CURIE starting after ``[A-Za-z_]`` would start one character earlier
+#: (no match ends before ``[A-Za-z_]``). RE2 has neither construct.
+JVM_MENTION_RE = f"{URI_MENTION_RE}+|(?<![A-Za-z_]){CURIE_MENTION_RE.replace('*', '*+')}"
 
 
 def extract_mentions(df: DataFrame, *, content: str = "content") -> DataFrame:
@@ -83,7 +96,7 @@ def extract_mentions(df: DataFrame, *, content: str = "content") -> DataFrame:
     — no Python, fully pipelined with the scan.
     """
     c = F.col(content)
-    mentions = F.regexp_extract_all(c, F.lit(MENTION_RE), F.lit(0))
+    mentions = F.regexp_extract_all(c, F.lit(JVM_MENTION_RE), F.lit(0))
     return df.withColumn("mention", F.explode(mentions))
 
 
@@ -213,58 +226,54 @@ def observed(df: DataFrame, *metrics) -> "tuple[DataFrame, Callable[[], dict]]":
     return df.observe(obs, *metrics), read
 
 
+def handoff(
+    spark: SparkSession,
+    stage: "Callable[[], DataFrame]",
+    path: str,
+    *,
+    partition_by: "tuple[str, ...]" = (),
+    stamp: "tuple[str, dict] | None" = None,
+    resume: bool = False,
+) -> DataFrame:
+    """Write the pipeline stage ``stage()`` as parquet at ``path`` and
+    return it read back with the frame's own schema, so the next stage's
+    read runs no schema-inference job.
+
+    ``stamp`` is ``(stamp_path, recipe)``: dropped before the write and
+    written after it, so it only ever vouches for a finished write. With
+    ``resume``, a stamp holding the same recipe skips the write without
+    building the stage: the schema is then the one written in its
+    footers (the frame's if a partitioned stage of no rows wrote none)."""
+    from ..streaming.fsio import fs_delete, fs_parquet_schema, fs_read_json, fs_write_json
+
+    if resume and stamp and fs_read_json(spark, stamp[0]) == stamp[1]:
+        schema = fs_parquet_schema(spark, path) or stage().schema
+    else:
+        if stamp:
+            fs_delete(spark, stamp[0])
+        df = stage()
+        df.write.mode("overwrite").partitionBy(*partition_by).parquet(path)
+        if stamp:
+            fs_write_json(spark, stamp[0], stamp[1])
+        schema = df.schema
+    return spark.read.schema(schema).parquet(path)
+
+
+#: the ``_entities/shard=K`` side output: written by each shard, read by
+#: a merge that may follow shards of an earlier run
+_ENTITIES_SCHEMA = StructType().add("repo", "string").add("entity", "string")
+
+#: shard jobs at once on driver threads, so the cluster never idles
+#: between a shard's stages; a crash loses at most these in-flight shards
+_SHARD_THREADS = 2
+
+
 def _shard_col(n_shards: int):
     return F.pmod(F.xxhash64(F.col("repo"), F.col("path"), F.col("commit")), F.lit(n_shards))
 
 
-def _stage_shards(
-    spark: SparkSession, repos: DataFrame, out: str, n_shards: int, *, resume: bool
-) -> str:
-    """Stage 0: ONE full pass over the source materializes the shard id
-    as a *partition* column (``{out}/_staged/_shard=K/``).
-
-    The shard id is ``pmod(xxhash64(repo, path, commit))`` — a computed
-    expression no format can push down, so filtering the raw source on it
-    would rescan all 100 TB once per shard (n_shards full scans). After
-    this single staging write, each shard's read is a partition-directory
-    prune: the source is scanned exactly once for the whole job. On
-    Iceberg the same effect comes from a ``bucket(N, repo)``-style
-    partition transform at ingest; partitioned parquet is this
-    container's stand-in (no Iceberg jars). The staged copy doubles
-    storage until the job finishes and can be dropped afterwards — it is
-    also what makes resume cheap (recomputed shards re-read only their
-    own files).
-
-    **Resume semantics are snapshot semantics**: with ``resume=True`` a
-    matching marker reuses the existing staged copy, so recomputed
-    shards derive from the SAME input snapshot as the shards whose
-    manifests they join — mixing a changed input with old manifests
-    would silently produce inconsistent totals (and the pre-staging
-    design did exactly that). For changed input, use a fresh
-    ``out_dir`` or ``resume=False``; ``validate_content_invariant``
-    against the new source detects drift after the fact.
-    """
-    from ..streaming.fsio import fs_delete, fs_read_json, fs_write_json
-
-    staged = f"{out}/_staged"
-    marker = f"{out}/_manifests/staged.json"
-    if resume and fs_read_json(spark, marker) == {"n_shards": n_shards}:
-        return staged
-    # the marker describes only a finished staged write: a restage that
-    # dies must not leave the previous marker vouching for its output
-    fs_delete(spark, marker)
-    (
-        repos.withColumn("_shard", _shard_col(n_shards))
-        .write.mode("overwrite")
-        .partitionBy("_shard")
-        .parquet(staged)
-    )
-    fs_write_json(spark, marker, {"n_shards": n_shards})
-    return staged
-
-
 def _run_shard(
-    spark: SparkSession, staged_path: str, out: str, bc, shard: int, n_shards: int
+    spark: SparkSession, staged: DataFrame, out: str, bc, shard: int, n_shards: int
 ) -> dict:
     """One shard's map phase: mentions → linking → file edges + entity
     side-output, finished by an atomic manifest write (the checkpoint
@@ -279,9 +288,8 @@ def _run_shard(
     t0 = time.perf_counter()
     # _shard is a partition column: this filter prunes to the shard's
     # own files (PartitionFilters), reading 1/n_shards of the data
-    staged = spark.read.parquet(staged_path).filter(F.col("_shard") == shard)
     shard_df, stats = observed(
-        staged.drop("_shard"),
+        staged.filter(F.col("_shard") == shard).drop("_shard"),
         F.count(F.lit(1)).alias("input_rows"),
         sha256_rollup().alias("content_sha_rollup"),
     )
@@ -298,7 +306,7 @@ def _run_shard(
         # side output for the merge phase: this shard's (repo, entity) set
         (
             linked.filter(F.col("entity").isNotNull())
-            .select("repo", "entity")
+            .select(*_ENTITIES_SCHEMA.fieldNames())
             .distinct()
             .write.mode("overwrite")
             .parquet(f"{out}/_entities/shard={shard}")
@@ -328,7 +336,6 @@ def run_pipeline(
     converter: "Converter | None" = None,
     n_shards: int = 8,
     resume: bool = True,
-    max_concurrent_shards: int = 2,
 ) -> dict:
     """Run the sharded, resumable KG-construction job.
 
@@ -336,12 +343,6 @@ def run_pipeline(
     ``{out_dir}/_manifests/shard-K.json`` lineage manifests; returns the
     aggregate metrics dict. With ``resume=True``, shards whose manifest
     already exists are skipped (checkpoint resume after a failure).
-
-    ``max_concurrent_shards`` shard jobs are submitted from driver
-    threads so the cluster never idles between a shard's stages
-    (SparkContext is thread-safe; the scheduler interleaves the jobs'
-    stages). Shard granularity stays the checkpoint unit — a crash
-    loses at most the in-flight shards.
     """
     from concurrent.futures import ThreadPoolExecutor
 
@@ -387,12 +388,17 @@ def run_pipeline(
             pending.append(shard)
 
     if pending:
-        staged_path = _stage_shards(spark, repos, out_dir, n_shards, resume=resume)
-        with ThreadPoolExecutor(max_workers=max(1, max_concurrent_shards)) as pool:
+        staged = handoff(
+            spark,
+            lambda: repos.withColumn("_shard", _shard_col(n_shards)),
+            f"{out_dir}/_staged",
+            partition_by=("_shard",),
+            stamp=(f"{manifest_dir}/staged.json", {"n_shards": n_shards}),
+            resume=resume,
+        )
+        with ThreadPoolExecutor(max_workers=_SHARD_THREADS) as pool:
             futures = {
-                shard: pool.submit(
-                    _run_shard, spark, staged_path, out_dir, bc, shard, n_shards
-                )
+                shard: pool.submit(_run_shard, spark, staged, out_dir, bc, shard, n_shards)
                 for shard in pending
             }
             # each shard persists its own manifest on success; one
@@ -411,7 +417,8 @@ def run_pipeline(
     if merge_manifest is None:
         t0 = time.perf_counter()
         # the shards' side outputs overlap; build_entity_edges dedups
-        entity_edges = build_entity_edges(spark.read.parquet(f"{out_dir}/_entities"), bc)
+        entities = spark.read.schema(_ENTITIES_SCHEMA).parquet(f"{out_dir}/_entities")
+        entity_edges = build_entity_edges(entities, bc)
         entity_edges, edges = observed(entity_edges, F.count(F.lit(1)).alias("triples"))
         entity_edges.write.mode("overwrite").parquet(f"{out_dir}/triples/shard=merge")
         merge_manifest = {

@@ -1,5 +1,6 @@
 """Hadoop FileSystem helpers for persisted state: partition
-directories and small JSON state files, on ANY Hadoop filesystem.
+directories, small JSON state files and the schema in a parquet
+footer, on ANY Hadoop filesystem.
 
 Partition stores list committed ``batch=N`` dirs, fold them into
 ``compact=M`` dirs and delete superseded ones. Everything goes through
@@ -35,11 +36,13 @@ import json
 
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import SparkSession
+from pyspark.sql.types import StructType
 
 __all__ = [
     "fs_delete",
     "fs_exists",
     "fs_list",
+    "fs_parquet_schema",
     "fs_read_json",
     "fs_read_text",
     "fs_write_json",
@@ -82,6 +85,27 @@ def fs_list(spark: SparkSession, root: str, pattern: str) -> "list[str]":
     """Sorted names of the children of ``root`` matching the glob
     ``pattern``; ``[]`` when ``root`` does not exist."""
     return sorted(st.getPath().getName() for st in _glob(spark, f"{root}/{pattern}"))
+
+
+def fs_parquet_schema(spark: SparkSession, path: str) -> "StructType | None":
+    """The Spark schema its writer recorded in the footer of the first
+    parquet file under ``path`` (partition columns are not in it), or
+    None when there is no such file. Read on the driver: no Spark job."""
+    fs, jp = _fs_and_path(spark, path)
+    files = fs.listFiles(jp, True)
+    while files.hasNext():
+        status = files.next()
+        name = status.getPath().getName()
+        if name.endswith(".parquet") and not name.startswith((".", "_")):
+            parquet = spark._jvm.org.apache.parquet.hadoop
+            conf = spark._jsc.hadoopConfiguration()
+            reader = parquet.ParquetFileReader.open(parquet.util.HadoopInputFile.fromStatus(status, conf))
+            try:
+                meta = reader.getFileMetaData().getKeyValueMetaData()
+            finally:
+                reader.close()
+            return StructType.fromJson(json.loads(meta.get("org.apache.spark.sql.parquet.row.metadata")))
+    return None
 
 
 def fs_exists(spark: SparkSession, path: str) -> bool:

@@ -10,8 +10,9 @@
 - ``kg_write_fails`` / ``dedup_write_fails``: one write of each pipeline
   raises. Reports whether the session caches nothing before and after.
 
-``kg_counts`` and ``dedup_counts`` are the independent counts, shared
-with tests/test_pipeline.py and tests/test_dedup_pipeline.py.
+``kg_counts`` and ``dedup_counts`` are the independent counts, and
+``spark_jobs`` the job counter, shared with tests/test_pipeline.py and
+tests/test_dedup_pipeline.py.
 """
 
 import json
@@ -68,6 +69,15 @@ def dedup_counts(spark, docs, out, *, id_col="doc_id"):
         "clustered_docs": spark.read.parquet(f"{out}/clusters").count(),
         "survivors": spark.read.parquet(f"{out}/survivors").count(),
     }
+
+
+def spark_jobs(spark, run) -> int:
+    """How many Spark jobs ``run()`` launches, on any thread, read from
+    the status tracker (the pipelines set no job group)."""
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    run()
+    return len(set(tracker.getJobIdsForGroup(None)) - before)
 
 
 def _first_attempt_fails(marks: str):

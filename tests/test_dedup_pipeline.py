@@ -11,7 +11,7 @@ import pytest
 from pyspark.sql import Row, functions as F
 
 from curies_spark.plans import dedup_pipeline as P
-from pipeline_faults import dedup_counts
+from pipeline_faults import dedup_counts, spark_jobs
 
 
 @pytest.fixture()
@@ -281,3 +281,12 @@ def test_uri_out_dir_keeps_state_under_it(spark, corpus, tmp_path, monkeypatch):
     monkeypatch.setattr(P, "stage_documents", boom)
     again = P.run_dedup_pipeline(spark, corpus, f"file://{target}")
     assert again["survivors"] == first["survivors"]
+
+
+def test_stage_reads_run_no_inference_job(spark, corpus, tmp_path):
+    """``staged``, ``pairs`` and ``clusters`` are each read back with the
+    schema they were written with: a run launches 33 jobs, three fewer
+    than with a schema-inference job per read."""
+    out = str(tmp_path / "jobs")
+    jobs = spark_jobs(spark, lambda: P.run_dedup_pipeline(spark, corpus, out, min_est_jaccard=0.4))
+    assert jobs == 33

@@ -4,6 +4,7 @@ functions stay in the JVM, one entry past it both run the one Arrow UDF
 of ``kernels._arrow_udf``."""
 
 import ast
+import re
 from pathlib import Path
 
 import pytest
@@ -135,6 +136,24 @@ def test_each_native_op_is_one_expression(spark, make):
         plan = sql._jdf.queryExecution().optimizedPlan().toString()
         assert plan.count(node) == count, (op, plan)
     assert not hasattr(kernels, "_native_pair_from_map")
+
+
+def test_native_chain_at_the_threshold_fits_a_compiled_method(spark, tmp_path):
+    """HotSpot compiles no method over 8,000 bytes of bytecode, and a
+    native URI-prefix chain sits whole in its stage's method: over a
+    parquet scan, ``compress_or_standardize`` (the largest op of the
+    family) at ``NATIVE_COMPRESS_THRESHOLD`` URI prefixes still fits."""
+    n = kernels.NATIVE_COMPRESS_THRESHOLD
+    conv = Converter.from_extended_prefix_map(
+        [{"prefix": f"p{i}", "uri_prefix": f"http://vocab{i}.example.org/term/"} for i in range(n)]
+    )
+    assert len(conv.reverse_prefix_map) == n and kernels._native_uri_prefix_map(conv)
+    path = str(tmp_path / "values")
+    spark.createDataFrame([Row(v="http://vocab1.example.org/term/1")]).write.parquet(path)
+    df = spark.read.parquet(path).select(kernels.compress_or_standardize_col("v", conv))
+    codegen = spark._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "codegen")
+    sizes = [int(size) for size in re.findall(r"maxMethodCodeSize:(\d+)", codegen)]
+    assert sizes and max(sizes) < 8000, sizes
 
 
 def _names(tree: ast.Module) -> "set[str]":

@@ -1,6 +1,7 @@
 """End-to-end tests for the KG-construction pipeline."""
 
 import json
+import random
 import re
 from pathlib import Path
 
@@ -9,15 +10,18 @@ from pyspark.sql import functions as F
 
 from curies_spark.core import Converter
 from curies_spark.plans.pipeline import (
+    JVM_MENTION_RE,
+    MENTION_RE,
     build_triples,
     extract_mentions,
+    handoff,
     link_mentions,
     run_pipeline,
     validate_content_invariant,
 )
 from curies_spark.sources.synthetic import PIPELINE_EPM, generate_repos, pipeline_converter
 from curies_spark.streaming import fsio
-from pipeline_faults import kg_counts
+from pipeline_faults import kg_counts, spark_jobs
 
 
 @pytest.fixture(scope="module")
@@ -51,6 +55,59 @@ def test_mention_extraction_no_double_count(spark):
         r["mention"] for r in extract_mentions(df).select("mention").collect()
     )
     assert mentions == ["GO:0001", "https://identifiers.org/chebi:42"]
+
+
+#: strings where the two mention patterns could part: a URI scheme glued
+#: to a word, a CURIE prefix after a digit, chained colons, a leading
+#: underscore, a colon inside a URI, Unicode separators, nothing
+ADVERSARIAL = [
+    "xhttp://a.b",
+    "9abc:def",
+    "a:b:c",
+    "_x:1",
+    "http://x/a:b",
+    "see\u00a0GO:1\u2028pmid:2\u00a0https://a.b/c:d",
+    "",
+]
+
+
+def _random_texts(n: int) -> "list[str]":
+    """Seeded strings over the characters the two patterns treat apart."""
+    rng = random.Random(7)
+    pieces = [*"aZ_9:/.-x ", "http://", "https://", "h", '"', "(", "\u00a0", "\u2028"]
+    return ["".join(rng.choice(pieces) for _ in range(rng.randint(0, 24))) for _ in range(n)]
+
+
+def test_mention_patterns_match_alike():
+    """``extract_mentions``' Java pattern finds exactly the portable
+    pattern's matches (Python ``re`` has both the possessive runs and
+    the lookbehind)."""
+    portable, jvm = re.compile(MENTION_RE), re.compile(JVM_MENTION_RE)
+    assert jvm.findall("xhttp://a.b") == ["http://a.b"]
+    assert jvm.findall("9abc:def") == ["abc:def"]
+    for text in ADVERSARIAL + _random_texts(20_000):
+        assert jvm.findall(text) == portable.findall(text), text
+
+
+def test_mention_patterns_match_alike_in_spark(spark):
+    """The same equality under Java's regex, over the generated corpus
+    with each adversarial string appended to its files, and the seeded
+    strings."""
+    files = generate_repos(spark, 500, partitions=2).select(
+        F.explode(F.array(*[F.concat("content", F.lit(t)) for t in ADVERSARIAL])).alias("content")
+    )
+    texts = spark.createDataFrame([(t,) for t in _random_texts(2_000)], "content string")
+    corpus = files.unionByName(texts)
+
+    def matches(pattern):
+        return F.regexp_extract_all("content", F.lit(pattern), F.lit(0))
+
+    found = corpus.select(matches(MENTION_RE).alias("a"), matches(JVM_MENTION_RE).alias("b"))
+    totals = found.select(
+        F.count_if(F.col("a") != F.col("b")).alias("differ"),
+        F.sum(F.size("a")).alias("matches"),
+    ).first()
+    assert totals["differ"] == 0 and totals["matches"] > 2_000, totals
 
 
 def test_linking_and_canonicalization(spark):
@@ -351,3 +408,52 @@ def test_crash_in_restage_does_not_trust_old_marker(spark, repos, tmp_path):
     assert totals["resumed_shards"] == 0
     for key in ("input_rows", "mentions", "linked_mentions", "triples"):
         assert totals[key] == clean[key], key
+
+
+def test_handoff_reads_back_the_written_schema(spark, tmp_path):
+    """A handoff costs its write alone: the read back runs no job and
+    has the frame's schema and rows. A resumed stamp of the same recipe
+    skips the write without building the stage; the schema then comes
+    from the written footers."""
+    df = spark.createDataFrame([(1, "a", [2, 3])], "id long, s string, xs array<int>")
+    path, stamp = str(tmp_path / "stage"), (str(tmp_path / "stage.json"), {"v": 1})
+    built = []
+
+    def stage():
+        built.append(df)
+        return df
+
+    for resume, jobs in ((False, 1), (True, 0)):
+        back = []
+        launched = spark_jobs(
+            spark, lambda: back.append(handoff(spark, stage, path, stamp=stamp, resume=resume))
+        )
+        assert (launched, len(built)) == (jobs, 1), resume
+        assert back[0].schema == df.schema
+        assert back[0].collect() == df.collect()
+    assert json.loads((tmp_path / "stage.json").read_text()) == {"v": 1}
+
+
+def test_stage_reads_run_no_inference_job(spark, repos, tmp_path):
+    """Each shard reads the one staged frame and the merge reads
+    ``_entities`` with its declared schema, so no read runs a
+    schema-inference job: a fresh 2-shard run launches 14 jobs and a
+    one-shard resume 8 (17 and 10 with the three and two inferred
+    reads)."""
+    repos.count()
+    out = str(tmp_path / "kg_jobs")
+    fresh = spark_jobs(spark, lambda: run_pipeline(spark, repos, out, n_shards=2))
+    (Path(out) / "_manifests" / "shard-1.json").unlink()
+    resumed = spark_jobs(spark, lambda: run_pipeline(spark, repos, out, n_shards=2))
+    assert (fresh, resumed) == (14, 8)
+
+
+def test_empty_source_runs_and_resumes(spark, repos, tmp_path):
+    """A source with no rows stages no file: the shards still read the
+    staged frame with its schema, fresh and on a resume that finds the
+    stamp (no footer to take it from), and every count is zero."""
+    out = str(tmp_path / "kg_empty")
+    for resumed in (0, 1):
+        totals = run_pipeline(spark, repos.limit(0), out, n_shards=2)
+        assert (totals["resumed_shards"], totals["input_rows"], totals["triples"]) == (resumed, 0, 0)
+        (Path(out) / "_manifests" / "shard-1.json").unlink()

@@ -53,20 +53,30 @@ def _run(n_files: int, corpus: str, out: str) -> None:
 
     source_bytes = harness.dir_stats(corpus)[1]
 
-    from curies_spark.plans.pipeline import _stage_shards
+    from curies_spark.plans.pipeline import _shard_col, handoff
 
     t0 = time.perf_counter()
     mark = sql.mark()
     # run the staging pass separately so its scan bytes are attributable:
-    # this is the ONLY read of the raw source in the whole job
-    _stage_shards(spark, repos, out, 8, resume=False)
+    # this is the ONLY read of the raw source in the whole job. The same
+    # stage and stamp run_pipeline writes, so run_pipeline resumes it
+    handoff(
+        spark,
+        lambda: repos.withColumn("_shard", _shard_col(8)),
+        f"{out}/_staged",
+        partition_by=("_shard",),
+        stamp=(f"{out}/_manifests/staged.json", {"n_shards": 8}),
+    )
     staging_scan = _scanned_bytes(mark)
+    stamp = os.path.join(out, "_manifests", "staged.json")
+    staged_at = os.stat(stamp).st_mtime_ns
     mark = sql.mark()
-    # resumes the staging marker; shard + merge phases read only the
+    # resumes the staging stamp; shard + merge phases read only the
     # staged copy (partition-pruned per shard) and the job's own outputs
     totals = run_pipeline(spark, repos, out, n_shards=8)
     wall = time.perf_counter() - t0
     shard_phase_scan = _scanned_bytes(mark)
+    assert os.stat(stamp).st_mtime_ns == staged_at, "run_pipeline restaged"
     staged_bytes = harness.dir_stats(os.path.join(out, "_staged"))[1]
     # the pre-staging design scanned the raw source once per shard:
     # (1 + n_shards) x source = 9x here
