@@ -22,11 +22,12 @@ Physical design (see SURVEY.md §3.2-3.3):
   output string is built once, from the hit rows. When a strided
   sample of the Arrow batch repeats values, :func:`_per_distinct`
   probes the batch's dictionary instead and takes the result back to
-  row order. On that path ``compress``, ``standardize_uri`` and
-  ``compress_or_standardize`` are each ONE arrow_udf that returns the
-  finished string: no struct crosses back to the JVM and no map
-  literal is probed after the UDF. In-kernel, one core of a 4-core
-  microVM runs the three ops' bodies at 3.2–4.0M conversions per
+  row order. On that path ``compress``, ``standardize_uri``,
+  ``standardize_curie`` and ``compress_or_standardize`` are each ONE
+  arrow_udf that returns the finished string: no struct crosses back to
+  the JVM and no map literal is probed after the UDF. In-kernel, one
+  core of a 4-core microVM runs the ``compress``, ``standardize_uri``
+  and ``compress_or_standardize`` bodies at 3.2–4.0M conversions per
   CPU-second on 64k-row batches that are ~45% distinct (the
   ``canon_large_epm`` mix) and 2.5–3.4M on all-distinct batches.
 
@@ -47,6 +48,10 @@ Each choice is made in one place:
 - **The lookup tables**: :data:`_TABLE_BUILDERS` names every table set
   the bodies read; :func:`_tables` builds each once per Python worker,
   on its first batch, and caches it in one dict on the converter.
+- **The SQL text**: a native SQL function's body is its Column
+  kernel's analyzed expression, rendered by Catalyst
+  (:func:`~curies_spark.functions.sqlfuncs.register_sql_functions`), so
+  an op is written once, here, for both surfaces.
 
 Strictness mapping (reference api.py:1732-1778 etc.):
 - default    → miss = NULL
@@ -647,6 +652,13 @@ def _parse_curie(arr, conv):
     return _parsed_match(arr, _tables(conv, "parse_curie"))
 
 
+def _standardize_curie(arr, conv):
+    """CURIE → CURIE under its record's canonical prefix: one probe of
+    the ``prefix:`` synonym tables, joined with the identifier in the
+    batch, so the finished CURIE is what crosses back to the JVM."""
+    return _joined_match(arr, _tables(conv, "parse_curie"), ":")
+
+
 def _standardize_prefix(arr, conv):
     """Prefix or synonym → canonical prefix: a whole-string exact lookup,
     the large-map twin of a MapType-literal ``element_at``."""
@@ -740,7 +752,11 @@ def parse_curie_col(curie: "Column | str", converter) -> Column:
 def standardize_curie_col(
     curie: "Column | str", converter, *, passthrough: bool = False
 ) -> Column:
-    """Idempotent CURIE standardization (reference api.py:2298-2343)."""
+    """Idempotent CURIE standardization (reference api.py:2298-2343).
+
+    Native: one ``element_at`` of the synonym map, then a ``concat``.
+    Large maps: :func:`_standardize_curie`, one Arrow pass that returns
+    the finished CURIE."""
     c = _col(curie)
     conv = _broadcast(converter)
     if _native_prefix_map(conv):
@@ -749,8 +765,7 @@ def standardize_curie_col(
         prefix = F.element_at(_map_literal(conv.synonym_to_prefix), F.substring_index(c, ":", 1))
         standardized = F.when(pos > 0, F.concat(prefix, F.lit(":"), F.substr(c, pos + F.lit(1))))
     else:
-        parsed = parse_curie_col(c, converter)  # a NULL struct's fields are NULL
-        standardized = format_curie_col(parsed.getField("prefix"), parsed.getField("identifier"))
+        standardized = _arrow_udf(_standardize_curie, converter)(c)
     return F.coalesce(standardized, c) if passthrough else standardized
 
 

@@ -4,70 +4,60 @@ who live in SQL rather than the DataFrame API.
 
 The reference has no SQL surface (its closest analogue is the pandas
 ``pd_*`` helpers, reference dataframe.py); this is the Spark-native
-completion of that idea. The registered functions are the SAME
-measured kernels as the Column API (:mod:`curies_spark.functions.kernels`),
-picked by the same two predicates (``kernels._native_uri_prefix_map``
-for the URI-prefix family, ``kernels._native_prefix_map`` for the
-prefix family):
+completion of that idea. Each SQL primitive IS its Column kernel
+(:mod:`curies_spark.functions.kernels`), in the form the kernel's map
+family takes (``kernels._native_uri_prefix_map`` for ``compress`` and
+``standardize_uri``, ``kernels._native_prefix_map`` for ``expand``,
+``standardize_prefix`` and ``standardize_curie``):
 
-- **Native-sized maps** become ``CREATE OR REPLACE TEMPORARY FUNCTION
-  … RETURNS STRING RETURN <expr>`` SQL UDFs. Catalyst inlines the body
-  at analysis time, so calls run inside whole-stage codegen exactly
-  like the Column kernels' when-chains / map literals — zero Python at
-  execution.
-- **Large maps** (where codegen'd chains are the measured slow path —
-  see ``kernels._uri_prefix_chain``) register the Column kernels'
-  own Arrow UDFs (``kernels._arrow_udf`` over the op's body) via
-  ``spark.udf.register``, and the SQL UDF bodies build on top of them
-  (Spark resolves nested function calls at analysis).
+- **Native-sized maps**: the kernel's analyzed expression, as Catalyst
+  renders it to SQL, is the body of a ``CREATE OR REPLACE TEMPORARY
+  FUNCTION … RETURNS STRING RETURN <expr>`` SQL UDF. Catalyst inlines
+  the body at analysis time, so a call is the Column kernel's own
+  expression, run inside whole-stage codegen with no Python.
+- **Large maps**: the kernel's own Arrow UDF (``kernels._arrow_udf``
+  over the op's body), registered by name.
 
-``compress`` and ``standardize_uri`` are each one CASE chain over a
-URI-prefix mapping in ``kernels._longest_first`` order
-(``kernels._curie_heads``: URI prefix → ``prefix:``;
-``kernels._canonical_uri_prefixes``: URI prefix → its record's
-canonical URI prefix), the same expression as the Column kernel, so
-``standardize_uri`` never reads the prefix map. ``standardize_curie``
-calls ``standardize_prefix`` once. Composite functions are SQL
-compositions of the primitives, mirroring the kernel compositions
-(``compress_or_standardize = coalesce(compress, standardize_curie)``). Past
-``NATIVE_COMPRESS_THRESHOLD`` those two are the fused one-pass kernels
-instead (``kernels._standardize_uri`` /
-``kernels._compress_or_standardize``), exactly as in the Column API.
+The composite functions are SQL compositions of the primitives by
+name, as the Column kernels compose (``expand_or_standardize =
+coalesce(standardize_uri, expand)``). Past ``NATIVE_COMPRESS_THRESHOLD``
+``compress_or_standardize`` is the fused one-pass Arrow kernel
+(``kernels._compress_or_standardize``), exactly as in the Column API.
 All functions are session-scoped temporaries: re-registering (e.g.
 after :meth:`SparkConverter.rebroadcast`) replaces them.
 """
 
 from __future__ import annotations
 
-from typing import Any, Mapping
+from typing import Any
 
 from . import kernels
 
 __all__ = ["register_sql_functions"]
 
+#: SQL primitive → (its Column kernel, its large-map Arrow body, the
+#: native-or-Arrow predicate of its map family)
+_PRIMITIVES = {
+    "compress": (kernels.compress_col, kernels._compress, kernels._native_uri_prefix_map),
+    "standardize_uri": (
+        kernels.standardize_uri_col, kernels._standardize_uri, kernels._native_uri_prefix_map
+    ),
+    "expand": (kernels.expand_col, kernels._expand, kernels._native_prefix_map),
+    "standardize_prefix": (
+        kernels.standardize_prefix_col, kernels._standardize_prefix, kernels._native_prefix_map
+    ),
+    "standardize_curie": (
+        kernels.standardize_curie_col, kernels._standardize_curie, kernels._native_prefix_map
+    ),
+}
 
-def _q(s: str) -> str:
-    """Spark SQL single-quoted string literal (backslash is an escape
-    character in Spark SQL, unlike ANSI)."""
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
-
-def _map_sql(mapping: "Mapping[str, str]") -> str:
-    if not mapping:
-        return "map()"
-    pairs = ", ".join(f"{_q(k)}, {_q(v)}" for k, v in mapping.items())
-    return f"map({pairs})"
-
-
-def _prefix_case_sql(mapping: "Mapping[str, str]", v: str) -> str:
-    """Longest-prefix-first CASE chain over a ``uri_prefix → value``
-    mapping, each branch the value concatenated to the remainder — the
-    SQL twin of ``kernels._uri_prefix_chain``, in its order."""
-    whens = " ".join(
-        f"WHEN startswith({v}, {_q(up)}) THEN concat({_q(value)}, substr({v}, {len(up) + 1}))"
-        for up, value in kernels._longest_first(mapping)
-    )
-    return f"CASE {whens} END" if whens else "CAST(NULL AS STRING)"
+def _rendered(spark: Any, column: Any, schema: str) -> str:
+    """SQL text of ``column`` over an empty frame of ``schema``: its
+    analyzed expression as Catalyst prints it (literals quoted and
+    escaped by Spark itself)."""
+    df = spark.createDataFrame([], schema).select(column.alias("o"))
+    return df._jdf.queryExecution().analyzed().expressions().head().child().sql()
 
 
 def register_sql_functions(
@@ -88,71 +78,34 @@ def register_sql_functions(
     p = name_prefix
     names: "dict[str, str]" = {}
 
-    def create(op: str, arg_sql: str, body: str, returns: str = "STRING") -> None:
-        name = f"{p}_{op}"
+    def create(op: str, params: str, body: str, returns: str = "STRING") -> None:
+        names[op] = f"{p}_{op}"
         spark.sql(
-            f"CREATE OR REPLACE TEMPORARY FUNCTION {name}({arg_sql}) "
+            f"CREATE OR REPLACE TEMPORARY FUNCTION {names[op]}({params}) "
             f"RETURNS {returns} RETURN {body}"
         )
-        names[op] = name
 
     def register(op: str, body: Any) -> None:
         names[op] = f"{p}_{op}"
         spark.udf.register(names[op], kernels._arrow_udf(body, converter))
 
-    # -- compress: native CASE chain or the Arrow bucketed kernel --------
-    native_compress = kernels._native_uri_prefix_map(conv)
-    if native_compress:
-        create("compress", "u STRING", _prefix_case_sql(kernels._curie_heads(conv), "u"))
-    else:
-        register("compress", kernels._compress)
-
-    # -- expand and synonym→canonical prefix: map literals or the Arrow
-    #    kernels -------------------------------------------------------
-    if kernels._native_prefix_map(conv):
-        create(
-            "expand",
-            "c STRING",
-            "CASE WHEN locate(':', c) > 0 THEN "
-            f"concat(element_at({_map_sql(conv.prefix_map)}, substring_index(c, ':', 1)), "
-            "substr(c, locate(':', c) + 1)) END",
-        )
-        create(
-            "standardize_prefix",
-            "pfx STRING",
-            f"element_at({_map_sql(conv.synonym_to_prefix)}, pfx)",
-        )
-    else:
-        register("expand", kernels._expand)
-        register("standardize_prefix", kernels._standardize_prefix)
-
-    # -- standardize_uri's CASE chain and SQL compositions of the
-    #    primitives, or the fused large-map kernels (mirror
-    #    standardize_uri_col / compress_or_standardize_col)
-    create(
-        "standardize_curie",
-        "c STRING",
-        # concat is NULL when the prefix is unknown
-        "CASE WHEN locate(':', c) > 0 "
-        f"THEN concat({p}_standardize_prefix(substring_index(c, ':', 1)), ':', "
-        "substr(c, locate(':', c) + 1)) END",
-    )
-    if native_compress:
-        create(
-            "standardize_uri",
-            "u STRING",
-            _prefix_case_sql(kernels._canonical_uri_prefixes(conv), "u"),
-        )
+    for op, (kernel, body, native) in _PRIMITIVES.items():
+        if native(conv):
+            create(op, "s STRING", _rendered(spark, kernel("s", conv), "s STRING"))
+        else:
+            register(op, body)
+    if kernels._native_uri_prefix_map(conv):
         create("compress_or_standardize", "s STRING",
                f"coalesce({p}_compress(s), {p}_standardize_curie(s))")
     else:
-        register("standardize_uri", kernels._standardize_uri)
         register("compress_or_standardize", kernels._compress_or_standardize)
     create("expand_or_standardize", "s STRING",
            f"coalesce({p}_standardize_uri(s), {p}_expand(s))")
-    create("format_curie", "pfx STRING, i STRING", "concat(pfx, ':', i)")
-
+    create(
+        "format_curie",
+        "pfx STRING, i STRING",
+        _rendered(spark, kernels.format_curie_col("pfx", "i"), "pfx STRING, i STRING"),
+    )
     create("is_uri", "s STRING", f"{p}_compress(s) IS NOT NULL", "BOOLEAN")
     create("is_curie", "s STRING", f"{p}_expand(s) IS NOT NULL", "BOOLEAN")
-
     return names

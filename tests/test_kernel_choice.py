@@ -50,6 +50,13 @@ FAMILIES = {
 }
 
 
+#: the ops the SQL surface registers as Arrow UDFs past their family's
+#: threshold (``is_uri``/``is_curie`` are SQL compositions over them)
+ARROW_REGISTERED = {
+    "compress", "standardize_uri", "expand", "standardize_prefix",
+    "standardize_curie", "compress_or_standardize",
+}
+
 #: the ops that read one map family only (``compress_or_standardize``
 #: reads both)
 SINGLE_FAMILY = {
@@ -87,7 +94,7 @@ def test_column_and_sql_surfaces_switch_at_the_same_entry(spark, monkeypatch, fa
         sql_plan = _plan(spark.sql(f"SELECT {names[op]}(v) FROM kernel_choice_in"))
         assert ("ArrowEvalPython" in column_plan) is past, (op, column_plan)
         assert ("ArrowEvalPython" in sql_plan) is past, (op, sql_plan)
-        if op in ("compress", "expand", "standardize_prefix"):
+        if op in ARROW_REGISTERED:
             assert (names[op] in registered) is past, (op, registered)
     # the other family's single-family ops stay in the JVM on both
     # surfaces, also when this family is past its threshold
@@ -136,6 +143,33 @@ def test_each_native_op_is_one_expression(spark, make):
         plan = sql._jdf.queryExecution().optimizedPlan().toString()
         assert plan.count(node) == count, (op, plan)
     assert not hasattr(kernels, "_native_pair_from_map")
+
+
+@pytest.mark.parametrize("make", [pipeline_converter, demo_converter])
+def test_each_sql_primitive_is_its_column_kernel(spark, make):
+    """A native SQL primitive, and ``compress_or_standardize`` composed
+    of them, optimizes to the Column kernel's own expression, node for
+    node: the SQL text is the kernel's, not a second copy."""
+    conv = make()
+    names = register_sql_functions(spark, conv, name_prefix=f"same_{make.__name__}")
+    spark.createDataFrame([Row(v="http://a.example.org/1")]).createOrReplaceTempView(
+        "kernel_same_in"
+    )
+
+    def optimized(df):
+        return df._jdf.queryExecution().optimizedPlan().expressions().head().sql()
+
+    table = spark.table("kernel_same_in")
+    for op, kernel in (
+        ("compress", kernels.compress_col),
+        ("standardize_uri", kernels.standardize_uri_col),
+        ("expand", kernels.expand_col),
+        ("standardize_prefix", kernels.standardize_prefix_col),
+        ("standardize_curie", kernels.standardize_curie_col),
+        ("compress_or_standardize", kernels.compress_or_standardize_col),
+    ):
+        sql = spark.sql(f"SELECT {names[op]}(v) AS o FROM kernel_same_in")
+        assert optimized(sql) == optimized(table.select(kernel("v", conv).alias("o"))), op
 
 
 def test_native_chain_at_the_threshold_fits_a_compiled_method(spark, tmp_path):
@@ -208,6 +242,9 @@ def test_one_arrow_udf_body_and_one_decision_per_map_family():
         "_native_compress_pair",
         "_prefix_to_uri_map_expr",
         "_synonym_to_prefix_map_expr",
+        "_q",
+        "_map_sql",
+        "_prefix_case_sql",
     ):
         assert not hasattr(kernels, gone), gone
         assert gone not in _names(kernels_tree) | _names(sql_tree), gone
